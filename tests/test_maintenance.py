@@ -137,6 +137,45 @@ def test_empty_commit_and_zero_row_lineage(spark, tmp_path):
     assert mf.read_table(spark, root).count() == 3
 
 
+def test_commit_stats_from_parquet_footers(spark, tmp_path):
+    """Commit stats are summed from the written files' parquet
+    footers: with several files per bucket they equal a Spark count of
+    the written data, zero-row lineage buckets keep their entries, an
+    all-empty commit records only those, and a callable counter sees
+    the final totals."""
+    root = str(tmp_path / 'footers')
+    df = (spark.range(600)
+          .select((F.col('id') % 3).cast('int').alias(mf.BUCKET_COL),
+                  F.format_string('c%d', 'id').alias('conv_id'))
+          .repartition(3))
+    snap = mf.commit_append(df, root, note='t',
+                            counters={'rows': lambda t: t['rows'],
+                                      'fixed': 7},
+                            expected_buckets=[0, 1, 2, 3])
+    data_dir = os.path.join(root, 'data', snap['snapshot_id'])
+    for b in range(3):
+        assert len(glob.glob(os.path.join(
+            data_dir, 'bucket=%d' % b, '*.parquet'))) > 1
+    written = spark.read.parquet(data_dir)
+    want = {r[mf.BUCKET_COL]: {'rows': r['count']} for r in
+            written.groupBy(mf.BUCKET_COL).count().collect()}
+    want[3] = {'rows': 0}
+    assert snap['partitions'] == want
+    assert snap['totals'] == {'rows': written.count(), 'partitions': 4}
+    assert snap['counters'] == {'rows': 600, 'fixed': 7}
+    assert mf.committed_partitions(root)[3] == {'rows': 0}
+
+    empty = mf.commit_append(df.where(F.lit(False)), root, note='e',
+                             counters={'rows': lambda t: t['rows']},
+                             expected_buckets=[4])
+    assert empty['data_dirs'] == []
+    assert empty['partitions'] == {4: {'rows': 0}}
+    assert empty['totals'] == {'rows': 0, 'partitions': 1}
+    assert empty['counters'] == {'rows': 0}
+    assert mf.pending_buckets(root, 6) == [5]
+    assert mf.read_table(spark, root).count() == 600
+
+
 def test_prep_bucket_granular_resume(spark, tmp_path):
     """The packed layout commits at pack-bucket granularity: a table
     holding only some buckets resumes by recomputing EXACTLY the
@@ -206,6 +245,14 @@ def test_dedup_increment_job_chain(spark, tmp_path):
     pairs = {(r['a'], r['b'], r['vs_state']) for r in
              mf.read_table(spark, day1 + '/dup_pairs').collect()}
     assert pairs == {(1, 10, 1)}
+    # pair counters: footer total and the observed cross-state share,
+    # the same on both manifests the job commits
+    p_snap = mf.snapshots(day1 + '/dup_pairs')[-1]
+    for s in (p_snap, snap):
+        assert s['counters']['pairs'] == 1
+        assert s['counters']['vs_state_pairs'] == 1
+        assert s['counters']['docs_in'] == 2
+    assert p_snap['totals']['rows'] == 1
     state1 = {r['doc_id'] for r in
               mf.read_table(spark, day1 + '/minhash_state').collect()}
     assert state1 == {1, 2, 11}
@@ -222,6 +269,8 @@ def test_dedup_increment_job_chain(spark, tmp_path):
     assert {(r['a'], r['b'], r['vs_state']) for r in
             mf.read_table(spark, day1 + '/dup_pairs').collect()} \
         == {(1, 10, 1), (2, 12, 1)}
+    assert snap_b['counters']['pairs'] == 2
+    assert snap_b['counters']['vs_state_pairs'] == 2
 
     # day 2 chains off day 1's rolled state: doc 11 (a day-1
     # survivor, absent from the base) is only reachable through it
@@ -235,6 +284,15 @@ def test_dedup_increment_job_chain(spark, tmp_path):
     assert {(r['a'], r['b'], r['vs_state']) for r in
             mf.read_table(spark, day2 + '/dup_pairs').collect()} \
         == {(11, 20, 1)}
+
+    # a within-batch pair counts in pairs, not in vs_state_pairs
+    twin = 'unrelated notes on bucket joins and manifest commit points'
+    snap3 = run_dedup_increment(
+        spark, spark.createDataFrame([(30, twin), (31, twin)],
+                                     'doc_id long, text string'),
+        day1, str(tmp_path / 'day2b'), n_buckets=4)
+    assert (snap3['counters']['pairs'],
+            snap3['counters']['vs_state_pairs']) == (1, 0)
 
     with pytest.raises(ValueError):
         run_dedup_increment(spark, batch2, day1, day1, n_buckets=4)

@@ -217,18 +217,52 @@ test_connected_components_property.cases = []
 
 
 def test_connected_components_vs_union_find(spark):
-    """Replay the hypothesis-generated graphs through the distributed
-    algorithm (one SparkSession, many graphs)."""
+    """Replay every hypothesis-generated graph through the distributed
+    algorithm (one SparkSession, many graphs): same partition as the
+    union-find, one row per node, each component named by its min
+    node."""
     from yargy_spark.operators.linking import connected_components
     cases = test_connected_components_property.cases
     assert cases, 'hypothesis generation ran first'
-    for edges, expected in cases[:8]:
+    for edges, expected in cases:
         df = spark.createDataFrame(edges, 'src long, dst long')
         rows = connected_components(df).collect()
+        assert len(rows) == len({r['node'] for r in rows})
         got = {}
         for r in rows:
             got.setdefault(r['component'], set()).add(r['node'])
         assert {frozenset(v) for v in got.values()} == expected
+        assert all(c == min(v) for c, v in got.items())
+
+
+def test_connected_components_long_path(spark):
+    """A path over shuffled labels needs several rounds; the rounds
+    stop at the star forest with every node on the path's min, and a
+    round budget too small for it still raises."""
+    import random
+    from yargy_spark.operators.linking import connected_components
+    labels = list(range(100, 164))
+    random.Random(7).shuffle(labels)
+    edges = list(zip(labels, labels[1:]))
+    df = spark.createDataFrame(edges, 'src long, dst long')
+    got = {r['node']: r['component']
+           for r in connected_components(df).collect()}
+    assert got == {n: 100 for n in labels}
+    with pytest.raises(RuntimeError, match='did not converge'):
+        connected_components(df, max_iter=1)
+
+
+def test_connected_components_stops_at_first_star_forest(spark):
+    """Two stars centred on their min nodes, given in mixed
+    orientation: the first round already yields the star forest,
+    which is the answer — one round must be enough, with no extra
+    round just to see an unchanged edge set."""
+    from yargy_spark.operators.linking import connected_components
+    edges = [(1, 5), (9, 1), (1, 7), (11, 30), (20, 11)]
+    df = spark.createDataFrame(edges, 'src long, dst long')
+    got = {r['node']: r['component']
+           for r in connected_components(df, max_iter=1).collect()}
+    assert got == {1: 1, 5: 1, 7: 1, 9: 1, 11: 11, 20: 11, 30: 11}
 
 
 def test_round4_plan_shapes(spark):

@@ -131,66 +131,66 @@ def _small_star(sym: DataFrame) -> DataFrame:
     return part1.union(part2)
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Whether the distinct, high -> low oriented ``edges`` form a
+    star forest: every node is a src at most once and never both a
+    src and a dst.  Per node over both edge directions, that fails
+    exactly when the node has a lower neighbor (it is a src) and more
+    than one neighbor (a second out-edge, or an in-edge)."""
+    per_node = (edges.select(F.col('src').alias('node'),
+                             F.col('dst').alias('nbr'))
+                .union(edges.select(F.col('dst').alias('node'),
+                                    F.col('src').alias('nbr')))
+                .groupBy('node')
+                .agg(F.min('nbr').alias('low'),
+                     F.count('*').alias('n')))
+    return per_node.where((F.col('low') < F.col('node'))
+                          & (F.col('n') > 1)).isEmpty()
+
+
 def connected_components(edges: DataFrame, max_iter: int = 20
                          ) -> DataFrame:
     """edges(src,dst) -> (node, component) with component = min node id
-    of the component.  Alternating large-star/small-star with
-    convergence detection on a deterministic edge-set signature."""
+    of the component.  Alternating large-star/small-star rounds until
+    the edge set is a star forest — the algorithm's fixed point, where
+    every non-minimal node points straight at its component min."""
     edges = _checkpointed(edges.select(
         F.col('src').cast('long'), F.col('dst').cast('long')
     ).where(F.col('src') != F.col('dst')).distinct())
 
-    def signature(e: DataFrame):
-        # order-insensitive, overflow-free edge-set digest
-        row = (e.select(F.xxhash64('src', 'dst').alias('h'))
-               .agg(F.count('*').alias('n'),
-                    F.expr('bit_xor(h)').alias('x'))
-               .first())
-        return (row['n'], row['x'])
-
     current = edges
-    prev_sig = None
-    converged = False
     pending = []
     for _ in range(max_iter):
         sym = current.union(
             current.select(F.col('dst').alias('src'),
                            F.col('src').alias('dst')))
         # star outputs are canonically oriented already: every emitted
-        # edge is (node, group-min) with node > min, so the distinct'd
-        # union IS the canonical edge set — signature it directly.
-        # The checkpoint is lazy; the signature action materializes it
-        # (one job per round instead of three), after which the
-        # pre-checkpoint persist is released immediately.
+        # edge is (node, group-min) with node > min.  The checkpoint
+        # is lazy; the star-forest check materializes it, after which
+        # the pre-checkpoint persist is released immediately.
         current = _checkpointed(
             _large_star(sym).union(_small_star(sym)).distinct(),
             eager=False, pending=pending)
-        sig = signature(current)
+        converged = _is_star_forest(current)
         for p in pending:
             p.unpersist()
         pending.clear()
-        if sig == prev_sig:
-            converged = True
+        if converged:
             break
-        prev_sig = sig
-    if not converged:
+    else:
         # silent exit would emit SPLIT components (nodes mapped to
         # non-minimal local anchors) with no signal downstream
         raise RuntimeError(
             'connected_components did not converge in %d rounds; '
             'raise max_iter' % max_iter)
 
-    # after convergence every edge points node -> component min
-    membership = (current
-                  .select(F.greatest('src', 'dst').alias('node'),
-                          F.least('src', 'dst').alias('component'))
-                  .groupBy('node')
-                  .agg(F.min('component').alias('component')))
-    roots = (membership.select(F.col('component').alias('node'),
-                               F.col('component'))
-             .distinct())
-    return membership.union(roots).groupBy('node').agg(
-        F.min('component').alias('component'))
+    # a star forest maps every src once, to its component min; the
+    # mins (dsts, never srcs) are their own components
+    members = current.select(F.col('src').alias('node'),
+                             F.col('dst').alias('component'))
+    roots = current.select(F.col('dst').alias('node'),
+                           F.col('dst').alias('component')).distinct()
+    return members.union(roots)
 
 
 # ------------------------------------------------------ canonicalization
@@ -331,14 +331,16 @@ def link_entities_incremental(new_mentions: DataFrame,
     # distinct (component, prior, conversation) table drives both the
     # per-entity witness and the pair-shared-conversation witness —
     # bounded by direct-tier rows, far below mention cardinality.
-    touched_cl = (inc.select('mention_id', 'comp_id')
-                  .join(direct.select(
-                      'mention_id', 'conv_id', 'last_lemma',
-                      F.col('entity_id').alias('prior_id')),
-                      'mention_id')
-                  .select('comp_id', 'prior_id', 'conv_id',
-                          'last_lemma')
-                  .distinct())
+    # Truncated once: it feeds both returned frames (adoption in the
+    # links, the pairs in the merge candidates), which their callers
+    # consume in separate writes.
+    touched_cl = _checkpointed(
+        inc.select('mention_id', 'comp_id')
+        .join(direct.select('mention_id', 'conv_id', 'last_lemma',
+                            F.col('entity_id').alias('prior_id')),
+              'mention_id')
+        .select('comp_id', 'prior_id', 'conv_id', 'last_lemma')
+        .distinct())
     touched = (touched_cl
                .groupBy('comp_id', 'prior_id')
                .agg(F.min('conv_id').alias('conv_id'),

@@ -17,7 +17,7 @@ from __future__ import annotations
 import time
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.extract import extract_mentions
@@ -53,15 +53,14 @@ def _extract_phase(transcripts: DataFrame, m_root: str,
                    chunk_size: int):
     """PHASE 1 shared by the batch and increment jobs: extract the
     pending buckets in chunks, each chunk's mentions committing
-    atomically to ``m_root`` (bucket-granular checkpoint/resume)."""
+    atomically to ``m_root`` (bucket-granular checkpoint/resume).
+
+    The chunk commit is the chunk's only Spark job: its ``mentions``
+    counter is the commit's footer row total, and its turn count is
+    observed on the same write (read only after the write returned)."""
     pending = mf.pending_buckets(m_root, n_buckets)
-    # turns_in: ONE scan over all pending buckets (not one per chunk;
-    # the column-pruned count reads conv_id only)
     bucketed = mf.with_bucket(transcripts, n_buckets)
-    n_turns = (bucketed
-               .where(F.col(mf.BUCKET_COL).isin(pending))
-               .count()) if pending else 0
-    chunk_stats = {'mentions': 0, 'chunks': 0}
+    stats = {'turns': 0, 'mentions': 0, 'chunks': 0}
     for i in range(0, len(pending), chunk_size):
         chunk = pending[i:i + chunk_size]
         # NOTE scan cost: on a bucket-partitioned source (the design
@@ -70,27 +69,50 @@ def _extract_phase(transcripts: DataFrame, m_root: str,
         # each chunk scans the full input, so size chunk_size (or
         # pre-bucket the source) to trade resumability granularity
         # against scan count.
-        src = bucketed.where(F.col(mf.BUCKET_COL).isin(chunk))
-        mentions = extract_mentions(
-            src, extractor_names,
-            passthrough=(mf.BUCKET_COL,)).persist()
-        try:
-            n_mentions = mentions.count()
-            mf.commit_append(
-                mentions, m_root, note='mentions',
-                counters={'mentions': n_mentions, 'buckets': chunk},
-                expected_buckets=chunk, n_buckets=n_buckets)
-        finally:
-            mentions.unpersist()
-        chunk_stats['mentions'] += n_mentions
-        chunk_stats['chunks'] += 1
-    return pending, n_turns, chunk_stats
+        turns = Observation()
+        src = (bucketed.where(F.col(mf.BUCKET_COL).isin(chunk))
+               .observe(turns, F.count(F.lit(1)).alias('n')))
+        snap = mf.commit_append(
+            extract_mentions(src, extractor_names,
+                             passthrough=(mf.BUCKET_COL,)),
+            m_root, note='mentions',
+            counters={'mentions': lambda totals: totals['rows'],
+                      'buckets': chunk},
+            expected_buckets=chunk, n_buckets=n_buckets)
+        stats['turns'] += turns.get['n']
+        stats['mentions'] += snap['totals']['rows']
+        stats['chunks'] += 1
+    return pending, stats
 
 
 def _last_replace(root: str) -> Optional[dict]:
     return next(
         (s for s in reversed(mf.snapshots(root)) if s.get('replace')),
         None)
+
+
+def _read_mentions(spark: SparkSession, m_root: str) -> DataFrame:
+    if mf.committed_data_dirs(m_root):
+        return mf.read_table(spark, m_root)
+    # every committed chunk was empty (e.g. no turn matched any
+    # trigger): derive empty-but-committed tables so reruns reach the
+    # no-op path instead of failing forever
+    from .operators.extract import MENTION_SCHEMA
+    return (spark.createDataFrame([], MENTION_SCHEMA)
+            .withColumn(mf.BUCKET_COL, F.lit(0).cast('int')))
+
+
+def _counted_triples(mentions: DataFrame, links: DataFrame,
+                     n_buckets: int):
+    """-> (bucketed triples, entities counter).  The entity count is
+    observed on the triples write itself: ``materialize_triples``
+    emits one ``canonical_name`` row per linked entity."""
+    entities = Observation()
+    triples = (mf.with_bucket(materialize_triples(mentions, links),
+                              n_buckets)
+               .observe(entities, F.count(F.when(
+                   F.col('pred') == 'canonical_name', 1)).alias('n')))
+    return triples, lambda _totals: entities.get['n']
 
 
 def run_resumable(spark: SparkSession, transcripts: DataFrame,
@@ -124,7 +146,7 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame,
     mf.check_n_buckets(m_root, n_buckets)
 
     t0 = time.time()
-    pending, n_turns, chunk_stats = _extract_phase(
+    pending, stats = _extract_phase(
         transcripts, m_root, n_buckets, extractor_names, chunk_size)
 
     head = mf.current_snapshot(m_root)
@@ -141,16 +163,7 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame,
         # their next run instead of nooping past them)
         return None
 
-    if mf.committed_data_dirs(m_root):
-        all_mentions = mf.read_table(spark, m_root)
-    else:
-        # every committed chunk was empty (e.g. no turn matched any
-        # trigger): derive an empty-but-committed triples snapshot so
-        # reruns reach the no-op path instead of failing forever
-        from .operators.extract import MENTION_SCHEMA
-        all_mentions = (spark.createDataFrame([], MENTION_SCHEMA)
-                        .withColumn(mf.BUCKET_COL,
-                                    F.lit(0).cast('int')))
+    all_mentions = _read_mentions(spark, m_root)
     entities = link_entities(all_mentions).persist()
     try:
         # the entity-key state (the increment jobs' prior-corpus
@@ -163,14 +176,13 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame,
             key='norm_key')
         mf.commit_replace(keys, k_root, note='entity_keys',
                           source_snapshot=head, n_buckets=n_buckets)
-        triples = mf.with_bucket(
-            materialize_triples(all_mentions, entities), n_buckets)
+        triples, n_entities = _counted_triples(all_mentions, entities,
+                                               n_buckets)
         counters = {
-            'turns_in': n_turns,
-            'mentions': chunk_stats['mentions'],
-            'extraction_chunks': chunk_stats['chunks'],
-            'entities': entities.select('entity_id')
-                                .distinct().count(),
+            'turns_in': stats['turns'],
+            'mentions': stats['mentions'],
+            'extraction_chunks': stats['chunks'],
+            'entities': n_entities,
             'wall_sec': round(time.time() - t0, 3),
             'buckets': pending,
         }
@@ -224,7 +236,7 @@ def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
     mf.check_n_buckets(m_root, n_buckets)
 
     t0 = time.time()
-    pending, n_turns, chunk_stats = _extract_phase(
+    pending, stats = _extract_phase(
         new_transcripts, m_root, n_buckets, extractor_names,
         chunk_size)
 
@@ -238,13 +250,7 @@ def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
                         .get('base_keys_snapshot') == keys_snap:
         return None  # increment AND base state both unchanged
 
-    if mf.committed_data_dirs(m_root):
-        new_mentions = mf.read_table(spark, m_root)
-    else:
-        from .operators.extract import MENTION_SCHEMA
-        new_mentions = (spark.createDataFrame([], MENTION_SCHEMA)
-                        .withColumn(mf.BUCKET_COL,
-                                    F.lit(0).cast('int')))
+    new_mentions = _read_mentions(spark, m_root)
     prior_keys = (mf.read_table(spark, k_root)
                   .select('norm_key', 'entity_id', 'canonical'))
     links, merges = link_entities_incremental(new_mentions,
@@ -252,24 +258,17 @@ def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
     links = links.persist()
     try:
         stamp = {'source_snapshot': head, 'n_buckets': n_buckets}
-        # roll the key state FORWARD: prior keys plus the increment's
-        # (adopted rows repeat prior mappings; fresh keys are new by
-        # construction) — committed to <out_root>/entity_keys so the
-        # NEXT increment can chain off this root instead of re-minting
-        # this batch's fresh entities.  min() is the same
-        # belt-and-braces determinism entity_key_table uses.
+        # roll the key state FORWARD — committed to
+        # <out_root>/entity_keys so the NEXT increment can chain off
+        # this root instead of re-minting this batch's fresh entities.
+        # Prior rows carry over as they are, and only keys new to the
+        # state are added: a new mention whose key is in the prior
+        # state is in the direct tier, so it already carries that
+        # key's prior (entity_id, canonical).
         inc_keys = entity_key_table(new_mentions, links)
-        canon = (prior_keys.select('entity_id', 'canonical')
-                 .unionByName(inc_keys.select('entity_id',
-                                              'canonical'))
-                 .distinct())
-        state = (prior_keys.select('norm_key', 'entity_id')
-                 .unionByName(inc_keys.select('norm_key',
-                                              'entity_id'))
-                 .groupBy('norm_key')
-                 .agg(F.min('entity_id').alias('entity_id'))
-                 .join(canon, 'entity_id')
-                 .select('norm_key', 'entity_id', 'canonical'))
+        state = prior_keys.unionByName(
+            inc_keys.join(prior_keys.select('norm_key'), 'norm_key',
+                          'left_anti'))
         mf.commit_replace(
             mf.with_bucket(state, n_buckets, key='norm_key'),
             f'{out_root}/entity_keys', note='entity_keys',
@@ -278,14 +277,13 @@ def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
             mf.with_bucket(merges, n_buckets, key='entity_a'),
             c_root, note='merge_candidates',
             counters={'base_keys_snapshot': keys_snap}, **stamp)
-        triples = mf.with_bucket(
-            materialize_triples(new_mentions, links), n_buckets)
+        triples, n_entities = _counted_triples(new_mentions, links,
+                                               n_buckets)
         counters = {
-            'turns_in': n_turns,
-            'mentions': chunk_stats['mentions'],
-            'extraction_chunks': chunk_stats['chunks'],
-            'entities': links.select('entity_id')
-                             .distinct().count(),
+            'turns_in': stats['turns'],
+            'mentions': stats['mentions'],
+            'extraction_chunks': stats['chunks'],
+            'entities': n_entities,
             'merge_candidates': merge_snap['totals']['rows'],
             'base_keys_snapshot': keys_snap,
             'wall_sec': round(time.time() - t0, 3),
@@ -471,27 +469,25 @@ def run_dedup_increment(spark: SparkSession, new_docs: DataFrame,
     state = (mf.read_table(spark, s_base)
              .select('doc_id', 'sig', 'shs', 'sz'))
     pairs, new_state = dedup_increment(new_docs, state)
-    pairs = pairs.persist()
-    try:
-        stamp = {'source_snapshot': state_snap, 'n_buckets': n_buckets}
-        counters = {
+    # both pair counters come from the dup_pairs write: the total
+    # from its footers, the cross-state share observed on it
+    vs_state = Observation()
+    pairs = pairs.observe(vs_state, F.count(F.when(
+        F.col('vs_state') == 1, 1)).alias('n'))
+    stamp = {'source_snapshot': state_snap, 'n_buckets': n_buckets}
+    counters = dict(mf.commit_replace(
+        mf.with_bucket(pairs, n_buckets, key='b'), p_root,
+        note='dup_pairs', counters={
             'batch_stamp': batch_stamp,
             'docs_in': int(row['n']),
-            'pairs': pairs.count(),
-            'vs_state_pairs': pairs.where(
-                F.col('vs_state') == 1).count(),
+            'pairs': lambda totals: totals['rows'],
+            'vs_state_pairs': lambda _totals: vs_state.get['n'],
             'wall_sec': None,
-        }
-        mf.commit_replace(
-            mf.with_bucket(pairs, n_buckets, key='b'), p_root,
-            note='dup_pairs', counters=counters, **stamp)
-        counters['wall_sec'] = round(time.time() - t0, 3)
-        snap = mf.commit_replace(
-            mf.with_bucket(new_state, n_buckets, key='doc_id'),
-            s_out, note='minhash_state', counters=counters, **stamp)
-    finally:
-        pairs.unpersist()
-    return snap
+        }, **stamp)['counters'])
+    counters['wall_sec'] = round(time.time() - t0, 3)
+    return mf.commit_replace(
+        mf.with_bucket(new_state, n_buckets, key='doc_id'),
+        s_out, note='minhash_state', counters=counters, **stamp)
 
 
 def run_stream_dedup_bridge(spark: SparkSession, src_dir: str,

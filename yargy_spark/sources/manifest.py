@@ -90,6 +90,25 @@ def check_n_buckets(root: str, n_buckets: int) -> None:
                 'new table root' % (root, recorded, n_buckets))
 
 
+def _footer_partitions(data_dir: str) -> Dict[int, dict]:
+    """bucket -> {'rows': n} summed over the parquet footers under
+    ``<data_dir>/bucket=<k>/`` (driver-side metadata reads, no Spark
+    job).  Spark creates a bucket directory only for a bucket that
+    received rows."""
+    import pyarrow.parquet as pq
+    prefix = BUCKET_COL + '='
+    partitions = {}
+    for name in os.listdir(data_dir):
+        if not name.startswith(prefix):
+            continue
+        bdir = os.path.join(data_dir, name)
+        partitions[int(name[len(prefix):])] = {'rows': sum(
+            pq.read_metadata(os.path.join(bdir, f)).num_rows
+            for f in os.listdir(bdir)
+            if f.endswith('.parquet') and not f.startswith(('.', '_')))}
+    return dict(sorted(partitions.items()))
+
+
 def _commit(df: DataFrame, root: str, note: str,
             counters: Optional[dict],
             expected_buckets: Optional[List[int]],
@@ -101,28 +120,30 @@ def _commit(df: DataFrame, root: str, note: str,
     then atomically write the manifest (the commit point).  A crash
     between the two leaves an orphan directory no reader sees
     (``vacuum_orphans``) — never duplicate rows on resume.
-    Per-partition stats are read back from the written files, so the
-    upstream lineage executes exactly once."""
+
+    Per-partition stats come from the written files' parquet footers,
+    summed on the driver: the write is the commit's only Spark job,
+    so the upstream lineage executes exactly once.  A counter given
+    as a callable is evaluated after the write returns, with the
+    commit's ``totals`` — the hook for counters observed on the write
+    itself (``DataFrame.observe``) — so every counter is final when
+    the one manifest write happens."""
     snapshot_id = 'snap-%d%s' % (time.time_ns(), suffix)
     data_dir = os.path.join(root, 'data', snapshot_id)
     (df.write.mode('error')
        .partitionBy(BUCKET_COL)
        .parquet(data_dir))
 
-    # an all-empty commit writes only _SUCCESS; reading it back would
-    # fail schema inference — the manifest simply records no
-    # partitions (callers add zero-row bucket entries for lineage)
-    has_files = any(name.startswith('bucket=')
-                    for name in os.listdir(data_dir))
-    if has_files:
-        written = df.sparkSession.read.parquet(data_dir)
-        stats_rows = written.groupBy(BUCKET_COL).count().collect()
-        partitions = {int(r[BUCKET_COL]): {'rows': int(r['count'])}
-                      for r in stats_rows}
-    else:
-        partitions = {}
+    # an all-empty commit writes only _SUCCESS: the manifest records
+    # no partitions (callers add zero-row bucket entries for lineage)
+    partitions = _footer_partitions(data_dir)
+    has_files = bool(partitions)
     for b in (expected_buckets or []):
         partitions.setdefault(int(b), {'rows': 0})
+    totals = {'rows': sum(p['rows'] for p in partitions.values()),
+              'partitions': len(partitions)}
+    counters = {k: v(totals) if callable(v) else v
+                for k, v in (counters or {}).items()}
 
     manifest = {
         'snapshot_id': snapshot_id,
@@ -131,9 +152,8 @@ def _commit(df: DataFrame, root: str, note: str,
                                      time.gmtime()),
         'data_dirs': [snapshot_id] if has_files else [],
         'partitions': partitions,
-        'totals': {'rows': sum(p['rows'] for p in partitions.values()),
-                   'partitions': len(partitions)},
-        'counters': counters or {},
+        'totals': totals,
+        'counters': counters,
         'note': note,
     }
     if replace:
@@ -159,7 +179,9 @@ def commit_append(df: DataFrame, root: str,
     ``expected_buckets``: buckets this commit COVERS even when they
     produced zero rows — they get zero-row lineage entries inside the
     same atomic manifest write, so resume never reprocesses them
-    (the invariant every resumable job needs)."""
+    (the invariant every resumable job needs).  A ``counters`` value
+    may be a callable of the commit's ``totals``, resolved after the
+    write (see ``_commit``)."""
     return _commit(df, root, note, counters, expected_buckets,
                    n_buckets, replace=False, source_snapshot=None)
 
