@@ -41,26 +41,12 @@ def main():
              .getOrCreate())
     spark.sparkContext.setLogLevel('WARN')
 
-    from yargy_spark.operators.dedup import (exact_dedup, md5_int,
+    from yargy_spark.operators.dedup import (content_stamp, exact_dedup,
                                              minhash_lsh_pairs,
                                              minhash_state)
     from yargy_spark.sources import manifest as mf
 
     s_root = out_dir + '/minhash_state'
-
-    def docs_stamp(docs_df):
-        """Deterministic content stamp of the docs table — the same
-        shape as pipeline.run_dedup_increment's batch_stamp (count,
-        id sum/max, order-independent 31-bit text-hash sum), so the
-        state backfill can verify the docs parquet it reads is the
-        SAME content the committed pairs were derived from."""
-        row = docs_df.agg(F.count('*').alias('n'),
-                          F.sum('doc_id').alias('s'),
-                          F.max('doc_id').alias('m'),
-                          F.sum(md5_int(F.col('text'))
-                                % F.lit(2_147_483_647)).alias('t')
-                          ).collect()[0]
-        return '%s:%s:%s:%s' % (row['n'], row['s'], row['m'], row['t'])
 
     def commit_state(docs_df):
         """REPLACE-commit the near-dup state table the increment job
@@ -86,7 +72,7 @@ def main():
             recorded = next(
                 (s['counters']['docs_stamp'] for s in reversed(snaps)
                  if s.get('counters', {}).get('docs_stamp')), None)
-            stamp = docs_stamp(docs)
+            _, stamp = content_stamp(docs)
             if recorded is not None and recorded != stamp:
                 print(json.dumps({
                     'status': 'refused',
@@ -115,7 +101,7 @@ def main():
         return
 
     t0 = time.time()
-    # docs feeds THREE subtrees (count, minhash branch, exact branch):
+    # docs feeds THREE subtrees (stamp, minhash branch, exact branch):
     # persist so the parquet is scanned once
     docs = spark.read.parquet(docs_path).persist()
     near = minhash_lsh_pairs(docs).select(
@@ -130,16 +116,16 @@ def main():
     pairs = near.unionByName(exact)
 
     bucketed = (mf.with_bucket(pairs, n_buckets, key='a')
-                .where(F.col(mf.BUCKET_COL).isin(pending))
-                .persist())
+                .where(F.col(mf.BUCKET_COL).isin(pending)))
+    n_docs, stamp = content_stamp(docs)
     counters = {
-        'docs_in': docs.count(),
-        'pairs': bucketed.count(),
-        'wall_sec': round(time.time() - t0, 3),
+        'docs_in': n_docs,
+        'pairs': lambda totals: totals['rows'],
+        'wall_sec': lambda _totals: round(time.time() - t0, 3),
         'buckets': pending,
         # ties the pairs commit to the docs content so the state
-        # backfill can refuse a drifted input (see docs_stamp)
-        'docs_stamp': docs_stamp(docs),
+        # backfill can refuse a drifted input (see content_stamp)
+        'docs_stamp': stamp,
     }
     snap = mf.commit_append(bucketed, out_dir, note='dedup-pairs',
                             counters=counters,
@@ -151,7 +137,7 @@ def main():
     print(json.dumps({'status': 'committed',
                       'snapshot': snap['snapshot_id'],
                       'state_snapshot': state_snap['snapshot_id'],
-                      'counters': counters,
+                      'counters': snap['counters'],
                       'totals': snap['totals']}))
     spark.stop()
 

@@ -3,6 +3,9 @@ link_entities_incremental): new batches link against the compact
 entity-key state without global CC; prior-entity merges are surfaced
 as candidates, never applied silently."""
 
+import os
+import shutil
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -573,3 +576,189 @@ def test_run_apply_merges_job(spark, tmp_path):
                      .select('subj').distinct().collect()}
     assert retired not in day2_subjects
     assert survivor in day2_subjects
+
+
+# ------------------------------------------------ the commit chain
+
+def _rows(spark, root):
+    """A committed table's rows, order-free (an empty commit reads as
+    no rows)."""
+    from yargy_spark.sources import manifest as mf
+    if not mf.committed_data_dirs(root):
+        return []
+    return sorted(repr(tuple(r)) for r in
+                  mf.read_table(spark, root).collect())
+
+
+@pytest.fixture(scope='module')
+def chain_jobs(spark, kg_base, tmp_path_factory):
+    """job -> (run(out_root), reference root, chain roots in commit
+    order, reference rows per chain root).  The references are
+    uninterrupted runs: ``kg_base`` for the batch job, and one run
+    each of the increment, the merge apply (with a triples patch) and
+    the dedup increment."""
+    from yargy_spark.operators.dedup import minhash_state
+    from yargy_spark.pipeline import (run_apply_merges,
+                                      run_dedup_increment,
+                                      run_incremental, run_resumable)
+    from yargy_spark.sources import manifest as mf
+    from yargy_spark.sources.transcripts import synth_transcripts
+
+    base_root, base, _ = kg_base
+    tmp = tmp_path_factory.mktemp('chain_refs')
+    inc = synth_transcripts(spark, n_turns=96, partitions=4,
+                            start_turn=96)
+    text = 'the quick brown fox jumps over the lazy dog near the bank'
+    dedup_base = str(tmp / 'dedup_base')
+    mf.commit_replace(
+        mf.with_bucket(minhash_state(spark.createDataFrame(
+            [(1, text)], 'doc_id long, text string')), 4, key='doc_id'),
+        dedup_base + '/minhash_state', note='minhash_state',
+        n_buckets=4)
+    batch = spark.createDataFrame(
+        [(10, text), (11, 'fresh prose on morphology grammars parsers '
+                           'and knowledge graph triples')],
+        'doc_id long, text string')
+    inc_ref = str(tmp / 'inc')
+
+    def resumable(out):
+        return run_resumable(spark, base, out, n_buckets=4)
+
+    def incremental(out):
+        return run_incremental(spark, inc, base_root, out, n_buckets=4)
+
+    def apply(out):
+        return run_apply_merges(spark, inc_ref, out, n_buckets=4,
+                                triples_roots=[base_root])
+
+    def dedup(out):
+        return run_dedup_increment(spark, batch, dedup_base, out,
+                                   n_buckets=4)
+
+    def with_mentions(src, job):
+        # the crash points are all in the commit chain: start from the
+        # reference's committed mentions, so extraction has nothing
+        # pending and the derived tables read the same mention files
+        # (which mention a canonical_name triple cites depends on
+        # them)
+        def run(out):
+            if not os.path.exists(out + '/mentions'):
+                shutil.copytree(src + '/mentions', out + '/mentions')
+            return job(out)
+        return run
+
+    runs = {
+        'resumable': (with_mentions(base_root, resumable), base_root,
+                      ['entity_keys', 'triples']),
+        'incremental': (with_mentions(inc_ref, incremental), inc_ref,
+                        ['entity_keys', 'merge_candidates', 'triples']),
+        'apply': (apply, str(tmp / 'apply'),
+                  ['entity_keys', 'triples_patch', 'entity_merges']),
+        'dedup': (dedup, str(tmp / 'dedup'),
+                  ['dup_pairs', 'minhash_state']),
+    }
+    for ref, job in ((inc_ref, incremental), (runs['apply'][1], apply),
+                     (runs['dedup'][1], dedup)):
+        assert job(ref) is not None
+    return {job: (run, ref, roots,
+                  {r: _rows(spark, f'{ref}/{r}') for r in roots})
+            for job, (run, ref, roots) in runs.items()}
+
+
+CRASH_POINTS = [('resumable', 0), ('resumable', 1),
+                ('incremental', 0), ('incremental', 1),
+                ('incremental', 2), ('apply', 0), ('apply', 1),
+                ('apply', 2), ('dedup', 0), ('dedup', 1)]
+
+
+@pytest.mark.parametrize('job,k', CRASH_POINTS)
+def test_crash_mid_chain_converges(spark, chain_jobs, tmp_path,
+                                   monkeypatch, job, k):
+    """A crash at the k-th REPLACE commit of a job's chain: the rerun
+    is not a no-op, re-commits the whole chain and lands the same
+    rows on every chain root as an uninterrupted run; a third run is
+    a no-op."""
+    from yargy_spark.sources import manifest as mf
+    run, _, roots, ref_rows = chain_jobs[job]
+    out = str(tmp_path / 'out')
+    real = mf.commit_replace
+    written, crash_at = [], k + 1
+
+    def commit(df, root, *a, **kw):
+        written.append(root[len(out) + 1:])
+        if len(written) == crash_at:
+            raise RuntimeError('injected crash')
+        return real(df, root, *a, **kw)
+
+    monkeypatch.setattr(mf, 'commit_replace', commit)
+    with pytest.raises(RuntimeError, match='injected crash'):
+        run(out)
+    assert written == roots[:k + 1]
+    written.clear()
+    crash_at = None
+    assert run(out) is not None
+    assert written == roots
+    for r in roots:
+        assert _rows(spark, f'{out}/{r}') == ref_rows[r], r
+    assert run(out) is None
+
+
+def test_resumable_recommits_missing_keys(spark, kg_base, tmp_path):
+    """A base root whose entity_keys has no manifests (a root from
+    before the key state existed) is not current: the rerun commits
+    the keys, stamped with the mentions head."""
+    from yargy_spark.pipeline import run_resumable
+    from yargy_spark.sources import manifest as mf
+    base_root, base, _ = kg_base
+    root = str(tmp_path / 'base')
+    shutil.copytree(base_root, root)
+    shutil.rmtree(root + '/entity_keys/_manifests')
+    assert run_resumable(spark, base, root, n_buckets=4,
+                         chunk_size=1) is not None
+    keys = mf.snapshots(root + '/entity_keys')
+    assert len(keys) == 1
+    assert keys[0]['source_snapshot'] == \
+        mf.current_snapshot(root + '/mentions')
+    assert _rows(spark, root + '/entity_keys') == \
+        _rows(spark, base_root + '/entity_keys')
+    assert run_resumable(spark, base, root, n_buckets=4,
+                         chunk_size=1) is None
+
+
+def test_apply_rerun_adds_triples_patch(spark, chain_jobs, tmp_path):
+    """An apply run without ``triples_roots`` does not make a rerun
+    that asks for a triples patch a no-op: the patch root is part of
+    that rerun's chain."""
+    from yargy_spark.pipeline import run_apply_merges
+    from yargy_spark.sources import manifest as mf
+    inc_root = chain_jobs['incremental'][1]
+    base_root = chain_jobs['resumable'][1]
+    out = str(tmp_path / 'apply')
+    assert run_apply_merges(spark, inc_root, out, n_buckets=4) \
+        is not None
+    assert mf.current_snapshot(out + '/triples_patch') is None
+    assert run_apply_merges(spark, inc_root, out, n_buckets=4,
+                            triples_roots=[base_root]) is not None
+    assert mf.current_snapshot(out + '/triples_patch') is not None
+    assert run_apply_merges(spark, inc_root, out, n_buckets=4,
+                            triples_roots=[base_root]) is None
+
+
+def test_increment_refuses_triples_bucket_drift(spark, kg_base,
+                                                tmp_path):
+    """Drift is refused on every root the increment writes, not only
+    on its mentions: a triples root committed under another
+    ``n_buckets`` fails the run."""
+    from yargy_spark.pipeline import run_incremental
+    from yargy_spark.sources import manifest as mf
+    from yargy_spark.sources.transcripts import synth_transcripts
+    base_root, _, _ = kg_base
+    out = str(tmp_path / 'inc')
+    mf.commit_replace(
+        mf.with_bucket(spark.createDataFrame([('c0',)], 'conv_id string'),
+                       8),
+        out + '/triples', note='triples', n_buckets=8)
+    inc = synth_transcripts(spark, n_turns=96, partitions=4,
+                            start_turn=96)
+    with pytest.raises(ValueError, match='n_buckets'):
+        run_incremental(spark, inc, base_root, out, n_buckets=4)

@@ -25,7 +25,7 @@ shuffles key on shingle/bucket ids which salt naturally via banding.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -68,6 +68,23 @@ def _norm_text(col):
 def md5_int(col):
     """Portable 60-bit integer hash (md5 hex prefix)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast('long')
+
+
+def content_stamp(docs: DataFrame) -> Tuple[int, str]:
+    """-> (document count, deterministic content stamp) of a (doc_id,
+    text) table, one aggregation.  The stamp is
+    ``'<count>:<id sum>:<id max>:<text hash sum>'``.
+    The text enters as an order-independent sum of content hashes, so
+    re-extracted text under unchanged doc_ids changes the stamp; each
+    hash is reduced mod ``MERSENNE`` before summing, so ANSI sum
+    cannot overflow below ~2^32-doc tables."""
+    row = docs.agg(F.count('*').alias('n'),
+                   F.sum('doc_id').alias('s'),
+                   F.max('doc_id').alias('m'),
+                   F.sum(md5_int(F.col('text')) % F.lit(MERSENNE))
+                   .alias('t')).collect()[0]
+    return row['n'], '%s:%s:%s:%s' % (row['n'], row['s'], row['m'],
+                                      row['t'])
 
 
 def word_shingles(docs: DataFrame, k: int = 3) -> DataFrame:

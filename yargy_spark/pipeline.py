@@ -20,7 +20,7 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.extract import extract_mentions
+from .operators.extract import MENTION_SCHEMA, extract_mentions
 from .operators.linking import (apply_entity_merges, entity_key_table,
                                 link_entities,
                                 link_entities_incremental)
@@ -50,17 +50,19 @@ def run_pipeline(transcripts: DataFrame,
 
 def _extract_phase(transcripts: DataFrame, m_root: str,
                    n_buckets: int, extractor_names,
-                   chunk_size: int):
+                   chunk_size: int) -> dict:
     """PHASE 1 shared by the batch and increment jobs: extract the
     pending buckets in chunks, each chunk's mentions committing
     atomically to ``m_root`` (bucket-granular checkpoint/resume).
+    Returns the extraction counters of the job's triples manifest.
 
     The chunk commit is the chunk's only Spark job: its ``mentions``
     counter is the commit's footer row total, and its turn count is
     observed on the same write (read only after the write returned)."""
     pending = mf.pending_buckets(m_root, n_buckets)
     bucketed = mf.with_bucket(transcripts, n_buckets)
-    stats = {'turns': 0, 'mentions': 0, 'chunks': 0}
+    counters = {'turns_in': 0, 'mentions': 0, 'extraction_chunks': 0,
+                'buckets': pending}
     for i in range(0, len(pending), chunk_size):
         chunk = pending[i:i + chunk_size]
         # NOTE scan cost: on a bucket-partitioned source (the design
@@ -79,40 +81,40 @@ def _extract_phase(transcripts: DataFrame, m_root: str,
             counters={'mentions': lambda totals: totals['rows'],
                       'buckets': chunk},
             expected_buckets=chunk, n_buckets=n_buckets)
-        stats['turns'] += turns.get['n']
-        stats['mentions'] += snap['totals']['rows']
-        stats['chunks'] += 1
-    return pending, stats
+        counters['turns_in'] += turns.get['n']
+        counters['mentions'] += snap['totals']['rows']
+        counters['extraction_chunks'] += 1
+    return counters
 
 
-def _last_replace(root: str) -> Optional[dict]:
-    return next(
-        (s for s in reversed(mf.snapshots(root)) if s.get('replace')),
-        None)
-
-
-def _read_mentions(spark: SparkSession, m_root: str) -> DataFrame:
-    if mf.committed_data_dirs(m_root):
-        return mf.read_table(spark, m_root)
-    # every committed chunk was empty (e.g. no turn matched any
-    # trigger): derive empty-but-committed tables so reruns reach the
-    # no-op path instead of failing forever
-    from .operators.extract import MENTION_SCHEMA
-    return (spark.createDataFrame([], MENTION_SCHEMA)
+def _read_or_empty(spark: SparkSession, root: str, schema) -> DataFrame:
+    """The committed table at ``root``, or an empty ``schema`` table
+    with the bucket column when no commit wrote data (no turn matched
+    a trigger; an increment bridged no prior entities).  The job then
+    commits empty derived tables, so its rerun reaches the no-op gate
+    instead of failing forever."""
+    if mf.committed_data_dirs(root):
+        return mf.read_table(spark, root)
+    return (spark.createDataFrame([], schema)
             .withColumn(mf.BUCKET_COL, F.lit(0).cast('int')))
 
 
-def _counted_triples(mentions: DataFrame, links: DataFrame,
-                     n_buckets: int):
-    """-> (bucketed triples, entities counter).  The entity count is
-    observed on the triples write itself: ``materialize_triples``
-    emits one ``canonical_name`` row per linked entity."""
-    entities = Observation()
-    triples = (mf.with_bucket(materialize_triples(mentions, links),
-                              n_buckets)
-               .observe(entities, F.count(F.when(
-                   F.col('pred') == 'canonical_name', 1)).alias('n')))
-    return triples, lambda _totals: entities.get['n']
+def _observed(df: DataFrame, **aggs):
+    """-> (df, counters): each named aggregate is observed on the
+    write of the returned frame, and its counter is a callable that
+    reads the observation once the write has returned."""
+    obs = Observation()
+    df = df.observe(obs, *(agg.alias(k) for k, agg in aggs.items()))
+    return df, {k: (lambda _totals, k=k: obs.get[k]) for k in aggs}
+
+
+def _counted_triples(mentions: DataFrame, links: DataFrame):
+    """-> (triples, {'entities': counter}).  ``materialize_triples``
+    emits one ``canonical_name`` row per linked entity, so the entity
+    count is observed on the triples write itself."""
+    return _observed(materialize_triples(mentions, links),
+                     entities=F.count(F.when(
+                         F.col('pred') == 'canonical_name', 1)))
 
 
 def run_resumable(spark: SparkSession, transcripts: DataFrame,
@@ -129,70 +131,45 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame,
 
     PHASE 2 — linking + triples (global, snapshot-consistent): entity
     resolution is a GLOBAL computation (blocking keys cross buckets),
-    so it always runs over ALL committed mentions and the triples
-    table at ``<out_root>/triples`` is committed as a full-REPLACE
-    snapshot stamped with the mentions snapshot it derived from.
-    Linking only a pending subset would mint conflicting entity_ids
-    for the same real-world entity across snapshots.
+    so it always runs over ALL committed mentions; the entity-key
+    state at ``<out_root>/entity_keys`` and the triples table at
+    ``<out_root>/triples`` are committed as full-REPLACE snapshots
+    stamped with the mentions snapshot they derived from.  Linking
+    only a pending subset would mint conflicting entity_ids for the
+    same real-world entity across snapshots.
 
-    Re-running after success is a no-op (no pending buckets AND the
-    triples snapshot is already derived from the current mentions
-    head).  ``n_buckets`` is recorded in the manifests and a rerun
-    with a different value is refused (silent bucket-count drift
-    would duplicate committed conversations)."""
+    Re-running after success is a no-op (both derived tables are
+    already derived from the current mentions head).  ``n_buckets``
+    is recorded in the manifests and a rerun with a different value
+    is refused (silent bucket-count drift would duplicate committed
+    conversations)."""
     m_root = f'{out_root}/mentions'
     t_root = f'{out_root}/triples'
     k_root = f'{out_root}/entity_keys'
     mf.check_n_buckets(m_root, n_buckets)
 
     t0 = time.time()
-    pending, stats = _extract_phase(
-        transcripts, m_root, n_buckets, extractor_names, chunk_size)
+    counters = _extract_phase(transcripts, m_root, n_buckets,
+                              extractor_names, chunk_size)
 
     head = mf.current_snapshot(m_root)
     if head is None:
         return None  # no mentions table at all, nothing to link
-    last_triples = _last_replace(t_root)
-    last_keys = _last_replace(k_root)
-    if not pending and \
-            last_triples and \
-            last_triples.get('source_snapshot') == head and \
-            last_keys and last_keys.get('source_snapshot') == head:
-        # extraction AND both derived tables already up to date (the
-        # keys check also upgrades pre-entity_keys table roots on
-        # their next run instead of nooping past them)
+    if mf.chain_is_current([k_root, t_root], n_buckets, head):
         return None
 
-    all_mentions = _read_mentions(spark, m_root)
+    all_mentions = _read_or_empty(spark, m_root, MENTION_SCHEMA)
     entities = link_entities(all_mentions).persist()
     try:
-        # the entity-key state (the increment jobs' prior-corpus
-        # representation) commits FIRST: a crash between the two
-        # REPLACE commits leaves the triples snapshot stale, so the
-        # rerun re-derives both — committing triples first would let
-        # the noop check skip a keys table that was never written
-        keys = mf.with_bucket(
-            entity_key_table(all_mentions, entities), n_buckets,
-            key='norm_key')
-        mf.commit_replace(keys, k_root, note='entity_keys',
-                          source_snapshot=head, n_buckets=n_buckets)
-        triples, n_entities = _counted_triples(all_mentions, entities,
-                                               n_buckets)
-        counters = {
-            'turns_in': stats['turns'],
-            'mentions': stats['mentions'],
-            'extraction_chunks': stats['chunks'],
-            'entities': n_entities,
-            'wall_sec': round(time.time() - t0, 3),
-            'buckets': pending,
-        }
-        snap = mf.commit_replace(triples, t_root, note='triples',
-                                 counters=counters,
-                                 source_snapshot=head,
-                                 n_buckets=n_buckets)
+        triples, observed = _counted_triples(all_mentions, entities)
+        counters.update(observed)
+        return mf.commit_chain([
+            (k_root, 'entity_keys',
+             entity_key_table(all_mentions, entities), 'norm_key', None),
+            (t_root, 'triples', triples, 'conv_id', counters),
+        ], n_buckets, head, t0)
     finally:
         entities.unpersist()
-    return snap
 
 
 def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
@@ -224,8 +201,9 @@ def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
             'manifests would otherwise collide with the base and '
             'noop past the new conversations)')
     m_root = f'{out_root}/mentions'
-    t_root = f'{out_root}/triples'
+    k_out = f'{out_root}/entity_keys'
     c_root = f'{out_root}/merge_candidates'
+    t_root = f'{out_root}/triples'
     k_root = f'{base_root}/entity_keys'
 
     keys_snap = mf.current_snapshot(k_root)
@@ -236,28 +214,23 @@ def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
     mf.check_n_buckets(m_root, n_buckets)
 
     t0 = time.time()
-    pending, stats = _extract_phase(
-        new_transcripts, m_root, n_buckets, extractor_names,
-        chunk_size)
+    counters = _extract_phase(new_transcripts, m_root, n_buckets,
+                              extractor_names, chunk_size)
 
     head = mf.current_snapshot(m_root)
     if head is None:
         return None
-    last_triples = _last_replace(t_root)
-    if not pending and last_triples and \
-            last_triples.get('source_snapshot') == head and \
-            last_triples.get('counters', {}) \
-                        .get('base_keys_snapshot') == keys_snap:
+    if mf.chain_is_current([k_out, c_root, t_root], n_buckets, head,
+                           base_keys_snapshot=keys_snap):
         return None  # increment AND base state both unchanged
 
-    new_mentions = _read_mentions(spark, m_root)
+    new_mentions = _read_or_empty(spark, m_root, MENTION_SCHEMA)
     prior_keys = (mf.read_table(spark, k_root)
                   .select('norm_key', 'entity_id', 'canonical'))
     links, merges = link_entities_incremental(new_mentions,
                                               prior_keys)
     links = links.persist()
     try:
-        stamp = {'source_snapshot': head, 'n_buckets': n_buckets}
         # roll the key state FORWARD — committed to
         # <out_root>/entity_keys so the NEXT increment can chain off
         # this root instead of re-minting this batch's fresh entities.
@@ -269,31 +242,17 @@ def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
         state = prior_keys.unionByName(
             inc_keys.join(prior_keys.select('norm_key'), 'norm_key',
                           'left_anti'))
-        mf.commit_replace(
-            mf.with_bucket(state, n_buckets, key='norm_key'),
-            f'{out_root}/entity_keys', note='entity_keys',
-            counters={'base_keys_snapshot': keys_snap}, **stamp)
-        merge_snap = mf.commit_replace(
-            mf.with_bucket(merges, n_buckets, key='entity_a'),
-            c_root, note='merge_candidates',
-            counters={'base_keys_snapshot': keys_snap}, **stamp)
-        triples, n_entities = _counted_triples(new_mentions, links,
-                                               n_buckets)
-        counters = {
-            'turns_in': stats['turns'],
-            'mentions': stats['mentions'],
-            'extraction_chunks': stats['chunks'],
-            'entities': n_entities,
-            'merge_candidates': merge_snap['totals']['rows'],
-            'base_keys_snapshot': keys_snap,
-            'wall_sec': round(time.time() - t0, 3),
-            'buckets': pending,
-        }
-        snap = mf.commit_replace(triples, t_root, note='triples',
-                                 counters=counters, **stamp)
+        merges, n_merges = _observed(merges,
+                                     merge_candidates=F.count(F.lit(1)))
+        triples, observed = _counted_triples(new_mentions, links)
+        counters.update(observed, **n_merges)
+        return mf.commit_chain([
+            (k_out, 'entity_keys', state, 'norm_key', None),
+            (c_root, 'merge_candidates', merges, 'entity_a', None),
+            (t_root, 'triples', triples, 'conv_id', counters),
+        ], n_buckets, head, t0, base_keys_snapshot=keys_snap)
     finally:
         links.unpersist()
-    return snap
 
 
 def run_apply_merges(spark: SparkSession, inc_root: str,
@@ -316,10 +275,10 @@ def run_apply_merges(spark: SparkSession, inc_root: str,
       retired.  Consumers apply it as anti-join(retired) + union;
       the next full re-link supersedes it.
 
-    Both reads are stamped: rerun is a noop while the candidates
-    snapshot AND the keys snapshot are unchanged; a re-committed
-    upstream re-derives everything (same bounded-staleness contract
-    as ``run_incremental``)."""
+    Both reads are stamped on every table this call writes: rerun is
+    a noop while the candidates snapshot AND the keys snapshot are
+    unchanged; a re-committed upstream re-derives everything (same
+    bounded-staleness contract as ``run_incremental``)."""
     if out_root == inc_root:
         raise ValueError(
             'merge-apply out_root must differ from inc_root — the '
@@ -334,27 +293,21 @@ def run_apply_merges(spark: SparkSession, inc_root: str,
             'no merge_candidates/entity_keys state under %s — run '
             'the increment job (jobs/run_kg_increment.py) first'
             % inc_root)
-    out_keys_root = f'{out_root}/entity_keys'
-    mf.check_n_buckets(out_keys_root, n_buckets)
-    # the noop gate keys on entity_merges — the LAST commit below —
-    # so a crash between commits re-derives everything on rerun
-    # (same crash-ordering discipline as run_resumable's keys-first)
-    last = _last_replace(f'{out_root}/entity_merges')
-    if last and last.get('source_snapshot') == keys_snap and \
-            last.get('counters', {}).get(
-                'candidates_snapshot') == cand_snap:
+    k_out = f'{out_root}/entity_keys'
+    p_root = f'{out_root}/triples_patch'
+    a_root = f'{out_root}/entity_merges'
+    roots = [k_out, p_root, a_root] if triples_roots else [k_out, a_root]
+    if mf.chain_is_current(roots, n_buckets, keys_snap,
+                           candidates_snapshot=cand_snap):
         return None  # candidates AND key state both unchanged
 
     t0 = time.time()
-    if mf.committed_data_dirs(c_root):
-        candidates = mf.read_table(spark, c_root)
-    else:
-        # a committed-but-empty work-list (increments that bridged
-        # nothing) writes no data dirs; apply degrades to an identity
-        # rewrite so the chain (inc -> apply -> inc) stays uniform
-        candidates = spark.createDataFrame(
-            [], 'entity_a string, entity_b string, conv_id string, '
-                'last_lemma string')
+    # a committed-but-empty work-list (increments that bridged
+    # nothing) degrades to an identity rewrite, so the chain
+    # (inc -> apply -> inc) stays uniform
+    candidates = _read_or_empty(
+        spark, c_root, 'entity_a string, entity_b string, '
+                       'conv_id string, last_lemma string')
     prior_keys = (mf.read_table(spark, k_root)
                   .select('norm_key', 'entity_id', 'canonical'))
     if triples_roots:
@@ -368,35 +321,24 @@ def run_apply_merges(spark: SparkSession, inc_root: str,
     else:
         mapping, new_keys = apply_entity_merges(candidates,
                                                 prior_keys)
-        patch = None
 
     # the mapping feeds the audit commit, the counters AND (via
     # new_keys/patch plans) both rewrites — pin it once
     mapping = mapping.persist()
     try:
-        stamp = {'source_snapshot': keys_snap, 'n_buckets': n_buckets}
-        counters = {'candidates_snapshot': cand_snap,
-                    'retired_entities': mapping.count(),
-                    'wall_sec': None}
-        mf.commit_replace(
-            mf.with_bucket(new_keys, n_buckets, key='norm_key'),
-            out_keys_root, note='entity_keys',
-            counters=counters, **stamp)
-        if patch is not None:
-            mf.commit_replace(
-                mf.with_bucket(patch, n_buckets, key='subj'),
-                f'{out_root}/triples_patch', note='triples_patch',
-                counters=dict(counters,
-                              triples_roots=list(triples_roots)),
-                **stamp)
-        counters['wall_sec'] = round(time.time() - t0, 3)
-        snap = mf.commit_replace(
-            mf.with_bucket(mapping, n_buckets, key='entity_id'),
-            f'{out_root}/entity_merges', note='entity_merges',
-            counters=counters, **stamp)
+        counters = {'retired_entities': mapping.count()}
+        commits = [(k_out, 'entity_keys', new_keys, 'norm_key',
+                    counters)]
+        if triples_roots:
+            commits.append((p_root, 'triples_patch', patch, 'subj',
+                            dict(counters,
+                                 triples_roots=list(triples_roots))))
+        commits.append((a_root, 'entity_merges', mapping, 'entity_id',
+                        counters))
+        return mf.commit_chain(commits, n_buckets, keys_snap, t0,
+                               candidates_snapshot=cand_snap)
     finally:
         mapping.unpersist()
-    return snap
 
 
 def run_dedup_increment(spark: SparkSession, new_docs: DataFrame,
@@ -420,12 +362,11 @@ def run_dedup_increment(spark: SparkSession, new_docs: DataFrame,
       and a monthly full jobs/run_dedup.py run compacts the
       documented pruned-survivor drift.
 
-    The noop gate keys on the LAST commit (minhash_state) and on
-    BOTH the base state snapshot and a deterministic batch content
-    stamp, so a rerun is a noop only while base state and batch are
-    unchanged; a crash between the two commits re-derives everything
-    on rerun (run_apply_merges' crash-ordering discipline)."""
-    from .operators.dedup import dedup_increment, md5_int
+    Both commits are stamped with the base state snapshot and the
+    batch's ``content_stamp``, so a rerun is a noop only while base
+    state and batch are unchanged (a changed batch re-derives even
+    under an unchanged base state)."""
+    from .operators.dedup import content_stamp, dedup_increment
     if out_root == base_root:
         raise ValueError(
             'dedup increment out_root must differ from base_root — '
@@ -437,57 +378,27 @@ def run_dedup_increment(spark: SparkSession, new_docs: DataFrame,
         raise ValueError(
             'no minhash_state at %s — build the base with '
             'jobs/run_dedup.py first' % s_base)
-    s_out = f'{out_root}/minhash_state'
     p_root = f'{out_root}/dup_pairs'
-    mf.check_n_buckets(s_out, n_buckets)
-    # the pairs root too: a rerun after a crash BETWEEN the two
-    # commits would otherwise pass the state-root check and append
-    # pairs bucketed at a different n_buckets into the same table
-    mf.check_n_buckets(p_root, n_buckets)
-
-    # batch content stamp: one aggregation over the increment (which
-    # is batch-sized by definition) — a changed batch re-derives even
-    # when the base state snapshot is unchanged.  The TEXT enters via
-    # an order-independent sum of 31-bit content hashes (review
-    # finding: an id-only stamp would noop past re-extracted text
-    # under unchanged doc_ids; hashes are reduced mod 2^31-1 BEFORE
-    # summing so ANSI sum cannot overflow below ~2^32-doc batches)
-    row = new_docs.agg(F.count('*').alias('n'),
-                       F.sum('doc_id').alias('s'),
-                       F.max('doc_id').alias('m'),
-                       F.sum(md5_int(F.col('text'))
-                             % F.lit(2_147_483_647)).alias('t')
-                       ).collect()[0]
-    batch_stamp = '%s:%s:%s:%s' % (row['n'], row['s'], row['m'],
-                                   row['t'])
-    last = _last_replace(s_out)
-    if last and last.get('source_snapshot') == state_snap and \
-            last.get('counters', {}).get('batch_stamp') == batch_stamp:
+    s_out = f'{out_root}/minhash_state'
+    n_docs, batch_stamp = content_stamp(new_docs)
+    if mf.chain_is_current([p_root, s_out], n_buckets, state_snap,
+                           batch_stamp=batch_stamp):
         return None  # base state AND batch both unchanged
 
     t0 = time.time()
     state = (mf.read_table(spark, s_base)
              .select('doc_id', 'sig', 'shs', 'sz'))
     pairs, new_state = dedup_increment(new_docs, state)
-    # both pair counters come from the dup_pairs write: the total
-    # from its footers, the cross-state share observed on it
-    vs_state = Observation()
-    pairs = pairs.observe(vs_state, F.count(F.when(
-        F.col('vs_state') == 1, 1)).alias('n'))
-    stamp = {'source_snapshot': state_snap, 'n_buckets': n_buckets}
-    counters = dict(mf.commit_replace(
-        mf.with_bucket(pairs, n_buckets, key='b'), p_root,
-        note='dup_pairs', counters={
-            'batch_stamp': batch_stamp,
-            'docs_in': int(row['n']),
-            'pairs': lambda totals: totals['rows'],
-            'vs_state_pairs': lambda _totals: vs_state.get['n'],
-            'wall_sec': None,
-        }, **stamp)['counters'])
-    counters['wall_sec'] = round(time.time() - t0, 3)
-    return mf.commit_replace(
-        mf.with_bucket(new_state, n_buckets, key='doc_id'),
-        s_out, note='minhash_state', counters=counters, **stamp)
+    # both pair counters are observed on the dup_pairs write and
+    # carried by both manifests
+    pairs, counters = _observed(
+        pairs, pairs=F.count(F.lit(1)),
+        vs_state_pairs=F.count(F.when(F.col('vs_state') == 1, 1)))
+    counters['docs_in'] = n_docs
+    return mf.commit_chain([
+        (p_root, 'dup_pairs', pairs, 'b', counters),
+        (s_out, 'minhash_state', new_state, 'doc_id', counters),
+    ], n_buckets, state_snap, t0, batch_stamp=batch_stamp)
 
 
 def run_stream_dedup_bridge(spark: SparkSession, src_dir: str,

@@ -204,6 +204,54 @@ def commit_replace(df: DataFrame, root: str,
                    source_snapshot=source_snapshot)
 
 
+def chain_is_current(roots: List[str], n_buckets: int,
+                     source_snapshot: str, **match) -> bool:
+    """The no-op gate of a ``commit_chain``: True when every root's
+    newest REPLACE snapshot is stamped with ``source_snapshot`` and
+    its counters equal ``match``.  Checking every root (not only the
+    last one written) makes the gate independent of commit order and
+    sends a root that was never written — a crash mid-chain, a root
+    that predates the chain — back through the whole chain.  Refuses
+    ``n_buckets`` drift on every root first (``check_n_buckets``)."""
+    for root in roots:
+        check_n_buckets(root, n_buckets)
+    for root in roots:
+        last = next((s for s in reversed(snapshots(root))
+                     if s.get('replace')), {})
+        counters = last.get('counters', {})
+        if last.get('source_snapshot') != source_snapshot or \
+                any(counters.get(k) != v for k, v in match.items()):
+            return False
+    return True
+
+
+def commit_chain(commits, n_buckets: int, source_snapshot: str,
+                 t0: float, **match) -> dict:
+    """REPLACE-commit ``(root, note, df, key, counters)`` in order,
+    each bucketed on ``key`` and stamped with ``source_snapshot``,
+    ``n_buckets`` and the ``match`` counters the gate
+    (``chain_is_current``) compares.  Returns the last manifest.
+
+    Crash ordering: each commit is atomic, and the gate requires every
+    root in the chain to be stamped, so a crash between two commits
+    leaves at least one root stale and the rerun re-derives the whole
+    chain.  A counter one commit needs from an earlier write is an
+    ``Observation`` on that write, passed as a callable.  Only the
+    last commit carries ``wall_sec`` (seconds since ``t0``, taken
+    after its write)."""
+    for i, (root, note, df, key, counters) in enumerate(commits, 1):
+        counters = dict(counters or {}, **match)
+        if i == len(commits):
+            counters['wall_sec'] = lambda _: round(time.time() - t0, 3)
+        # module global, looked up per call: wrappers installed on
+        # ``commit_replace`` see every commit of the chain
+        snap = commit_replace(with_bucket(df, n_buckets, key=key), root,
+                              note=note, counters=counters,
+                              source_snapshot=source_snapshot,
+                              n_buckets=n_buckets)
+    return snap
+
+
 def write_manifest(root: str, manifest: dict) -> None:
     """Atomically (tmp + rename) write/replace a snapshot manifest —
     the manifest IS the commit point, so a torn write would make
