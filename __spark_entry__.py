@@ -9,7 +9,7 @@ near-dup edges from the sf0.001 documents table, as one triples frame.
     corpus; oracles are VALUES literals transcribed from the
     reference's committed test assertions (the only executable oracle
     for yargy semantics in this sandbox — see FIXTURES.md).
-  * dedup/similarity/textstats/multimodal — training-data ops over the
+  * dedup/similarity/textstats — training-data ops over the
     provided documents/embeddings tables; oracles replay the exact
     same algorithm in DuckDB SQL (portable md5-based hashing,
     integer-scaled ratios).
@@ -311,27 +311,6 @@ def q_kg_lemma_tokens(spark, sf_dir) -> DataFrame:
                     F.array_join('lemmas', ',').alias('lemmas')))
 
 
-def _asof_query(spark, sf_dir, ts_bucket_width=None) -> DataFrame:
-    """Shared body of the two as-of variants — they share ONE DuckDB
-    oracle and must stay row-identical, so the clicks/errors prep
-    exists exactly once and only the mitigation knob differs."""
-    from pyspark.sql import Window
-    from yargy_spark.operators.events import asof_join
-    ev = spark.read.parquet(os.path.join(sf_dir, 'events.parquet'))
-    clicks = (ev.where(F.col('event_type') == 'click')
-              .select('event_id', 'user_id', 'ts'))
-    w = Window.partitionBy('user_id', 'ts').orderBy(F.desc('event_id'))
-    errors = (ev.where(F.col('event_type') == 'error')
-              .withColumn('rn', F.row_number().over(w))
-              .where(F.col('rn') == 1)
-              .select('user_id', 'ts', 'event_id'))
-    out = asof_join(clicks, errors, on='user_id',
-                    right_cols=('event_id',),
-                    ts_bucket_width=ts_bucket_width)
-    return out.select('event_id', 'user_id',
-                      F.col('r_event_id').alias('last_error_id'))
-
-
 def q_kg_entity_degree(spark, sf_dir) -> DataFrame:
     """Graph analytics over the materialized entity graph
     (linking.py::entity_degree): neighbor count + total co-mention
@@ -339,20 +318,6 @@ def q_kg_entity_degree(spark, sf_dir) -> DataFrame:
     kg_entity_cooccurrence gates."""
     from yargy_spark.operators.linking import entity_degree
     return entity_degree(q_kg_entity_cooccurrence(spark, sf_dir))
-
-
-def q_events_asof(spark, sf_dir) -> DataFrame:
-    """As-of join: each click annotated with the user's most recent
-    error at-or-before it (union-and-carry composition, one shuffle)."""
-    return _asof_query(spark, sf_dir)
-
-
-def q_events_asof_bucketed(spark, sf_dir) -> DataFrame:
-    """Same as-of join through the hot-key mitigation path: the carry
-    window partitions by (user_id, 6h time bucket) with per-bucket
-    seeds, so one hot user parallelizes across its time range.  Must
-    be row-identical to events_asof (same DuckDB ASOF oracle)."""
-    return _asof_query(spark, sf_dir, ts_bucket_width=6 * 3600.0)
 
 
 def q_kg_entity_cooccurrence(spark, sf_dir) -> DataFrame:
@@ -858,81 +823,6 @@ def q_doc_fingerprints(spark, sf_dir) -> DataFrame:
     return doc_fingerprints(_docs(spark, sf_dir))
 
 
-def q_multimodal_meta(spark, sf_dir) -> DataFrame:
-    from yargy_spark.operators.multimodal import media_metadata
-    return media_metadata(_docs(spark, sf_dir))
-
-
-def q_multimodal_decode(spark, sf_dir) -> DataFrame:
-    """Full image decode path: deterministic REAL P6 payloads
-    (synth_ppm_media) -> binary column -> decode_image (the pure
-    netpbm/BMP codec) -> per-image stats.  The oracle recomputes the
-    stats from the doc_id arithmetic that generated the pixels, so a
-    header-parse or raster-order bug breaks the hash."""
-    from yargy_spark.operators.multimodal import (decode_stats,
-                                                  synth_ppm_media)
-    return decode_stats(synth_ppm_media(_docs(spark, sf_dir)))
-
-
-def q_multimodal_png(spark, sf_dir) -> DataFrame:
-    """PNG decode path: deterministic REAL 8-bit PNG payloads
-    (synth_png_media — channels doc_id%4+1 covering gray/gray+alpha/
-    RGB/RGBA, row filter (doc_id+y)%5 covering every unfilter branch;
-    doc_id%7==3 docs are palette PNGs with an arithmetic PLTE and,
-    on odd ids, a short tRNS) -> binary column -> decode_image
-    (stdlib-zlib DEFLATE + scanline unfilter + PLTE/tRNS lookup) ->
-    per-image stats.  The oracle recomputes the stats from the
-    generating doc_id arithmetic (replaying the palette lookup in
-    SQL), so a filter-arithmetic, chunk-walk, raster-order, or
-    palette-lookup bug breaks the hash."""
-    from yargy_spark.operators.multimodal import (decode_stats,
-                                                  synth_png_media)
-    return decode_stats(synth_png_media(_docs(spark, sf_dir)))
-
-
-def q_multimodal_jpeg(spark, sf_dir) -> DataFrame:
-    """Baseline-JPEG decode path: deterministic REAL SOF0 payloads
-    (synth_jpeg_media — block-constant grayscale built on the
-    codec's lossless witness: even block values make DC quantization
-    exact, so the lossy format round-trips bit-exactly while every
-    block runs the full Huffman/DC-prediction entropy path) ->
-    binary column -> decode_image (jpeg.decode_jpeg: marker walk,
-    DQT/DHT from the file, bit-level Huffman, numpy IDCT) ->
-    per-image stats.  The oracle replays the block-value arithmetic
-    in SQL — an entropy-decode, dequantize, IDCT, or marker-parse
-    bug breaks the hash."""
-    from yargy_spark.operators.multimodal import (decode_stats,
-                                                  synth_jpeg_media)
-    return decode_stats(synth_jpeg_media(_docs(spark, sf_dir)))
-
-
-def q_multimodal_wav(spark, sf_dir) -> DataFrame:
-    """Audio decode path: deterministic REAL RIFF/WAVE PCM payloads
-    (synth_wav_media — mono/stereo 16-bit frames from doc_id
-    arithmetic) -> binary column -> decode_wav (chunk walk with word
-    alignment, PCM only, loud boundaries) -> per-clip amplitude
-    stats.  PCM is lossless, so the oracle replays every decoded
-    sample in SQL — a chunk-parse, interleave, or sign bug breaks
-    the hash."""
-    from yargy_spark.operators.multimodal import (audio_stats,
-                                                  synth_wav_media)
-    return audio_stats(synth_wav_media(_docs(spark, sf_dir)))
-
-
-def q_multimodal_frames(spark, sf_dir) -> DataFrame:
-    """Video frame-sampling path: deterministic REAL YUV4MPEG2
-    payloads (synth_y4m_media — the public uncompressed video
-    container, Cmono frames from doc_id arithmetic) -> binary
-    column -> decode_y4m + sample_frames(every_k=2) -> per-sampled-
-    frame stats.  Raw planar video is lossless, so the oracle
-    replays every sampled frame's bytes in SQL — a header-parse,
-    frame-walk, or sampling-stride bug breaks the hash."""
-    from yargy_spark.operators.multimodal import (sample_frames,
-                                                  synth_y4m_media)
-    return sample_frames(synth_y4m_media(_docs(spark, sf_dir)),
-                         every_k=2)
-
-
 def q_doc_splits(spark, sf_dir) -> DataFrame:
     """Leakage-safe deterministic train/val/test split by hashed
     doc_id (operators/sampling.py::hash_split) — 98/1/1 in basis
@@ -1158,22 +1048,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'ann_query_ivf_topk': q_ann_query_ivf_topk,
         'ann_query_indexed': q_ann_query_indexed,
         'kg_extract_report': q_kg_extract_report,
-        'multimodal_png': q_multimodal_png,
-        'multimodal_jpeg': q_multimodal_jpeg,
-        'multimodal_wav': q_multimodal_wav,
-        'multimodal_frames': q_multimodal_frames,
         # -- CHANGED this round: the LSH hot-bucket governor rewrites
         # the candidate stage of the whole minhash family (and
         # dup_clusters' oracle nests the pair oracle); the
         # dedup_incremental gate now offsets batch ids per the
-        # operator contract; dedup_report gained the hot-bucket row;
-        # multimodal_decode's netpbm parser gained strict validation
+        # operator contract; dedup_report gained the hot-bucket row
         'minhash_lsh_dups': q_minhash_lsh_dups,
         'clean_corpus': q_clean_corpus,
         'dup_clusters': q_dup_clusters,
         'dedup_incremental': q_dedup_incremental,
         'dedup_report': q_dedup_report,
-        'multimodal_decode': q_multimodal_decode,
         # -- rotated IN: past the cap in round 4 (last gated r2/r3)
         'decontam_pairs': q_decontam_pairs,
         'mixture_sample': q_mixture_sample,
@@ -1183,10 +1067,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'exact_dedup': q_exact_dedup,
         'stream_dedup': q_stream_dedup,
         'stream_mention_rollup': q_stream_mention_rollup,
-        'events_asof': q_events_asof,
         'embedding_dup_exact': q_embedding_dup_exact,
         'ann_cosine_topk': q_ann_cosine_topk,
-        'multimodal_meta': q_multimodal_meta,
         'doc_splits': q_doc_splits,
         'lang_id': q_lang_id,
         'quality_scores': q_quality_scores,
@@ -1198,15 +1080,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'filter_corpus': q_filter_corpus,
         'materialize_sequences': q_materialize_sequences,
         'mixture_re_tokens': q_mixture_re_tokens,
-        # ---- entries below fall past the driver's 50-query cap;
-        # ---- every one was driver-gated hash-green in ROUND 4
-        # ---- (CORRECTNESS_r04.json) with unchanged semantics and
-        # ---- oracles, so each keeps a <= 1-round-old green row.
-        # ---- (rare_tokens, dup_spans, ann_query_topk and
-        # ---- paragraph_dedup yielded their slots to the new
-        # ---- ann_query_indexed, multimodal_jpeg, multimodal_wav
-        # ---- and multimodal_frames per priority (a) of the
-        # ---- policy.)
+        # ---- every entry below was driver-gated hash-green in
+        # ---- ROUND 4 (CORRECTNESS_r04.json) with unchanged
+        # ---- semantics and oracles; the last sixteen fall past the
+        # ---- driver's 50-query cap.
         'paragraph_dedup': q_paragraph_dedup,
         'ann_query_topk': q_ann_query_topk,
         'dup_spans': q_dup_spans,
@@ -1219,7 +1096,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'event_sessions': q_event_sessions,
         'stream_band_collisions': q_stream_band_collisions,
         'simhash_docs': q_simhash_docs,
-        'events_asof_bucketed': q_events_asof_bucketed,
         'transcripts_tool_stats': q_transcripts_tool_stats,
         'context_windows': q_context_windows,
         'ngram_jaccard_dups': q_ngram_jaccard_dups,
@@ -1739,21 +1615,6 @@ LEFT JOIN surv s ON m.merged_id = s.merged_id
     ], ['entity', 'n_neighbors', 'degree_weight'],
         casts={'n_neighbors': 'BIGINT', 'degree_weight': 'BIGINT'})
 
-    oracles['events_asof'] = """
-WITH err AS (
-  SELECT user_id, ts, max(event_id) AS err_id
-  FROM events WHERE event_type = 'error' GROUP BY user_id, ts),
-clicks AS (
-  SELECT event_id, user_id, ts FROM events
-  WHERE event_type = 'click')
-SELECT c.event_id, c.user_id, e.err_id AS last_error_id
-FROM clicks c
-ASOF LEFT JOIN err e
-  ON c.user_id = e.user_id AND c.ts >= e.ts
-"""
-
-    # the mitigation path must be indistinguishable from the plain one
-    oracles['events_asof_bucketed'] = oracles['events_asof']
 
     oracles['transcripts_tool_stats'] = """
 WITH t AS (
@@ -2632,157 +2493,6 @@ SELECT doc_id,
 FROM ranked WHERE fp_rank <= 4
 """.format(sh=_SHINGLES, h=_H60.format(x='shingle'))
 
-    # decode-path oracle: regenerates every raster byte from the same
-    # doc_id arithmetic as synth_ppm_media and aggregates — the Spark
-    # side instead round-trips real P6 bytes through decode_image, so
-    # agreement proves the encoder+decoder pair, not shared code
-    oracles['multimodal_decode'] = """
-WITH dims AS (
-  SELECT doc_id, CAST(doc_id % 8 + 4 AS INT) AS width,
-         CAST(doc_id % 6 + 4 AS INT) AS height
-  FROM documents),
-bytes AS (
-  SELECT doc_id, width, height,
-         unnest(generate_series(0, 3 * width * height - 1)) AS j
-  FROM dims)
-SELECT doc_id, width, height, CAST(3 AS INT) AS channels,
-       CAST(3 * width * height AS INT) AS n_bytes,
-       CAST(sum(((doc_id % 256) * 7 + j * 13) % 256)
-            AS BIGINT) AS byte_sum,
-       CAST(sum(((doc_id % 256) * 7 + j * 13) % 256) * 100
-            // (3 * width * height) AS BIGINT) AS byte_mean_x100
-FROM bytes GROUP BY doc_id, width, height
-"""
-
-    # PNG variant: same generating arithmetic with channels =
-    # doc_id%4+1 — the oracle never runs a codec; if the Spark side's
-    # zlib/unfilter path misreads one byte, byte_sum diverges.
-    # doc_id%7==3 docs are PALETTE (color type 3) PNGs: the stream is
-    # 256-range indices into palette entry i = ((i*3+1)%256,
-    # (i*5+2)%256, (i*7+3)%256); odd ids carry a 128-entry tRNS
-    # (alpha i = (i*11+4)%256, the rest opaque 255) so decoded
-    # channels = 4 — the oracle replays the PLTE lookup in SQL
-    oracles['multimodal_png'] = """
-WITH dims AS (
-  SELECT doc_id, CAST(doc_id % 8 + 4 AS INT) AS width,
-         CAST(doc_id % 6 + 4 AS INT) AS height,
-         CAST(CASE WHEN doc_id % 7 = 3 THEN
-                CASE WHEN doc_id % 2 = 1 THEN 4 ELSE 3 END
-              ELSE doc_id % 4 + 1 END AS INT) AS channels,
-         (doc_id % 7 = 3) AS pal
-  FROM documents),
-px AS (
-  SELECT doc_id, width, height, channels, pal,
-         unnest(generate_series(0, CASE WHEN pal
-                  THEN width * height
-                  ELSE channels * width * height END - 1)) AS j
-  FROM dims),
-vals AS (
-  SELECT doc_id, width, height, channels,
-         CASE WHEN pal THEN
-              (idx * 3 + 1) % 256 + (idx * 5 + 2) % 256
-              + (idx * 7 + 3) % 256
-              + CASE WHEN channels = 4 THEN
-                  CASE WHEN idx < 128 THEN (idx * 11 + 4) % 256
-                       ELSE 255 END
-                ELSE 0 END
-         ELSE idx END AS v
-  FROM (SELECT *, ((doc_id % 256) * 7 + j * 13) % 256 AS idx FROM px))
-SELECT doc_id, width, height, channels,
-       CAST(channels * width * height AS INT) AS n_bytes,
-       CAST(sum(v) AS BIGINT) AS byte_sum,
-       CAST(sum(v) * 100 // (channels * width * height)
-            AS BIGINT) AS byte_mean_x100
-FROM vals GROUP BY doc_id, width, height, channels
-"""
-
-    # JPEG variant (lossless witness): each image is bw x bh
-    # 8x8-constant blocks, block j's value v = 32 + 2*(((doc_id%256)
-    # *7 + j*13) % 96) — even, so DC quantization (step 16) is exact
-    # and the decoded raster is bit-identical to the generator.  The
-    # oracle sums 64*v per block in SQL; the Spark side round-trips
-    # real Huffman-coded SOF0 bytes through jpeg.decode_jpeg
-    oracles['multimodal_jpeg'] = """
-WITH dims AS (
-  SELECT doc_id, CAST(doc_id % 3 + 1 AS INT) AS bw,
-         CAST(doc_id % 2 + 1 AS INT) AS bh
-  FROM documents),
-blocks AS (
-  SELECT doc_id, bw, bh,
-         unnest(generate_series(0, bw * bh - 1)) AS j
-  FROM dims),
-vals AS (
-  SELECT doc_id, bw, bh,
-         32 + 2 * (((doc_id % 256) * 7 + j * 13) % 96) AS v
-  FROM blocks)
-SELECT doc_id, CAST(8 * bw AS INT) AS width,
-       CAST(8 * bh AS INT) AS height,
-       CAST(1 AS INT) AS channels,
-       CAST(64 * bw * bh AS INT) AS n_bytes,
-       CAST(64 * sum(v) AS BIGINT) AS byte_sum,
-       CAST(64 * sum(v) * 100 // (64 * bw * bh)
-            AS BIGINT) AS byte_mean_x100
-FROM vals GROUP BY doc_id, bw, bh
-"""
-
-    # WAV variant (PCM is lossless): interleaved sample k =
-    # ((doc_id%256)*31 + k*17) % 4096 - 2048 over n_frames*channels;
-    # the oracle sums |sample| in SQL, the Spark side round-trips
-    # real RIFF/WAVE bytes through decode_wav
-    oracles['multimodal_wav'] = """
-WITH dims AS (
-  SELECT doc_id, CAST(doc_id % 50 + 20 AS INT) AS n_frames,
-         CAST(doc_id % 2 + 1 AS INT) AS channels,
-         CAST(8000 + (doc_id % 4) * 4000 AS INT) AS sample_rate
-  FROM documents),
-samples AS (
-  SELECT doc_id, n_frames, channels, sample_rate,
-         unnest(generate_series(0, n_frames * channels - 1)) AS k
-  FROM dims)
-SELECT doc_id, n_frames, channels, sample_rate,
-       CAST(sum(abs(((doc_id % 256) * 31 + k * 17) % 4096 - 2048))
-            AS BIGINT) AS amp_sum,
-       CAST(sum(abs(((doc_id % 256) * 31 + k * 17) % 4096 - 2048))
-            * 100 // (n_frames * channels)
-            AS BIGINT) AS amp_mean_x100
-FROM samples GROUP BY doc_id, n_frames, channels, sample_rate
-"""
-
-    # y4m variant (raw planar video is lossless): frame f byte j =
-    # ((doc_id%256)*7 + f*29 + j*13) % 256; the gate samples every
-    # 2nd frame, so the oracle filters f % 2 = 0 and replays each
-    # sampled frame's byte sum in SQL
-    oracles['multimodal_frames'] = """
-WITH dims AS (
-  SELECT doc_id, CAST(doc_id % 8 + 4 AS INT) AS width,
-         CAST(doc_id % 6 + 4 AS INT) AS height,
-         CAST(doc_id % 6 + 2 AS INT) AS n_frames
-  FROM documents),
-sampled AS (
-  SELECT doc_id, width, height, n_frames,
-         unnest(generate_series(0, n_frames - 1)) AS f
-  FROM dims),
-px AS (
-  SELECT doc_id, width, height, n_frames, f,
-         unnest(generate_series(0, width * height - 1)) AS j
-  FROM sampled WHERE f % 2 = 0)
-SELECT doc_id, CAST(f AS INT) AS frame_idx, width, height, n_frames,
-       CAST(sum(((doc_id % 256) * 7 + f * 29 + j * 13) % 256)
-            AS BIGINT) AS byte_sum,
-       CAST(sum(((doc_id % 256) * 7 + f * 29 + j * 13) % 256) * 100
-            // (width * height) AS BIGINT) AS byte_mean_x100
-FROM px GROUP BY doc_id, f, width, height, n_frames
-"""
-
-    oracles['multimodal_meta'] = """
-SELECT doc_id,
-  CASE WHEN doc_id % 3 = 0 THEN 'image'
-       WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS media_type,
-  CAST(doc_id % 64 + 16 AS INT) AS width,
-  CAST(doc_id % 48 + 16 AS INT) AS height,
-  CAST(length(repeat(md5(text), 4)) / 2 AS INT) AS n_bytes
-FROM documents
-"""
 
     # deterministic sampling / splits (operators/sampling.py): the
     # salted 60-bit md5 bucket replays exactly — no rand() anywhere

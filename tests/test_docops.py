@@ -1,6 +1,6 @@
 """Training-data operator tests over the provided sf0.001 tables:
 dedup (exact / jaccard / minhash / simhash / embedding), similarity
-(brute + IVF), text stats, multimodal plumbing.
+(brute + IVF), text stats.
 
 Cross-engine value equality vs DuckDB oracles is exercised separately
 by tools/verify_entry.py (and the round driver); these tests pin
@@ -582,486 +582,6 @@ def test_repetition_scores(spark):
     assert got[4] == (0, 0, 0, 0)
 
 
-def test_decode_image_netpbm_roundtrip():
-    """Real codec: P6/P5 encode -> decode is the identity, header
-    comments and multi-digit dims parse, 16-bit maxval refuses."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import decode_image, encode_ppm
-    rgb = (np.arange(12 * 10 * 3, dtype=np.int64) * 31 % 256
-           ).astype(np.uint8).reshape(10, 12, 3)
-    assert (decode_image(encode_ppm(rgb)) == rgb).all()
-    gray = rgb[..., 0]
-    out = decode_image(encode_ppm(gray))
-    assert out.shape == (10, 12, 1) and (out[..., 0] == gray).all()
-    # comments anywhere in the header (netpbm spec)
-    commented = (b'P5\n# made by a test\n12 # width\n10\n255\n'
-                 + gray.tobytes())
-    assert (decode_image(commented)[..., 0] == gray).all()
-    with pytest.raises(NotImplementedError):
-        decode_image(b'P6\n2 2\n65535\n' + b'\x00' * 24)
-
-
-def test_decode_image_bmp():
-    """24-bit BI_RGB BMP: bottom-up row order, 4-byte row padding
-    (w=3 -> 9-byte rows pad to 12), BGR->RGB, top-down via negative
-    height; 8-bit / compressed refuse."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import decode_image
-
-    def bmp(arr, top_down=False):
-        h, w = arr.shape[:2]
-        stride = (w * 3 + 3) & ~3
-        raster = bytearray()
-        rows = arr if top_down else arr[::-1]
-        for row in rows:
-            raster += row[:, ::-1].tobytes()          # RGB -> BGR
-            raster += b'\x00' * (stride - w * 3)
-        head = (b'BM' + (54 + len(raster)).to_bytes(4, 'little')
-                + b'\x00' * 4 + (54).to_bytes(4, 'little')
-                + (40).to_bytes(4, 'little')
-                + w.to_bytes(4, 'little')
-                + ((-h if top_down else h) % (1 << 32)).to_bytes(
-                    4, 'little')
-                + (1).to_bytes(2, 'little') + (24).to_bytes(2, 'little')
-                + (0).to_bytes(4, 'little')
-                + b'\x00' * 20)
-        return bytes(head) + bytes(raster)
-
-    img = (np.arange(5 * 3 * 3, dtype=np.int64) * 53 % 256
-           ).astype(np.uint8).reshape(5, 3, 3)
-    assert (decode_image(bmp(img)) == img).all()
-    assert (decode_image(bmp(img, top_down=True)) == img).all()
-    bad = bytearray(bmp(img))
-    bad[28] = 8                                       # 8 bpp
-    with pytest.raises(NotImplementedError):
-        decode_image(bytes(bad))
-
-
-def test_decode_image_png():
-    """8-bit PNG: encode -> decode is the identity for every channel
-    layout (gray / gray+alpha / RGB / RGBA) under every filter type
-    0-4 and mixed per-row filters; multi-chunk IDAT concatenates;
-    palette / 16-bit / interlaced refuse with NotImplementedError;
-    a truncated image stream refuses with ValueError."""
-    import zlib
-
-    import numpy as np
-    from yargy_spark.operators.multimodal import (_png_chunk, _PNG_SIG,
-                                                  decode_image,
-                                                  encode_png)
-    rng = np.random.RandomState(42)
-    for c in (1, 2, 3, 4):
-        arr = rng.randint(0, 256, (7, 9, c), dtype=np.uint8)
-        for ft in range(5):
-            p = encode_png(arr, row_filter=lambda y, f=ft: f)
-            out = decode_image(p)
-            assert out.shape == (7, 9, c) and (out == arr).all(), (c, ft)
-        # mixed filters, including the w=1 edge (left neighbor absent)
-        p = encode_png(arr[:, :1], row_filter=lambda y: (y + 1) % 5)
-        assert (decode_image(p) == arr[:, :1]).all()
-
-    # IDAT split across chunks is ONE zlib stream (PNG spec §10)
-    arr = rng.randint(0, 256, (4, 4, 3), dtype=np.uint8)
-    whole = encode_png(arr, row_filter=lambda y: 4)
-    # rebuild: signature + IHDR + IDAT split in two + IEND
-    ihdr_len = int.from_bytes(whole[8:12], 'big')
-    ihdr = whole[8:8 + 12 + ihdr_len]
-    idat_off = 8 + 12 + ihdr_len
-    idat_len = int.from_bytes(whole[idat_off:idat_off + 4], 'big')
-    z = whole[idat_off + 8:idat_off + 8 + idat_len]
-    split = (_PNG_SIG + ihdr + _png_chunk(b'IDAT', z[:3])
-             + _png_chunk(b'IDAT', z[3:]) + _png_chunk(b'IEND', b''))
-    assert (decode_image(split) == arr).all()
-
-    def png_with_ihdr(depth=8, color=2, interlace=0):
-        ihdr = ((4).to_bytes(4, 'big') + (2).to_bytes(4, 'big')
-                + bytes([depth, color, 0, 0, interlace]))
-        raw = zlib.compress(bytes(2 * (1 + 4 * 3)))
-        return (_PNG_SIG + _png_chunk(b'IHDR', ihdr)
-                + _png_chunk(b'IDAT', raw) + _png_chunk(b'IEND', b''))
-
-    for bad in (dict(depth=16), dict(color=7), dict(interlace=1)):
-        with pytest.raises(NotImplementedError):
-            decode_image(png_with_ihdr(**bad))
-    with pytest.raises(ValueError):  # truncated image stream
-        decode_image(_PNG_SIG + ihdr
-                     + _png_chunk(b'IDAT', zlib.compress(b'\x00' * 5))
-                     + _png_chunk(b'IEND', b''))
-
-
-def test_decode_image_png_palette():
-    """Palette (color type 3) PNG: encode_png_palette -> decode is
-    the PLTE lookup under every filter type; tRNS appends per-entry
-    alpha with short-tRNS entries defaulting opaque; out-of-range
-    indices, bad PLTE lengths and a missing PLTE refuse with
-    ValueError."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (_png_chunk,
-                                                  decode_image,
-                                                  encode_png_palette)
-    rng = np.random.RandomState(7)
-    pal = rng.randint(0, 256, (11, 3), dtype=np.uint8)
-    idx = rng.randint(0, 11, (6, 9), dtype=np.uint8)
-    for ft in range(5):
-        p = encode_png_palette(idx, pal, row_filter=lambda y, f=ft: f)
-        out = decode_image(p)
-        assert out.shape == (6, 9, 3) and (out == pal[idx]).all(), ft
-
-    # tRNS shorter than the palette: listed entries take their
-    # alpha, the rest default to 255 (spec 11.3.2)
-    trns = np.array([0, 128, 200], dtype=np.uint8)
-    out = decode_image(encode_png_palette(idx, pal, trns=trns))
-    alpha = np.full(11, 255, np.uint8)
-    alpha[:3] = trns
-    want = np.concatenate([pal, alpha[:, None]], axis=1)[idx]
-    assert out.shape == (6, 9, 4) and (out == want).all()
-
-    # index beyond the palette refuses (not a silent wraparound)
-    with pytest.raises(ValueError, match='out of range'):
-        decode_image(encode_png_palette(
-            np.full((2, 2), 11, np.uint8), pal))
-    # tRNS longer than the palette refuses
-    with pytest.raises(ValueError, match='tRNS'):
-        decode_image(encode_png_palette(
-            idx, pal, trns=np.zeros(12, np.uint8)))
-
-    # PLTE length not a multiple of 3 / missing PLTE refuse
-    whole = encode_png_palette(idx, pal)
-    chunks = []
-    pos = 8
-    while pos + 8 <= len(whole):
-        ln = int.from_bytes(whole[pos:pos + 4], 'big')
-        chunks.append((whole[pos + 4:pos + 8],
-                       whole[pos + 8:pos + 8 + ln]))
-        pos += 12 + ln
-    sig = whole[:8]
-    no_plte = sig + b''.join(_png_chunk(t, d) for t, d in chunks
-                             if t != b'PLTE')
-    with pytest.raises(ValueError, match='PLTE'):
-        decode_image(no_plte)
-    bad_plte = sig + b''.join(
-        _png_chunk(t, d[:-1] if t == b'PLTE' else d)
-        for t, d in chunks)
-    with pytest.raises(ValueError, match='PLTE'):
-        decode_image(bad_plte)
-
-
-def test_jpeg_codec_roundtrip():
-    """Baseline JPEG codec (operators/jpeg.py): bit-exact round trip
-    on the lossless witness (block-constant, even values -> DC
-    quantization exact); bounded error on arbitrary gray/color
-    images incl. non-multiple-of-8 dims; high-frequency content
-    exercises the ZRL/EOB entropy paths; loud boundaries for
-    progressive frames, truncation, and non-JPEG bytes."""
-    import numpy as np
-    from yargy_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    rng = np.random.RandomState(11)
-
-    # exact: block-constant grayscale, even values
-    for _ in range(8):
-        bh, bw = rng.randint(1, 4), rng.randint(1, 5)
-        blocks = 2 * rng.randint(16, 112, (bh, bw))
-        img = np.kron(blocks, np.ones((8, 8), np.int64)) \
-            .astype(np.uint8)
-        out = decode_jpeg(encode_jpeg(img))
-        assert out.shape == img.shape and (out == img).all()
-
-    # lossy, bounded: random grayscale with padding-crop dims
-    for _ in range(4):
-        h, w = rng.randint(5, 40), rng.randint(5, 40)
-        img = rng.randint(0, 256, (h, w)).astype(np.uint8)
-        out = decode_jpeg(encode_jpeg(img))
-        err = np.abs(out.astype(int) - img.astype(int))
-        assert out.shape == (h, w) and err.max() <= 40 \
-            and err.mean() <= 8
-
-    # color 4:4:4 round trip (YCbCr matrix + interleaved MCUs)
-    img = rng.randint(0, 256, (19, 26, 3)).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(img))
-    err = np.abs(out.astype(int) - img.astype(int))
-    assert out.shape == (19, 26, 3) and err.max() <= 40
-
-    # high-frequency checkerboard: energy at the zigzag tail (ZRL
-    # runs, blocks without EOB)
-    board = ((np.indices((16, 16)).sum(0) % 2) * 255).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(board))
-    assert np.abs(out.astype(int) - board.astype(int)).max() <= 40
-
-    # 4:2:0 — the common camera/web layout: color constant per 2x2
-    # quad makes the chroma box-average lossless, so error stays in
-    # the quantizer band; odd dims exercise chroma pad + crop
-    quads = rng.randint(0, 256, (9, 13, 3))
-    img420 = np.repeat(np.repeat(quads, 2, axis=0), 2, axis=1) \
-        .astype(np.uint8)
-    for crop in ((18, 26), (17, 25)):
-        part = img420[:crop[0], :crop[1]]
-        out = decode_jpeg(encode_jpeg(part, subsampling='420'))
-        err = np.abs(out.astype(int) - part.astype(int))
-        assert out.shape == part.shape and err.max() <= 40
-    # grayscale content stays sharp under 420 (luma is full-res)
-    gray3 = np.stack([img[..., 0]] * 3, axis=-1)
-    out = decode_jpeg(encode_jpeg(gray3, subsampling='420'))
-    assert np.abs(out.astype(int) - gray3.astype(int)).max() <= 40
-
-    # boundaries
-    p = encode_jpeg(img)
-    with pytest.raises(ValueError, match='SOI'):
-        decode_jpeg(b'\x00' + p)
-    i = p.find(b'\xff\xc0')
-    with pytest.raises(NotImplementedError, match='non-baseline'):
-        decode_jpeg(p[:i + 1] + b'\xc2' + p[i + 2:])  # SOF2
-    with pytest.raises(ValueError):
-        decode_jpeg(p[:len(p) // 2])
-    # dispatch through decode_image
-    from yargy_spark.operators.multimodal import decode_image
-    assert (decode_image(p) == decode_jpeg(p)).all()
-
-
-def test_wav_codec_roundtrip():
-    """RIFF/WAVE PCM codec: bit-exact 16-bit mono/stereo round trip
-    (PCM is lossless); 8-bit unsigned promoted to centered int16;
-    unknown chunks (LIST) and odd-size word padding skipped; loud
-    boundaries for non-RIFF bytes, compressed fmt tags, truncated
-    chunks, and unsupported bit depths."""
-    import struct
-
-    import numpy as np
-    from yargy_spark.operators.multimodal import (decode_wav,
-                                                  encode_wav)
-    rng = np.random.RandomState(13)
-    for _ in range(6):
-        n, c = rng.randint(1, 200), rng.randint(1, 3)
-        s = rng.randint(-32768, 32768, (n, c)).astype(np.int16)
-        rate = int(rng.choice([8000, 16000, 44100]))
-        arr, r = decode_wav(encode_wav(s, rate))
-        assert r == rate and arr.shape == (n, c) and (arr == s).all()
-
-    fmt = struct.pack('<HHIIHH', 1, 1, 8000, 8000, 1, 8)
-    data = bytes(range(64))
-
-    def wav(chunks):
-        body = b'WAVE' + b''.join(chunks)
-        return b'RIFF' + len(body).to_bytes(4, 'little') + body
-
-    def chunk(cid, payload):
-        return (cid + len(payload).to_bytes(4, 'little') + payload
-                + (b'\x00' if len(payload) % 2 else b''))
-
-    arr, _ = decode_wav(wav([chunk(b'fmt ', fmt),
-                             chunk(b'data', data)]))
-    assert arr[0, 0] == -128 << 8 and arr[63, 0] == (63 - 128) << 8
-
-    # LIST chunk (odd size -> padding byte) between fmt and data
-    arr2, _ = decode_wav(wav([chunk(b'fmt ', fmt),
-                              chunk(b'LIST', b'INFOx'),
-                              chunk(b'data', data)]))
-    assert (arr2 == arr).all()
-
-    with pytest.raises(ValueError, match='RIFF'):
-        decode_wav(b'RIFX' + wav([chunk(b'fmt ', fmt)])[4:])
-    mp3 = struct.pack('<HHIIHH', 85, 1, 8000, 8000, 1, 16)
-    with pytest.raises(NotImplementedError, match='PCM only'):
-        decode_wav(wav([chunk(b'fmt ', mp3), chunk(b'data', b'')]))
-    bad_bits = struct.pack('<HHIIHH', 1, 1, 8000, 8000, 1, 24)
-    with pytest.raises(NotImplementedError, match='24-bit'):
-        decode_wav(wav([chunk(b'fmt ', bad_bits),
-                        chunk(b'data', b'')]))
-    trunc = wav([chunk(b'fmt ', fmt), chunk(b'data', data)])
-    with pytest.raises(ValueError, match='truncated'):
-        decode_wav(trunc[:-10])
-    # stereo data not a whole number of frames
-    st = struct.pack('<HHIIHH', 1, 2, 8000, 32000, 4, 16)
-    with pytest.raises(ValueError, match='frames'):
-        decode_wav(wav([chunk(b'fmt ', st),
-                        chunk(b'data', b'\x00' * 6)]))
-
-
-def test_audio_stats_wav(spark):
-    """synth_wav_media -> audio_stats matches the sample arithmetic
-    the DuckDB oracle recomputes (lossless PCM round trip through
-    real RIFF bytes)."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (audio_stats,
-                                                  synth_wav_media)
-    ids = (0, 1, 2, 3, 7, 255, 256, 1001)
-    df = spark.createDataFrame([(i,) for i in ids], 'doc_id long')
-    got = {r['doc_id']: r for r in
-           audio_stats(synth_wav_media(df)).collect()}
-    for doc_id in ids:
-        n, c = doc_id % 50 + 20, doc_id % 2 + 1
-        k = np.arange(n * c, dtype=np.int64)
-        total = int(np.abs(((doc_id % 256) * 31 + k * 17) % 4096
-                           - 2048).sum())
-        r = got[doc_id]
-        assert (r['n_frames'], r['channels'], r['sample_rate']) == \
-            (n, c, 8000 + (doc_id % 4) * 4000)
-        assert r['amp_sum'] == total
-        assert r['amp_mean_x100'] == total * 100 // (n * c)
-
-
-def test_y4m_codec_roundtrip():
-    """YUV4MPEG2 codec: lossless mono/444 round trips; C420 with
-    quad-constant chroma restores exactly (box-average down,
-    nearest up); loud boundaries for non-y4m bytes, truncated
-    frames, and unsupported colorspaces."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (decode_y4m,
-                                                  encode_y4m)
-    rng = np.random.RandomState(17)
-    fr = rng.randint(0, 256, (5, 12, 16)).astype(np.uint8)
-    out, meta = decode_y4m(encode_y4m(fr, rate=(30, 1)))
-    assert (out == fr).all() and meta['rate'] == (30, 1) \
-        and meta['colorspace'] == 'mono'
-
-    fc = rng.randint(0, 256, (3, 10, 14, 3)).astype(np.uint8)
-    out, meta = decode_y4m(encode_y4m(fc, colorspace='444'))
-    assert (out == fc).all() and meta['colorspace'] == '444'
-
-    quads = rng.randint(0, 256, (2, 6, 8, 3))
-    fq = np.repeat(np.repeat(quads, 2, axis=1), 2, axis=2) \
-        .astype(np.uint8)
-    out, meta = decode_y4m(encode_y4m(fq, colorspace='420'))
-    assert (out == fq).all()          # luma full-res, chroma exact
-                                      # on quad-constant content
-
-    with pytest.raises(ValueError, match='YUV4MPEG2'):
-        decode_y4m(b'JUNK')
-    p = encode_y4m(fr)
-    with pytest.raises(ValueError, match='truncated'):
-        decode_y4m(p[:-5])
-    with pytest.raises(NotImplementedError, match='C422'):
-        decode_y4m(p.replace(b'Cmono', b'C422', 1))
-    out, _ = decode_y4m(p[:p.index(b'\n') + 1])   # header only
-    assert out.shape == (0, 12, 16)
-
-
-def test_sample_frames(spark):
-    """synth_y4m_media -> sample_frames(every_k=2) matches the
-    frame-byte arithmetic the DuckDB oracle recomputes: only even
-    frame indices appear, each with its exact byte sum."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (sample_frames,
-                                                  synth_y4m_media)
-    ids = (0, 1, 2, 3, 7, 255, 256, 1001)
-    df = spark.createDataFrame([(i,) for i in ids], 'doc_id long')
-    rows = sample_frames(synth_y4m_media(df), every_k=2).collect()
-    got = {(r['doc_id'], r['frame_idx']): r for r in rows}
-    expect_keys = set()
-    for doc_id in ids:
-        n = doc_id % 6 + 2
-        w, h = doc_id % 8 + 4, doc_id % 6 + 4
-        for f in range(0, n, 2):
-            expect_keys.add((doc_id, f))
-            j = np.arange(h * w, dtype=np.int64)
-            total = int((((doc_id % 256) * 7 + f * 29 + j * 13)
-                         % 256).sum())
-            r = got[(doc_id, f)]
-            assert (r['width'], r['height'], r['n_frames']) == \
-                (w, h, n)
-            assert r['byte_sum'] == total
-            assert r['byte_mean_x100'] == total * 100 // (h * w)
-    assert set(got) == expect_keys    # odd frames NOT sampled
-
-
-def test_decode_stats_jpeg(spark):
-    """synth_jpeg_media -> decode_stats matches the block-value
-    arithmetic the DuckDB oracle recomputes (real SOF0 bytes through
-    the full entropy decode, bit-exact by the lossless witness)."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (decode_stats,
-                                                  synth_jpeg_media)
-    ids = (0, 1, 2, 3, 5, 255, 256, 1001)
-    df = spark.createDataFrame([(i,) for i in ids], 'doc_id long')
-    got = {r['doc_id']: r for r in
-           decode_stats(synth_jpeg_media(df)).collect()}
-    for doc_id in ids:
-        bw, bh = doc_id % 3 + 1, doc_id % 2 + 1
-        j = np.arange(bh * bw, dtype=np.int64)
-        v = 32 + 2 * (((doc_id % 256) * 7 + j * 13) % 96)
-        total = 64 * int(v.sum())
-        r = got[doc_id]
-        assert (r['width'], r['height'], r['channels']) == \
-            (8 * bw, 8 * bh, 1)
-        assert r['n_bytes'] == 64 * bw * bh
-        assert r['byte_sum'] == total
-        assert r['byte_mean_x100'] == total * 100 // (64 * bw * bh)
-
-
-def test_decode_stats_png(spark):
-    """synth_png_media -> decode_stats matches the generating doc_id
-    arithmetic (the DuckDB oracle's formula) across all four channel
-    layouts, all five row filters, and the palette subset (doc_id%7
-    ==3: PLTE lookup; odd ids add a short tRNS -> 4 channels)."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (decode_stats,
-                                                  synth_png_media)
-    # 3 and 17 are palette docs (odd -> tRNS); 10 palette, no tRNS
-    ids = (0, 1, 2, 3, 7, 10, 17, 255, 256, 1001)
-    df = spark.createDataFrame([(i,) for i in ids], 'doc_id long')
-    got = {r['doc_id']: r for r in
-           decode_stats(synth_png_media(df)).collect()}
-    for doc_id in ids:
-        w, h = doc_id % 8 + 4, doc_id % 6 + 4
-        if doc_id % 7 == 3:
-            c = 4 if doc_id % 2 else 3
-            j = np.arange(w * h, dtype=np.int64)
-            idx = ((doc_id % 256) * 7 + j * 13) % 256
-            total = int(((idx * 3 + 1) % 256).sum()
-                        + ((idx * 5 + 2) % 256).sum()
-                        + ((idx * 7 + 3) % 256).sum())
-            if c == 4:
-                total += int(np.where(idx < 128, (idx * 11 + 4) % 256,
-                                      255).sum())
-        else:
-            c = doc_id % 4 + 1
-            j = np.arange(w * h * c, dtype=np.int64)
-            total = int((((doc_id % 256) * 7 + j * 13) % 256).sum())
-        r = got[doc_id]
-        assert (r['width'], r['height'], r['channels']) == (w, h, c)
-        assert r['n_bytes'] == w * h * c
-        assert r['byte_sum'] == total
-        assert r['byte_mean_x100'] == total * 100 // (w * h * c)
-
-
-def test_decode_stats(spark):
-    """synth_ppm_media -> decode_stats matches the doc_id arithmetic
-    the DuckDB oracle recomputes (full encode->decode round trip)."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (decode_stats,
-                                                  synth_ppm_media)
-    df = spark.createDataFrame([(i,) for i in (0, 1, 7, 255, 256, 1000)],
-                               'doc_id long')
-    got = {r['doc_id']: r for r in
-           decode_stats(synth_ppm_media(df)).collect()}
-    for doc_id in (0, 1, 7, 255, 256, 1000):
-        w, h = doc_id % 8 + 4, doc_id % 6 + 4
-        j = np.arange(w * h * 3, dtype=np.int64)
-        expect = ((doc_id % 256) * 7 + j * 13) % 256
-        r = got[doc_id]
-        assert (r['width'], r['height'], r['channels']) == (w, h, 3)
-        assert r['n_bytes'] == w * h * 3
-        assert r['byte_sum'] == int(expect.sum())
-        assert r['byte_mean_x100'] == int(expect.sum()) * 100 // (w * h * 3)
-
-
-def test_multimodal_plumbing(spark, docs):
-    from yargy_spark.operators.multimodal import (decode_image,
-                                                  extract_features,
-                                                  synth_media)
-    with pytest.raises(NotImplementedError):
-        decode_image(b'\x89PNG\r\n')                  # compressed: boundary
-    media = synth_media(docs)
-    feats = extract_features(media).collect()
-    assert len(feats) == docs.count()
-    row = feats[0]
-    assert row['n_bytes'] == 64 and len(row['histogram']) == 16
-    assert abs(sum(row['histogram']) - 1.0) < 1e-5
-    # deterministic across runs
-    again = extract_features(media).collect()
-    assert {r['doc_id']: r['byte_mean_x100'] for r in feats} == \
-        {r['doc_id']: r['byte_mean_x100'] for r in again}
-
-
 def test_textstats_whitespace_and_degenerate(spark):
     """Regressions: newline/tab-separated documents are real prose
     (not punctuation, not one-word docs); Russian text has word-level
@@ -1525,100 +1045,3 @@ def test_dedup_rewrites_randomized_reference(spark):
                           r['n_removed'])
             for r in remove_dup_spans(df).collect()}
     assert got2 == expect_spans
-
-
-# ---------------- hypothesis round-trip properties for the codecs
-
-from hypothesis import given, settings
-from hypothesis import strategies as hst
-
-_DIMS = hst.tuples(hst.integers(1, 24), hst.integers(1, 24))
-
-
-@settings(deadline=None, max_examples=30)
-@given(_DIMS, hst.integers(1, 4), hst.integers(0, 2**31 - 1),
-       hst.integers(0, 4))
-def test_property_png_lossless(dims, c, seed, ftype):
-    """PNG is lossless: ANY uint8 array round-trips bit-exactly
-    through encode_png -> decode_image under every filter type."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (decode_image,
-                                                  encode_png)
-    h, w = dims
-    arr = np.random.RandomState(seed).randint(
-        0, 256, (h, w, c)).astype(np.uint8)
-    out = decode_image(encode_png(arr, row_filter=lambda y: ftype))
-    assert out.shape == (h, w, c) and (out == arr).all()
-
-
-@settings(deadline=None, max_examples=30)
-@given(_DIMS, hst.integers(2, 256), hst.integers(0, 2**31 - 1),
-       hst.booleans())
-def test_property_png_palette_lossless(dims, npal, seed, with_trns):
-    """Palette PNG round-trips to exactly lut[idx] for ANY palette
-    and index matrix (tRNS appends alpha when present)."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (decode_image,
-                                                  encode_png_palette)
-    h, w = dims
-    rng = np.random.RandomState(seed)
-    pal = rng.randint(0, 256, (npal, 3)).astype(np.uint8)
-    idx = rng.randint(0, npal, (h, w)).astype(np.uint8)
-    trns = (rng.randint(0, 256, max(npal // 2, 1)).astype(np.uint8)
-            if with_trns else None)
-    out = decode_image(encode_png_palette(idx, pal, trns=trns))
-    if with_trns:
-        alpha = np.full(npal, 255, np.uint8)
-        alpha[:len(trns)] = trns
-        want = np.concatenate([pal, alpha[:, None]], axis=1)[idx]
-    else:
-        want = pal[idx]
-    assert (out == want).all()
-
-
-@settings(deadline=None, max_examples=30)
-@given(hst.integers(1, 300), hst.integers(1, 2),
-       hst.integers(0, 2**31 - 1))
-def test_property_wav_lossless(n, c, seed):
-    """PCM WAVE is lossless: ANY int16 frame matrix round-trips
-    bit-exactly."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (decode_wav,
-                                                  encode_wav)
-    s = np.random.RandomState(seed).randint(
-        -32768, 32768, (n, c)).astype(np.int16)
-    arr, rate = decode_wav(encode_wav(s, 16000))
-    assert rate == 16000 and (arr == s).all()
-
-
-@settings(deadline=None, max_examples=20)
-@given(hst.integers(1, 6), _DIMS, hst.integers(0, 2**31 - 1),
-       hst.booleans())
-def test_property_y4m_lossless(n, dims, seed, color):
-    """Raw y4m is lossless for mono and C444 frames."""
-    import numpy as np
-    from yargy_spark.operators.multimodal import (decode_y4m,
-                                                  encode_y4m)
-    h, w = dims
-    shape = (n, h, w, 3) if color else (n, h, w)
-    fr = np.random.RandomState(seed).randint(
-        0, 256, shape).astype(np.uint8)
-    out, _ = decode_y4m(encode_y4m(
-        fr, colorspace='444' if color else 'mono'))
-    assert (out == fr).all()
-
-
-@settings(deadline=None, max_examples=25)
-@given(hst.integers(1, 3), hst.integers(1, 4),
-       hst.integers(0, 2**31 - 1))
-def test_property_jpeg_witness_exact(bh, bw, seed):
-    """The JPEG lossless witness holds for ANY block-constant
-    grayscale image with even values: decode(encode(img)) == img
-    bit-exactly (DC step 16 divides 8*(v-128))."""
-    import numpy as np
-    from yargy_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    blocks = 2 * np.random.RandomState(seed).randint(
-        0, 128, (bh, bw))
-    img = np.kron(blocks, np.ones((8, 8), np.int64)).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(img))
-    assert (out == img).all()

@@ -58,6 +58,34 @@ def test_crashed_commit_is_invisible(spark, tmp_path):
     assert mf.read_table(spark, root).count() == 5
 
 
+def test_crash_in_pointer_write_keeps_previous_id(spark, tmp_path,
+                                                  monkeypatch):
+    """A crash right after the ``current`` pointer is opened for
+    writing must leave the previous snapshot id, not an empty file
+    that ``current_snapshot`` would hand to every gate as ''.  Both
+    writers of the pointer (a commit and a compaction) are crashed."""
+    import builtins
+    root = str(tmp_path / 'tbl_ptr')
+    first = _commit(spark, root, 0, rows=3)['snapshot_id']
+    _commit(spark, root, 0, rows=2)
+    second = mf.current_snapshot(root)
+
+    def crashing_open(path, mode='r', *args, **kwargs):
+        fh = builtins.open(path, mode, *args, **kwargs)
+        if 'w' in mode and os.path.basename(path).startswith('current'):
+            fh.close()
+            raise OSError('crash after opening the pointer')
+        return fh
+
+    monkeypatch.setattr(mf, 'open', crashing_open, raising=False)
+    with pytest.raises(OSError):
+        _commit(spark, root, 1, rows=4)
+    assert mf.current_snapshot(root) == second != first
+    with pytest.raises(OSError):
+        mf.compact_bucket(spark, root, 0)
+    assert mf.current_snapshot(root) == second
+
+
 def test_compact_bucket_row_preserving(spark, tmp_path):
     root = str(tmp_path / 'tbl2')
     # several small commits into the same bucket -> many files

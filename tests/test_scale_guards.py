@@ -268,10 +268,9 @@ def test_connected_components_stops_at_first_star_forest(spark):
 def test_round4_plan_shapes(spark):
     """Plan-shape guards for the round-4 operators (the claims in
     SCALE.md/PLANS.md §12-13, asserted so refactors can't silently
-    regress them): decode path zero Exchanges; map-only banding after
-    the one state agg; no CartesianProduct anywhere in the dedup
-    increment; paragraph dedup has no window; query_topk's corpus
-    side joins via broadcast."""
+    regress them): map-only banding after the one state agg; no
+    CartesianProduct anywhere in the dedup increment; paragraph dedup
+    has no window; query_topk's corpus side joins via broadcast."""
     import re
 
     def plan(df):
@@ -291,25 +290,7 @@ def test_round4_plan_shapes(spark):
                                              dedup_increment,
                                              minhash_state,
                                              paragraph_dedup)
-    from yargy_spark.operators.multimodal import (decode_stats,
-                                                  synth_ppm_media)
     from yargy_spark.operators.similarity import query_topk
-
-    p = plan(decode_stats(synth_ppm_media(docs)))
-    assert exchanges(p) == 0 and 'CartesianProduct' not in p
-
-    # the whole media-codec family keeps the same zero-Exchange
-    # map-only shape (PLANS.md §16): jpeg, wav, y4m frame sampling
-    from yargy_spark.operators.multimodal import (audio_stats,
-                                                  sample_frames,
-                                                  synth_jpeg_media,
-                                                  synth_wav_media,
-                                                  synth_y4m_media)
-    for q in (decode_stats(synth_jpeg_media(docs)),
-              audio_stats(synth_wav_media(docs)),
-              sample_frames(synth_y4m_media(docs))):
-        p = plan(q)
-        assert exchanges(p) == 0 and 'CartesianProduct' not in p
 
     reps, _ = _exact_groups(docs)
     p = plan(_sig_bands(_state_rows(reps)))

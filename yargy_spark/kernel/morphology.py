@@ -153,11 +153,6 @@ class Morphology:
         self.predict_oov = predict_oov
         self._predictor = None  # built lazily; derived from entries
         self._form_memo: Dict[str, List[Form]] = {}
-        # lookup telemetry (memo hit rate = 1 - misses/lookups):
-        # two int increments on the hot path, noise next to the dict
-        # probe; used by tools/lexicon_scale_bench.py
-        self.lookups = 0
-        self.misses = 0
 
     def __getstate__(self):
         # the suffix table and form memo are derived data: keep them
@@ -182,10 +177,8 @@ class Morphology:
         # 10k LRU (morph.py:136-143); bounded for adversarial
         # vocabularies.
         low = word.lower()
-        self.lookups += 1
         forms = self._form_memo.get(low)
         if forms is None:
-            self.misses += 1
             readings = self.entries.get(low)
             if readings is None and self.predict_oov:
                 # OOV: suffix-predicted readings (pymorphy2's

@@ -10,7 +10,6 @@ from .linking import (apply_entity_merges,       # noqa: F401
 from .triples import materialize_triples         # noqa: F401
 from .tokens import (annotate_lemmas,            # noqa: F401
                      lexicon_table, token_table)
-from .events import asof_join                    # noqa: F401
 from .dedup import (clean_corpus, decontaminate,  # noqa: F401
                     dedup_increment, exact_dedup,
                     embedding_dup_pairs, minhash_lsh_pairs,
@@ -33,11 +32,3 @@ from .textstats import (corpus_vocabulary,       # noqa: F401
                         rare_token_scores,
                         repetition_scores, token_counts, top_ngrams,
                         ws_token_count)
-from .multimodal import (audio_stats,            # noqa: F401
-                         decode_image, decode_png, decode_stats,
-                         decode_wav, decode_y4m, encode_png,
-                         encode_png_palette, encode_ppm, encode_wav,
-                         encode_y4m, extract_features,
-                         media_metadata, sample_frames, synth_media,
-                         synth_ppm_media)
-from .jpeg import decode_jpeg, encode_jpeg       # noqa: F401

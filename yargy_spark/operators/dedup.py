@@ -417,29 +417,27 @@ def minhash_signatures(docs: DataFrame, k: int = 3) -> DataFrame:
 
 def minhash_lsh_pairs(docs: DataFrame, k: int = 3,
                       threshold_x10000: int = LSH_DEFAULT_THRESHOLD,
-                      expand_groups: bool = True,
-                      max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
+                      expand_groups: bool = True) -> DataFrame:
     """MinHash+LSH near-dup pairs: banded signatures bucket candidate
     pairs, exact Jaccard verifies them (a < b).  The banded bucket join
     is the 100 TB path — no all-pairs comparison ever happens, and
     exact-duplicate texts collapse to representatives before banding
     (identical docs share every band; a boilerplate cluster would
     otherwise blow up the bucket join — see ``_exact_groups``).
-    Band buckets larger than ``max_bucket`` emit star edges only (see
-    ``_band_candidates``) — pass ``None`` to disable the governor."""
+    Band buckets larger than ``LSH_MAX_BUCKET`` emit star edges only
+    (see ``_band_candidates``)."""
     reps, groups = _exact_groups(docs)
-    rep_pairs = _minhash_rep_pairs(reps, k, threshold_x10000,
-                                   max_bucket)
+    rep_pairs = _minhash_rep_pairs(_state_rows(reps, k),
+                                   threshold_x10000)
     if not expand_groups:
         return rep_pairs
     return _expand_groups(rep_pairs, groups, reps, k,
                           'jaccard_x10000')
 
 
-def _band_candidates(bands: DataFrame,
-                     max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
+def _band_candidates(bands: DataFrame) -> DataFrame:
     """(a, b) candidate pairs (a < b) from a banded-signature frame,
-    with the HOT-BUCKET GOVERNOR: buckets of ``max_bucket`` or fewer
+    with the HOT-BUCKET GOVERNOR: buckets of ``LSH_MAX_BUCKET`` or fewer
     docs pair all members; larger buckets emit only STAR edges to the
     bucket-min doc — O(members) instead of O(members^2).
 
@@ -460,34 +458,27 @@ def _band_candidates(bands: DataFrame,
     Shape: bucket stats groupBy + two joins, all keyed on
     (band, sig_key) — the same partitioning end-to-end, so AQE plans
     one logical exchange family; the hot-star branch is a map-side
-    filter of the stats-joined stream.  ``max_bucket=None`` disables
-    the governor (the pre-round-5 all-pairs behavior)."""
+    filter of the stats-joined stream."""
     left = bands.select(F.col('doc_id').alias('a'), 'band', 'sig_key')
-    right = bands.select(F.col('doc_id').alias('b'), 'band', 'sig_key')
-    if max_bucket is None:
-        return (left.join(right, ['band', 'sig_key'])
-                .where(F.col('a') < F.col('b'))
-                .select('a', 'b').distinct())
     stats = (bands.groupBy('band', 'sig_key')
              .agg(F.count('*').alias('bn'),
                   F.min('doc_id').alias('bmin')))
     sized = bands.join(stats, ['band', 'sig_key'])
-    small = (sized.where(F.col('bn') <= max_bucket)
+    small = (sized.where(F.col('bn') <= LSH_MAX_BUCKET)
              .select(F.col('doc_id').alias('b'), 'band', 'sig_key'))
     all_pairs = (left.join(small, ['band', 'sig_key'])
                  .where(F.col('a') < F.col('b'))
                  .select('a', 'b'))
-    star = (sized.where((F.col('bn') > max_bucket)
+    star = (sized.where((F.col('bn') > LSH_MAX_BUCKET)
                         & (F.col('doc_id') != F.col('bmin')))
             .select(F.col('bmin').alias('a'),
                     F.col('doc_id').alias('b')))
     return all_pairs.unionByName(star).distinct()
 
 
-def lsh_hot_buckets(docs: DataFrame, k: int = 3,
-                    max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
+def lsh_hot_buckets(docs: DataFrame, k: int = 3) -> DataFrame:
     """The governor's observability face: every (band, sig_key)
-    bucket whose representative population exceeds ``max_bucket`` —
+    bucket whose representative population exceeds ``LSH_MAX_BUCKET`` —
     i.e. the buckets ``_band_candidates`` degrades to star edges —
     with its population and min-doc witness.  Empty on a healthy
     corpus; rows here mean a near-identical mega-cluster (or a
@@ -497,28 +488,27 @@ def lsh_hot_buckets(docs: DataFrame, k: int = 3,
     return (bands.groupBy('band', 'sig_key')
             .agg(F.count('*').alias('bn'),
                  F.min('doc_id').alias('bmin'))
-            .where(F.col('bn') > max_bucket)
+            .where(F.col('bn') > LSH_MAX_BUCKET)
             .select('band', 'sig_key', 'bn', 'bmin'))
 
 
-def _minhash_rep_pairs(reps: DataFrame, k: int,
-                       threshold_x10000: int,
-                       max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
-    """Banded-signature candidates + exact-Jaccard verify over an
-    already exact-dedup'd (doc_id, text) frame — shared by
-    ``minhash_lsh_pairs`` and ``clean_corpus`` so a composition never
+def _minhash_rep_pairs(rows: DataFrame,
+                       threshold_x10000: int) -> DataFrame:
+    """Banded-signature candidates + exact-Jaccard verify over the
+    ``_state_rows`` of already exact-dedup'd representatives — shared
+    by ``minhash_lsh_pairs``, ``clean_corpus`` and
+    ``dedup_increment``'s within-batch pairs, so a composition never
     recomputes the exact-group window.
 
-    Everything hangs off ONE ``_state_rows`` aggregation: banding is
+    Everything hangs off that ONE aggregation: banding is
     map-only array slicing over its ``sig`` column (band key =
     '_'-joined minhashes in hash_idx order), candidate generation is
     the governed bucket join (``_band_candidates``), and the verify
     stage uses the stored ``shs``/``sz`` arrays — one shingle-stream
     Exchange total, where the pre-round-4 plan paid three (band
     groupBy + signature agg + verify doc_sets agg)."""
-    rows = _state_rows(reps, k)
     bands = _sig_bands(rows)
-    cands = _band_candidates(bands, max_bucket)
+    cands = _band_candidates(bands)
     pairs = _verify_pairs(cands, rows, rows)
     return (pairs
             .where(F.col('jaccard_x10000') >= threshold_x10000)
@@ -541,8 +531,8 @@ def minhash_state(docs: DataFrame, k: int = 3) -> DataFrame:
 
 def dedup_increment(new_docs: DataFrame, state: DataFrame,
                     k: int = 3,
-                    threshold_x10000: int = LSH_DEFAULT_THRESHOLD,
-                    max_bucket: int = LSH_MAX_BUCKET) -> tuple:
+                    threshold_x10000: int = LSH_DEFAULT_THRESHOLD
+                    ) -> tuple:
     """Check a NEW batch against committed near-dup state and roll
     the state forward — near-dup dedup between monthly full
     ``minhash_lsh_pairs`` re-runs, mirroring incremental entity
@@ -576,11 +566,7 @@ def dedup_increment(new_docs: DataFrame, state: DataFrame,
 
     # within-batch pairs: the batch operator's exact semantics,
     # including its hot-bucket governor (_band_candidates)
-    wb_bands = _sig_bands(new_rows)
-    wb_cands = _band_candidates(wb_bands, max_bucket)
-    wb_rep_pairs = (_verify_pairs(wb_cands, new_rows, new_rows)
-                    .where(F.col('jaccard_x10000')
-                           >= threshold_x10000))
+    wb_rep_pairs = _minhash_rep_pairs(new_rows, threshold_x10000)
     wb_pairs = _expand_groups(wb_rep_pairs, groups, reps, k,
                               'jaccard_x10000')
 
@@ -588,7 +574,7 @@ def dedup_increment(new_docs: DataFrame, state: DataFrame,
     # state's stored arrays; expand only the NEW side (state is
     # already rep-level, and its own members were paired when their
     # batch was the increment).  The governor's bipartite form: when
-    # a STATE bucket holds more than max_bucket reps (a near-
+    # a STATE bucket holds more than LSH_MAX_BUCKET reps (a near-
     # identical mega-cluster accreted over increments), each batch
     # doc is checked against that bucket's min-doc rep only: when the
     # hot bucket IS one mega-cluster, any-match detection survives
@@ -603,24 +589,18 @@ def dedup_increment(new_docs: DataFrame, state: DataFrame,
     # O(|batch bucket|).  The batch side is batch-sized by contract
     # and stays ungoverned.
     s_bands = _sig_bands(state)
-    if max_bucket is None:
-        s_side = s_bands.select(F.col('doc_id').alias('a'),
-                                'band', 'sig_key')
-    else:
-        s_stats = (s_bands.groupBy('band', 'sig_key')
-                   .agg(F.count('*').alias('bn'),
-                        F.min('doc_id').alias('bmin')))
-        s_small = (s_bands.join(s_stats, ['band', 'sig_key'])
-                   .where(F.col('bn') <= max_bucket)
-                   .select(F.col('doc_id').alias('a'),
-                           'band', 'sig_key'))
-        s_star = (s_stats.where(F.col('bn') > max_bucket)
-                  .select(F.col('bmin').alias('a'),
-                          'band', 'sig_key'))
-        s_side = s_small.unionByName(s_star)
-    cross_cands = (s_side
-                   .join(wb_bands.select(F.col('doc_id').alias('b'),
-                                         'band', 'sig_key'),
+    s_stats = (s_bands.groupBy('band', 'sig_key')
+               .agg(F.count('*').alias('bn'),
+                    F.min('doc_id').alias('bmin')))
+    s_small = (s_bands.join(s_stats, ['band', 'sig_key'])
+               .where(F.col('bn') <= LSH_MAX_BUCKET)
+               .select(F.col('doc_id').alias('a'), 'band', 'sig_key'))
+    s_star = (s_stats.where(F.col('bn') > LSH_MAX_BUCKET)
+              .select(F.col('bmin').alias('a'), 'band', 'sig_key'))
+    cross_cands = (s_small.unionByName(s_star)
+                   .join(_sig_bands(new_rows)
+                         .select(F.col('doc_id').alias('b'),
+                                 'band', 'sig_key'),
                          ['band', 'sig_key'])
                    .select('a', 'b').distinct())
     cross_rep_pairs = (_verify_pairs(cross_cands, state, new_rows)
@@ -898,7 +878,8 @@ def clean_corpus(docs: DataFrame,
             .where(F.col('keep') == 1).select('doc_id'))
     qdocs = docs.join(kept, 'doc_id').select('doc_id', 'text')
     reps, _groups = _exact_groups(qdocs)
-    rep_pairs = _minhash_rep_pairs(reps, k, threshold_x10000)
+    rep_pairs = _minhash_rep_pairs(_state_rows(reps, k),
+                                   threshold_x10000)
     dropped = rep_pairs.select(F.col('b').alias('doc_id')).distinct()
     retained = reps.join(dropped, 'doc_id', 'left_anti')
     out_cols = ['doc_id'] + list(meta_cols)

@@ -174,8 +174,8 @@ def context_windows(transcripts: DataFrame, k: int = 3,
     quadratic blowup on long conversations.  Conversations are
     bounded (TURNS_PER_CONV) and ids are hash-distributed, so the
     window partitions are skew-free by construction; a pathological
-    mega-conversation source would reuse the asof_join ts-bucket
-    mitigation (events.py).
+    mega-conversation source would need a salted sub-partition of
+    the conversation key.
 
     (conv_id, turn_idx, role, n_ctx_turns, context)."""
     w = (Window.partitionBy('conv_id').orderBy('turn_idx')

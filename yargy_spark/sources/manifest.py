@@ -48,15 +48,8 @@ def _manifest_dir(root: str) -> str:
 
 def committed_partitions(root: str) -> Dict[int, dict]:
     """Union of partition stats over all committed snapshots."""
-    mdir = _manifest_dir(root)
     done: Dict[int, dict] = {}
-    if not os.path.isdir(mdir):
-        return done
-    for name in sorted(os.listdir(mdir)):
-        if not (name.startswith('snap-') and name.endswith('.json')):
-            continue
-        with open(os.path.join(mdir, name), 'r', encoding='utf-8') as fh:
-            snap = json.load(fh)
+    for snap in snapshots(root):
         for bucket, stats in snap.get('partitions', {}).items():
             done[int(bucket)] = stats
     return done
@@ -73,6 +66,17 @@ def current_snapshot(root: str) -> Optional[str]:
         return None
     with open(path, 'r', encoding='utf-8') as fh:
         return fh.read().strip()
+
+
+def _write_current(root: str, snapshot_id: str) -> None:
+    """Point ``_manifests/current`` at ``snapshot_id`` atomically (tmp
+    + rename, like ``write_manifest``): a crash mid-write leaves the
+    previous id in place, never an empty pointer."""
+    path = os.path.join(_manifest_dir(root), 'current')
+    tmp = path + '.tmp'
+    with open(tmp, 'w', encoding='utf-8') as fh:
+        fh.write(snapshot_id)
+    os.replace(tmp, path)
 
 
 def check_n_buckets(root: str, n_buckets: int) -> None:
@@ -114,8 +118,7 @@ def _commit(df: DataFrame, root: str, note: str,
             expected_buckets: Optional[List[int]],
             n_buckets: Optional[int],
             replace: bool,
-            source_snapshot: Optional[str],
-            suffix: str = '') -> dict:
+            source_snapshot: Optional[str]) -> dict:
     """Shared commit path: write df into its OWN snapshot directory,
     then atomically write the manifest (the commit point).  A crash
     between the two leaves an orphan directory no reader sees
@@ -128,7 +131,7 @@ def _commit(df: DataFrame, root: str, note: str,
     commit's ``totals`` — the hook for counters observed on the write
     itself (``DataFrame.observe``) — so every counter is final when
     the one manifest write happens."""
-    snapshot_id = 'snap-%d%s' % (time.time_ns(), suffix)
+    snapshot_id = 'snap-%d' % time.time_ns()
     data_dir = os.path.join(root, 'data', snapshot_id)
     (df.write.mode('error')
        .partitionBy(BUCKET_COL)
@@ -161,12 +164,8 @@ def _commit(df: DataFrame, root: str, note: str,
         manifest['source_snapshot'] = source_snapshot
     if n_buckets is not None:
         manifest['n_buckets'] = n_buckets
-    mdir = _manifest_dir(root)
-    os.makedirs(mdir, exist_ok=True)
     write_manifest(root, manifest)
-    with open(os.path.join(mdir, 'current'), 'w',
-              encoding='utf-8') as fh:
-        fh.write(snapshot_id)
+    _write_current(root, snapshot_id)
     return manifest
 
 
@@ -472,8 +471,5 @@ def compact_bucket(spark: SparkSession, root: str, bucket: int,
         'note': 'compaction of bucket %d' % bucket,
     }
     write_manifest(root, manifest)
-    mdir = _manifest_dir(root)
-    with open(os.path.join(mdir, 'current'), 'w',
-              encoding='utf-8') as fh:
-        fh.write(snapshot_id)
+    _write_current(root, snapshot_id)
     return n
