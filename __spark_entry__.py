@@ -344,17 +344,6 @@ def q_transcripts_tool_stats(spark, sf_dir) -> DataFrame:
                  F.countDistinct('conv_id').alias('n_convs')))
 
 
-def q_context_windows(spark, sf_dir) -> DataFrame:
-    """Rolling k-turn context assembly (packing.context_windows —
-    the SFT chat-data input layout) over the deterministic generator
-    corpus; the oracle replays the id-derived text generator AND the
-    window frame in SQL."""
-    from yargy_spark.operators.packing import context_windows
-    from yargy_spark.sources.transcripts import synth_transcripts
-    t = synth_transcripts(spark, n_turns=1024, partitions=8)
-    return context_windows(t, k=3)
-
-
 def q_stream_mention_rollup(spark, sf_dir) -> DataFrame:
     """Structured Streaming: file source -> extraction kernel ->
     watermarked event-time rollup, drained with availableNow."""
@@ -823,34 +812,6 @@ def q_doc_fingerprints(spark, sf_dir) -> DataFrame:
     return doc_fingerprints(_docs(spark, sf_dir))
 
 
-def q_doc_splits(spark, sf_dir) -> DataFrame:
-    """Leakage-safe deterministic train/val/test split by hashed
-    doc_id (operators/sampling.py::hash_split) — 98/1/1 in basis
-    points over the portable md5 bucket."""
-    from yargy_spark.operators.sampling import hash_split
-    return (hash_split(_docs(spark, sf_dir), 'doc_id')
-            .select('doc_id', 'split'))
-
-
-def q_lang_balanced_sample(spark, sf_dir) -> DataFrame:
-    """Per-language deterministic Bernoulli downsampling (rebalances
-    the English-heavy head to 35%, keeps the rest)."""
-    from yargy_spark.operators.sampling import stratified_sample
-    return (stratified_sample(_docs(spark, sf_dir), 'lang',
-                              {'en': 0.35}, 'doc_id',
-                              default_fraction=1.0)
-            .select('doc_id', 'lang'))
-
-
-def q_source_reservoir(spark, sf_dir) -> DataFrame:
-    """Deterministic 5-per-source uniform sample (lowest salted hash
-    wins; WindowGroupLimit caps the window map-side)."""
-    from yargy_spark.operators.sampling import stratum_reservoir
-    return (stratum_reservoir(_docs(spark, sf_dir), 'source', 5,
-                              'doc_id')
-            .select('source', 'doc_id'))
-
-
 def q_decontam_pairs(spark, sf_dir) -> DataFrame:
     """Eval-set decontamination (operators/dedup.py::decontaminate):
     documents sharing >=2 distinct 3-gram shingles with the held-out
@@ -861,86 +822,6 @@ def q_decontam_pairs(spark, sf_dir) -> DataFrame:
     train = docs.where(F.col('doc_id') % 97 != 0)
     ev = docs.where(F.col('doc_id') % 97 == 0)
     return decontaminate(train, ev, k=3, min_hits=2)
-
-
-def q_mixture_sample(spark, sf_dir) -> DataFrame:
-    """Deterministic token-budget data mixture
-    (operators/sampling.py::mixture_sample): 50/30/20 en/zh/de shares
-    of a 6000-token budget; es/fr excluded by omission."""
-    from yargy_spark.operators.sampling import mixture_sample
-    return (mixture_sample(_docs(spark, sf_dir), 'lang',
-                           {'en': 0.5, 'zh': 0.3, 'de': 0.2},
-                           6000, 'doc_id')
-            .select('doc_id', 'lang', 'n_tokens'))
-
-
-def q_mixture_re_tokens(spark, sf_dir) -> DataFrame:
-    """The pluggable budget counter (sampling.mixture_sample
-    token_expr= + textstats.re_token_count): the SAME 50/30/20
-    mixture but budgeted in BPE-ish regex tokens — selection
-    thresholds and the emitted n_tokens both follow the swapped
-    counter."""
-    from yargy_spark.operators.sampling import mixture_sample
-    from yargy_spark.operators.textstats import re_token_count
-    return (mixture_sample(_docs(spark, sf_dir), 'lang',
-                           {'en': 0.5, 'zh': 0.3, 'de': 0.2},
-                           6000, 'doc_id',
-                           token_expr=re_token_count())
-            .select('doc_id', 'lang', 'n_tokens'))
-
-
-def q_mixture_epochs(spark, sf_dir) -> DataFrame:
-    """Upsampling mixture (sampling.py::mixture_epochs): de at 0.9 of
-    a 20k-token budget repeats ~5 epochs; en at 0.1 downsamples —
-    whole-epoch + hash-selected-partial repetition, all integer
-    arithmetic."""
-    from yargy_spark.operators.sampling import mixture_epochs
-    return (mixture_epochs(_docs(spark, sf_dir), 'lang',
-                           {'de': 0.9, 'en': 0.1}, 20000, 'doc_id')
-            .select('doc_id', 'lang', 'n_tokens', 'epoch'))
-
-
-def q_pack_sequences(spark, sf_dir) -> DataFrame:
-    """Deterministic concat-and-chunk packing layout
-    (operators/packing.py): per-doc shard, stream offset, and
-    first/last ctx-length training sequence — reproducible across
-    engines via the salted md5 order."""
-    from yargy_spark.operators.packing import pack_sequences
-    return pack_sequences(_docs(spark, sf_dir), ctx_len=512,
-                          n_buckets=8)
-
-
-def q_materialize_sequences(spark, sf_dir) -> DataFrame:
-    """The packing WRITER (packing.materialize_sequences): actual
-    (bucket, seq_id) training rows with the assembled token payload.
-    The oracle re-slices every document in SQL, proving each sequence
-    is exactly ctx_len tokens except per-bucket tails — the full
-    payload text rides under the value hash."""
-    from yargy_spark.operators.packing import materialize_sequences
-    return materialize_sequences(_docs(spark, sf_dir), ctx_len=512,
-                                 n_buckets=8)
-
-
-def q_training_batches(spark, sf_dir) -> DataFrame:
-    """The WHOLE training-data preparation pipeline as one declarative
-    plan: quality gate -> exact dedup -> LSH near-dup prune
-    (clean_corpus) -> leakage-safe train split (hash_split) ->
-    token-budget language mixture (mixture_sample) -> concat-and-chunk
-    packing (pack_sequences).  Every stage is the scale-shaped
-    operator it reuses; the composed DuckDB oracle replays the chain
-    end-to-end from the same shared SQL fragments."""
-    from yargy_spark.operators.dedup import clean_corpus
-    from yargy_spark.operators.packing import pack_sequences
-    from yargy_spark.operators.sampling import (hash_split,
-                                                mixture_sample)
-    docs = _docs(spark, sf_dir)
-    cleaned = clean_corpus(docs, meta_cols=('text', 'lang'))
-    train = (hash_split(cleaned, 'doc_id')
-             .where(F.col('split') == 'train'))
-    mixed = mixture_sample(train, 'lang',
-                           {'en': 0.5, 'zh': 0.3, 'de': 0.2},
-                           6000, 'doc_id')
-    return pack_sequences(mixed, ctx_len=512, n_buckets=4)
 
 
 def q_pricing_summary(spark, sf_dir) -> DataFrame:
@@ -1060,16 +941,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'dedup_report': q_dedup_report,
         # -- rotated IN: past the cap in round 4 (last gated r2/r3)
         'decontam_pairs': q_decontam_pairs,
-        'mixture_sample': q_mixture_sample,
-        'mixture_epochs': q_mixture_epochs,
-        'pack_sequences': q_pack_sequences,
-        'training_batches': q_training_batches,
         'exact_dedup': q_exact_dedup,
         'stream_dedup': q_stream_dedup,
         'stream_mention_rollup': q_stream_mention_rollup,
         'embedding_dup_exact': q_embedding_dup_exact,
         'ann_cosine_topk': q_ann_cosine_topk,
-        'doc_splits': q_doc_splits,
         'lang_id': q_lang_id,
         'quality_scores': q_quality_scores,
         'token_counts': q_token_counts,
@@ -1078,11 +954,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'kg_merge_apply': q_kg_merge_apply,
         'pii_scrub': q_pii_scrub,
         'filter_corpus': q_filter_corpus,
-        'materialize_sequences': q_materialize_sequences,
-        'mixture_re_tokens': q_mixture_re_tokens,
         # ---- every entry below was driver-gated hash-green in
         # ---- ROUND 4 (CORRECTNESS_r04.json) with unchanged
-        # ---- semantics and oracles; the last sixteen fall past the
+        # ---- semantics and oracles; the last six fall past the
         # ---- driver's 50-query cap.
         'paragraph_dedup': q_paragraph_dedup,
         'ann_query_topk': q_ann_query_topk,
@@ -1097,7 +971,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'stream_band_collisions': q_stream_band_collisions,
         'simhash_docs': q_simhash_docs,
         'transcripts_tool_stats': q_transcripts_tool_stats,
-        'context_windows': q_context_windows,
         'ngram_jaccard_dups': q_ngram_jaccard_dups,
         'simhash_dup_pairs': q_simhash_dup_pairs,
         'embedding_dup_pairs': q_embedding_dup_pairs,
@@ -1105,8 +978,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'repetition_scores': q_repetition_scores,
         'corpus_vocabulary': q_corpus_vocabulary,
         'top_ngrams': q_top_ngrams,
-        'lang_balanced_sample': q_lang_balanced_sample,
-        'source_reservoir': q_source_reservoir,
     }
 
 
@@ -1140,13 +1011,6 @@ def _kg_expected():
 
 
 _NORM = r"regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"
-
-# the ONE SQL twin of textstats.ws_token_count — shared by the
-# token_counts / mixture_sample / pack_sequences oracles so the three
-# can never count differently (mirrors the shared Spark expression)
-_WS_TOKENS = """CAST(CASE WHEN length(trim(lower(text))) = 0 THEN 0
-       ELSE len(regexp_split_to_array(trim(lower(text)),
-                                      '\\s+')) END AS INT)"""
 
 # Quality-gate fragments shared by oracles['quality_scores'] and the
 # clean_corpus keepdocs CTE — ONE definition so the two oracles (and
@@ -1631,40 +1495,6 @@ SELECT role, tool, count(*) AS n_turns,
 FROM r GROUP BY role, tool
 """
 
-    # context-window oracle: replay the id-derived text generator
-    # (same modular selectors as transcripts_tool_stats, plus the
-    # golden/filler sentence pools) and the rolling frame in SQL
-    from yargy_spark.sources.transcripts import (FILLERS,
-                                                 GOLDEN_SENTENCES)
-
-    def _sql_list(items):
-        return '[%s]' % ', '.join(
-            "'%s'" % s.replace("'", "''") for s in items)
-
-    oracles['context_windows'] = """
-WITH t AS (
-  SELECT i AS id, i // 8 AS conv, CAST(i % 8 AS INT) AS turn_idx,
-         (i % 8) % 3 AS role_idx
-  FROM (SELECT unnest(generate_series(0, 1023)) AS i)),
-txt AS (
-  SELECT printf('c%012d', conv) AS conv_id, turn_idx,
-         ['user','assistant','tool'][role_idx + 1] AS role,
-         CASE WHEN id % 3 = 0
-              THEN {f}[id % {nf} + 1] || '. ' || {g}[id % {ng} + 1]
-                   || '. ' || {f}[(id * 7 + 3) % {nf} + 1]
-              ELSE {f}[id % {nf} + 1] || ', '
-                   || {f}[(id * 7 + 3) % {nf} + 1]
-         END AS text
-  FROM t)
-SELECT conv_id, turn_idx, role,
-       count(text) OVER w AS n_ctx_turns,
-       coalesce(string_agg(text, chr(10)) OVER w, '') AS context
-FROM txt
-WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx
-             ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)
-""".format(f=_sql_list(FILLERS), g=_sql_list(GOLDEN_SENTENCES),
-           nf=len(FILLERS), ng=len(GOLDEN_SENTENCES))
-
     # streaming rollup oracle: event-time windows computed from the
     # SAME fixture rows the query streams (sources/transcripts.
     # golden_stream_rows) — one source of truth for the timestamps
@@ -1866,14 +1696,6 @@ FROM reach GROUP BY node
     # keep-predicate as a row filter, dedup-first representatives over
     # the kept docs, the SAME banded-minhash candidate chain, and
     # greater-id pruning of every verified pair.
-    # salted portable bucket fragments shared by the sampling oracles
-    # and the training_batches composition: coalesce(..., chr(0))
-    # mirrors sampling._key_str's NULL-key sentinel (a NULL key would
-    # otherwise poison the hash chain)
-    _KS = "coalesce(CAST(doc_id AS VARCHAR), chr(0))"
-    _B = ("('0x' || substr(md5('{{salt}}|' || {ks}), "
-          "1, 15))::int64 % 10000").format(ks=_KS)
-
     oracles['clean_corpus'] = """
 WITH keepdocs AS (
   SELECT doc_id, text FROM (
@@ -1896,54 +1718,6 @@ WHERE NOT EXISTS (SELECT 1 FROM dropped x WHERE x.doc_id = r.doc_id)
            df=_dedup_first_sql('keepdocs'), sh=_SHINGLES_REPS,
            mc=minhash_cands, jv=_JACCARD_VERIFY,
            thr=LSH_DEFAULT_THRESHOLD)
-
-    # training_batches: the END-TO-END pipeline oracle, composed from
-    # the SAME fragments as its stage oracles — clean_corpus retained
-    # set (embedded verbatim as a CTE), the hash-split train bucket,
-    # the mixture integer thresholds, and the packing cumsum.  Any
-    # drift in a stage oracle shows up here too, by construction.
-    oracles['training_batches'] = """
-WITH clean AS ({clean}),
-cdocs AS (
-  SELECT d.doc_id, d.text, d.lang FROM documents d
-  JOIN clean c ON c.doc_id = d.doc_id),
-train AS (SELECT * FROM cdocs WHERE {bsplit} < 9800),
-ttoks AS (SELECT doc_id, lang, {ws} AS n_tokens FROM train),
-tot AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tot
-        FROM ttoks GROUP BY lang),
-kf AS (
-  SELECT lang,
-    CASE WHEN tot <= 0 THEN 0
-         ELSE LEAST(10000,
-                    CAST(CASE lang WHEN 'de' THEN 1200
-                                   WHEN 'en' THEN 3000
-                                   WHEN 'zh' THEN 1800 END
-                         AS BIGINT) * 10000 // tot) END AS keep_bp
-  FROM tot WHERE lang IN ('de', 'en', 'zh')),
-mix AS (SELECT t.doc_id, t.n_tokens FROM ttoks t JOIN kf USING (lang)
-        WHERE {bmix} < keep_bp),
-pk AS (
-  SELECT doc_id, n_tokens,
-    CAST(('0x' || substr(md5('packb|' || {ks}), 1, 15))::int64 % 4
-         AS INT) AS bucket,
-    ('0x' || substr(md5('pack|' || {ks}), 1, 15))::int64 AS draw
-  FROM mix WHERE n_tokens > 0),
-packed AS (
-  SELECT doc_id, bucket, n_tokens,
-    CAST(sum(n_tokens) OVER (
-      PARTITION BY bucket ORDER BY draw ASC, doc_id ASC
-      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS fin
-  FROM pk)
-SELECT doc_id, bucket,
-       CAST(fin - n_tokens AS BIGINT) AS start_tok,
-       n_tokens,
-       CAST((fin - n_tokens) // 512 AS BIGINT) AS seq_first,
-       CAST((fin - 1) // 512 AS BIGINT) AS seq_last
-FROM packed
-""".format(clean=oracles['clean_corpus'],
-           bsplit=_B.format(salt='split'),
-           bmix=_B.format(salt='mixture'),
-           ks=_KS, ws=_WS_TOKENS)
 
     oracles['simhash_docs'] = """
 WITH toks AS (
@@ -2370,9 +2144,9 @@ FROM rep_scored
 """
 
     # filter_corpus composes the SAME fragments the stage oracles use
-    # (quality keep, repetition flag, PII regexps) — like
-    # training_batches, the composition can never diverge from its
-    # stages' gated definitions
+    # (quality keep, repetition flag, PII regexps), so the
+    # composition can never diverge from its stages' gated
+    # definitions
     from yargy_spark.operators.textstats import (
         EMAIL_PATTERN, PHONE_ANCHORED_PATTERN, PHONE_GROUPED_PATTERN)
     filter_values = ',\n    '.join(
@@ -2458,11 +2232,13 @@ FROM documents
     oracles['token_counts'] = """
 SELECT doc_id,
   -- empty/whitespace-only text counts 0 tokens (split('') is [''])
-  {ws} AS ws_tokens,  -- Spark size() is INT
+  CAST(CASE WHEN length(trim(lower(text))) = 0 THEN 0
+            ELSE len(regexp_split_to_array(trim(lower(text)), '\\s+'))
+       END AS INT) AS ws_tokens,  -- Spark size() is INT
   CAST(len(regexp_extract_all(lower(text), '{pat}')) AS INT)
     AS re_tokens
 FROM documents
-""".format(pat=TOKEN_PATTERN, ws=_WS_TOKENS)
+""".format(pat=TOKEN_PATTERN)
 
     oracles['top_ngrams'] = """
 WITH norm AS (SELECT doc_id, string_split({norm}, ' ') AS w
@@ -2494,33 +2270,6 @@ FROM ranked WHERE fp_rank <= 4
 """.format(sh=_SHINGLES, h=_H60.format(x='shingle'))
 
 
-    # deterministic sampling / splits (operators/sampling.py): the
-    # salted 60-bit md5 bucket replays exactly — no rand() anywhere
-    # (_KS/_B defined above, before the training_batches composition)
-    oracles['doc_splits'] = """
-SELECT doc_id,
-  CASE WHEN b < 9800 THEN 'train'
-       WHEN b < 9900 THEN 'val'
-       ELSE 'test' END AS split
-FROM (SELECT doc_id, {b} AS b FROM documents)
-""".format(b=_B.format(salt='split'))
-
-    oracles['lang_balanced_sample'] = """
-SELECT doc_id, lang
-FROM (SELECT doc_id, lang, {b} AS b FROM documents)
-WHERE b < CASE WHEN lang = 'en' THEN 3500 ELSE 10000 END
-""".format(b=_B.format(salt='sample'))
-
-    oracles['source_reservoir'] = """
-SELECT source, doc_id
-FROM (SELECT source, doc_id,
-             row_number() OVER (PARTITION BY source
-                                ORDER BY {h}, doc_id) AS r
-      FROM documents)
-WHERE r <= 5
-""".format(h="('0x' || substr(md5('reservoir|' || " + _KS +
-             "), 1, 15))::int64")
-
     # eval-set decontamination (operators/dedup.py::decontaminate):
     # the hash join replays on the same 60-bit shingle hash both
     # engines compute; count(*) is BIGINT in both
@@ -2541,154 +2290,6 @@ GROUP BY t.doc_id, e.doc_id
 HAVING count(*) >= 2
 """.format(norm=_NORM,
            h=_H60.format(x="w[i] || ' ' || w[i+1] || ' ' || w[i+2]"))
-
-    # token-budget mixture (operators/sampling.py::mixture_sample):
-    # integer targets (weight_bp * budget DIV 10000 precomputed:
-    # en 3000 / zh 1800 / de 1200 of 6000) and integer keep
-    # thresholds replay exactly; sum(INT) is HUGEINT -> cast
-    oracles['mixture_sample'] = """
-WITH toks AS (
-  SELECT doc_id, lang, {ws} AS n_tokens
-  FROM documents),
-tot AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tot
-        FROM toks GROUP BY lang),
-kf AS (
-  SELECT lang,
-    CASE WHEN tot <= 0 THEN 0
-         ELSE LEAST(10000,
-                    CAST(CASE lang WHEN 'de' THEN 1200
-                                   WHEN 'en' THEN 3000
-                                   WHEN 'zh' THEN 1800 END
-                         AS BIGINT) * 10000 // tot) END AS keep_bp
-  FROM tot WHERE lang IN ('de', 'en', 'zh'))
-SELECT doc_id, lang, n_tokens
-FROM toks JOIN kf USING (lang)
-WHERE {b} < keep_bp
-""".format(b=_B.format(salt='mixture'), ws=_WS_TOKENS)
-
-    # the same mixture budgeted in regex (BPE-ish) tokens — only the
-    # counter fragment differs from oracles['mixture_sample']
-    _RE_TOKENS = ("CAST(len(regexp_extract_all(lower(text), '%s')) "
-                  "AS INT)" % TOKEN_PATTERN)
-    oracles['mixture_re_tokens'] = """
-WITH toks AS (
-  SELECT doc_id, lang, {re} AS n_tokens
-  FROM documents),
-tot AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tot
-        FROM toks GROUP BY lang),
-kf AS (
-  SELECT lang,
-    CASE WHEN tot <= 0 THEN 0
-         ELSE LEAST(10000,
-                    CAST(CASE lang WHEN 'de' THEN 1200
-                                   WHEN 'en' THEN 3000
-                                   WHEN 'zh' THEN 1800 END
-                         AS BIGINT) * 10000 // tot) END AS keep_bp
-  FROM tot WHERE lang IN ('de', 'en', 'zh'))
-SELECT doc_id, lang, n_tokens
-FROM toks JOIN kf USING (lang)
-WHERE {b} < keep_bp
-""".format(b=_B.format(salt='mixture'), re=_RE_TOKENS)
-
-    # upsampling mixture (sampling.py::mixture_epochs): whole epochs
-    # = tgt DIV tot, partial epoch by the SAME mixture bucket;
-    # unnest(generate_series(0, nc-1)) is empty when nc = 0, exactly
-    # Spark's guarded sequence explode
-    oracles['mixture_epochs'] = """
-WITH toks AS (
-  SELECT doc_id, lang, {ws} AS n_tokens FROM documents),
-tot AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tot
-        FROM toks GROUP BY lang),
-kf AS (
-  SELECT lang,
-    CASE WHEN tot <= 0 THEN 0 ELSE tgt // tot END AS n_full,
-    CASE WHEN tot <= 0 THEN 0
-         ELSE LEAST(10000,
-                    (tgt - (tgt // tot) * tot) * 10000 // tot)
-    END AS rem_bp
-  FROM (SELECT lang, tot,
-          CAST(CASE lang WHEN 'de' THEN 18000
-                         WHEN 'en' THEN 2000 END AS BIGINT) AS tgt
-        FROM tot WHERE lang IN ('de', 'en')))
-SELECT doc_id, lang, n_tokens,
-       CAST(unnest(generate_series(0, CAST(nc AS BIGINT) - 1))
-            AS INT) AS epoch
-FROM (
-  SELECT t.doc_id, t.lang, t.n_tokens,
-         kf.n_full + CASE WHEN {b} < kf.rem_bp THEN 1 ELSE 0 END AS nc
-  FROM toks t JOIN kf USING (lang))
-""".format(ws=_WS_TOKENS, b=_B.format(salt='mixture'))
-
-    # concat-and-chunk packing (operators/packing.py): the token
-    # count is the token_counts ws expression, the order is the
-    # salted md5 draw, the cumsum window replays row-for-row.
-    # sum(INT) is HUGEINT in DuckDB -> cast the running sum back.
-    oracles['pack_sequences'] = """
-WITH toks AS (
-  SELECT doc_id, {ws} AS n_tokens,
-    CAST(('0x' || substr(md5('packb|' || {ks}), 1, 15))::int64 % 8
-         AS INT) AS bucket,
-    ('0x' || substr(md5('pack|' || {ks}), 1, 15))::int64 AS draw
-  FROM documents),
-packed AS (
-  SELECT doc_id, bucket, n_tokens,
-    CAST(sum(n_tokens) OVER (
-      PARTITION BY bucket ORDER BY draw ASC, doc_id ASC
-      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS fin
-  FROM toks WHERE n_tokens > 0)
-SELECT doc_id, bucket,
-       CAST(fin - n_tokens AS BIGINT) AS start_tok,
-       n_tokens,
-       CAST((fin - n_tokens) // 512 AS BIGINT) AS seq_first,
-       CAST((fin - 1) // 512 AS BIGINT) AS seq_last
-FROM packed
-""".format(ks=_KS, ws=_WS_TOKENS)
-
-    # the packing WRITER: re-derive the layout, then slice each
-    # document's token array per sequence and assemble in stream
-    # order.  DuckDB list slicing is 1-based inclusive-inclusive, so
-    # [from0+1 : to0] mirrors Spark's slice(arr, from0+1, to0-from0).
-    oracles['materialize_sequences'] = """
-WITH toks AS (
-  SELECT doc_id, {ws} AS n_tokens,
-    CAST(('0x' || substr(md5('packb|' || {ks}), 1, 15))::int64 % 8
-         AS INT) AS bucket,
-    ('0x' || substr(md5('pack|' || {ks}), 1, 15))::int64 AS draw
-  FROM documents),
-packed AS (
-  SELECT doc_id, bucket, n_tokens,
-    CAST(sum(n_tokens) OVER (
-      PARTITION BY bucket ORDER BY draw ASC, doc_id ASC
-      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS fin
-  FROM toks WHERE n_tokens > 0),
-layout AS (
-  SELECT doc_id, bucket, fin - n_tokens AS start_tok, n_tokens,
-         (fin - n_tokens) // 512 AS seq_first,
-         (fin - 1) // 512 AS seq_last
-  FROM packed),
-arrs AS (
-  SELECT doc_id,
-         regexp_split_to_array(trim(lower(text)), '\\s+') AS tarr
-  FROM documents),
-ex AS (
-  SELECT l.bucket, l.start_tok, l.n_tokens, a.tarr,
-         unnest(generate_series(l.seq_first, l.seq_last)) AS seq_id
-  FROM layout l JOIN arrs a USING (doc_id)),
-parts AS (
-  SELECT bucket, seq_id, start_tok,
-         tarr[CAST(GREATEST(seq_id * 512, start_tok)
-                   - start_tok + 1 AS BIGINT)
-              : CAST(LEAST((seq_id + 1) * 512, start_tok + n_tokens)
-                     - start_tok AS BIGINT)] AS part
-  FROM ex)
-SELECT bucket, CAST(seq_id AS BIGINT) AS seq_id,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(len(flatten(list(part ORDER BY start_tok)))
-            AS INT) AS n_tokens,
-       array_to_string(flatten(list(part ORDER BY start_tok)), ' ')
-         AS seq_text
-FROM parts GROUP BY bucket, seq_id
-""".format(ks=_KS, ws=_WS_TOKENS)
 
     oracles['pricing_summary'] = """
 SELECT l_returnflag, l_linestatus,

@@ -2,8 +2,53 @@
 query with one DuckDB oracle.  Checked without a SparkSession:
 building and comparing the frames is ``tools/verify_entry.py``'s job."""
 
+import ast
+import glob
+import importlib
+import os
+
 import __spark_entry__ as entry
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_every_gate_query_has_an_oracle():
     assert set(entry.queries()) == set(entry.oracle_sql())
+
+
+def _library_imports(path):
+    """(line, module, name) for every ``from yargy_spark... import
+    name`` in the file, module-level and function-local alike."""
+    with open(path, encoding='utf-8') as f:
+        tree = ast.parse(f.read(), path)
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.ImportFrom) and node.level == 0
+                and node.module.split('.')[0] == 'yargy_spark'):
+            for alias in node.names:
+                yield node.lineno, node.module, alias.name
+
+
+def test_lazy_library_imports_resolve():
+    """Gate queries and spark-submit jobs import the library inside
+    their functions, so a module deleted or a name renamed under them
+    would otherwise surface only when the query or job runs."""
+    paths = ([os.path.join(ROOT, '__spark_entry__.py')]
+             + sorted(glob.glob(os.path.join(ROOT, 'jobs', '*.py'))))
+    checked, dangling = 0, []
+    for path in paths:
+        where = os.path.relpath(path, ROOT)
+        for line, module, name in _library_imports(path):
+            checked += 1
+            try:
+                mod = importlib.import_module(module)
+            except ImportError as e:
+                dangling.append('%s:%d %s (%s)' % (where, line, module, e))
+                continue
+            if not hasattr(mod, name):
+                try:
+                    importlib.import_module(module + '.' + name)
+                except ImportError:
+                    dangling.append('%s:%d %s.%s'
+                                    % (where, line, module, name))
+    assert checked > 0
+    assert dangling == []

@@ -204,40 +204,39 @@ def test_commit_stats_from_parquet_footers(spark, tmp_path):
     assert mf.read_table(spark, root).count() == 600
 
 
-def test_prep_bucket_granular_resume(spark, tmp_path):
-    """The packed layout commits at pack-bucket granularity: a table
+def test_bucket_granular_resume(spark, tmp_path):
+    """A bucketed table commits at bucket granularity: a table
     holding only some buckets resumes by recomputing EXACTLY the
     missing ones, and the re-derived rows are byte-identical to a
     single-shot run (pure-function-of-(corpus, bucket) contract)."""
     from pyspark.sql import functions as F
-    from yargy_spark.operators.packing import pack_sequences
     from yargy_spark.sources import manifest as mf
 
     docs = spark.read.parquet(
         '/root/testdata/sf0.001/documents.parquet')
-    packed = pack_sequences(docs, ctx_len=128, n_buckets=4).persist()
-    root = str(tmp_path / 'prep')
+    bucketed = mf.with_bucket(docs, 4, key='doc_id').persist()
+    root = str(tmp_path / 'docs')
 
     # partial commit: only buckets 0 and 1 made it before the "crash"
-    part = packed.where(F.col(mf.BUCKET_COL).isin([0, 1]))
+    part = bucketed.where(F.col(mf.BUCKET_COL).isin([0, 1]))
     mf.commit_append(part, root, note='partial',
                      expected_buckets=[0, 1], n_buckets=4)
     assert mf.pending_buckets(root, 4) == [2, 3]
 
     # resume: recompute + commit exactly the missing buckets
-    rest = packed.where(F.col(mf.BUCKET_COL).isin([2, 3]))
+    rest = bucketed.where(F.col(mf.BUCKET_COL).isin([2, 3]))
     mf.commit_append(rest, root, note='resume',
                      expected_buckets=[2, 3], n_buckets=4)
     assert mf.pending_buckets(root, 4) == []
 
     got = {tuple(r) for r in
            mf.read_table(spark, root).select(
-               'doc_id', 'bucket', 'start_tok', 'n_tokens').collect()}
+               'doc_id', 'bucket', 'text', 'n_chars').collect()}
     want = {tuple(r) for r in
-            packed.select('doc_id', 'bucket', 'start_tok',
-                          'n_tokens').collect()}
+            bucketed.select('doc_id', 'bucket', 'text',
+                            'n_chars').collect()}
     assert got == want
-    packed.unpersist()
+    bucketed.unpersist()
 
 
 def test_dedup_increment_job_chain(spark, tmp_path):

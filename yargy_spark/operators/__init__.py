@@ -18,12 +18,6 @@ from .dedup import (clean_corpus, decontaminate,  # noqa: F401
                     ngram_jaccard_pairs, paragraph_dedup,
                     remove_dup_spans, row_signatures,
                     simhash_docs, word_shingles)
-from .sampling import (hash_split,               # noqa: F401
-                       mixture_epochs, mixture_sample,
-                       stratified_sample, stratum_reservoir,
-                       temperature_weights)
-from .packing import (context_windows,           # noqa: F401
-                      materialize_sequences, pack_sequences)
 from .similarity import (cosine_topk, ivf_topk,  # noqa: F401
                          query_topk)
 from .textstats import (corpus_vocabulary,       # noqa: F401

@@ -98,9 +98,8 @@ def word_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     n-gram Jaccard, fingerprints, decontaminate).
 
     Contract: one row per ``doc_id`` (the standard row-identity
-    contract, same as ``pack_sequences``/``stratum_reservoir``).  A
-    doc_id appearing in several input rows emits its shingles once
-    PER ROW, inflating consumers that count per-doc shingles
+    contract).  A doc_id appearing in several input rows emits its
+    shingles once PER ROW, inflating consumers that count per-doc shingles
     (``decontaminate`` hit counts, ``top_ngrams`` document
     frequencies) — run ``exact_dedup``/key-dedup upstream on dirty
     re-ingested corpora."""

@@ -102,28 +102,25 @@ def quality_scores(docs: DataFrame) -> DataFrame:
         _quality_keep(f).alias('keep'))
 
 
-def ws_token_count(text_col=None):
-    """Whitespace token-count expression (shared by ``token_counts``,
-    ``packing.pack_sequences`` and ``sampling.mixture_sample`` so the
-    three can never count differently).  split('') yields [''] (size
-    1): empty/whitespace-only docs must count 0 tokens, not 1.
-    DuckDB replay: ``CASE WHEN length(trim(lower(text))) = 0 THEN 0
-    ELSE len(regexp_split_to_array(trim(lower(text)), '\\s+')) END``.
-    """
-    text = F.lower(text_col if text_col is not None else F.col('text'))
+def ws_token_count():
+    """Whitespace token count of ``col('text')``.  split('') yields
+    [''] (size 1): empty/whitespace-only docs must count 0 tokens,
+    not 1.  DuckDB replay: ``CASE WHEN length(trim(lower(text))) = 0
+    THEN 0 ELSE len(regexp_split_to_array(trim(lower(text)), '\\s+'))
+    END``."""
+    text = F.lower(F.col('text'))
     return F.when(F.length(F.trim(text)) == 0, F.lit(0)) \
         .otherwise(F.size(F.split(F.trim(text), r'\s+')))
 
 
-def re_token_count(text_col=None):
-    """Regex (BPE-ish) token-count expression — the pluggable
-    alternative to ``ws_token_count`` for mixture/packing budgets
-    (``token_expr=re_token_count()``): letter runs, digit runs and
-    single punctuation marks each count one token, which tracks BPE
-    token mass far closer than whitespace on CJK-free text.  DuckDB
-    replay: ``len(regexp_extract_all(lower(text), TOKEN_PATTERN))``
-    (the pattern is the shared RE2/Java-portable TOKEN_PATTERN)."""
-    text = F.lower(text_col if text_col is not None else F.col('text'))
+def re_token_count():
+    """Regex (BPE-ish) token count of ``col('text')``: letter runs,
+    digit runs and single punctuation marks each count one token,
+    which tracks BPE token mass far closer than whitespace on
+    CJK-free text.  DuckDB replay:
+    ``len(regexp_extract_all(lower(text), TOKEN_PATTERN))`` (the
+    pattern is the shared RE2/Java-portable TOKEN_PATTERN)."""
+    text = F.lower(F.col('text'))
     return F.size(F.regexp_extract_all(text, F.lit(TOKEN_PATTERN),
                                        F.lit(0)))
 
