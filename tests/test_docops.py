@@ -898,6 +898,31 @@ def test_pii_scrub_randomized_reference(spark):
     assert any(got[i][1] > 0 for i, _ in docs)
 
 
+def test_context_windows_randomized_reference(spark):
+    """Random conversation shapes vs a pure-Python sliding window."""
+    import random
+    from yargy_spark.operators.packing import context_windows
+    rng = random.Random(20260819)
+    rows = []
+    for c in range(40):
+        for t in range(rng.randint(1, 12)):
+            rows.append(('c%02d' % c, t, 'user',
+                         '%s%d' % (rng.choice('ab'), t)))
+    df = spark.createDataFrame(
+        rows, 'conv_id string, turn_idx int, role string, text string')
+    got = {(r['conv_id'], r['turn_idx']): (r['n_ctx_turns'],
+                                           r['context'])
+           for r in context_windows(df, k=3).collect()}
+    by_conv = {}
+    for cid, t, _, text in rows:
+        by_conv.setdefault(cid, []).append((t, text))
+    for cid, turns in by_conv.items():
+        turns.sort()
+        for j, (t, _) in enumerate(turns):
+            prev = [x for _, x in turns[max(0, j - 3):j]]
+            assert got[(cid, t)] == (len(prev), '\n'.join(prev))
+
+
 def test_corpus_vocabulary_feeds_filtered_dictionary(spark):
     """The loop the scale docs describe: extract the corpus
     vocabulary with the Spark operator, load ONLY those rows of the

@@ -204,7 +204,7 @@ def test_commit_stats_from_parquet_footers(spark, tmp_path):
     assert mf.read_table(spark, root).count() == 600
 
 
-def test_bucket_granular_resume(spark, tmp_path):
+def test_prep_bucket_granular_resume(spark, tmp_path):
     """A bucketed table commits at bucket granularity: a table
     holding only some buckets resumes by recomputing EXACTLY the
     missing ones, and the re-derived rows are byte-identical to a

@@ -1,126 +1,9 @@
-"""Concat-and-chunk sequence packing (operators/packing.py):
-per-bucket streams must be gapless/overlap-free cumsums, chunk
-boundaries must follow integer DIV semantics, zero-token docs must
-vanish, and the layout must be a pure function of the data."""
+"""Rolling context windows (operators/packing.py): frame bounds,
+turn order and conversation isolation."""
 
 import pytest
 
-from pyspark.sql import functions as F
-
 pytestmark = pytest.mark.spark
-
-SF_DIR = '/root/testdata/sf0.001'
-
-
-@pytest.fixture(scope='module')
-def docs(spark):
-    return spark.read.parquet(SF_DIR + '/documents.parquet').persist()
-
-
-def test_pack_buckets_are_gapless_streams(spark, docs):
-    from yargy_spark.operators.packing import pack_sequences
-    out = pack_sequences(docs, ctx_len=128, n_buckets=4).persist()
-    rows = out.collect()
-    assert rows, 'expected non-empty packing'
-    by_bucket = {}
-    for r in rows:
-        by_bucket.setdefault(r['bucket'], []).append(r)
-    assert set(by_bucket) <= set(range(4))
-    for bucket, seg in by_bucket.items():
-        seg.sort(key=lambda r: r['start_tok'])
-        # stream starts at 0 and every doc begins where the previous
-        # ended: no gaps, no overlaps, positions are the cumsum
-        pos = 0
-        for r in seg:
-            assert r['start_tok'] == pos, (bucket, r)
-            assert r['n_tokens'] > 0
-            pos += r['n_tokens']
-
-
-def test_pack_chunk_boundaries(spark, docs):
-    from yargy_spark.operators.packing import pack_sequences
-    ctx = 100
-    for r in pack_sequences(docs, ctx_len=ctx, n_buckets=4).collect():
-        assert r['seq_first'] == r['start_tok'] // ctx
-        assert r['seq_last'] == (r['start_tok'] + r['n_tokens'] - 1) // ctx
-        assert r['seq_last'] >= r['seq_first']
-
-
-def test_pack_token_counts_match_textstats(spark, docs):
-    """n_tokens must equal token_counts.ws_tokens doc-for-doc (the
-    shared ws_token_count expression is the contract)."""
-    from yargy_spark.operators.packing import pack_sequences
-    from yargy_spark.operators.textstats import token_counts
-    packed = pack_sequences(docs, ctx_len=64, n_buckets=2)
-    ws = token_counts(docs).select('doc_id', 'ws_tokens')
-    bad = (packed.join(ws, 'doc_id')
-           .where(F.col('n_tokens') != F.col('ws_tokens')))
-    assert bad.count() == 0
-    # zero-token docs are excluded, all others present
-    n_nonzero = ws.where(F.col('ws_tokens') > 0).count()
-    assert packed.count() == n_nonzero
-
-
-def test_pack_deterministic_and_salted(spark, docs):
-    from yargy_spark.operators.packing import pack_sequences
-    a = {r['doc_id']: (r['bucket'], r['start_tok'])
-         for r in pack_sequences(docs, ctx_len=128).collect()}
-    b = {r['doc_id']: (r['bucket'], r['start_tok'])
-         for r in pack_sequences(docs, ctx_len=128).collect()}
-    assert a == b
-    # a different salt re-shuffles the layout (epoch reshuffle knob)
-    c = {r['doc_id']: (r['bucket'], r['start_tok'])
-         for r in pack_sequences(docs, ctx_len=128,
-                                 salt='epoch1').collect()}
-    assert a != c
-
-
-def test_pack_rejects_bad_params(docs):
-    from yargy_spark.operators.packing import pack_sequences
-    with pytest.raises(ValueError):
-        pack_sequences(docs, ctx_len=0)
-    with pytest.raises(ValueError):
-        pack_sequences(docs, n_buckets=0)
-
-
-def test_pack_single_exchange_plan(spark, docs):
-    """Scale shape: exactly one Exchange (the bucket shuffle) feeds
-    the running-sum window; everything else is codegen."""
-    from yargy_spark.operators.packing import pack_sequences
-    plan = pack_sequences(docs, ctx_len=128)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert plan.count('Exchange') == 1, plan
-
-
-def test_training_batches_composition(spark, docs):
-    """clean -> split -> mixture -> pack end-to-end: output docs are
-    retained-train-mixed docs only, and each bucket is a gapless
-    stream (the packing invariant survives the composition)."""
-    from yargy_spark.operators.dedup import clean_corpus
-    from yargy_spark.operators.packing import pack_sequences
-    from yargy_spark.operators.sampling import hash_split, mixture_sample
-    from pyspark.sql import functions as F
-    cleaned = clean_corpus(docs, meta_cols=('text', 'lang'))
-    train = (hash_split(cleaned, 'doc_id')
-             .where(F.col('split') == 'train'))
-    mixed = mixture_sample(train, 'lang', {'en': 1.0}, 10**9, 'doc_id')
-    packed = pack_sequences(mixed, ctx_len=128, n_buckets=2).persist()
-    rows = packed.collect()
-    assert rows
-    # subset of the mixed input
-    mixed_ids = {r['doc_id'] for r in mixed.select('doc_id').collect()}
-    assert {r['doc_id'] for r in rows} <= mixed_ids
-    # gapless per bucket
-    by = {}
-    for r in rows:
-        by.setdefault(r['bucket'], []).append(r)
-    for seg in by.values():
-        seg.sort(key=lambda r: r['start_tok'])
-        pos = 0
-        for r in seg:
-            assert r['start_tok'] == pos
-            pos += r['n_tokens']
-    packed.unpersist()
 
 
 def test_context_windows_frame_semantics(spark):
@@ -140,88 +23,3 @@ def test_context_windows_frame_semantics(spark):
     assert got[('a', 3)] == (3, 't0\nt1\nt2')
     assert got[('a', 4)] == (3, 't1\nt2\nt3')   # k caps the frame
     assert got[('b', 1)] == (1, 'x0')           # no cross-conv leak
-
-
-def test_materialize_sequences_exactly_filled(spark, docs):
-    """Every (bucket, seq) row holds exactly ctx_len tokens except
-    each bucket's LAST sequence; totals and payloads agree with the
-    layout and the documents' own lowercased whitespace tokens."""
-    from yargy_spark.operators.packing import (materialize_sequences,
-                                               pack_sequences)
-    ctx = 128
-    out = materialize_sequences(docs, ctx_len=ctx, n_buckets=4)
-    rows = sorted(((r['bucket'], r['seq_id'], r['n_docs'],
-                    r['n_tokens'], r['seq_text'])
-                   for r in out.collect()))
-    assert rows
-    by_bucket = {}
-    for b, s, nd, nt, txt in rows:
-        by_bucket.setdefault(b, []).append((s, nd, nt, txt))
-    layout = pack_sequences(docs, ctx_len=ctx, n_buckets=4).collect()
-    total = sum(r['n_tokens'] for r in layout)
-    assert sum(nt for _, _, _, nt, _ in rows) == total
-
-    # reference stream per bucket: docs in layout order, tokens
-    # re-derived the same way the operator slices them
-    toks = {r['doc_id']: r['text'].lower().split()
-            for r in docs.select('doc_id', 'text').collect()}
-    for b, seqs in by_bucket.items():
-        seqs.sort()
-        # sequences are consecutive from 0; all full except the last
-        assert [s for s, _, _, _ in seqs] == list(range(len(seqs)))
-        assert all(nt == ctx for _, _, nt, _ in seqs[:-1])
-        assert 0 < seqs[-1][2] <= ctx
-        stream = []
-        for r in sorted((r for r in layout if r['bucket'] == b),
-                        key=lambda r: r['start_tok']):
-            assert len(toks[r['doc_id']]) == r['n_tokens']
-            stream.extend(toks[r['doc_id']])
-        got = ' '.join(txt for _, _, _, txt in seqs)
-        assert got == ' '.join(stream)
-
-    # n_docs: a boundary-straddling document is counted in each
-    # sequence it feeds — cross-check one bucket's doc counts
-    for b, seqs in by_bucket.items():
-        want = [0] * len(seqs)
-        for r in (r for r in layout if r['bucket'] == b):
-            for s in range(r['seq_first'], r['seq_last'] + 1):
-                want[s] += 1
-        assert [nd for _, nd, _, _ in
-                sorted((s, nd, nt, t) for s, nd, nt, t in seqs)] \
-            == want
-        break
-
-
-def test_materialize_sequences_codegen_only(spark, docs):
-    """The writer stays JVM-side: no Python/Arrow eval nodes and no
-    cartesian products in the executed plan."""
-    from yargy_spark.operators.packing import materialize_sequences
-    plan = (materialize_sequences(docs, ctx_len=128, n_buckets=4)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert 'EvalPython' not in plan
-    assert 'CartesianProduct' not in plan
-
-
-def test_materialize_sequences_custom_text_col(spark):
-    """Regression (review finding): the layout must count the SAME
-    column the writer slices — a custom text_col on a frame that
-    ALSO has a decoy 'text' column must budget from text_col, and a
-    frame with no 'text' column at all must work."""
-    from yargy_spark.operators.packing import materialize_sequences
-    rows = [(i, 'b%d one two three' % i, 'decoy') for i in range(20)]
-    df = spark.createDataFrame(rows,
-                               'doc_id long, body string, text string')
-    out = materialize_sequences(df, ctx_len=8, n_buckets=2,
-                                text_col='body').collect()
-    # 20 docs x 4 body-tokens = 80 tokens; nothing from 'decoy'
-    assert sum(r['n_tokens'] for r in out) == 80
-    assert all('decoy' not in r['seq_text'] for r in out)
-    assert all(r['n_tokens'] == 8 for r in out
-               if (r['bucket'], r['seq_id']) not in
-               {(r2['bucket'], max(r3['seq_id'] for r3 in out
-                                   if r3['bucket'] == r2['bucket']))
-                for r2 in out})
-    no_text = df.select('doc_id', 'body')
-    out2 = materialize_sequences(no_text, ctx_len=8, n_buckets=2,
-                                 text_col='body').collect()
-    assert sum(r['n_tokens'] for r in out2) == 80

@@ -1,298 +1,4 @@
-"""Deterministic sampling/split operators (operators/sampling.py):
-leakage safety, determinism, stratum exactness, and the map-side
-WindowGroupLimit shape of the reservoir."""
-
-import pytest
-
-from pyspark.sql import functions as F
-
-pytestmark = pytest.mark.spark
-
-SF_DIR = '/root/testdata/sf0.001'
-
-
-@pytest.fixture(scope='module')
-def docs(spark):
-    return spark.read.parquet(SF_DIR + '/documents.parquet').persist()
-
-
-@pytest.fixture(scope='module')
-def turns(spark):
-    # multi-row units: 200 conversations x 5 turns
-    rows = [(('c%03d' % (i // 5)), i % 5, 'u%d' % i)
-            for i in range(1000)]
-    return spark.createDataFrame(
-        rows, 'conv_id string, turn_idx int, text string').persist()
-
-
-def test_hash_split_leakage_safe_and_total(spark, turns):
-    from yargy_spark.operators.sampling import hash_split
-    out = hash_split(turns, 'conv_id').persist()
-    # total: every row labeled, no rows invented
-    assert out.count() == turns.count()
-    # leakage-safe: a conversation never straddles splits
-    assert (out.groupBy('conv_id')
-            .agg(F.countDistinct('split').alias('n'))
-            .where(F.col('n') > 1).count()) == 0
-    # deterministic: a second evaluation assigns identically
-    again = {(r['conv_id'], r['turn_idx']): r['split']
-             for r in hash_split(turns, 'conv_id').collect()}
-    assert all(again[(r['conv_id'], r['turn_idx'])] == r['split']
-               for r in out.collect())
-    # weights roughly honored at unit granularity (98/1/1 over 200
-    # conversations: train overwhelmingly dominates)
-    by = dict((r['split'], r['n']) for r in
-              out.select('conv_id', 'split').distinct()
-              .groupBy('split').agg(F.count('*').alias('n')).collect())
-    assert by.get('train', 0) >= 180
-    out.unpersist()
-
-
-def test_hash_split_rejects_bad_weights(turns):
-    from yargy_spark.operators.sampling import hash_split
-    with pytest.raises(ValueError):
-        hash_split(turns, 'conv_id', splits=(('a', 5000), ('b', 4000)))
-    with pytest.raises(ValueError):
-        hash_split(turns, 'conv_id', splits=(('a', 10001), ('b', -1)))
-    # degenerate single split is legal: everything gets the label
-    one = hash_split(turns, 'conv_id', splits=(('all', 10000),))
-    assert one.where(F.col('split') != 'all').count() == 0
-
-
-def test_stratified_sample_unit_atomicity(spark, turns):
-    from yargy_spark.operators.sampling import stratified_sample
-    tagged = turns.withColumn(
-        'stratum', F.when(F.col('conv_id') < 'c100', 'a').otherwise('b'))
-    kept = stratified_sample(tagged, 'stratum', {'a': 0.5, 'b': 0.0},
-                             'conv_id').persist()
-    # stratum b fully dropped; default never consulted
-    assert kept.where(F.col('stratum') == 'b').count() == 0
-    # a kept conversation keeps ALL 5 turns (unit atomicity)
-    per_conv = kept.groupBy('conv_id').count().collect()
-    assert per_conv and all(r['count'] == 5 for r in per_conv)
-    # ~50% of the 100 a-conversations survive
-    assert 30 <= len(per_conv) <= 70
-    kept.unpersist()
-
-
-def test_stratified_sample_default_fraction(spark, docs):
-    from yargy_spark.operators.sampling import stratified_sample
-    n = docs.count()
-    assert stratified_sample(docs, 'lang', {}, 'doc_id',
-                             default_fraction=1.0).count() == n
-    assert stratified_sample(docs, 'lang', {}, 'doc_id').count() == 0
-    with pytest.raises(ValueError):
-        stratified_sample(docs, 'lang', {'en': 1.5}, 'doc_id')
-
-
-def test_null_keys_deterministic_and_oracle_parity(spark, tmp_path):
-    """NULL unit keys are one first-class unit (the _key_str NUL
-    sentinel), not a silent fall-through: hash_split gives them a real
-    hashed split, stratified_sample keeps them at fraction 1.0, the
-    reservoir draw is never NULL — and DuckDB replays every
-    assignment on the same frame."""
-    import duckdb
-    import __spark_entry__ as entry_mod
-    from yargy_spark.operators.sampling import (
-        hash_split, stratified_sample, stratum_reservoir)
-
-    rows = ([(i, 'en' if i % 3 else 'ru', 'web')
-             for i in range(40)]
-            + [(None, 'en', 'web'), (None, 'ru', 'crawl')])
-    docs = spark.createDataFrame(
-        rows, 'doc_id long, lang string, source string')
-
-    # hash_split: NULL-key rows all get ONE deterministic label, and
-    # it is the label their sentinel hash selects, not blanket 'test'
-    sp = hash_split(docs, 'doc_id')
-    null_splits = {r['split'] for r in
-                   sp.where(F.col('doc_id').isNull()).collect()}
-    assert len(null_splits) == 1
-    # 98% of buckets are 'train'; the NUL sentinel hashes there
-    assert null_splits == {'train'}
-
-    # stratified_sample at fraction 1.0 keeps NULL-key rows
-    kept = stratified_sample(docs, 'lang', {}, 'doc_id',
-                             default_fraction=1.0)
-    assert kept.count() == docs.count()
-
-    # reservoir: draws never NULL, result total and deterministic
-    res = {(r['source'], r['doc_id'])
-           for r in stratum_reservoir(docs, 'source', 50,
-                                      'doc_id').collect()}
-    assert res == {(r[2], r[0]) for r in rows}
-
-    # DuckDB oracle parity for all three on the SAME null-bearing
-    # frame (the sf gate corpora have no NULL doc_ids, so this is the
-    # only place the sentinel's cross-engine contract is exercised)
-    # write via Spark: toPandas() would widen the nullable long
-    # doc_id to float64 and DuckDB would hash '1.0', not '1'
-    path = str(tmp_path / 'documents.parquet')
-    docs.coalesce(1).write.parquet(path)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM '%s/*.parquet'"
-        % path)
-    oracles = entry_mod.oracle_sql()
-    got = {(r['doc_id'], r['split']) for r in sp.collect()}
-    want = {(a, b) for a, b in
-            con.execute(oracles['doc_splits']).fetchall()}
-    assert got == want
-    got = {(r['doc_id'], r['lang']) for r in
-           entry_mod.queries()['lang_balanced_sample'](
-               spark, SF_DIR).collect()}  # sanity: sf path unchanged
-    assert got  # non-empty on real data
-    got = {(r['source'], r['doc_id']) for r in
-           stratum_reservoir(docs, 'source', 5, 'doc_id').collect()}
-    want = {(a, b) for a, b in
-            con.execute(oracles['source_reservoir']).fetchall()}
-    assert got == want
-
-
-def test_stratum_reservoir_exact_k_and_plan(spark, docs):
-    from yargy_spark.operators.sampling import stratum_reservoir
-    out = stratum_reservoir(docs, 'lang', 3, 'doc_id')
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the k-cap must be pushed map-side ahead of the stratum exchange
-    assert 'WindowGroupLimit' in plan
-    rows = out.collect()
-    pops = dict((r['lang'], r['n']) for r in
-                docs.groupBy('lang').agg(F.count('*').alias('n'))
-                .collect())
-    got = {}
-    for r in rows:
-        got.setdefault(r['lang'], set()).add(r['doc_id'])
-    for lang, pop in pops.items():
-        assert len(got.get(lang, ())) == min(3, pop), lang
-    # deterministic across evaluations
-    again = {(r['lang'], r['doc_id']) for r in
-             stratum_reservoir(docs, 'lang', 3, 'doc_id').collect()}
-    assert again == {(r['lang'], r['doc_id']) for r in rows}
-    with pytest.raises(ValueError):
-        stratum_reservoir(docs, 'lang', 0, 'doc_id')
-
-
-def test_mixture_sample_targets_and_exclusions(spark, docs):
-    """Weighted strata land near their token targets; unweighted
-    strata vanish; oversized weights keep the whole stratum."""
-    from yargy_spark.operators.sampling import mixture_sample
-    out = mixture_sample(docs, 'lang',
-                         {'en': 0.5, 'zh': 0.3, 'de': 0.2},
-                         6000, 'doc_id').persist()
-    kept = dict((r['lang'], r['toks']) for r in
-                out.groupBy('lang').agg(F.sum('n_tokens').alias('toks'))
-                .collect())
-    assert set(kept) <= {'en', 'zh', 'de'}  # es/fr dropped entirely
-    targets = {'en': 3000, 'zh': 1800, 'de': 1200}
-    for lang, tgt in targets.items():
-        # Bernoulli concentration: generous 2x band at this scale
-        assert 0.3 * tgt <= kept.get(lang, 0) <= 2.0 * tgt, (lang, kept)
-    # infeasible share keeps everything (budget under-filled, not
-    # rebalanced): weight 1.0 of a huge budget = the whole stratum
-    full = mixture_sample(docs, 'lang', {'zh': 1.0}, 10**9, 'doc_id')
-    pop = docs.where(F.col('lang') == 'zh').count()
-    assert full.count() == pop
-    out.unpersist()
-
-
-def test_mixture_sample_totals_path_matches_and_is_maponly(spark, docs):
-    """Manifest-supplied totals must reproduce the computed-totals
-    selection exactly, with a shuffle-free plan."""
-    from yargy_spark.operators.sampling import mixture_sample
-    weights = {'en': 0.5, 'zh': 0.3, 'de': 0.2}
-    computed = mixture_sample(docs, 'lang', weights, 6000, 'doc_id')
-    totals = dict(
-        (r['lang'], r['t']) for r in
-        mixture_sample(docs, 'lang', dict.fromkeys(
-            ['de', 'en', 'es', 'fr', 'zh'], 1.0), 10**9, 'doc_id')
-        .groupBy('lang').agg(F.sum('n_tokens').alias('t')).collect())
-    maponly = mixture_sample(docs, 'lang', weights, 6000, 'doc_id',
-                             totals=totals)
-    a = {r['doc_id'] for r in computed.collect()}
-    b = {r['doc_id'] for r in maponly.collect()}
-    assert a == b and a
-    plan = maponly._jdf.queryExecution().executedPlan().toString()
-    assert 'Exchange' not in plan, plan
-    # deterministic across evaluations
-    assert {r['doc_id'] for r in computed.collect()} == a
-
-
-def test_mixture_sample_validation(docs):
-    from yargy_spark.operators.sampling import mixture_sample
-    with pytest.raises(ValueError):
-        mixture_sample(docs, 'lang', {'en': 0.5}, 0, 'doc_id')
-    with pytest.raises(ValueError):
-        mixture_sample(docs, 'lang', {'en': 1.5}, 100, 'doc_id')
-    with pytest.raises(ValueError):
-        mixture_sample(docs, 'lang', {}, 100, 'doc_id')
-    # a weighted stratum missing from manifest totals must raise,
-    # not silently drop the stratum (stale-manifest guard)
-    with pytest.raises(ValueError, match='missing weighted strata'):
-        mixture_sample(docs, 'lang', {'en': 0.5, 'de': 0.5}, 100,
-                       'doc_id', totals={'en': 1000})
-
-
-def test_mixture_epochs_upsamples_to_target(spark, docs):
-    """A stratum whose target exceeds its corpus repeats whole epochs
-    + a hash-selected partial epoch; token mass lands near target."""
-    from yargy_spark.operators.sampling import mixture_epochs
-    out = mixture_epochs(docs, 'lang', {'zh': 0.9, 'en': 0.1},
-                         20000, 'doc_id').persist()
-    agg = {r['lang']: (r['toks'], r['mx']) for r in
-           out.groupBy('lang')
-           .agg(F.sum('n_tokens').alias('toks'),
-                F.max('epoch').alias('mx')).collect()}
-    toks, mx = agg['zh']
-    assert mx >= 2                      # genuinely repeated epochs
-    assert 0.85 * 18000 <= toks <= 1.15 * 18000
-    # every (unit, epoch) pair unique; epochs are dense from 0
-    n = out.where(F.col('lang') == 'zh').count()
-    nd = (out.where(F.col('lang') == 'zh')
-          .select('doc_id', 'epoch').distinct().count())
-    assert n == nd
-    pop = docs.where(F.col('lang') == 'zh').count()
-    full_rows = (out.where((F.col('lang') == 'zh')
-                           & (F.col('epoch') < mx)).count())
-    assert full_rows == pop * mx        # full epochs contain everyone
-    out.unpersist()
-
-
-def test_mixture_epochs_downsample_parity(spark, docs):
-    """full = 0 degenerates to exactly mixture_sample's selection."""
-    from yargy_spark.operators.sampling import (mixture_epochs,
-                                                mixture_sample)
-    a = {r['doc_id'] for r in
-         mixture_sample(docs, 'lang', {'en': 0.35}, 6000,
-                        'doc_id').collect()}
-    b = [(r['doc_id'], r['epoch']) for r in
-         mixture_epochs(docs, 'lang', {'en': 0.35}, 6000,
-                        'doc_id').collect()]
-    assert {d for d, _ in b} == a
-    assert all(e == 0 for _, e in b)
-
-
-def test_mixture_epochs_totals_path_matches(spark, docs):
-    from yargy_spark.operators.sampling import mixture_epochs
-    import pytest as _pt
-    weights = {'zh': 0.9, 'en': 0.1}
-    computed = {(r['doc_id'], r['epoch']) for r in
-                mixture_epochs(docs, 'lang', weights, 20000,
-                               'doc_id').collect()}
-    totals = {r['lang']: r['t'] for r in
-              docs.groupBy('lang').agg(
-                  F.sum(F.when(F.length(F.trim(F.lower('text'))) == 0,
-                               0).otherwise(
-                      F.size(F.split(F.trim(F.lower('text')),
-                                     r'\s+')))).alias('t')).collect()}
-    maponly = mixture_epochs(docs, 'lang', weights, 20000, 'doc_id',
-                             totals=totals)
-    got = {(r['doc_id'], r['epoch']) for r in maponly.collect()}
-    assert got == computed
-    plan = maponly._jdf.queryExecution().executedPlan().toString()
-    assert 'Exchange' not in plan
-    with _pt.raises(ValueError, match='missing weighted strata'):
-        mixture_epochs(docs, 'lang', weights, 100, 'doc_id',
-                       totals={'zh': 10})
+"""Temperature-scaled mixture weights (operators/sampling.py)."""
 
 
 def test_temperature_weights_laws():
@@ -318,92 +24,3 @@ def test_temperature_weights_laws():
         temperature_weights(totals, -0.1)
     with _pt.raises(ValueError, match='positive'):
         temperature_weights({'en': 0}, 0.5)
-
-
-def test_mixture_epochs_max_epochs_cap(spark, docs):
-    """The cap binds: every unit of the over-weighted stratum gets
-    exactly max_epochs copies (partial epoch dropped); a non-binding
-    cap leaves the selection identical to uncapped; both branches
-    (aggregate and manifest-totals) agree."""
-    from yargy_spark.operators.sampling import mixture_epochs
-    weights = {'zh': 0.9}
-    budget = 200000  # far beyond the zh corpus: uncapped repeats a lot
-
-    uncapped = mixture_epochs(docs, 'lang', weights, budget, 'doc_id')
-    mx_un = uncapped.agg(F.max('epoch')).first()[0]
-    assert mx_un >= 3  # the hazard exists at this budget
-
-    capped = (mixture_epochs(docs, 'lang', weights, budget, 'doc_id',
-                             max_epochs=3)
-              .groupBy('doc_id').count().persist())
-    counts = {r['doc_id']: r['count'] for r in capped.collect()}
-    assert counts and set(counts.values()) == {3}
-    capped.unpersist()
-
-    # non-binding cap == uncapped, row for row
-    a = {(r['doc_id'], r['epoch']) for r in uncapped.collect()}
-    b = {(r['doc_id'], r['epoch']) for r in
-         mixture_epochs(docs, 'lang', weights, budget, 'doc_id',
-                        max_epochs=mx_un + 1).collect()}
-    assert a == b
-
-    # totals (map-only) branch applies the same cap
-    totals = {r['lang']: r['t'] for r in
-              docs.groupBy('lang').agg(
-                  F.sum(F.when(F.length(F.trim(F.lower('text'))) == 0,
-                               0).otherwise(
-                      F.size(F.split(F.trim(F.lower('text')),
-                                     r'\s+')))).alias('t')).collect()}
-    c = {(r['doc_id'], r['epoch']) for r in
-         mixture_epochs(docs, 'lang', weights, budget, 'doc_id',
-                        totals=totals, max_epochs=3).collect()}
-    assert c == {(d, e) for d in counts for e in range(3)}
-
-    import pytest as _pt
-    with _pt.raises(ValueError, match='max_epochs'):
-        mixture_epochs(docs, 'lang', weights, budget, 'doc_id',
-                       max_epochs=0)
-
-
-def test_mixture_token_expr_pluggable(spark, docs):
-    """token_expr swaps the budget counter end-to-end: thresholds AND
-    the emitted n_tokens follow the regex counter, and the default
-    path is byte-identical to before (ws counter)."""
-    from yargy_spark.operators.sampling import mixture_sample
-    from yargy_spark.operators.textstats import (re_token_count,
-                                                 token_counts)
-    w = {'en': 0.5, 'zh': 0.3, 'de': 0.2}
-    re_out = mixture_sample(docs, 'lang', w, 6000, 'doc_id',
-                            token_expr=re_token_count()).collect()
-    counts = {r['doc_id']: (r['ws_tokens'], r['re_tokens'])
-              for r in token_counts(docs).collect()}
-    assert re_out
-    for r in re_out:
-        assert r['n_tokens'] == counts[r['doc_id']][1]
-    # the default path is unchanged: it still budgets in ws tokens
-    for r in mixture_sample(docs, 'lang', w, 6000,
-                            'doc_id').collect():
-        assert r['n_tokens'] == counts[r['doc_id']][0]
-
-
-def test_pack_token_expr_layout(spark, docs):
-    """pack_sequences with a swapped counter: positions cumsum the
-    regex counts, same gapless-stream contract."""
-    from yargy_spark.operators.packing import pack_sequences
-    from yargy_spark.operators.textstats import (re_token_count,
-                                                 token_counts)
-    out = pack_sequences(docs, ctx_len=128, n_buckets=4,
-                         token_expr=re_token_count()).collect()
-    counts = {r['doc_id']: r['re_tokens']
-              for r in token_counts(docs).collect()}
-    assert out
-    by_bucket = {}
-    for r in out:
-        assert r['n_tokens'] == counts[r['doc_id']]
-        by_bucket.setdefault(r['bucket'], []).append(r)
-    for seg in by_bucket.values():
-        seg.sort(key=lambda r: r['start_tok'])
-        pos = 0
-        for r in seg:
-            assert r['start_tok'] == pos
-            pos += r['n_tokens']

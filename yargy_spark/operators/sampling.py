@@ -1,246 +1,8 @@
-"""Deterministic sampling / splitting for training-data pipelines.
-
-Training corpora need leakage-safe train/val/test splits and
-per-stratum downsampling (language rebalancing, source quotas) that
-are (a) reproducible across reruns AND engines — a resumable pipeline
-that re-derives a split after a crash must assign every row
-identically, so ``rand()`` is out; (b) map-only — sampling 100 TB
-must not shuffle.  Every operator keys on the portable 60-bit md5
-hash (``dedup.md5_int``) of a SALTED unit key:
-
-  * the salt decorrelates independent decisions on the same key (a
-    doc's split bucket and its sample draw must not be the same
-    random variable);
-  * the UNIT key (conv_id, doc_id, url-domain, ...) pins all rows of
-    a unit to one side, so no conversation straddles train and test;
-  * md5 is bit-identical in Spark and DuckDB, so the driver oracle
-    replays every assignment exactly.
-
-Split and sample are pure JVM expressions inside whole-stage codegen
-— no UDFs, no shuffle, filters push to the scan.  The per-stratum
-reservoir is the one windowed op; its ``row_number() <= k`` cap is
-pushed map-side by WindowGroupLimit, so each map task forwards at
-most k rows per stratum to the single per-stratum reducer.
-"""
+"""Temperature-scaled mixture weights over per-stratum counts."""
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Sequence, Tuple
-
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-from .dedup import md5_int
-
-# basis points: weights and fractions resolve on a 0..9999 grid, so
-# the smallest expressible share is 0.01% — fine-grained enough for
-# eval holdouts while keeping thresholds exact integers in both
-# engines (a float threshold would re-open the serializer-drift class
-# of bugs the integer-cents convention closed)
-BUCKETS = 10_000
-
-
-def _key_str(key_col):
-    """Stringified unit key with NULL mapped to a NUL-byte sentinel.
-
-    Without the coalesce, a NULL key poisons the whole hash chain
-    (concat -> md5 -> bucket all NULL), and each operator then does
-    something silently different: ``hash_split``'s when-chain falls
-    through to the LAST split, ``stratified_sample``'s ``bucket <
-    thresh`` is NULL so the row is dropped even at fraction 1.0, and
-    ``stratum_reservoir``'s NULL draw sorts NULLS FIRST in Spark but
-    NULLS LAST in DuckDB — three divergent behaviours for one data
-    wart.  The sentinel makes NULL a first-class unit key: all
-    NULL-key rows form ONE unit with a real, salted, engine-portable
-    bucket (DuckDB replay: ``coalesce(CAST(k AS VARCHAR), chr(0))``;
-    chr(0) cannot collide with a real key string from any sane
-    source)."""
-    return F.coalesce(F.col(key_col).cast('string'), F.lit('\x00'))
-
-
-def _bucket(key_col, salt: str):
-    """Salted portable bucket in [0, BUCKETS): Spark ``pmod`` over the
-    nonnegative 60-bit md5 prefix; DuckDB replays it as
-    ``('0x' || substr(md5(...), 1, 15))::int64 % 10000``."""
-    salted = F.concat(F.lit(salt + '|'), _key_str(key_col))
-    return F.pmod(md5_int(salted), F.lit(BUCKETS))
-
-
-def hash_split(df: DataFrame, key_col: str,
-               splits: Sequence[Tuple[str, int]] = (
-                   ('train', 9800), ('val', 100), ('test', 100)),
-               salt: str = 'split') -> DataFrame:
-    """Assign every row a ``split`` label by hashed unit key.
-
-    ``splits``: ordered (name, weight) pairs in basis points summing
-    to exactly 10000 — [0, w1) -> first, [w1, w1+w2) -> second, ...
-    Deterministic, engine-portable, and leakage-safe: two rows with
-    the same ``key_col`` always land in the same split, across reruns,
-    resumes and engines.  NULL keys form one unit (see ``_key_str``):
-    all NULL-key rows land together in the split their sentinel hash
-    selects, not silently in the last split.
-    """
-    weights = [w for _, w in splits]
-    if any(w <= 0 for w in weights) or sum(weights) != BUCKETS:
-        raise ValueError(
-            'split weights must be positive basis points summing to '
-            '%d, got %r' % (BUCKETS, list(splits)))
-    if len(splits) == 1:  # degenerate but legal: everything one label
-        return df.withColumn('split', F.lit(splits[0][0]))
-    bucket = _bucket(key_col, salt)
-    expr = None
-    hi = 0
-    for name, w in splits[:-1]:
-        hi += w
-        expr = (F.when(bucket < hi, name) if expr is None
-                else expr.when(bucket < hi, name))
-    expr = expr.otherwise(splits[-1][0])
-    return df.withColumn('split', expr)
-
-
-def stratified_sample(df: DataFrame, strata_col: str,
-                      fractions: Dict[str, float], key_col: str,
-                      salt: str = 'sample',
-                      default_fraction: float = 0.0) -> DataFrame:
-    """Keep each unit with its stratum's probability — deterministic
-    per-stratum Bernoulli downsampling (the language-rebalancing /
-    source-quota primitive).  A unit key hashing under its stratum's
-    threshold is kept WITH ALL ITS ROWS; strata missing from
-    ``fractions`` fall back to ``default_fraction``.
-
-    Fractions quantize to basis points (0.0001 resolution) so the
-    comparison is integer-exact in every engine.  Map-only: the
-    filter sits in codegen next to the scan.  NULL keys form one unit
-    (see ``_key_str``): kept or dropped by their stratum's fraction
-    like any other unit — in particular KEPT at fraction 1.0.
-    """
-    def bp(f: float) -> int:
-        if not 0.0 <= f <= 1.0:
-            raise ValueError('fraction out of [0, 1]: %r' % (f,))
-        return int(round(f * BUCKETS))
-
-    bucket = _bucket(key_col, salt)
-    thresh = None
-    for stratum, frac in sorted(fractions.items()):
-        cond = F.col(strata_col) == stratum
-        thresh = (F.when(cond, bp(frac)) if thresh is None
-                  else thresh.when(cond, bp(frac)))
-    thresh = (F.lit(bp(default_fraction)) if thresh is None
-              else thresh.otherwise(bp(default_fraction)))
-    return df.where(bucket < thresh)
-
-
-def mixture_sample(docs: DataFrame, strata_col: str,
-                   weights: Dict[str, float], token_budget: int,
-                   key_col: str, salt: str = 'mixture',
-                   totals: Optional[Dict[str, int]] = None,
-                   text_col: str = 'text',
-                   token_expr=None) -> DataFrame:
-    """Deterministic token-budget mixture sampling — the pretraining
-    data-mixture primitive: given per-stratum corpus shares (``{'en':
-    0.5, 'zh': 0.3, ...}``, fractions of ``token_budget``), keep a
-    hash-selected subset of each stratum whose expected token mass
-    hits that stratum's share of the budget.  Strata absent from
-    ``weights`` (including NULL strata) are dropped.
-
-    Exactness contract: per-stratum targets quantize to integers
-    (``target = weight_bp * token_budget DIV 10000``) and the keep
-    threshold is integer basis points (``least(10000, target * 10000
-    DIV stratum_total)``), so the decision for every document is a
-    pure integer function of the data — reproducible across reruns,
-    resumes and engines, and replayable by the DuckDB oracle.  The
-    realized token mass is Bernoulli-concentrated around the target
-    (tight at corpus scale); a stratum smaller than its target keeps
-    everything (budget under-filled — the caller's weights are
-    infeasible for that stratum, not silently rebalanced).
-
-    Scale shape: token totals come from ONE tiny aggregate
-    (map-side-combined, |strata| rows) broadcast-joined back — no
-    driver collect, no extra action, but inherently a second pass
-    over the text.  At the 100 TB design point pass the totals from
-    manifest/snapshot statistics (``totals={'en': 123, ...}``) and
-    the operator becomes a single map-only filtered scan in
-    whole-stage codegen: zero shuffles, zero joins.
-
-    Output: the input rows of selected documents plus ``n_tokens``
-    (the shared ``textstats.ws_token_count`` count over
-    ``text_col``, or ``token_expr`` when given).
-
-    ``token_expr`` makes the COUNTER pluggable: any integer Column —
-    e.g. ``textstats.re_token_count()`` for BPE-ish budgets, or a
-    precomputed tokenizer-exact column — replaces the whitespace
-    count in both the per-stratum totals and the emitted
-    ``n_tokens``, with identical selection arithmetic (``totals``
-    passed from manifests must then be totals of the SAME counter).
-    """
-    if token_budget <= 0:
-        raise ValueError('token_budget must be positive, got %r'
-                         % (token_budget,))
-
-    def bp(f: float) -> int:
-        if not 0.0 <= f <= 1.0:
-            raise ValueError('weight out of [0, 1]: %r' % (f,))
-        return int(round(f * BUCKETS))
-
-    if not weights:
-        raise ValueError('weights must name at least one stratum')
-    targets = {s: bp(w) * token_budget // BUCKETS
-               for s, w in weights.items()}
-
-    from .textstats import ws_token_count
-    toks = docs.withColumn(
-        'n_tokens',
-        token_expr if token_expr is not None
-        else ws_token_count(F.col(text_col)))
-    bucket = _bucket(key_col, salt)
-
-    if totals is not None:
-        # map-only path: thresholds resolve to literals, the filter
-        # sits in codegen next to the scan.  Every weighted stratum
-        # must be present in totals: silently treating a missing
-        # stratum as empty would DROP it entirely — the opposite of
-        # the computed path's keep-everything-when-small behavior
-        # (e.g. manifest stats that predate a newly added language).
-        missing = sorted(set(targets) - set(totals))
-        if missing:
-            raise ValueError(
-                'totals missing weighted strata %r — stale manifest '
-                'statistics? (a missing stratum would be silently '
-                'dropped, not kept)' % (missing,))
-        keep = None
-        for s in sorted(targets):
-            tot = int(totals[s])
-            kbp = 0 if tot <= 0 else min(
-                BUCKETS, targets[s] * BUCKETS // tot)
-            cond = F.col(strata_col) == s
-            keep = (F.when(cond, kbp) if keep is None
-                    else keep.when(cond, kbp))
-        return toks.where(bucket < keep)
-
-    target = None
-    for s in sorted(targets):
-        cond = F.col(strata_col) == s
-        # LONG literal: an INT target would overflow at target *
-        # 10000 once a stratum's token target passes ~214k — i.e. on
-        # any real corpus
-        tgt = F.lit(targets[s]).cast('long')
-        target = (F.when(cond, tgt) if target is None
-                  else target.when(cond, tgt))
-    tot = (toks.groupBy(strata_col)
-           .agg(F.sum('n_tokens').cast('long').alias('_tot')))
-    out = (toks
-           .withColumn('_target', target)
-           .where(F.col('_target').isNotNull())
-           .join(F.broadcast(tot), strata_col)
-           .withColumn(
-               '_keep_bp',
-               F.when(F.col('_tot') <= 0, F.lit(0)).otherwise(
-                   F.least(F.lit(BUCKETS),
-                           F.expr('(_target * %d) DIV _tot'
-                                  % BUCKETS))))
-           .where(bucket < F.col('_keep_bp'))
-           .drop('_target', '_tot', '_keep_bp'))
-    return out
+from typing import Dict
 
 
 def temperature_weights(totals: Dict[str, int],
@@ -253,12 +15,10 @@ def temperature_weights(totals: Dict[str, int],
     drown it.
 
     Driver-side arithmetic over a ``|strata|``-row dict (manifest
-    statistics or the mixture operators' own tiny aggregate) — it
-    never touches the data plane, and the weights it returns feed
-    ``mixture_sample`` / ``mixture_epochs`` whose integer-threshold
-    per-row decisions stay engine-portable.  Zero/negative-count
-    strata are excluded (they have nothing to contribute; a uniform
-    share for an empty stratum would silently burn budget)."""
+    statistics or a tiny per-stratum aggregate) — it never touches
+    the data plane.  Zero/negative-count strata are excluded (they
+    have nothing to contribute; a uniform share for an empty stratum
+    would silently burn budget)."""
     if tau < 0:
         raise ValueError('tau must be >= 0, got %r' % (tau,))
     pos = {s: int(n) for s, n in totals.items() if int(n) > 0}
@@ -269,184 +29,3 @@ def temperature_weights(totals: Dict[str, int],
     raw = {s: float(n) ** tau for s, n in pos.items()}
     z = sum(raw.values())
     return {s: r / z for s, r in sorted(raw.items())}
-
-
-def mixture_epochs(docs: DataFrame, strata_col: str,
-                   weights: Dict[str, float], token_budget: int,
-                   key_col: str, salt: str = 'mixture',
-                   totals: Optional[Dict[str, int]] = None,
-                   max_epochs: Optional[int] = None,
-                   text_col: str = 'text',
-                   token_expr=None) -> DataFrame:
-    """Upsampling mixture — the data-REPETITION primitive: like
-    ``mixture_sample`` but a stratum whose token target EXCEEDS its
-    corpus size contributes whole repeated epochs plus a
-    hash-selected partial epoch, instead of capping at one pass.
-    (Rare-language/high-quality upsampling in pretraining mixtures:
-    a 0.9-weight stratum with 1/5th the tokens repeats ~4.5x.)
-
-    Per stratum with target ``T`` and token total ``S``:
-    ``full = T DIV S`` whole epochs (every unit repeated), plus a
-    partial epoch of the units whose salted bucket falls under
-    ``rem_bp = min(10000, (T - full*S) * 10000 DIV S)``.  All integer
-    arithmetic — engine-portable, DuckDB-replayable, deterministic
-    across reruns/resumes.  The partial epoch reuses the unit's ONE
-    mixture bucket, so it is always a prefix of the same hash order
-    ``mixture_sample`` uses (downsampling is the ``full = 0`` special
-    case; at weights where both apply the two operators select the
-    same subset).
-
-    Output: input rows + ``n_tokens`` + ``epoch`` (0-based copy
-    index); feed through ``pack_sequences`` with a per-epoch salt or
-    key = (doc, epoch) so repeated copies spread across the stream.
-
-    Scale shape: identical to ``mixture_sample`` — one tiny
-    per-stratum aggregate broadcast back (or map-only with manifest
-    ``totals``), then a codegen ``sequence``/explode; no extra
-    shuffle for the repetition.
-
-    ``token_expr`` swaps the budget counter exactly as in
-    ``mixture_sample`` (same Column contract, same caveat for
-    manifest ``totals``).
-
-    ``max_epochs`` caps the copies per unit (full + partial): a
-    near-empty stratum handed a large weight would otherwise explode
-    row counts without bound (10 tokens of 'yo' under a 10^11-token
-    target = 10^10 copies), and repetition past a handful of epochs
-    has sharply diminishing training value anyway.  When the cap
-    binds, the partial epoch is dropped too (every unit gets exactly
-    ``max_epochs`` copies) and the stratum undershoots its token
-    target — deliberately: the cap exists to say 'this stratum cannot
-    absorb its budget'.
-    """
-    if token_budget <= 0:
-        raise ValueError('token_budget must be positive, got %r'
-                         % (token_budget,))
-    if max_epochs is not None and max_epochs < 1:
-        raise ValueError('max_epochs must be >= 1, got %r'
-                         % (max_epochs,))
-
-    def bp(f: float) -> int:
-        if not 0.0 <= f <= 1.0:
-            raise ValueError('weight out of [0, 1]: %r' % (f,))
-        return int(round(f * BUCKETS))
-
-    if not weights:
-        raise ValueError('weights must name at least one stratum')
-    targets = {s: bp(w) * token_budget // BUCKETS
-               for s, w in weights.items()}
-
-    from .textstats import ws_token_count
-    toks = docs.withColumn(
-        'n_tokens',
-        token_expr if token_expr is not None
-        else ws_token_count(F.col(text_col)))
-    bucket = _bucket(key_col, salt)
-
-    # epoch explode: CASE guards sequence(0, -1), which would yield a
-    # DESCENDING [0, -1] in Spark rather than an empty array
-    def _explode(frame, n_copies_col):
-        return (frame
-                .withColumn('_nc', n_copies_col)
-                .where(F.col('_nc') > 0)
-                .withColumn(
-                    'epoch',
-                    F.explode(F.expr(
-                        'sequence(0, cast(_nc as int) - 1)')))
-                .withColumn('epoch', F.col('epoch').cast('int'))
-                .drop('_nc'))
-
-    if totals is not None:
-        missing = sorted(set(targets) - set(totals))
-        if missing:
-            raise ValueError(
-                'totals missing weighted strata %r — stale manifest '
-                'statistics? (a missing stratum would be silently '
-                'dropped, not kept)' % (missing,))
-        ncopies = None
-        for s in sorted(targets):
-            tot = int(totals[s])
-            if tot <= 0:
-                full, rem_bp = 0, 0
-            else:
-                full = targets[s] // tot
-                rem_bp = min(BUCKETS,
-                             (targets[s] - full * tot)
-                             * BUCKETS // tot)
-            if max_epochs is not None and full >= max_epochs:
-                full, rem_bp = max_epochs, 0
-            expr = (F.lit(full)
-                    + F.when(bucket < rem_bp, 1).otherwise(0))
-            cond = F.col(strata_col) == s
-            ncopies = (F.when(cond, expr) if ncopies is None
-                       else ncopies.when(cond, expr))
-        return _explode(toks, ncopies.cast('long'))
-
-    target = None
-    for s in sorted(targets):
-        cond = F.col(strata_col) == s
-        tgt = F.lit(targets[s]).cast('long')
-        target = (F.when(cond, tgt) if target is None
-                  else target.when(cond, tgt))
-    tot = (toks.groupBy(strata_col)
-           .agg(F.sum('n_tokens').cast('long').alias('_tot')))
-    joined = (toks
-              .withColumn('_target', target)
-              .where(F.col('_target').isNotNull())
-              .join(F.broadcast(tot), strata_col)
-              .withColumn('_full',
-                          F.when(F.col('_tot') <= 0, F.lit(0))
-                          .otherwise(F.expr('_target DIV _tot')))
-              .withColumn(
-                  '_rem_bp',
-                  F.when(F.col('_tot') <= 0, F.lit(0)).otherwise(
-                      F.least(F.lit(BUCKETS),
-                              F.expr('((_target - _full * _tot) * %d)'
-                                     ' DIV _tot' % BUCKETS)))))
-    if max_epochs is not None:
-        cap = F.lit(max_epochs).cast('long')
-        joined = (joined
-                  .withColumn('_rem_bp',
-                              F.when(F.col('_full') >= cap, F.lit(0))
-                              .otherwise(F.col('_rem_bp')))
-                  .withColumn('_full', F.least(F.col('_full'), cap)))
-    ncopies = (F.col('_full')
-               + F.when(bucket < F.col('_rem_bp'), 1).otherwise(0))
-    return (_explode(joined, ncopies)
-            .drop('_target', '_tot', '_full', '_rem_bp'))
-
-
-def stratum_reservoir(df: DataFrame, strata_col: str, k: int,
-                      key_col: str,
-                      salt: str = 'reservoir') -> DataFrame:
-    """Deterministic k-per-stratum uniform sample: the k unit keys
-    with the LOWEST salted hash in each stratum — the reproducible
-    analogue of reservoir sampling (a true reservoir depends on
-    encounter order, which a distributed scan does not have).  Ties
-    (hash collisions) break on the key itself, so the result is a
-    total function of the data.
-
-    Scale shape: ``row_number() <= k`` over (hash, key) is capped
-    map-side by WindowGroupLimit — each task emits at most k rows per
-    stratum into the stratum exchange, so a 10^9-row stratum ships
-    O(k x tasks) rows, not its whole population.
-
-    Contract: ``key_col`` must uniquely identify rows (this operator
-    samples at ROW granularity — (hash, key) is only a total order
-    when keys are unique; duplicate keys would make which copy takes
-    rank k partition-order-dependent).  For multi-row units, sample
-    the distinct unit keys and semi-join back, or use
-    ``stratified_sample`` which is unit-atomic by construction.
-    """
-    if k <= 0:
-        raise ValueError('k must be positive, got %d' % k)
-    h = md5_int(F.concat(F.lit(salt + '|'), _key_str(key_col)))
-    # asc_nulls_last: DuckDB's default ASC NULL placement — keeps the
-    # tie-break identical in both engines when key_col itself is NULL
-    # (the draw is never NULL thanks to the _key_str sentinel)
-    w = Window.partitionBy(strata_col).orderBy(
-        F.asc('_draw'), F.asc_nulls_last(key_col))
-    return (df.withColumn('_draw', h)
-            .withColumn('_r', F.row_number().over(w))
-            .where(F.col('_r') <= k)
-            .drop('_draw', '_r'))
