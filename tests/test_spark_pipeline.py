@@ -113,6 +113,42 @@ def test_triples(spark, golden_mentions):
         row['span_start']
 
 
+def test_canonical_name_provenance_is_plan_independent(
+        spark, golden_mentions):
+    """One corpus linked once, triples materialized under two plan
+    shapes (mentions and links checkpointed in ascending, then in
+    descending mention_id order), gives the same triples: each
+    canonical_name row cites the entity's mention with the least
+    (conv_id, turn_idx, span_start, span_stop, mention_id), not
+    whichever row the plan reaches first."""
+    from yargy_spark.operators.linking import link_entities
+    from yargy_spark.operators.triples import materialize_triples
+    links = link_entities(golden_mentions)
+
+    def ordered(df, order):
+        return df.coalesce(1).sortWithinPartitions(order) \
+            .localCheckpoint()
+
+    shapes = [materialize_triples(ordered(golden_mentions, o),
+                                  ordered(links, o))
+              for o in (F.asc('mention_id'), F.desc('mention_id'))]
+    rows = [sorted(repr(tuple(r)) for r in t.collect()) for t in shapes]
+    assert rows[0] == rows[1]
+
+    cited = {}
+    for r in golden_mentions.join(links, 'mention_id').collect():
+        cited.setdefault(r['entity_id'], []).append(
+            (r['conv_id'], r['turn_idx'], r['span_start'],
+             r['span_stop'], r['mention_id']))
+    assert any(len(set(k[:4] for k in v)) > 1 for v in cited.values()), \
+        'fixture must have entities cited from more than one place'
+    got = {r['subj']: (r['conv_id'], r['turn_idx'], r['span_start'],
+                       r['span_stop'])
+           for r in shapes[0].where(F.col('pred') == 'canonical_name')
+           .collect()}
+    assert got == {e: min(v)[:4] for e, v in cited.items()}
+
+
 def test_resumable_pipeline(spark, tmp_path):
     """Two-phase resume contract: extraction commits mention chunks
     bucket-granularly; triples are a globally-consistent REPLACE

@@ -29,7 +29,12 @@ PROVENANCE = ['conv_id', 'turn_idx', 'fact_type',
 def materialize_triples(mentions: DataFrame,
                         entities: DataFrame | None = None) -> DataFrame:
     """mentions (from extract_mentions) + entity links (from
-    link_entities) -> triples table."""
+    link_entities or link_entities_incremental) -> triples table.
+
+    Each linked entity gets one ``canonical_name`` row, whose
+    provenance is that of the entity's mention with the least
+    (conv_id, turn_idx, span_start, span_stop, mention_id): the same
+    row under any plan that links the same corpus."""
     m = mentions
     if entities is not None:
         # entity links are mention-cardinality — a plain equi-join on
@@ -51,13 +56,21 @@ def materialize_triples(mentions: DataFrame,
                             F.col('kv.obj').alias('obj'),
                             *PROVENANCE))
 
+    # one canonical_name row per entity, citing its first mention by
+    # (conv_id, turn_idx, span); mention_id is unique, so the pick is a
+    # total order and does not depend on the plan's row order
+    first = F.min(F.struct('conv_id', 'turn_idx', 'span_start',
+                           'span_stop', 'mention_id', 'fact_type',
+                           'rule_id', 'canonical'))
     canon_triples = (m
                      .where(F.col('entity_id').isNotNull())
-                     .select(F.col('entity_id').alias('subj'),
+                     .groupBy(F.col('entity_id').alias('subj'))
+                     .agg(first.alias('first'))
+                     .select('subj',
                              F.lit('canonical_name').alias('pred'),
-                             F.col('canonical').alias('obj'),
-                             *PROVENANCE)
-                     .dropDuplicates(['subj']))
+                             F.col('first.canonical').alias('obj'),
+                             *(F.col('first.' + c).alias(c)
+                               for c in PROVENANCE)))
 
     mention_triples = (m
                        .where(F.col('entity_id').isNotNull())
