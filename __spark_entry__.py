@@ -111,7 +111,7 @@ def q_kg_incremental(spark, sf_dir) -> DataFrame:
     prior_links = link_entities(prior_m)
     keys = entity_key_table(prior_m, prior_links)
     new_m = extract_mentions(t.where(parity == 1))
-    links, _merges = link_entities_incremental(new_m, keys)
+    links, _merges, _ = link_entities_incremental(new_m, keys)
     prior_ids = (keys.select('entity_id').distinct()
                  .withColumn('flag', F.lit(1)))
     return (links
@@ -145,8 +145,8 @@ def q_kg_merge_candidates(spark, sf_dir) -> DataFrame:
          (5, 'cY', 'пётр|ульянов'),   # direct -> ent_400 (bridge!)
          (6, 'cZ', 'глеб|сидоров')],  # fresh, no candidates
         'mention_id long, conv_id string, norm_key string')
-    _links, merges = link_entities_incremental(new_mentions,
-                                               prior_keys)
+    _links, merges, _ = link_entities_incremental(new_mentions,
+                                                  prior_keys)
     return merges
 
 

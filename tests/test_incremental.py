@@ -7,6 +7,7 @@ import os
 import shutil
 
 import pytest
+from hypothesis import Phase, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -33,7 +34,7 @@ def halves(spark):
 def test_every_new_mention_assigned_once(spark, halves):
     from yargy_spark.operators.linking import link_entities_incremental
     _, _, prior_keys, new_mentions = halves
-    links, _ = link_entities_incremental(new_mentions, prior_keys)
+    links, _, _ = link_entities_incremental(new_mentions, prior_keys)
     links = links.persist()
     pm = new_mentions.where(F.col('norm_key').isNotNull())
     assert links.count() == pm.count()
@@ -46,7 +47,7 @@ def test_shared_key_adopts_prior_entity(spark, halves):
     to the prior entity id — the direct tier."""
     from yargy_spark.operators.linking import link_entities_incremental
     prior_mentions, prior_links, prior_keys, new_mentions = halves
-    links, _ = link_entities_incremental(new_mentions, prior_keys)
+    links, _, _ = link_entities_incremental(new_mentions, prior_keys)
 
     shared = (new_mentions.select('norm_key').distinct()
               .join(prior_keys.select('norm_key', 'entity_id'),
@@ -76,7 +77,7 @@ def test_residual_grouping_matches_batch(spark, halves):
     from yargy_spark.operators.linking import (link_entities,
                                                link_entities_incremental)
     _, _, prior_keys, new_mentions = halves
-    links, _ = link_entities_incremental(new_mentions, prior_keys)
+    links, _, _ = link_entities_incremental(new_mentions, prior_keys)
     prior_ids = {r['entity_id'] for r in
                  prior_keys.select('entity_id').distinct().collect()}
 
@@ -113,7 +114,7 @@ def test_coref_adoption_and_merge_candidates(spark):
          (4, 'cY', 'глеб|сидоров')],   # residual -> fresh entity
         'mention_id long, conv_id string, norm_key string')
 
-    links, merges = link_entities_incremental(new_mentions, prior_keys)
+    links, merges, _ = link_entities_incremental(new_mentions, prior_keys)
     got = {r['mention_id']: (r['entity_id'], r['canonical'])
            for r in links.collect()}
     assert got[1] == ('ent_100', 'анна|петров')
@@ -144,13 +145,144 @@ def test_chain_adoption_closes_over_components(spark):
          (2, 'cA', 'мария|петров'),   # coref neighbor of the match
          (3, 'cB', 'мария|петров')],  # chain: same key as 2, other conv
         'mention_id long, conv_id string, norm_key string')
-    links, merges = link_entities_incremental(new_mentions, prior_keys)
+    links, merges, _ = link_entities_incremental(new_mentions, prior_keys)
     got = {r['mention_id']: (r['entity_id'], r['canonical'])
            for r in links.collect()}
     assert got == {1: ('ent_100', 'анна|петров'),
                    2: ('ent_100', 'анна|петров'),
                    3: ('ent_100', 'анна|петров')}
     assert merges.count() == 0
+
+
+# ------------------------------------------- the increment-link oracle
+
+def _link_oracle(prior, mentions):
+    """Pure-Python ``link_entities_incremental``: prior rows
+    (norm_key, entity_id, canonical) and mention rows (mention_id,
+    conv_id, norm_key) -> (links, merge_candidates, new_keys) as
+    sorted row lists."""
+    prior_of = {k: (e, c) for k, e, c in prior}
+    pm = [m for m in mentions if m[2] is not None]
+
+    def lemma(key):
+        return key.split('|')[1] if '|' in key else None
+
+    # union-find over both blocking families, each set named by its
+    # min mention id
+    parent = {i: i for i, _, _ in pm}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    groups = {}
+    for i, conv, key in pm:
+        groups.setdefault(('k', key), []).append(i)
+        if lemma(key) is not None:
+            groups.setdefault(('c', conv, lemma(key)), []).append(i)
+    for ids in groups.values():
+        for i in ids[1:]:
+            a, b = find(ids[0]), find(i)
+            parent[max(a, b)] = min(a, b)
+    comps = {}
+    for m in pm:
+        comps.setdefault(find(m[0]), []).append(m)
+
+    links, merges = [], []
+    for c, ms in comps.items():
+        n = {}
+        for _, _, key in ms:
+            n[key] = n.get(key, 0) + 1
+        top = min(n, key=lambda k: (-n[k], k))
+        # the direct tier keeps its prior entity; the rest adopt the
+        # string-min touched prior entity, else get a fresh id
+        touched = sorted({prior_of[k] for _, _, k in ms if k in prior_of})
+        rest = touched[0] if touched else ('ent_%d' % c, top)
+        links += [(i, *prior_of.get(k, rest)) for i, _, k in ms]
+
+        direct = [(prior_of[k][0], conv, lemma(k))
+                  for _, conv, k in ms if k in prior_of]
+        ents = sorted({e for e, _, _ in direct})
+        for x, a in enumerate(ents):
+            for b in ents[x + 1:]:
+                side_a = [(cv, lm) for e, cv, lm in direct if e == a]
+                convs_b = {cv for e, cv, _ in direct if e == b}
+                shared = [(cv, lm) for cv, lm in side_a if cv in convs_b]
+                if shared:
+                    # min over (conversation, lemma), a NULL lemma first
+                    conv, lm = min(shared, key=lambda w: (
+                        w[0], w[1] is not None, w[1] or ''))
+                else:
+                    conv = min(cv for e, cv, _ in direct if e in (a, b))
+                    lemmas = [lm for _, lm in side_a if lm is not None]
+                    lm = min(lemmas) if lemmas else None
+                merges.append((a, b, conv, lm))
+    key_of = {i: k for i, _, k in pm}
+    new_keys = {(key_of[i], e, c) for i, e, c in links
+                if key_of[i] not in prior_of}
+    return sorted(links), sorted(merges), sorted(new_keys)
+
+
+_FIRSTS = ('анна', 'вера', 'глеб')
+_KEYS = tuple(f + s for f in _FIRSTS for s in ('|петров', '|сидоров', ''))
+
+
+@st.composite
+def _increment(draw, tag):
+    """One small prior key state (one canonical per entity, entity
+    numbers of different digit counts, so string and numeric order
+    differ) and one increment over a few conversations — with keys
+    lacking a surname, surnames shared across conversations, keys
+    shared with the prior state, and mentions without a key.  ``tag``
+    keeps the keys, conversations and ids of several draws apart."""
+    keys = draw(st.lists(st.sampled_from(_KEYS), unique=True,
+                         max_size=6))
+    ent = {k: draw(st.sampled_from((7, 9, 10, 42, 100))) for k in keys}
+    canon = {e: draw(st.sampled_from(sorted(k for k in keys
+                                            if ent[k] == e)))
+             for e in set(ent.values())}
+    any_key = st.sampled_from(_KEYS + (None,))
+    rows = draw(st.lists(st.tuples(
+        st.sampled_from(('c0', 'c1')),
+        st.one_of(st.sampled_from(keys), any_key) if keys else any_key),
+        min_size=1, max_size=12))
+    ids = draw(st.lists(st.integers(1000, 9999), unique=True,
+                        min_size=len(rows), max_size=len(rows)))
+
+    def key(k):
+        return None if k is None else tag + k
+    prior = [(key(k), 'ent_%d%s' % (ent[k], tag), key(canon[ent[k]]))
+             for k in keys]
+    mentions = [(i * 100 + int(tag), tag + conv, key(k))
+                for i, (conv, k) in zip(ids, rows)]
+    return prior, mentions
+
+
+# no shrinking: every example is a Spark call, and a failing one
+# reports its whole input
+@settings(max_examples=3, deadline=None,
+          phases=(Phase.explicit, Phase.reuse, Phase.generate))
+@given(st.tuples(*(_increment('%02d' % t) for t in range(64))))
+def test_incremental_linking_matches_oracle(spark, cases):
+    """``link_entities_incremental`` equals the pure-Python oracle on
+    random prior states and increments: union-find over both blocking
+    families, the direct tier keeping its prior entity, adoption of
+    the string-min touched prior id, ``ent_<min mention_id>`` for a
+    fresh component, the merge-candidate witness rules, and the keys
+    new to the state.  64 independent draws run as one Spark call
+    (their keys, conversations and ids are disjoint)."""
+    from yargy_spark.operators.linking import link_entities_incremental
+    prior = [r for p, _ in cases for r in p]
+    mentions = [r for _, m in cases for r in m]
+    got = link_entities_incremental(
+        spark.createDataFrame(mentions, 'mention_id long, '
+                              'conv_id string, norm_key string'),
+        spark.createDataFrame(prior, 'norm_key string, '
+                              'entity_id string, canonical string'))
+    want = _link_oracle(prior, mentions)
+    assert [sorted(map(tuple, df.collect())) for df in got] == \
+        list(want)
 
 
 def test_run_incremental_job(spark, tmp_path):
@@ -292,7 +424,7 @@ def test_job_counters_match_committed_tables(spark, kg_base, tmp_path):
     prior = (mf.read_table(spark, base_root + '/entity_keys')
              .select('norm_key', 'entity_id', 'canonical'))
     new_mentions = mf.read_table(spark, inc_root + '/mentions')
-    links, _ = link_entities_incremental(new_mentions, prior)
+    links, _, _ = link_entities_incremental(new_mentions, prior)
     inc_keys = entity_key_table(new_mentions, links)
     canon = (prior.select('entity_id', 'canonical')
              .unionByName(inc_keys.select('entity_id', 'canonical'))
@@ -314,12 +446,14 @@ def test_run_incremental_job_budget(spark, kg_base, tmp_path):
     group, issues at most JOB_BUDGET Spark jobs.  Measured on this
     input (local[4], 8 shuffle partitions): 90-92 jobs while commits
     re-read their files for row stats and counters were separate
-    count actions, 54-55 since.  The budget is 55 plus a margin of
-    1: adding back one commit read-back (3 jobs) fails here, and so
-    do two count actions (2 jobs each)."""
+    count actions; 54-55 while the increment linker truncated four
+    frames and the key state was re-derived from mentions and links;
+    36 since it truncates one per-mention frame and the key state is
+    read off it.  The budget is 36 plus a margin of 1: adding back a
+    truncation or a second computation of the links fails here."""
     from yargy_spark.pipeline import run_incremental
     from yargy_spark.sources.transcripts import synth_transcripts
-    JOB_BUDGET = 55 + 1
+    JOB_BUDGET = 36 + 1
     base_root, _, _ = kg_base
     inc = synth_transcripts(spark, n_turns=96, partitions=4,
                             start_turn=96)
@@ -347,14 +481,14 @@ def test_empty_increment_and_empty_prior(spark):
         [(1, 'cZ', 'иван|ульянов'), (2, 'cZ', 'пётр|ульянов')],
         'mention_id long, conv_id string, norm_key string')
 
-    links, merges = link_entities_incremental(new_mentions, prior_keys)
+    links, merges, _ = link_entities_incremental(new_mentions, prior_keys)
     batch = link_entities(new_mentions)
     assert ({tuple(r) for r in links.collect()}
             == {tuple(r) for r in batch.collect()})
     assert merges.count() == 0
 
     empty = new_mentions.where(F.lit(False))
-    links2, merges2 = link_entities_incremental(empty, prior_keys)
+    links2, merges2, _ = link_entities_incremental(empty, prior_keys)
     assert links2.count() == 0 and merges2.count() == 0
 
 
@@ -384,8 +518,8 @@ def test_merge_witness_shared_conversation(spark):
          (2, 'c2', 'анна|петров'),    # shared conversation
          (3, 'c2', 'борис|петров')],  # bridge via coref in c2
         'mention_id long, conv_id string, norm_key string')
-    _links, merges = link_entities_incremental(new_mentions,
-                                               prior_keys)
+    _links, merges, _ = link_entities_incremental(new_mentions,
+                                                  prior_keys)
     assert [(r['entity_a'], r['entity_b'], r['conv_id'],
              r['last_lemma']) for r in merges.collect()] == \
         [('ent_100', 'ent_200', 'c2', 'петров')]
@@ -406,8 +540,8 @@ def test_merge_witness_no_shared_conversation(spark):
          (3, 'c2', 'мария|петров'),   # same key, other conversation
          (4, 'c2', 'борис|петров')],  # direct b in c2
         'mention_id long, conv_id string, norm_key string')
-    _links, merges = link_entities_incremental(new_mentions,
-                                               prior_keys)
+    _links, merges, _ = link_entities_incremental(new_mentions,
+                                                  prior_keys)
     assert [(r['entity_a'], r['entity_b'], r['conv_id'])
             for r in merges.collect()] == [('ent_100', 'ent_200',
                                             'c2')]

@@ -83,16 +83,23 @@ def _anchor_edges(df: DataFrame, key_col: str, node_col: str
                     F.col('anchor').alias('dst')))
 
 
+def _person_mentions(mentions: DataFrame) -> DataFrame:
+    """(mention_id, conv_id, norm_key, last_lemma) of the mentions
+    with a blocking key; ``last_lemma`` is the key's surname lemma,
+    NULL for a key without one."""
+    return (mentions
+            .where(F.col('norm_key').isNotNull())
+            .select('mention_id', 'conv_id', 'norm_key')
+            .withColumn('last_lemma', F.try_element_at(
+                F.split('norm_key', r'\|'), F.lit(2))))
+
+
 def mention_edges(mentions: DataFrame) -> DataFrame:
     """Mention-graph edges over person-like mentions:
       (a) global blocking on the full lemma key,
       (b) conversation-local coref on the surname lemma
     (FIXTURES.md §6)."""
-    pm = (mentions
-          .where(F.col('norm_key').isNotNull())
-          .select('mention_id', 'conv_id', 'norm_key')
-          .withColumn('last_lemma',
-                      F.element_at(F.split('norm_key', r'\|'), 2)))
+    pm = _person_mentions(mentions)
 
     # both blocking families run through ONE two-phase aggregation:
     # keys are disjoint by prefix, so a single union'd pass halves the
@@ -195,6 +202,14 @@ def connected_components(edges: DataFrame, max_iter: int = 20
 
 # ------------------------------------------------------ canonicalization
 
+def _canonical_order() -> Window:
+    """A component's keys, ranked for its canonical form: over
+    per-(component, norm_key) mention counts ``n``, the most frequent
+    key first, ties broken lexicographically (deterministic)."""
+    return Window.partitionBy('component').orderBy(F.desc('n'),
+                                                   F.asc('norm_key'))
+
+
 def link_entities(mentions: DataFrame) -> DataFrame:
     """Person-like mentions -> (mention_id, entity_id, canonical)
     with one deterministic canonical name per connected component."""
@@ -215,13 +230,10 @@ def link_entities(mentions: DataFrame) -> DataFrame:
                     F.coalesce('component', 'mention_id'))
         .select('mention_id', 'norm_key', 'component'))
 
-    # canonical form: most frequent lemma key in the component,
-    # ties broken lexicographically (deterministic)
     freq = (linked.groupBy('component', 'norm_key')
             .agg(F.count('*').alias('n')))
-    w = Window.partitionBy('component').orderBy(
-        F.desc('n'), F.asc('norm_key'))
-    canon = (freq.withColumn('rank', F.row_number().over(w))
+    canon = (freq.withColumn('rank',
+                             F.row_number().over(_canonical_order()))
              .where(F.col('rank') == 1)
              .select('component', F.col('norm_key').alias('canonical')))
 
@@ -269,27 +281,30 @@ def link_entities_incremental(new_mentions: DataFrame,
     increment is the one cost the two-phase resume design could not
     avoid (SCALE.md "Failure / resume").
 
-    Component adoption: batch-link the INCREMENT (star edges + CC
-    over increment-local edges only — never the historical mention
-    graph), then one equi-join of the components' member keys against
-    ``prior_keys`` (the `entity_key_table` state — distinct-key-
-    bounded; can exceed broadcast size at the design point, AQE picks
-    broadcast when it fits) decides each component's fate:
+    Component adoption: connected components over increment-local
+    star edges only (never the historical mention graph), then ONE
+    per-mention frame — each new mention with its increment component
+    and, by an equi-join on ``norm_key``, its row of ``prior_keys``
+    (the `entity_key_table` state — distinct-key-bounded; AQE
+    broadcasts it when it fits) — assigned by one window pass per
+    component and truncated once.  Every output derives from it:
 
-    * a mention whose own ``norm_key`` is in the prior state keeps
-      THAT entity unconditionally — re-assigning it would silently
-      merge prior entities and rewrite committed triples;
+    * a mention whose own ``norm_key`` is in the prior state (the
+      direct tier) keeps THAT entity unconditionally — re-assigning it
+      would silently merge prior entities and rewrite committed
+      triples;
     * every other mention of a component that touches >= 1 prior
-      entity adopts the (deterministic min) touched entity — this is
-      closed over chains (same-key mentions in other conversations,
-      coref neighbors of those, ...) because adoption is decided per
-      CC component, not per direct neighbor;
-    * components touching no prior entity keep their fresh batch id
+      entity adopts the touched entity with the least
+      ``(entity_id, canonical)`` — closed over chains (same-key
+      mentions in other conversations, coref neighbors of those, ...)
+      because adoption is decided per CC component, not per direct
+      neighbor;
+    * components touching no prior entity get a fresh id
       ('ent_<min mention_id>'; mention ids are 63-bit content hashes
       unique across batches, so fresh ids cannot collide with prior
-      ids).
+      ids) and the canonical form ``link_entities`` would give them.
 
-    Returns ``(links, merge_candidates)``:
+    Returns ``(links, merge_candidates, new_keys)``:
 
     * ``links`` — (mention_id, entity_id, canonical) for every
       person-like new mention, same contract as ``link_entities``.
@@ -306,64 +321,64 @@ def link_entities_incremental(new_mentions: DataFrame,
       candidates are the work-list for ``apply_entity_merges`` or
       the next full re-link — bounded staleness, loud rather than
       silent.
+    * ``new_keys`` — (norm_key, entity_id, canonical) for every key
+      of the increment that is not in ``prior_keys``: the distinct
+      assignments of the non-direct mentions.  All mentions sharing
+      a key share the 'k#' blocking key, hence one component and one
+      assignment, so this is one row per key, and ``prior_keys``
+      union ``new_keys`` is the rolled-forward state (a direct-tier
+      key already carries its prior row).
     """
-    pm = (new_mentions
-          .where(F.col('norm_key').isNotNull())
-          .select('mention_id', 'conv_id', 'norm_key')
-          .withColumn('last_lemma',
-                      F.element_at(F.split('norm_key', r'\|'), 2)))
+    pm = _person_mentions(new_mentions)
+    cc = connected_components(mention_edges(pm))
+    prior = prior_keys.select('norm_key',
+                              F.col('entity_id').alias('prior_id'),
+                              F.col('canonical').alias('prior_canonical'))
 
-    # both frames feed three subtrees each (touched, the anti-join,
-    # the links output); truncate once so the increment CC and the
-    # prior-state join are not re-derived per reference — after this,
-    # the adoption superstructure is a handful of equi-joins and
-    # aggregations over increment- / key-table-bounded rows
-    inc = _checkpointed(
-        link_entities(pm)
-        .withColumnRenamed('entity_id', 'comp_id')
-        .withColumnRenamed('canonical', 'comp_canonical'))
-    direct = _checkpointed(
-        pm.join(prior_keys, 'norm_key')
-        .select('mention_id', 'conv_id', 'last_lemma',
-                'entity_id', 'canonical'))
+    # one window pass per component assigns every mention: its own
+    # prior row (the direct tier), else the component's least touched
+    # prior row, else the fresh id and the component's canonical form
+    comp = Window.partitionBy('component')
+    same_key = comp.orderBy('norm_key').rangeBetween(Window.currentRow,
+                                                     Window.currentRow)
+    whole = _canonical_order().rowsBetween(Window.unboundedPreceding,
+                                           Window.unboundedFollowing)
+    direct = F.col('prior_id').isNotNull()
+    # the one truncation: links, new_keys and the merge candidates
+    # are consumed by separate writes, and each derives from here
+    # instead of re-running the CC rounds, the joins and the windows
+    per_mention = _checkpointed(
+        pm.join(cc, pm.mention_id == cc.node, 'left')
+        .join(prior, 'norm_key', 'left')
+        .withColumn('component', F.coalesce('component', 'mention_id'))
+        .withColumn('n', F.count(F.lit(1)).over(same_key))
+        .withColumn('adopt', F.min(F.when(
+            direct, F.struct('prior_id', 'prior_canonical'))).over(comp))
+        .select('mention_id', 'conv_id', 'norm_key', 'last_lemma',
+                'component', 'prior_id',
+                F.coalesce('prior_id', 'adopt.prior_id',
+                           F.format_string('ent_%d', 'component'))
+                .alias('entity_id'),
+                F.coalesce('prior_canonical', 'adopt.prior_canonical',
+                           F.first('norm_key').over(whole))
+                .alias('canonical')))
+    links = per_mention.select('mention_id', 'entity_id', 'canonical')
+    new_keys = (per_mention.where(~direct)
+                .select('norm_key', 'entity_id', 'canonical')
+                .distinct())
 
     # prior entities touched by each increment component.  The
     # distinct (component, prior, conversation) table drives both the
     # per-entity witness and the pair-shared-conversation witness —
     # bounded by direct-tier rows, far below mention cardinality.
-    # Truncated once: it feeds both returned frames (adoption in the
-    # links, the pairs in the merge candidates), which their callers
-    # consume in separate writes.
-    touched_cl = _checkpointed(
-        inc.select('mention_id', 'comp_id')
-        .join(direct.select('mention_id', 'conv_id', 'last_lemma',
-                            F.col('entity_id').alias('prior_id')),
-              'mention_id')
-        .select('comp_id', 'prior_id', 'conv_id', 'last_lemma')
-        .distinct())
+    touched_cl = (per_mention.where(direct)
+                  .select(F.col('component').alias('comp_id'),
+                          'prior_id', 'conv_id', 'last_lemma')
+                  .distinct())
     touched = (touched_cl
                .groupBy('comp_id', 'prior_id')
                .agg(F.min('conv_id').alias('conv_id'),
                     F.min('last_lemma').alias('last_lemma')))
-
-    ent_canon = prior_keys.select('entity_id', 'canonical').distinct()
-    adopt = (touched.groupBy('comp_id')
-             .agg(F.min('prior_id').alias('adopt_id'))
-             .join(ent_canon.select(
-                 F.col('entity_id').alias('adopt_id'),
-                 F.col('canonical').alias('adopt_canonical')),
-                 'adopt_id'))
-
-    nondirect = inc.join(direct.select('mention_id'), 'mention_id',
-                         'left_anti')
-    assigned = (nondirect.join(adopt, 'comp_id', 'left')
-                .select('mention_id',
-                        F.coalesce('adopt_id', 'comp_id')
-                        .alias('entity_id'),
-                        F.coalesce('adopt_canonical', 'comp_canonical')
-                        .alias('canonical')))
-    links = (direct.select('mention_id', 'entity_id', 'canonical')
-             .union(assigned))
 
     a, b = touched.alias('a'), touched.alias('b')
     pairs = (a.join(b, 'comp_id')
@@ -404,7 +419,7 @@ def link_entities_incremental(new_mentions: DataFrame,
                 .alias('conv_id'),
                 F.coalesce('shared_lemma', 'lemma_a')
                 .alias('last_lemma')))
-    return links, merge_candidates
+    return links, merge_candidates, new_keys
 
 
 def apply_entity_merges(merge_candidates: DataFrame,

@@ -282,11 +282,6 @@ PHONE_GROUPED_PATTERN = (
     r'[0-9]{1,4}(?:-[0-9]{2,4}){3,5}'             # a-bbb-cc-dd(-ee)
     r'|[0-9]{3}-[0-9]{3}-[0-9]{4}'                # NANP 555-123-4567
     r'|[0-9]{9,}')                                # long bare digit run
-# the two passes the scrub runs, in order, exported for reuse.  The
-# round-3 single PHONE_PATTERN is deliberately GONE (it over-redacted
-# space-grouped money/IDs — VERDICT r3 #3); importers must pick a
-# pass, not a lookalike.
-PHONE_PATTERNS = (PHONE_ANCHORED_PATTERN, PHONE_GROUPED_PATTERN)
 
 
 def pii_scrub(docs: DataFrame) -> DataFrame:

@@ -56,9 +56,6 @@ def materialize_triples(mentions: DataFrame,
                             F.col('kv.obj').alias('obj'),
                             *PROVENANCE))
 
-    # one canonical_name row per entity, citing its first mention by
-    # (conv_id, turn_idx, span); mention_id is unique, so the pick is a
-    # total order and does not depend on the plan's row order
     first = F.min(F.struct('conv_id', 'turn_idx', 'span_start',
                            'span_stop', 'mention_id', 'fact_type',
                            'rule_id', 'canonical'))

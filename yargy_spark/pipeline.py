@@ -184,7 +184,9 @@ def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
     Same two-phase shape as the batch job: PHASE 1 commits the
     increment's mentions bucket-granularly to ``<out_root>/mentions``;
     PHASE 2 REPLACE-commits ``<out_root>/entity_keys`` (the prior
-    state rolled forward with this batch's keys — the NEXT increment
+    state rolled forward with this batch's keys: the prior rows as
+    they are, plus the linker's ``new_keys``, read off the same
+    truncated per-mention frame as the links — the NEXT increment
     chains off this root: daily cadence is base -> day1 -> day2 ...
     without re-minting earlier days' fresh entities),
     ``<out_root>/merge_candidates`` (prior-entity pairs the increment
@@ -227,32 +229,18 @@ def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
     new_mentions = _read_or_empty(spark, m_root, MENTION_SCHEMA)
     prior_keys = (mf.read_table(spark, k_root)
                   .select('norm_key', 'entity_id', 'canonical'))
-    links, merges = link_entities_incremental(new_mentions,
-                                              prior_keys)
-    links = links.persist()
-    try:
-        # roll the key state FORWARD — committed to
-        # <out_root>/entity_keys so the NEXT increment can chain off
-        # this root instead of re-minting this batch's fresh entities.
-        # Prior rows carry over as they are, and only keys new to the
-        # state are added: a new mention whose key is in the prior
-        # state is in the direct tier, so it already carries that
-        # key's prior (entity_id, canonical).
-        inc_keys = entity_key_table(new_mentions, links)
-        state = prior_keys.unionByName(
-            inc_keys.join(prior_keys.select('norm_key'), 'norm_key',
-                          'left_anti'))
-        merges, n_merges = _observed(merges,
-                                     merge_candidates=F.count(F.lit(1)))
-        triples, observed = _counted_triples(new_mentions, links)
-        counters.update(observed, **n_merges)
-        return mf.commit_chain([
-            (k_out, 'entity_keys', state, 'norm_key', None),
-            (c_root, 'merge_candidates', merges, 'entity_a', None),
-            (t_root, 'triples', triples, 'conv_id', counters),
-        ], n_buckets, head, t0, base_keys_snapshot=keys_snap)
-    finally:
-        links.unpersist()
+    links, merges, new_keys = link_entities_incremental(new_mentions,
+                                                        prior_keys)
+    merges, n_merges = _observed(merges,
+                                 merge_candidates=F.count(F.lit(1)))
+    triples, observed = _counted_triples(new_mentions, links)
+    counters.update(observed, **n_merges)
+    return mf.commit_chain([
+        (k_out, 'entity_keys', prior_keys.unionByName(new_keys),
+         'norm_key', None),
+        (c_root, 'merge_candidates', merges, 'entity_a', None),
+        (t_root, 'triples', triples, 'conv_id', counters),
+    ], n_buckets, head, t0, base_keys_snapshot=keys_snap)
 
 
 def run_apply_merges(spark: SparkSession, inc_root: str,
