@@ -19,15 +19,18 @@ def halves(spark):
     """Golden corpus split by conversation parity: batch-link the even
     half (the 'prior' corpus), treat the odd half as the increment."""
     from yargy_spark.operators.extract import extract_mentions
-    from yargy_spark.operators.linking import (entity_key_table,
-                                               link_entities)
+    from yargy_spark.operators.linking import (KEY_SCHEMA,
+                                               link_entities_incremental)
     from yargy_spark.sources.transcripts import golden_only_transcripts
     t = golden_only_transcripts(spark)
     parity = (F.substring('conv_id', 2, 6).cast('int') % 2)
     prior_mentions = extract_mentions(t.where(parity == 0)).persist()
     new_mentions = extract_mentions(t.where(parity == 1)).persist()
-    prior_links = link_entities(prior_mentions).persist()
-    prior_keys = entity_key_table(prior_mentions, prior_links).persist()
+    # the batch link of the prior half and its key state, as
+    # run_resumable derives them: the increment against an empty state
+    prior_links, _, prior_keys = link_entities_incremental(
+        prior_mentions, spark.createDataFrame([], KEY_SCHEMA))
+    prior_links, prior_keys = prior_links.persist(), prior_keys.persist()
     return prior_mentions, prior_links, prior_keys, new_mentions
 
 
@@ -270,19 +273,22 @@ def test_incremental_linking_matches_oracle(spark, cases):
     families, the direct tier keeping its prior entity, adoption of
     the string-min touched prior id, ``ent_<min mention_id>`` for a
     fresh component, the merge-candidate witness rules, and the keys
-    new to the state.  64 independent draws run as one Spark call
-    (their keys, conversations and ids are disjoint)."""
-    from yargy_spark.operators.linking import link_entities_incremental
+    new to the state; ``link_entities`` equals the oracle's links
+    against an empty state.  64 independent draws run as one Spark
+    call (their keys, conversations and ids are disjoint)."""
+    from yargy_spark.operators.linking import (link_entities,
+                                               link_entities_incremental)
     prior = [r for p, _ in cases for r in p]
     mentions = [r for _, m in cases for r in m]
+    mdf = spark.createDataFrame(mentions, 'mention_id long, '
+                                'conv_id string, norm_key string')
     got = link_entities_incremental(
-        spark.createDataFrame(mentions, 'mention_id long, '
-                              'conv_id string, norm_key string'),
-        spark.createDataFrame(prior, 'norm_key string, '
-                              'entity_id string, canonical string'))
-    want = _link_oracle(prior, mentions)
+        mdf, spark.createDataFrame(prior, 'norm_key string, '
+                                   'entity_id string, canonical string'))
     assert [sorted(map(tuple, df.collect())) for df in got] == \
-        list(want)
+        list(_link_oracle(prior, mentions))
+    assert sorted(map(tuple, link_entities(mdf).collect())) == \
+        _link_oracle([], mentions)[0]
 
 
 def test_run_incremental_job(spark, tmp_path):
@@ -397,8 +403,7 @@ def test_job_counters_match_committed_tables(spark, kg_base, tmp_path):
     and the committed tables — with several chunk observations summed
     in both jobs — and the increment's rolled-forward entity_keys
     equals the union -> min -> canonical-join reference."""
-    from yargy_spark.operators.linking import (entity_key_table,
-                                               link_entities_incremental)
+    from yargy_spark.operators.linking import link_entities_incremental
     from yargy_spark.pipeline import run_incremental
     from yargy_spark.sources import manifest as mf
     from yargy_spark.sources.transcripts import synth_transcripts
@@ -425,7 +430,14 @@ def test_job_counters_match_committed_tables(spark, kg_base, tmp_path):
              .select('norm_key', 'entity_id', 'canonical'))
     new_mentions = mf.read_table(spark, inc_root + '/mentions')
     links, _, _ = link_entities_incremental(new_mentions, prior)
-    inc_keys = entity_key_table(new_mentions, links)
+    # the increment's key table, from its mentions and links alone:
+    # min entity per key, canonical re-joined
+    inc_keys = (new_mentions.where(F.col('norm_key').isNotNull())
+                .join(links, 'mention_id')
+                .groupBy('norm_key')
+                .agg(F.min('entity_id').alias('entity_id'))
+                .join(links.select('entity_id', 'canonical').distinct(),
+                      'entity_id'))
     canon = (prior.select('entity_id', 'canonical')
              .unionByName(inc_keys.select('entity_id', 'canonical'))
              .distinct())
@@ -463,6 +475,31 @@ def test_run_incremental_job_budget(spark, kg_base, tmp_path):
     try:
         snap = run_incremental(spark, inc, base_root,
                                str(tmp_path / 'inc'), n_buckets=4)
+    finally:
+        sc.setLocalProperty('spark.jobGroup.id', None)
+    assert snap is not None
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= JOB_BUDGET, jobs
+
+
+def test_run_resumable_job_budget(spark, tmp_path):
+    """Job-budget guard: one run_resumable over the ``kg_base`` input,
+    in its own job group, issues at most JOB_BUDGET Spark jobs.
+    Measured on this input (local[4], 8 shuffle partitions): 38 jobs
+    while the links were persisted and the key state was re-derived
+    from mentions and links; 35 since both are read off
+    the linker's one truncated per-mention frame.  The budget is that
+    plus a margin of 1."""
+    from yargy_spark.pipeline import run_resumable
+    from yargy_spark.sources.transcripts import synth_transcripts
+    JOB_BUDGET = 35 + 1
+    base = synth_transcripts(spark, n_turns=96, partitions=4)
+    sc = spark.sparkContext
+    group = 'run_resumable-job-budget'
+    sc.setJobGroup(group, 'run_resumable job budget')
+    try:
+        snap = run_resumable(spark, base, str(tmp_path / 'base'),
+                             n_buckets=4, chunk_size=1)
     finally:
         sc.setLocalProperty('spark.jobGroup.id', None)
     assert snap is not None

@@ -5,7 +5,7 @@ from .extract import extract_mentions            # noqa: F401
 from .linking import (apply_entity_merges,       # noqa: F401
                       connected_components,
                       entity_cooccurrence, entity_degree,
-                      entity_key_table, link_entities,
+                      link_entities,
                       link_entities_incremental, mention_edges)
 from .triples import materialize_triples         # noqa: F401
 from .tokens import (annotate_lemmas,            # noqa: F401

@@ -21,8 +21,14 @@ designed Spark-first for the 100 TB point:
   (reliable ``checkpoint()`` when a checkpoint dir is configured —
   the right setting on a cluster where executor loss is routine —
   falling back to ``localCheckpoint`` in local mode).
-* Canonicalization: one representative surface form per entity via a
-  frequency-ranked window, deterministic tie-break.
+* Entity assignment, shared by the batch and the incremental linker:
+  the mentions aggregate to one row per (component, blocking key),
+  left-joined to the entity-key state (empty for a batch link), and
+  one window pass per component over that key table assigns each key
+  its prior entity, else the component's least touched prior entity,
+  else a fresh id with the component's most frequent key as its
+  canonical form (deterministic tie-break).  The window sees distinct
+  keys, never a hot key's mentions; the mentions join back once.
 """
 
 from __future__ import annotations
@@ -50,10 +56,7 @@ def _checkpointed(df: DataFrame, eager: bool = True,
     materializes the checkpoint — relying on LRU eviction instead
     builds storage-memory pressure across the up-to-20 CC rounds on a
     cluster with a checkpoint dir."""
-    sc = df.sparkSession.sparkContext
-    get_dir = getattr(sc, 'getCheckpointDir', None)
-    has_dir = bool(get_dir()) if get_dir is not None else False
-    if has_dir:
+    if df.sparkSession.sparkContext.getCheckpointDir():
         df = df.persist()
         out = df.checkpoint(eager=eager)
         if eager:
@@ -200,7 +203,11 @@ def connected_components(edges: DataFrame, max_iter: int = 20
     return members.union(roots)
 
 
-# ------------------------------------------------------ canonicalization
+# ---------------------------------------------------- entity assignment
+
+# the entity-key state: one row per distinct blocking key
+KEY_SCHEMA = 'norm_key string, entity_id string, canonical string'
+
 
 def _canonical_order() -> Window:
     """A component's keys, ranked for its canonical form: over
@@ -210,66 +217,59 @@ def _canonical_order() -> Window:
                                                    F.asc('norm_key'))
 
 
+def _linked_mentions(mentions: DataFrame, prior_keys: DataFrame
+                     ) -> DataFrame:
+    """The one entity assignment both linkers run: each person mention
+    with its component, its ``prior_keys`` row (``prior_id``, NULL off
+    the state) and its ``(entity_id, canonical)``, truncated once.
+
+    Assignment is per blocking key, not per mention: the mentions
+    aggregate to one row per ``(component, norm_key)`` with its count
+    ``n``, left-joined to the state on ``norm_key``, and one window
+    pass per component over that key table assigns each key its own
+    prior row, else the component's least touched prior row, else
+    ``ent_<component>`` and the component's top key.  The window sees
+    distinct keys, never a hot key's mentions.  The mentions join back
+    on ``norm_key``: all mentions of a key share its 'k#' blocking
+    key, hence one component."""
+    pm = _person_mentions(mentions)
+    cc = connected_components(mention_edges(pm))
+    prior = prior_keys.select('norm_key',
+                              F.col('entity_id').alias('prior_id'),
+                              F.col('canonical').alias('prior_canonical'))
+    whole = _canonical_order().rowsBetween(Window.unboundedPreceding,
+                                           Window.unboundedFollowing)
+    adopt = F.min(F.when(F.col('prior_id').isNotNull(),
+                         F.struct('prior_id', 'prior_canonical'))
+                  ).over(Window.partitionBy('component'))
+    keys = (pm.join(cc, pm.mention_id == cc.node, 'left')
+            .groupBy(F.coalesce('component', 'mention_id')
+                     .alias('component'), 'norm_key')
+            .agg(F.count(F.lit(1)).alias('n'))
+            .join(prior, 'norm_key', 'left')
+            .select('norm_key', 'component', 'prior_id',
+                    F.coalesce('prior_id', adopt.prior_id,
+                               F.format_string('ent_%d', 'component'))
+                    .alias('entity_id'),
+                    F.coalesce('prior_canonical', adopt.prior_canonical,
+                               F.first('norm_key').over(whole))
+                    .alias('canonical')))
+    # the one truncation: links, the key state and the merge
+    # candidates are consumed by separate writes, and each derives
+    # from here instead of re-running the CC rounds and the window
+    return _checkpointed(pm.join(keys, 'norm_key'))
+
+
 def link_entities(mentions: DataFrame) -> DataFrame:
     """Person-like mentions -> (mention_id, entity_id, canonical)
-    with one deterministic canonical name per connected component."""
-    pm = mentions.where(F.col('norm_key').isNotNull())
-    edges = mention_edges(pm)
-    cc = connected_components(edges)
-
-    # linked feeds TWO subtrees (the freq/canon window and the final
-    # join): project to the three needed columns, then truncate so
-    # the pm x cc join runs once, not twice.  Eager: the checkpoint
-    # job runs at the first downstream action either way, and eager
-    # releases the pre-checkpoint persist deterministically (no
-    # materializing action happens inside this function).
-    pm_small = pm.select('mention_id', 'norm_key')
-    linked = _checkpointed(
-        pm_small.join(cc, pm_small.mention_id == cc.node, 'left')
-        .withColumn('component',
-                    F.coalesce('component', 'mention_id'))
-        .select('mention_id', 'norm_key', 'component'))
-
-    freq = (linked.groupBy('component', 'norm_key')
-            .agg(F.count('*').alias('n')))
-    canon = (freq.withColumn('rank',
-                             F.row_number().over(_canonical_order()))
-             .where(F.col('rank') == 1)
-             .select('component', F.col('norm_key').alias('canonical')))
-
-    return (linked.join(canon, 'component')
-            .withColumn('entity_id',
-                        F.format_string('ent_%d', F.col('component')))
+    with one deterministic canonical name per connected component:
+    the entity assignment against an empty key state."""
+    empty = mentions.sparkSession.createDataFrame([], KEY_SCHEMA)
+    return (_linked_mentions(mentions, empty)
             .select('mention_id', 'entity_id', 'canonical'))
 
 
 # ------------------------------------------------ incremental linking
-
-def entity_key_table(mentions: DataFrame, links: DataFrame
-                     ) -> DataFrame:
-    """The compact incremental-linking state: one row per distinct
-    blocking key, ``(norm_key, entity_id, canonical)``.
-
-    Derived from a linked corpus (mentions joined to a
-    ``link_entities`` output); bounded by |distinct surface keys| —
-    at the 10^12-turn design point that is ~10^8 rows (person-name
-    keys), ~GBs as parquet, vs the 10^10+ mention rows it summarizes.
-    Within one batch-linked corpus ``norm_key -> entity`` is
-    functional (all mentions sharing a key share the 'k#' blocking
-    key, hence the component); the min() below is a deterministic
-    belt-and-braces for state that was itself built incrementally
-    with unapplied merges."""
-    keyed = (mentions
-             .where(F.col('norm_key').isNotNull())
-             .select('mention_id', 'norm_key')
-             .join(links.select('mention_id', 'entity_id'),
-                   'mention_id'))
-    canon = links.select('entity_id', 'canonical').distinct()
-    return (keyed.groupBy('norm_key')
-            .agg(F.min('entity_id').alias('entity_id'))
-            .join(canon, 'entity_id')
-            .select('norm_key', 'entity_id', 'canonical'))
-
 
 def link_entities_incremental(new_mentions: DataFrame,
                               prior_keys: DataFrame) -> tuple:
@@ -282,23 +282,19 @@ def link_entities_incremental(new_mentions: DataFrame,
     avoid (SCALE.md "Failure / resume").
 
     Component adoption: connected components over increment-local
-    star edges only (never the historical mention graph), then ONE
-    per-mention frame — each new mention with its increment component
-    and, by an equi-join on ``norm_key``, its row of ``prior_keys``
-    (the `entity_key_table` state — distinct-key-bounded; AQE
-    broadcasts it when it fits) — assigned by one window pass per
-    component and truncated once.  Every output derives from it:
+    star edges only (never the historical mention graph), then the
+    per-key assignment ``link_entities`` runs, against ``prior_keys``
+    (``KEY_SCHEMA`` — distinct-key-bounded; AQE broadcasts it when it
+    fits) instead of an empty state:
 
-    * a mention whose own ``norm_key`` is in the prior state (the
-      direct tier) keeps THAT entity unconditionally — re-assigning it
-      would silently merge prior entities and rewrite committed
-      triples;
-    * every other mention of a component that touches >= 1 prior
-      entity adopts the touched entity with the least
-      ``(entity_id, canonical)`` — closed over chains (same-key
-      mentions in other conversations, coref neighbors of those, ...)
-      because adoption is decided per CC component, not per direct
-      neighbor;
+    * a key in the prior state (the direct tier) keeps THAT entity
+      unconditionally — re-assigning it would silently merge prior
+      entities and rewrite committed triples;
+    * every other key of a component that touches >= 1 prior entity
+      adopts the touched entity with the least ``(entity_id,
+      canonical)`` — closed over chains (same-key mentions in other
+      conversations, coref neighbors of those, ...) because adoption
+      is decided per CC component, not per direct neighbor;
     * components touching no prior entity get a fresh id
       ('ent_<min mention_id>'; mention ids are 63-bit content hashes
       unique across batches, so fresh ids cannot collide with prior
@@ -322,46 +318,14 @@ def link_entities_incremental(new_mentions: DataFrame,
       the next full re-link — bounded staleness, loud rather than
       silent.
     * ``new_keys`` — (norm_key, entity_id, canonical) for every key
-      of the increment that is not in ``prior_keys``: the distinct
-      assignments of the non-direct mentions.  All mentions sharing
-      a key share the 'k#' blocking key, hence one component and one
-      assignment, so this is one row per key, and ``prior_keys``
-      union ``new_keys`` is the rolled-forward state (a direct-tier
-      key already carries its prior row).
+      of the increment that is not in ``prior_keys``, one row per
+      key, so ``prior_keys`` union ``new_keys`` is the rolled-forward
+      state (a direct-tier key already carries its prior row).
+      Against an empty state it is the whole key state of the batch
+      (``run_resumable`` commits it).
     """
-    pm = _person_mentions(new_mentions)
-    cc = connected_components(mention_edges(pm))
-    prior = prior_keys.select('norm_key',
-                              F.col('entity_id').alias('prior_id'),
-                              F.col('canonical').alias('prior_canonical'))
-
-    # one window pass per component assigns every mention: its own
-    # prior row (the direct tier), else the component's least touched
-    # prior row, else the fresh id and the component's canonical form
-    comp = Window.partitionBy('component')
-    same_key = comp.orderBy('norm_key').rangeBetween(Window.currentRow,
-                                                     Window.currentRow)
-    whole = _canonical_order().rowsBetween(Window.unboundedPreceding,
-                                           Window.unboundedFollowing)
+    per_mention = _linked_mentions(new_mentions, prior_keys)
     direct = F.col('prior_id').isNotNull()
-    # the one truncation: links, new_keys and the merge candidates
-    # are consumed by separate writes, and each derives from here
-    # instead of re-running the CC rounds, the joins and the windows
-    per_mention = _checkpointed(
-        pm.join(cc, pm.mention_id == cc.node, 'left')
-        .join(prior, 'norm_key', 'left')
-        .withColumn('component', F.coalesce('component', 'mention_id'))
-        .withColumn('n', F.count(F.lit(1)).over(same_key))
-        .withColumn('adopt', F.min(F.when(
-            direct, F.struct('prior_id', 'prior_canonical'))).over(comp))
-        .select('mention_id', 'conv_id', 'norm_key', 'last_lemma',
-                'component', 'prior_id',
-                F.coalesce('prior_id', 'adopt.prior_id',
-                           F.format_string('ent_%d', 'component'))
-                .alias('entity_id'),
-                F.coalesce('prior_canonical', 'adopt.prior_canonical',
-                           F.first('norm_key').over(whole))
-                .alias('canonical')))
     links = per_mention.select('mention_id', 'entity_id', 'canonical')
     new_keys = (per_mention.where(~direct)
                 .select('norm_key', 'entity_id', 'canonical')
@@ -380,44 +344,42 @@ def link_entities_incremental(new_mentions: DataFrame,
                .agg(F.min('conv_id').alias('conv_id'),
                     F.min('last_lemma').alias('last_lemma')))
 
+    # one row per (component, pair) with the fallback witness, and
+    # one per conversation where BOTH priors have direct mentions
+    # (the a-side min conversation can contain only entity_a when the
+    # component bridges via a coref chain); one aggregation per pair
+    # prefers the least shared (conversation, lemma) struct — its
+    # lemma from the SAME conversation — over the fallback
     a, b = touched.alias('a'), touched.alias('b')
     pairs = (a.join(b, 'comp_id')
              .where(F.col('a.prior_id') < F.col('b.prior_id'))
              .select('comp_id',
                      F.col('a.prior_id').alias('entity_a'),
                      F.col('b.prior_id').alias('entity_b'),
-                     F.col('a.conv_id').alias('conv_a'),
-                     F.col('b.conv_id').alias('conv_b'),
-                     F.col('a.last_lemma').alias('lemma_a')))
-    # pair witness: a conversation where BOTH priors have direct
-    # mentions (the a-side min conversation can contain only
-    # entity_a when the component bridges via a coref chain).
-    # Self-join on (component, conversation) over the distinct
-    # direct-tier rows, min per pair; NULL when no shared
-    # conversation exists.
+                     F.lit(False).alias('shared'),
+                     F.least('a.conv_id', 'b.conv_id').alias('conv_id'),
+                     F.col('a.last_lemma').alias('last_lemma')))
     sa, sb = touched_cl.alias('sa'), touched_cl.alias('sb')
     shared = (sa.join(sb, (F.col('sa.comp_id') == F.col('sb.comp_id'))
                       & (F.col('sa.conv_id') == F.col('sb.conv_id'))
                       & (F.col('sa.prior_id') < F.col('sb.prior_id')))
-              .groupBy(F.col('sa.comp_id').alias('comp_id'),
-                       F.col('sa.prior_id').alias('entity_a'),
-                       F.col('sb.prior_id').alias('entity_b'))
-              # struct min: the witness lemma comes from the SAME
-              # (min) shared conversation, not an unrelated one
-              .agg(F.min(F.struct(F.col('sa.conv_id'),
-                                  F.col('sa.last_lemma')))
-                   .alias('w'))
-              .select('comp_id', 'entity_a', 'entity_b',
-                      F.col('w.conv_id').alias('shared_conv'),
-                      F.col('w.last_lemma').alias('shared_lemma')))
+              .select(F.col('sa.comp_id').alias('comp_id'),
+                      F.col('sa.prior_id').alias('entity_a'),
+                      F.col('sb.prior_id').alias('entity_b'),
+                      F.lit(True).alias('shared'),
+                      F.col('sa.conv_id').alias('conv_id'),
+                      F.col('sa.last_lemma').alias('last_lemma')))
+
+    def witness(tier):
+        return F.min(F.when(tier, F.struct('conv_id', 'last_lemma')))
     merge_candidates = (
-        pairs.join(shared, ['comp_id', 'entity_a', 'entity_b'],
-                   'left')
+        pairs.union(shared)
+        .groupBy('comp_id', 'entity_a', 'entity_b')
+        .agg(witness(F.col('shared')).alias('s'),
+             witness(~F.col('shared')).alias('f'))
         .select('entity_a', 'entity_b',
-                F.coalesce('shared_conv',
-                           F.least('conv_a', 'conv_b'))
-                .alias('conv_id'),
-                F.coalesce('shared_lemma', 'lemma_a')
+                F.coalesce('s.conv_id', 'f.conv_id').alias('conv_id'),
+                F.coalesce('s.last_lemma', 'f.last_lemma')
                 .alias('last_lemma')))
     return links, merge_candidates, new_keys
 
@@ -442,7 +404,7 @@ def apply_entity_merges(merge_candidates: DataFrame,
 
     * ``mapping`` — (entity_id, merged_id, merged_canonical), one row
       per RETIRED entity (survivors do not appear as ``entity_id``).
-    * ``new_keys`` — the full ``entity_key_table`` contract with
+    * ``new_keys`` — the full ``KEY_SCHEMA`` state with
       retired ids rewritten to their survivor (id AND canonical), so
       the next increment chains off merged state.
     * ``patch`` — corrected rows for every input triple whose subject

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.extract import MENTION_SCHEMA, extract_mentions
-from .operators.linking import (apply_entity_merges, entity_key_table,
+from .operators.linking import (KEY_SCHEMA, apply_entity_merges,
                                 link_entities,
                                 link_entities_incremental)
 from .operators.triples import materialize_triples
@@ -159,17 +159,16 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame,
         return None
 
     all_mentions = _read_or_empty(spark, m_root, MENTION_SCHEMA)
-    entities = link_entities(all_mentions).persist()
-    try:
-        triples, observed = _counted_triples(all_mentions, entities)
-        counters.update(observed)
-        return mf.commit_chain([
-            (k_root, 'entity_keys',
-             entity_key_table(all_mentions, entities), 'norm_key', None),
-            (t_root, 'triples', triples, 'conv_id', counters),
-        ], n_buckets, head, t0)
-    finally:
-        entities.unpersist()
+    # the whole corpus linked against an empty key state: its new
+    # keys are the key state, read off the links' one truncation
+    links, _, keys = link_entities_incremental(
+        all_mentions, spark.createDataFrame([], KEY_SCHEMA))
+    triples, observed = _counted_triples(all_mentions, links)
+    counters.update(observed)
+    return mf.commit_chain([
+        (k_root, 'entity_keys', keys, 'norm_key', None),
+        (t_root, 'triples', triples, 'conv_id', counters),
+    ], n_buckets, head, t0)
 
 
 def run_incremental(spark: SparkSession, new_transcripts: DataFrame,
