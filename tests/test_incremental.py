@@ -132,6 +132,30 @@ def test_coref_adoption_and_merge_candidates(spark):
         [('ent_100', 'ent_200', 'cX', 'петров')]
 
 
+def test_adoption_picks_numeric_min_id(spark):
+    """Adoption orders prior ids by their number, as batch CC and
+    ``apply_entity_merges`` do: a component touching an 18-digit
+    'ent_9...' and a 19-digit 'ent_1...' adopts 'ent_9...', which the
+    string order would rank second."""
+    from yargy_spark.operators.linking import link_entities_incremental
+    low, high = 'ent_%d' % (9 * 10 ** 17), 'ent_%d' % 10 ** 18
+    prior_keys = spark.createDataFrame(
+        [('анна|петров', low, 'анна|петров'),
+         ('борис|петров', high, 'борис|петров')],
+        'norm_key string, entity_id string, canonical string')
+    new_mentions = spark.createDataFrame(
+        [(1, 'cX', 'анна|петров'),     # direct -> low
+         (2, 'cX', 'вера|петров'),     # coref adopt -> numeric min
+         (3, 'cX', 'борис|петров')],   # direct -> high
+        'mention_id long, conv_id string, norm_key string')
+    links, _, new_keys = link_entities_incremental(new_mentions,
+                                                   prior_keys)
+    got = {r['mention_id']: r['entity_id'] for r in links.collect()}
+    assert got == {1: low, 2: low, 3: high}
+    assert [tuple(r) for r in new_keys.collect()] == \
+        [('вера|петров', low, 'анна|петров')]
+
+
 def test_chain_adoption_closes_over_components(spark):
     """Adoption is decided per increment component, so it closes over
     chains: a mention whose only connection to a direct match is
@@ -199,8 +223,9 @@ def _link_oracle(prior, mentions):
             n[key] = n.get(key, 0) + 1
         top = min(n, key=lambda k: (-n[k], k))
         # the direct tier keeps its prior entity; the rest adopt the
-        # string-min touched prior entity, else get a fresh id
-        touched = sorted({prior_of[k] for _, _, k in ms if k in prior_of})
+        # numeric-min touched prior entity, else get a fresh id
+        touched = sorted({prior_of[k] for _, _, k in ms if k in prior_of},
+                         key=lambda ec: int(ec[0][len('ent_'):]))
         rest = touched[0] if touched else ('ent_%d' % c, top)
         links += [(i, *prior_of.get(k, rest)) for i, _, k in ms]
 
@@ -271,7 +296,7 @@ def test_incremental_linking_matches_oracle(spark, cases):
     """``link_entities_incremental`` equals the pure-Python oracle on
     random prior states and increments: union-find over both blocking
     families, the direct tier keeping its prior entity, adoption of
-    the string-min touched prior id, ``ent_<min mention_id>`` for a
+    the numeric-min touched prior id, ``ent_<min mention_id>`` for a
     fresh component, the merge-candidate witness rules, and the keys
     new to the state; ``link_entities`` equals the oracle's links
     against an empty state.  64 independent draws run as one Spark

@@ -25,8 +25,8 @@ designed Spark-first for the 100 TB point:
   the mentions aggregate to one row per (component, blocking key),
   left-joined to the entity-key state (empty for a batch link), and
   one window pass per component over that key table assigns each key
-  its prior entity, else the component's least touched prior entity,
-  else a fresh id with the component's most frequent key as its
+  its prior entity, else the touched prior entity with the numeric-min
+  id, else a fresh id with the component's most frequent key as its
   canonical form (deterministic tie-break).  The window sees distinct
   keys, never a hot key's mentions; the mentions join back once.
 """
@@ -209,6 +209,12 @@ def connected_components(edges: DataFrame, max_iter: int = 20
 KEY_SCHEMA = 'norm_key string, entity_id string, canonical string'
 
 
+def _num(col):
+    """The numeric part of an ``ent_<n>`` entity id: ids order by it,
+    not by their strings ('ent_9...' < 'ent_10...')."""
+    return F.regexp_extract(col, '^ent_([0-9]+)$', 1).cast('long')
+
+
 def _canonical_order() -> Window:
     """A component's keys, ranked for its canonical form: over
     per-(component, norm_key) mention counts ``n``, the most frequent
@@ -227,11 +233,11 @@ def _linked_mentions(mentions: DataFrame, prior_keys: DataFrame
     aggregate to one row per ``(component, norm_key)`` with its count
     ``n``, left-joined to the state on ``norm_key``, and one window
     pass per component over that key table assigns each key its own
-    prior row, else the component's least touched prior row, else
-    ``ent_<component>`` and the component's top key.  The window sees
-    distinct keys, never a hot key's mentions.  The mentions join back
-    on ``norm_key``: all mentions of a key share its 'k#' blocking
-    key, hence one component."""
+    prior row, else the touched prior row with the numeric-min id,
+    else ``ent_<component>`` and the component's top key.  The window
+    sees distinct keys, never a hot key's mentions.  The mentions join
+    back on ``norm_key``: all mentions of a key share its 'k#'
+    blocking key, hence one component."""
     pm = _person_mentions(mentions)
     cc = connected_components(mention_edges(pm))
     prior = prior_keys.select('norm_key',
@@ -240,7 +246,8 @@ def _linked_mentions(mentions: DataFrame, prior_keys: DataFrame
     whole = _canonical_order().rowsBetween(Window.unboundedPreceding,
                                            Window.unboundedFollowing)
     adopt = F.min(F.when(F.col('prior_id').isNotNull(),
-                         F.struct('prior_id', 'prior_canonical'))
+                         F.struct(_num('prior_id').alias('num'),
+                                  'prior_id', 'prior_canonical'))
                   ).over(Window.partitionBy('component'))
     keys = (pm.join(cc, pm.mention_id == cc.node, 'left')
             .groupBy(F.coalesce('component', 'mention_id')
@@ -291,10 +298,11 @@ def link_entities_incremental(new_mentions: DataFrame,
       unconditionally — re-assigning it would silently merge prior
       entities and rewrite committed triples;
     * every other key of a component that touches >= 1 prior entity
-      adopts the touched entity with the least ``(entity_id,
-      canonical)`` — closed over chains (same-key mentions in other
-      conversations, coref neighbors of those, ...) because adoption
-      is decided per CC component, not per direct neighbor;
+      adopts the touched entity with the numeric-min id (the order
+      batch CC and ``apply_entity_merges`` use) — closed over chains
+      (same-key mentions in other conversations, coref neighbors of
+      those, ...) because adoption is decided per CC component, not
+      per direct neighbor;
     * components touching no prior entity get a fresh id
       ('ent_<min mention_id>'; mention ids are 63-bit content hashes
       unique across batches, so fresh ids cannot collide with prior
@@ -419,9 +427,6 @@ def apply_entity_merges(merge_candidates: DataFrame,
     cheap; both rewrites are single equi-joins against the
     candidate-bounded mapping — Catalyst broadcasts it, making the
     key-table and triples passes map-side."""
-    def _num(col):
-        return F.regexp_extract(col, '^ent_([0-9]+)$', 1).cast('long')
-
     edges = (merge_candidates
              .select(_num('entity_a').alias('src'),
                      _num('entity_b').alias('dst'))
