@@ -103,14 +103,14 @@ def q_kg_incremental(spark, sf_dir) -> DataFrame:
     CC/canonicalization the batch path runs over the increment."""
     from yargy_spark.operators.extract import extract_mentions
     from yargy_spark.operators.linking import (
-        KEY_SCHEMA, link_entities_incremental)
+        empty_keys, link_entities_incremental)
     from yargy_spark.sources.transcripts import golden_only_transcripts
     t = golden_only_transcripts(spark)
     parity = (F.substring('conv_id', 2, 6).cast('int') % 2)
     prior_m = extract_mentions(t.where(parity == 0))
     # the prior corpus's key state, as run_resumable commits it
     _links, _merges, keys = link_entities_incremental(
-        prior_m, spark.createDataFrame([], KEY_SCHEMA))
+        prior_m, empty_keys(spark))
     new_m = extract_mentions(t.where(parity == 1))
     links, _merges, _ = link_entities_incremental(new_m, keys)
     prior_ids = (keys.select('entity_id').distinct()

@@ -19,7 +19,7 @@ def halves(spark):
     """Golden corpus split by conversation parity: batch-link the even
     half (the 'prior' corpus), treat the odd half as the increment."""
     from yargy_spark.operators.extract import extract_mentions
-    from yargy_spark.operators.linking import (KEY_SCHEMA,
+    from yargy_spark.operators.linking import (empty_keys,
                                                link_entities_incremental)
     from yargy_spark.sources.transcripts import golden_only_transcripts
     t = golden_only_transcripts(spark)
@@ -29,7 +29,7 @@ def halves(spark):
     # the batch link of the prior half and its key state, as
     # run_resumable derives them: the increment against an empty state
     prior_links, _, prior_keys = link_entities_incremental(
-        prior_mentions, spark.createDataFrame([], KEY_SCHEMA))
+        prior_mentions, empty_keys(spark))
     prior_links, prior_keys = prior_links.persist(), prior_keys.persist()
     return prior_mentions, prior_links, prior_keys, new_mentions
 
@@ -486,8 +486,10 @@ def test_run_incremental_job_budget(spark, kg_base, tmp_path):
     count actions; 54-55 while the increment linker truncated four
     frames and the key state was re-derived from mentions and links;
     36 since it truncates one per-mention frame and the key state is
-    read off it.  The budget is 36 plus a margin of 1: adding back a
-    truncation or a second computation of the links fails here."""
+    read off it; 37 since the assignment aggregates the mentions per
+    key and joins them back before that truncation.  The budget stays
+    36 plus a margin of 1: adding back a truncation or a second
+    computation of the links fails here."""
     from yargy_spark.pipeline import run_incremental
     from yargy_spark.sources.transcripts import synth_transcripts
     JOB_BUDGET = 36 + 1
@@ -512,12 +514,12 @@ def test_run_resumable_job_budget(spark, tmp_path):
     in its own job group, issues at most JOB_BUDGET Spark jobs.
     Measured on this input (local[4], 8 shuffle partitions): 38 jobs
     while the links were persisted and the key state was re-derived
-    from mentions and links; 35 since both are read off
-    the linker's one truncated per-mention frame.  The budget is that
-    plus a margin of 1."""
+    from mentions and links; 34 since both are read off the linker's
+    one truncated per-mention frame and the empty prior key state
+    folds away at plan time.  The budget is that plus a margin of 1."""
     from yargy_spark.pipeline import run_resumable
     from yargy_spark.sources.transcripts import synth_transcripts
-    JOB_BUDGET = 35 + 1
+    JOB_BUDGET = 34 + 1
     base = synth_transcripts(spark, n_turns=96, partitions=4)
     sc = spark.sparkContext
     group = 'run_resumable-job-budget'

@@ -517,13 +517,13 @@ def _minhash_rep_pairs(rows: DataFrame,
 def minhash_state(docs: DataFrame, k: int = 3) -> DataFrame:
     """Committed near-dup STATE: one row per exact-dedup
     representative — ``(doc_id, sig array<long>[K], shs array<long>,
-    sz)``.  The mirror of the KG linker's ``entity_key_table``
-    (linking.py): a compact, distinct-key-bounded table a resumable
-    job commits after each batch so the next increment never rescans
-    prior text.  Size is ~8 B per distinct shingle + 128 B signature
-    per representative (the shingle arrays buy EXACT cross-increment
-    Jaccard verification; drop ``shs`` for a signature-only state if
-    banding-resolution decisions suffice)."""
+    sz)``.  The mirror of the KG linker's entity-key state
+    (linking.py ``KEY_SCHEMA``): a compact, distinct-key-bounded table
+    a resumable job commits after each batch so the next increment
+    never rescans prior text.  Size is ~8 B per distinct shingle +
+    128 B signature per representative (the shingle arrays buy EXACT
+    cross-increment Jaccard verification; drop ``shs`` for a
+    signature-only state if banding-resolution decisions suffice)."""
     reps, _groups = _exact_groups(docs)
     return _state_rows(reps, k)
 

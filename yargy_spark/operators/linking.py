@@ -209,18 +209,18 @@ def connected_components(edges: DataFrame, max_iter: int = 20
 KEY_SCHEMA = 'norm_key string, entity_id string, canonical string'
 
 
+def empty_keys(spark) -> DataFrame:
+    """The empty entity-key state.  The false filter makes it an empty
+    relation at plan time, so the optimizer folds a join against it
+    away and nothing scans the Python-side rows of ``createDataFrame``
+    (a scan that would start Python workers)."""
+    return spark.createDataFrame([], KEY_SCHEMA).where(F.lit(False))
+
+
 def _num(col):
     """The numeric part of an ``ent_<n>`` entity id: ids order by it,
     not by their strings ('ent_9...' < 'ent_10...')."""
     return F.regexp_extract(col, '^ent_([0-9]+)$', 1).cast('long')
-
-
-def _canonical_order() -> Window:
-    """A component's keys, ranked for its canonical form: over
-    per-(component, norm_key) mention counts ``n``, the most frequent
-    key first, ties broken lexicographically (deterministic)."""
-    return Window.partitionBy('component').orderBy(F.desc('n'),
-                                                   F.asc('norm_key'))
 
 
 def _linked_mentions(mentions: DataFrame, prior_keys: DataFrame
@@ -243,8 +243,12 @@ def _linked_mentions(mentions: DataFrame, prior_keys: DataFrame
     prior = prior_keys.select('norm_key',
                               F.col('entity_id').alias('prior_id'),
                               F.col('canonical').alias('prior_canonical'))
-    whole = _canonical_order().rowsBetween(Window.unboundedPreceding,
-                                           Window.unboundedFollowing)
+    # a component's keys ranked for its canonical form: the most
+    # frequent first, ties broken lexicographically (deterministic)
+    whole = (Window.partitionBy('component')
+             .orderBy(F.desc('n'), F.asc('norm_key'))
+             .rowsBetween(Window.unboundedPreceding,
+                          Window.unboundedFollowing))
     adopt = F.min(F.when(F.col('prior_id').isNotNull(),
                          F.struct(_num('prior_id').alias('num'),
                                   'prior_id', 'prior_canonical'))
@@ -271,8 +275,7 @@ def link_entities(mentions: DataFrame) -> DataFrame:
     """Person-like mentions -> (mention_id, entity_id, canonical)
     with one deterministic canonical name per connected component:
     the entity assignment against an empty key state."""
-    empty = mentions.sparkSession.createDataFrame([], KEY_SCHEMA)
-    return (_linked_mentions(mentions, empty)
+    return (_linked_mentions(mentions, empty_keys(mentions.sparkSession))
             .select('mention_id', 'entity_id', 'canonical'))
 
 
@@ -291,7 +294,7 @@ def link_entities_incremental(new_mentions: DataFrame,
     Component adoption: connected components over increment-local
     star edges only (never the historical mention graph), then the
     per-key assignment ``link_entities`` runs, against ``prior_keys``
-    (``KEY_SCHEMA`` — distinct-key-bounded; AQE broadcasts it when it
+    (``KEY_SCHEMA``, distinct-key-bounded; AQE broadcasts it when it
     fits) instead of an empty state:
 
     * a key in the prior state (the direct tier) keeps THAT entity

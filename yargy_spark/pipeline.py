@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.extract import MENTION_SCHEMA, extract_mentions
-from .operators.linking import (KEY_SCHEMA, apply_entity_merges,
+from .operators.linking import (apply_entity_merges, empty_keys,
                                 link_entities,
                                 link_entities_incremental)
 from .operators.triples import materialize_triples
@@ -161,8 +161,8 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame,
     all_mentions = _read_or_empty(spark, m_root, MENTION_SCHEMA)
     # the whole corpus linked against an empty key state: its new
     # keys are the key state, read off the links' one truncation
-    links, _, keys = link_entities_incremental(
-        all_mentions, spark.createDataFrame([], KEY_SCHEMA))
+    links, _, keys = link_entities_incremental(all_mentions,
+                                               empty_keys(spark))
     triples, observed = _counted_triples(all_mentions, links)
     counters.update(observed)
     return mf.commit_chain([
