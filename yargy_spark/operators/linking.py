@@ -245,10 +245,8 @@ def _linked_mentions(mentions: DataFrame, prior_keys: DataFrame
                               F.col('canonical').alias('prior_canonical'))
     # a component's keys ranked for its canonical form: the most
     # frequent first, ties broken lexicographically (deterministic)
-    whole = (Window.partitionBy('component')
-             .orderBy(F.desc('n'), F.asc('norm_key'))
-             .rowsBetween(Window.unboundedPreceding,
-                          Window.unboundedFollowing))
+    ranked = (Window.partitionBy('component')
+              .orderBy(F.desc('n'), F.asc('norm_key')))
     adopt = F.min(F.when(F.col('prior_id').isNotNull(),
                          F.struct(_num('prior_id').alias('num'),
                                   'prior_id', 'prior_canonical'))
@@ -263,7 +261,7 @@ def _linked_mentions(mentions: DataFrame, prior_keys: DataFrame
                                F.format_string('ent_%d', 'component'))
                     .alias('entity_id'),
                     F.coalesce('prior_canonical', adopt.prior_canonical,
-                               F.first('norm_key').over(whole))
+                               F.first('norm_key').over(ranked))
                     .alias('canonical')))
     # the one truncation: links, the key state and the merge
     # candidates are consumed by separate writes, and each derives
