@@ -9,8 +9,8 @@ near-dup edges from the sf0.001 documents table, as one triples frame.
     corpus; oracles are VALUES literals transcribed from the
     reference's committed test assertions (the only executable oracle
     for yargy semantics in this sandbox — see FIXTURES.md).
-  * dedup/similarity/textstats — training-data ops over the
-    provided documents/embeddings tables; oracles replay the exact
+  * dedup/textstats — training-data ops over the provided
+    documents table; oracles replay the exact
     same algorithm in DuckDB SQL (portable md5-based hashing,
     integer-scaled ratios).
   * relational corpus ops (agg/join/window) over the TPC-H-ish tables.
@@ -33,10 +33,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def _docs(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, 'documents.parquet'))
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(os.path.join(sf_dir, 'embeddings.parquet'))
 
 
 def _golden_mentions(spark):
@@ -560,43 +556,6 @@ def q_simhash_dup_pairs(spark, sf_dir) -> DataFrame:
     return simhash_dup_pairs(_docs(spark, sf_dir), max_hamming=2)
 
 
-def q_embedding_dup_pairs(spark, sf_dir) -> DataFrame:
-    """IVF-blocked default (no cross join in the plan).
-    n_centroids pinned to 16 so the DuckDB oracle replays the exact
-    same codebook; the operator default is corpus-adaptive."""
-    from yargy_spark.operators.dedup import embedding_dup_pairs
-    return embedding_dup_pairs(_emb(spark, sf_dir),
-                               threshold_x10000=4000, n_centroids=16)
-
-
-def q_embedding_dup_exact(spark, sf_dir) -> DataFrame:
-    """Quadratic all-pairs baseline kept as the recall oracle."""
-    from yargy_spark.operators.dedup import embedding_dup_pairs_exact
-    return embedding_dup_pairs_exact(_emb(spark, sf_dir),
-                                     threshold_x10000=4000)
-
-
-def q_ann_cosine_topk(spark, sf_dir) -> DataFrame:
-    from yargy_spark.operators.similarity import cosine_topk
-    return cosine_topk(_emb(spark, sf_dir))
-
-
-def q_ann_ivf_topk(spark, sf_dir) -> DataFrame:
-    from yargy_spark.operators.similarity import ivf_topk
-    return ivf_topk(_emb(spark, sf_dir))
-
-
-def q_ann_query_topk(spark, sf_dir) -> DataFrame:
-    """Cross-table retrieval: the first 10 odd vec_ids as the query
-    batch against the even half as the corpus — queries broadcast,
-    corpus never shuffles (similarity.query_topk)."""
-    from yargy_spark.operators.similarity import query_topk
-    emb = _emb(spark, sf_dir)
-    return query_topk(
-        emb.where((F.col('vec_id') % 2 == 1) & (F.col('vec_id') < 20)),
-        emb.where(F.col('vec_id') % 2 == 0))
-
-
 def q_kg_extract_report(spark, sf_dir) -> DataFrame:
     """CappedParser observability at corpus level (extract_audit):
     the golden corpus plus one pathological 'a 'x40 turn (the
@@ -642,50 +601,6 @@ def q_kg_extract_report(spark, sf_dir) -> DataFrame:
         "'budget_aborts', budget_aborts, "
         "'mentions', mentions, "
         "'kernel_errors', kernel_errors) AS (metric, value)")
-
-
-def q_ann_query_ivf_topk(spark, sf_dir) -> DataFrame:
-    """Probe-filtered cross-table retrieval — the 10^9-vector scale
-    path for q_ann_query_topk: the corpus (even half) is k-means
-    assigned once, the query batch (first 10 odd vec_ids) probes its
-    4 nearest cells, and the corpus stream carries a literal
-    probe-cell IN-filter BEFORE the broadcast join (plan-guarded in
-    test_scale_guards).  n_centroids pinned to 16 so the DuckDB
-    oracle replays the exact codebook."""
-    from yargy_spark.operators.similarity import query_topk
-    emb = _emb(spark, sf_dir)
-    return query_topk(
-        emb.where((F.col('vec_id') % 2 == 1) & (F.col('vec_id') < 20)),
-        emb.where(F.col('vec_id') % 2 == 0),
-        ivf=(16, 4))
-
-
-def q_ann_query_indexed(spark, sf_dir) -> DataFrame:
-    """Retrieval against a MATERIALIZED IVF index (build once, query
-    many — similarity.write_ivf_index + query_topk_indexed): the
-    cells parquet is hive-partitioned by centroid_id so the query
-    batch's probe-cell filter prunes whole partitions at the scan
-    (PartitionFilters, plan-guarded in test_scale_guards).  Same
-    deterministic codebook and therefore the same rows as the inline
-    ``ivf=(16, 4)`` path, so the oracle is shared with
-    ann_query_ivf_topk.  The index root is a deterministic
-    per-sf_dir temp path; write_ivf_index overwrites, so rebuilds
-    are idempotent."""
-    import hashlib
-    import os
-    import tempfile
-    from yargy_spark.operators.similarity import (query_topk_indexed,
-                                                  write_ivf_index)
-    emb = _emb(spark, sf_dir)
-    tag = hashlib.sha1(
-        os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(),
-                        'yargy_spark_ivf_gate_' + tag)
-    write_ivf_index(emb.where(F.col('vec_id') % 2 == 0), root,
-                    n_centroids=16)
-    return query_topk_indexed(
-        emb.where((F.col('vec_id') % 2 == 1) & (F.col('vec_id') < 20)),
-        root, k=5, n_probe=4)
 
 
 def q_dup_spans(spark, sf_dir) -> DataFrame:
@@ -927,8 +842,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'kg_entity_cooccurrence': q_kg_entity_cooccurrence,
         'kg_entity_degree': q_kg_entity_degree,
         # -- NEW this round (never gated)
-        'ann_query_ivf_topk': q_ann_query_ivf_topk,
-        'ann_query_indexed': q_ann_query_indexed,
         'kg_extract_report': q_kg_extract_report,
         # -- CHANGED this round: the LSH hot-bucket governor rewrites
         # the candidate stage of the whole minhash family (and
@@ -945,8 +858,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'exact_dedup': q_exact_dedup,
         'stream_dedup': q_stream_dedup,
         'stream_mention_rollup': q_stream_mention_rollup,
-        'embedding_dup_exact': q_embedding_dup_exact,
-        'ann_cosine_topk': q_ann_cosine_topk,
         'lang_id': q_lang_id,
         'quality_scores': q_quality_scores,
         'token_counts': q_token_counts,
@@ -957,10 +868,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'filter_corpus': q_filter_corpus,
         # ---- every entry below was driver-gated hash-green in
         # ---- ROUND 4 (CORRECTNESS_r04.json) with unchanged
-        # ---- semantics and oracles; the last six fall past the
-        # ---- driver's 50-query cap.
+        # ---- semantics and oracles.  With 49 entries, none falls
+        # ---- past the driver's 50-query cap.
         'paragraph_dedup': q_paragraph_dedup,
-        'ann_query_topk': q_ann_query_topk,
         'dup_spans': q_dup_spans,
         'rare_tokens': q_rare_tokens,
         'remove_dup_spans': q_remove_dup_spans,
@@ -974,8 +884,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'transcripts_tool_stats': q_transcripts_tool_stats,
         'ngram_jaccard_dups': q_ngram_jaccard_dups,
         'simhash_dup_pairs': q_simhash_dup_pairs,
-        'embedding_dup_pairs': q_embedding_dup_pairs,
-        'ann_ivf_topk': q_ann_ivf_topk,
         'repetition_scores': q_repetition_scores,
         'corpus_vocabulary': q_corpus_vocabulary,
         'top_ngrams': q_top_ngrams,
@@ -1737,45 +1645,6 @@ SELECT doc_id,
 FROM per_bit GROUP BY doc_id
 """.format(h=_H60.format(x='w'), norm=_NORM)
 
-    # Deterministic k-means replay (similarity._centroids): hash-
-    # sampled seeds + one Lloyd round over integer-quantized
-    # components — centroid coordinates are exact int-sums divided as
-    # doubles, so both engines compute bit-identical values.  ``src``
-    # is the table/CTE the codebook is built over (the full
-    # embeddings table for the self-join oracles; the corpus half for
-    # the cross-table retrieval oracle, matching
-    # _centroids_rows(corpus, ...)).
-    _kmeans_sql = """
-seeds AS (
-  SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS centroid_id,
-         embedding AS centv
-  FROM (SELECT vec_id, embedding,
-               ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-                 ::int64 AS h
-        FROM {src})
-  ORDER BY h, vec_id LIMIT 16),
-assign0 AS (
-  SELECT vec_id, embedding, centroid_id FROM (
-    SELECT e.vec_id, e.embedding, s.centroid_id,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY floor(10000.0 * list_cosine_similarity(
-                 e.embedding, s.centv)) DESC, s.centroid_id ASC) AS r
-    FROM {src} e CROSS JOIN seeds s)
-  WHERE r = 1),
-comp AS (
-  SELECT centroid_id, i AS pos,
-         CAST(floor(embedding[i] * 10000.0) AS BIGINT) AS q
-  FROM assign0,
-       unnest(generate_series(1, len(embedding))) AS t(i)),
-cent AS (
-  SELECT centroid_id, list(val ORDER BY pos) AS centv
-  FROM (SELECT centroid_id, pos,
-               CAST(sum(q) AS DOUBLE) / count(*) / 10000.0 AS val
-        FROM comp GROUP BY centroid_id, pos)
-  GROUP BY centroid_id)"""
-    kmeans_ctes = _kmeans_sql.format(src='embeddings')
-
     oracles['simhash_dup_pairs'] = """
 WITH {df},
   norm AS (SELECT doc_id, string_split({n}, ' ') AS w FROM repdocs),
@@ -1807,74 +1676,6 @@ WITH {df},
   {exp}
 """.format(df=_DEDUP_FIRST, n=_NORM, h=_H60.format(x='w'),
            exp=_expand_groups_sql('hamming', 0, 1))
-
-    oracles['embedding_dup_exact'] = """
-SELECT a.vec_id AS a, b.vec_id AS b,
-       CAST(floor(10000.0 * list_cosine_similarity(
-           a.embedding, b.embedding)) AS BIGINT) AS cos_x10000
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE floor(10000.0 * list_cosine_similarity(a.embedding, b.embedding))
-      >= 4000
-"""
-
-    oracles['embedding_dup_pairs'] = """
-WITH {km},
-assign4 AS (
-  SELECT vec_id, embedding, centroid_id FROM (
-    SELECT e.vec_id, e.embedding, c.centroid_id,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY floor(10000.0 * list_cosine_similarity(
-                 e.embedding, c.centv)) DESC, c.centroid_id ASC) AS r
-    FROM embeddings e CROSS JOIN cent c)
-  WHERE r <= 4),
-pairs AS (
-  SELECT DISTINCT x.vec_id AS a, y.vec_id AS b,
-         x.embedding AS va, y.embedding AS vb
-  FROM assign4 x JOIN assign4 y USING (centroid_id)
-  WHERE x.vec_id < y.vec_id)
-SELECT a, b,
-       CAST(floor(10000.0 * list_cosine_similarity(va, vb))
-            AS BIGINT) AS cos_x10000
-FROM pairs
-WHERE floor(10000.0 * list_cosine_similarity(va, vb)) >= 4000
-""".format(km=kmeans_ctes)
-
-    oracles['ann_cosine_topk'] = """
-WITH scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(floor(10000.0 * list_cosine_similarity(
-             q.embedding, c.embedding)) AS BIGINT) AS cos_x10000
-  FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < 10),
-ranked AS (
-  SELECT *, row_number() OVER (
-      PARTITION BY query_id
-      ORDER BY cos_x10000 DESC, neighbor_id ASC) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id,
-       CAST(rank AS INT) AS rank,  -- Spark row_number() is INT
-       cos_x10000
-FROM ranked WHERE rank <= 5
-"""
-
-    oracles['ann_query_topk'] = """
-WITH scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(floor(10000.0 * list_cosine_similarity(
-             q.embedding, c.embedding)) AS BIGINT) AS cos_x10000
-  FROM embeddings q JOIN embeddings c ON c.vec_id % 2 = 0
-  WHERE q.vec_id % 2 = 1 AND q.vec_id < 20),
-ranked AS (
-  SELECT *, row_number() OVER (
-      PARTITION BY query_id
-      ORDER BY cos_x10000 DESC, neighbor_id ASC) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id,
-       CAST(rank AS INT) AS rank,  -- Spark row_number() is INT
-       cos_x10000
-FROM ranked WHERE rank <= 5
-"""
 
     # span-level duplication: positional 8-gram occurrences (NOT
     # per-doc distinct), counted corpus-wide on the exact gram string
@@ -2004,94 +1805,6 @@ SELECT d.doc_id, coalesce(pd.clean_text, '') AS clean_text,
        coalesce(pd.n_dropped, 0) AS n_dropped
 FROM documents d LEFT JOIN pd USING (doc_id)
 """
-
-    oracles['ann_ivf_topk'] = """
-WITH {km},
-assigned AS (
-  SELECT vec_id, embedding, centroid_id FROM (
-    SELECT e.vec_id, e.embedding, c.centroid_id,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY floor(10000.0 * list_cosine_similarity(
-                 e.embedding, c.centv)) DESC, c.centroid_id ASC) AS r
-    FROM embeddings e CROSS JOIN cent c)
-  WHERE r = 1),
-probes AS (
-  SELECT query_id, qv, centroid_id FROM (
-    SELECT q.vec_id AS query_id, q.embedding AS qv, c.centroid_id,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY floor(10000.0 * list_cosine_similarity(
-                 q.embedding, c.centv)) DESC, c.centroid_id ASC) AS r
-    FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < 10)
-  WHERE r <= 4),
-cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         CAST(floor(10000.0 * list_cosine_similarity(
-             p.qv, a.embedding)) AS BIGINT) AS cos_x10000
-  FROM probes p JOIN assigned a USING (centroid_id)
-  WHERE p.query_id != a.vec_id),
-ranked AS (
-  SELECT *, row_number() OVER (
-      PARTITION BY query_id
-      ORDER BY cos_x10000 DESC, neighbor_id ASC) AS rank
-  FROM cand)
-SELECT query_id, neighbor_id,
-       CAST(rank AS INT) AS rank,  -- Spark row_number() is INT
-       cos_x10000
-FROM ranked WHERE rank <= 5
-""".format(km=kmeans_ctes)
-
-    # cross-table IVF retrieval: the codebook is built over the
-    # CORPUS half only (query_topk's _centroids_rows(corpus, ...));
-    # candidate pairs are (query probe cell) x (corpus cell) joins —
-    # the oracle has no separate IN-filter because the USING join is
-    # semantically identical (the Spark-side literal filter is a plan
-    # optimization, asserted in test_scale_guards, not a semantics
-    # change)
-    oracles['ann_query_ivf_topk'] = """
-WITH corpus AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0),
-{km},
-assigned AS (
-  SELECT vec_id, embedding, centroid_id FROM (
-    SELECT e.vec_id, e.embedding, c.centroid_id,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY floor(10000.0 * list_cosine_similarity(
-                 e.embedding, c.centv)) DESC, c.centroid_id ASC) AS r
-    FROM corpus e CROSS JOIN cent c)
-  WHERE r = 1),
-probes AS (
-  SELECT query_id, qv, centroid_id FROM (
-    SELECT q.vec_id AS query_id, q.embedding AS qv, c.centroid_id,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY floor(10000.0 * list_cosine_similarity(
-                 q.embedding, c.centv)) DESC, c.centroid_id ASC) AS r
-    FROM embeddings q CROSS JOIN cent c
-    WHERE q.vec_id % 2 = 1 AND q.vec_id < 20)
-  WHERE r <= 4),
-cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         CAST(floor(10000.0 * list_cosine_similarity(
-             p.qv, a.embedding)) AS BIGINT) AS cos_x10000
-  FROM probes p JOIN assigned a USING (centroid_id)),
-ranked AS (
-  SELECT *, row_number() OVER (
-      PARTITION BY query_id
-      ORDER BY cos_x10000 DESC, neighbor_id ASC) AS rank
-  FROM cand)
-SELECT query_id, neighbor_id,
-       CAST(rank AS INT) AS rank,  -- Spark row_number() is INT
-       cos_x10000
-FROM ranked WHERE rank <= 5
-""".format(km=_kmeans_sql.format(src='corpus'))
-
-    # materialized-index retrieval is row-identical to the inline
-    # probe-filtered path by construction (same deterministic
-    # codebook; asserted in test_scale_guards) — shared oracle
-    oracles['ann_query_indexed'] = oracles['ann_query_ivf_topk']
 
     oracles['lang_id'] = """
 SELECT doc_id,

@@ -1,6 +1,5 @@
 """Training-data operator tests over the provided sf0.001 tables:
-dedup (exact / jaccard / minhash / simhash / embedding), similarity
-(brute + IVF), text stats.
+dedup (exact / jaccard / minhash / simhash), text stats.
 
 Cross-engine value equality vs DuckDB oracles is exercised separately
 by tools/verify_entry.py (and the round driver); these tests pin
@@ -17,11 +16,6 @@ SF_DIR = '/root/testdata/sf0.001'
 @pytest.fixture(scope='module')
 def docs(spark):
     return spark.read.parquet(SF_DIR + '/documents.parquet').persist()
-
-
-@pytest.fixture(scope='module')
-def emb(spark):
-    return spark.read.parquet(SF_DIR + '/embeddings.parquet').persist()
 
 
 def test_exact_dedup_partitions_corpus(spark, docs):
@@ -120,27 +114,6 @@ def test_paragraph_dedup_semantics(spark):
     assert len(got) == 4
 
 
-def test_query_topk_matches_self_join(spark, emb):
-    """query_topk(firstN, corpus) must equal cosine_topk restricted
-    to the same query set when corpus = embeddings minus self (the
-    retrieval shape degenerates to the self-join shape)."""
-    from yargy_spark.operators.similarity import cosine_topk, query_topk
-    self_join = {(r['query_id'], r['rank'], r['neighbor_id'])
-                 for r in cosine_topk(emb, k=5).collect()}
-    per_query = {}
-    for r in cosine_topk(emb, k=5).collect():
-        per_query.setdefault(r['query_id'], set()).add(r['neighbor_id'])
-    queries = emb.where('vec_id < 10')
-    corpus = emb.where('vec_id >= 10')  # disjoint: no self rows
-    cross = query_topk(queries, corpus, k=5).collect()
-    assert {r['query_id'] for r in cross} == set(per_query)
-    # every cross neighbor is valid: from the corpus side, ranked 1..5
-    for r in cross:
-        assert r['neighbor_id'] >= 10 and 1 <= r['rank'] <= 5
-    assert len(cross) == 5 * len(per_query)
-    assert self_join  # the self-join set itself is non-trivial
-
-
 def test_dup_spans_and_rare_tokens(spark):
     """dup_span_scores: positional 8-gram occurrences count — a doc
     repeating its own 8-gram flags without any other doc; short docs
@@ -227,23 +200,6 @@ def test_simhash_stability(spark, docs):
     b = {(r['doc_id'], r['simhash'])
          for r in simhash_docs(docs).collect()}
     assert a == b and len(a) == docs.count()
-
-
-def test_ann_ivf_agrees_with_brute_force_mostly(spark, emb):
-    """Recall scales with the probe fraction.  The synthetic
-    embeddings are near-uniform (little cluster structure — the
-    worst case for IVF), so recall tracks ~the fraction of corpus
-    probed plus the k-means gain; on real clustered embedding
-    distributions the same settings recall far more."""
-    from yargy_spark.operators.similarity import cosine_topk, ivf_topk
-    brute = {(r['query_id'], r['neighbor_id'])
-             for r in cosine_topk(emb, k=5).collect()}
-    ivf4 = {(r['query_id'], r['neighbor_id'])
-            for r in ivf_topk(emb, k=5, n_probe=4).collect()}
-    assert len(brute & ivf4) >= len(brute) // 2
-    ivf10 = {(r['query_id'], r['neighbor_id'])
-             for r in ivf_topk(emb, k=5, n_probe=10).collect()}
-    assert len(brute & ivf10) >= 0.9 * len(brute)
 
 
 def test_boilerplate_cluster_candidates_linear(spark, monkeypatch):
@@ -432,45 +388,6 @@ def test_clean_corpus_composition(spark, tmp_path):
     assert got == oracle
 
 
-def test_embedding_dup_blocked_vs_exact(spark, emb):
-    """The IVF-blocked default must be a high-recall subset of the
-    exact all-pairs baseline, with identical cosines on shared pairs,
-    and its plan must not contain a cartesian product."""
-    from yargy_spark.operators.dedup import (embedding_dup_pairs,
-                                             embedding_dup_pairs_exact)
-    # nc pinned: at threshold 0.40 (far below near-dup) recall needs
-    # coarse clusters; the adaptive default targets real thresholds
-    blocked_df = embedding_dup_pairs(emb, threshold_x10000=4000,
-                                     n_centroids=16)
-    plan = blocked_df._jdf.queryExecution().executedPlan().toString()
-    assert 'CartesianProduct' not in plan
-
-    blocked = {(r['a'], r['b']): r['cos_x10000']
-               for r in blocked_df.collect()}
-    exact = {(r['a'], r['b']): r['cos_x10000']
-             for r in embedding_dup_pairs_exact(
-                 emb, threshold_x10000=4000).collect()}
-    assert set(blocked) <= set(exact)
-    assert all(exact[p] == c for p, c in blocked.items())
-    assert len(blocked) >= 0.9 * len(exact)
-
-    # the scale path (persist the skinny assignment so the self-join
-    # does not re-run the N x K assignment pass twice) must be
-    # row-identical to the default
-    persisted_df = embedding_dup_pairs(emb, threshold_x10000=4000,
-                                       n_centroids=16,
-                                       persist_assignment=True)
-    persisted = {(r['a'], r['b']): r['cos_x10000']
-                 for r in persisted_df.collect()}
-    assert persisted == blocked
-    # the persisted skinny frame is reachable via the documented
-    # lifecycle handle, is actually cached, and can be released
-    handle = persisted_df.ivf_assignment
-    assert handle.storageLevel.useMemory
-    handle.unpersist()
-    assert not handle.storageLevel.useMemory
-
-
 def test_simhash_banding_full_recall(spark, docs):
     """Pigeonhole guarantee: with 4 bands, every pair within Hamming
     distance 2 shares at least one band — the banded join must equal
@@ -503,44 +420,6 @@ def test_simhash_pairs_expand_exact_copies(spark):
            for r in simhash_dup_pairs(docs).collect()}
     assert got.get((1, 2)) == 0
     assert all(a != 3 and b != 3 for a, b in got)
-
-
-def test_cosine_degenerate_rows_both_backends(spark):
-    """Shared degenerate-input contract: null or length-mismatched
-    embeddings yield NULL (thresholds drop them — never 0, which
-    would outrank negative cosines), zero-norm yields 0, and rows of
-    DIFFERENT-but-consistent dims coexist in one batch — on BOTH the
-    JVM expression and the numpy pandas-UDF backend, so swapping
-    backends can never change results."""
-    from pyspark.sql import functions as F
-    from yargy_spark.operators.similarity import (cosine_x10000,
-                                                  cosine_x10000_np)
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0], [1.0, 0.0]),
-         (2, None, [1.0, 0.0]),
-         (3, [1.0, 0.0, 0.0], [1.0, 0.0]),     # ragged pair
-         (4, [0.0, 0.0], [1.0, 0.0]),          # zero norm
-         (5, [0.0, 1.0, 0.0], [0.0, 1.0, 0.0])],  # other dim, valid
-        'i long, a array<float>, b array<float>').coalesce(1)
-    for backend in (cosine_x10000, cosine_x10000_np):
-        rows = {r['i']: r['c'] for r in df.select(
-            'i', backend(F.col('a'), F.col('b')).alias('c'))
-            .collect()}
-        assert rows[1] == 10000, backend
-        assert rows[2] is None and rows[3] is None, backend
-        assert rows[4] == 0, backend
-        assert rows[5] == 10000, backend
-
-
-def test_kmeans_centroids_deterministic(spark, emb):
-    """Two evaluations of the k-means subplan produce identical
-    coordinates (integer-quantized sums: no float-order drift)."""
-    from yargy_spark.operators.similarity import _centroids
-    a = {r['centroid_id']: r['centv']
-         for r in _centroids(emb, 16).collect()}
-    b = {r['centroid_id']: r['centv']
-         for r in _centroids(emb.repartition(7), 16).collect()}
-    assert a == b and len(a) == 16
 
 
 def test_quality_and_tokens(spark, docs):
@@ -896,31 +775,6 @@ def test_pii_scrub_randomized_reference(spark):
         assert got[i] == ref(text), (i, repr(text), got[i], ref(text))
     assert any(got[i][0] > 0 for i, _ in docs)    # fixtures fired
     assert any(got[i][1] > 0 for i, _ in docs)
-
-
-def test_context_windows_randomized_reference(spark):
-    """Random conversation shapes vs a pure-Python sliding window."""
-    import random
-    from yargy_spark.operators.packing import context_windows
-    rng = random.Random(20260819)
-    rows = []
-    for c in range(40):
-        for t in range(rng.randint(1, 12)):
-            rows.append(('c%02d' % c, t, 'user',
-                         '%s%d' % (rng.choice('ab'), t)))
-    df = spark.createDataFrame(
-        rows, 'conv_id string, turn_idx int, role string, text string')
-    got = {(r['conv_id'], r['turn_idx']): (r['n_ctx_turns'],
-                                           r['context'])
-           for r in context_windows(df, k=3).collect()}
-    by_conv = {}
-    for cid, t, _, text in rows:
-        by_conv.setdefault(cid, []).append((t, text))
-    for cid, turns in by_conv.items():
-        turns.sort()
-        for j, (t, _) in enumerate(turns):
-            prev = [x for _, x in turns[max(0, j - 3):j]]
-            assert got[(cid, t)] == (len(prev), '\n'.join(prev))
 
 
 def test_corpus_vocabulary_feeds_filtered_dictionary(spark):

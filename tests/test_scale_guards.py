@@ -270,7 +270,7 @@ def test_round4_plan_shapes(spark):
     SCALE.md/PLANS.md §12-13, asserted so refactors can't silently
     regress them): map-only banding after the one state agg; no
     CartesianProduct anywhere in the dedup increment; paragraph dedup
-    has no window; query_topk's corpus side joins via broadcast."""
+    has no window."""
     import re
 
     def plan(df):
@@ -290,7 +290,6 @@ def test_round4_plan_shapes(spark):
                                              dedup_increment,
                                              minhash_state,
                                              paragraph_dedup)
-    from yargy_spark.operators.similarity import query_topk
 
     reps, _ = _exact_groups(docs)
     p = plan(_sig_bands(_state_rows(reps)))
@@ -305,138 +304,3 @@ def test_round4_plan_shapes(spark):
 
     p = plan(paragraph_dedup(docs))
     assert 'Window' not in p and 'CartesianProduct' not in p
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 7), float(i % 5), 1.0]) for i in range(40)],
-        'vec_id long, embedding array<double>')
-    p = plan(query_topk(emb.where('vec_id < 4'),
-                        emb.where('vec_id >= 4')))
-    assert 'BroadcastNestedLoopJoin' in p
-    assert 'WindowGroupLimit' in p
-    # the corpus side reaches the join straight from the scan: every
-    # hash repartition in the plan serves the per-query top-k window
-    # (keys on query_id) — a corpus-side Exchange would key on
-    # something else and fail here
-    hps = re.findall(r'Exchange hashpartitioning\(([^,)]+)', p)
-    assert hps and all('query_id' in h for h in hps)
-
-
-def test_query_topk_ivf_plan_and_recall(spark):
-    """query_topk(ivf=...) — the 10^9-vector retrieval path: the
-    corpus stream must carry the literal probe-cell IN-filter BEFORE
-    the broadcast probe join (so a centroid-partitioned materialized
-    corpus prunes at the scan), the join must be a broadcast HASH
-    join on centroid_id (never a NestedLoop over the full corpus),
-    and the only hash repartition is the per-query top-k window.
-    Semantics: probing ALL cells must reproduce the exact path
-    row-for-row; probing few cells keeps rank-1 recall high (every
-    query's probe includes its own best cell unless quantization
-    splits them — bound asserted, value printed as the recall row)."""
-    import re
-
-    from yargy_spark.operators.similarity import query_topk
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 7) % 13), float((i * 3) % 11),
-              float(i % 5) + 1.0]) for i in range(60)],
-        'vec_id long, embedding array<double>')
-    queries = emb.where('vec_id < 4')
-    corpus = emb.where('vec_id >= 4')
-
-    ivf = query_topk(queries, corpus, ivf=(8, 2))
-    p = plan(ivf)
-    assert 'BroadcastNestedLoopJoin' not in p
-    assert 'BroadcastHashJoin' in p and 'centroid_id' in p
-    # the literal probe-cell filter sits on the corpus stream
-    assert re.search(r'centroid_id#\d+ IN\b|centroid_id#\d+ INSET',
-                     p), p
-    hps = re.findall(r'Exchange hashpartitioning\(([^,)]+)', p)
-    assert hps and all('query_id' in h for h in hps)
-
-    # probe ALL cells -> exactly the exact path's output
-    exact = {(r['query_id'], r['rank'], r['neighbor_id'],
-              r['cos_x10000'])
-             for r in query_topk(queries, corpus).collect()}
-    full = {(r['query_id'], r['rank'], r['neighbor_id'],
-             r['cos_x10000'])
-            for r in query_topk(queries, corpus, ivf=(8, 8)).collect()}
-    assert full == exact
-
-    # the recall row: narrow probes vs exact top-5 neighbor sets
-    got = {}
-    for r in ivf.collect():
-        got.setdefault(r['query_id'], set()).add(r['neighbor_id'])
-    want = {}
-    for q, _rk, n, _c in exact:
-        want.setdefault(q, set()).add(n)
-    recall = (sum(len(got.get(q, set()) & ns) for q, ns in want.items())
-              / sum(len(ns) for ns in want.values()))
-    print('ann_query_ivf recall@5 (n_probe=2/8): %.3f' % recall)
-    assert recall >= 0.4
-
-
-def test_query_topk_materialized_index(spark, tmp_path):
-    """write_ivf_index + query_topk_indexed — the build-once
-    query-many production shape: identical rows to the inline
-    query_topk(ivf=...) path (same deterministic codebook), and the
-    cells scan PARTITION-PRUNES on the probe cells (the IN-filter
-    lands in PartitionFilters, not post-scan)."""
-    from yargy_spark.operators.similarity import (query_topk,
-                                                  query_topk_indexed,
-                                                  write_ivf_index)
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 7) % 13), float((i * 3) % 11),
-              float(i % 5) + 1.0]) for i in range(60)],
-        'vec_id long, embedding array<double>')
-    queries = emb.where('vec_id < 4')
-    corpus = emb.where('vec_id >= 4')
-
-    root = str(tmp_path / 'ivf')
-    write_ivf_index(corpus, root, n_centroids=8)
-
-    out = query_topk_indexed(queries, root, k=5, n_probe=2)
-    p = out._jdf.queryExecution().executedPlan().toString()
-    import re
-    m = re.search(r'PartitionFilters: \[([^\]]*)\]', p)
-    assert m and 'centroid_id' in m.group(1), p
-
-    got = {tuple(r) for r in out.collect()}
-    want = {tuple(r) for r in
-            query_topk(queries, corpus, ivf=(8, 2)).collect()}
-    assert got == want
-
-    # a half-written index (no codebook marker) refuses
-    import shutil
-    shutil.rmtree(root + '/codebook.json')
-    with pytest.raises(Exception):
-        query_topk_indexed(queries, root).collect()
-
-    # rebuild over the damaged root recovers (overwrite idempotence)
-    write_ivf_index(corpus, root, n_centroids=8)
-    assert {tuple(r) for r in
-            query_topk_indexed(queries, root, k=5, n_probe=2)
-            .collect()} == want
-
-    # rebuild UN-commits first: a crash mid-rebuild must leave NO
-    # stale marker behind (old codebook + new cells would silently
-    # mismatch if the corpus changed between builds)
-    import os
-    import yargy_spark.operators.similarity as sim
-
-    def _boom(*a, **k):
-        raise RuntimeError('simulated mid-rebuild crash')
-
-    orig = sim._centroids_rows
-    sim._centroids_rows = _boom
-    try:
-        with pytest.raises(RuntimeError, match='mid-rebuild'):
-            write_ivf_index(corpus, root, n_centroids=8)
-    finally:
-        sim._centroids_rows = orig
-    assert not os.path.exists(root + '/codebook.json')
-    with pytest.raises(Exception):
-        query_topk_indexed(queries, root).collect()

@@ -11,7 +11,7 @@ Two layers:
   layer: mapInPandas extraction over transcript tables, entity
   blocking/linking (salted joins + connected components),
   canonicalization, triple materialization, training-data ops
-  (dedup / similarity / text stats), manifests and resume.
+  (dedup / text stats), manifests and resume.
 
 The top-level names mirror the reference public API
 (/root/reference/yargy/__init__.py) so a reference user can switch

@@ -11,7 +11,6 @@ from ..operators.dedup import (  # noqa: F401
     md5_int,
     _norm_text as norm_text,
 )
-from ..operators.similarity import cosine_x10000  # noqa: F401
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F

@@ -12,14 +12,12 @@ from .tokens import (annotate_lemmas,            # noqa: F401
                      lexicon_table, token_table)
 from .dedup import (clean_corpus, decontaminate,  # noqa: F401
                     dedup_increment, exact_dedup,
-                    embedding_dup_pairs, minhash_lsh_pairs,
-                    minhash_signatures, minhash_state,
+                    minhash_lsh_pairs, minhash_signatures,
+                    minhash_state,
                     dup_span_scores,
                     ngram_jaccard_pairs, paragraph_dedup,
                     remove_dup_spans, row_signatures,
                     simhash_docs, word_shingles)
-from .similarity import (cosine_topk, ivf_topk,  # noqa: F401
-                         query_topk)
 from .textstats import (corpus_vocabulary,       # noqa: F401
                         doc_fingerprints, filter_corpus, lang_id,
                         pii_scrub, quality_scores, re_token_count,

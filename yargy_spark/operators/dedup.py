@@ -1,6 +1,6 @@
 """Deduplication operators over a document corpus.
 
-Five dedup families, all expressed with built-in Spark SQL functions
+Four dedup families, all expressed with built-in Spark SQL functions
 (JVM-side, whole-stage codegen — no Python in the data path):
 
   * exact           — hash-groupBy on normalized text
@@ -8,8 +8,6 @@ Five dedup families, all expressed with built-in Spark SQL functions
   * MinHash + LSH   — shingle -> K minhashes -> banded buckets ->
                       candidate pairs -> exact-Jaccard verify
   * SimHash         — 60-bit sign-aggregated token hash + Hamming pairs
-  * embedding       — cosine near-duplicate pairs (see similarity.py
-                      for the ANN scale path)
 
 Cross-engine determinism: every hash bottoms out in
 ``conv(substr(md5(x),1,15),16,10)`` (60-bit int), reproducible in any
@@ -964,96 +962,3 @@ def simhash_dup_pairs(docs: DataFrame, max_hamming: int = 3,
         return rep_pairs
     return _expand_groups(rep_pairs, groups, reps, 1, 'hamming',
                           self_score=0)
-
-
-def embedding_dup_pairs_exact(embeddings: DataFrame,
-                              threshold_x10000: int = 9500
-                              ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a < b) above threshold —
-    exact all-pairs BASELINE (quadratic cross join; the oracle for
-    the blocked path, never the 100 TB default)."""
-    from .similarity import cosine_x10000_np
-    a = embeddings.select(F.col('vec_id').alias('a'),
-                          F.col('embedding').alias('va'))
-    b = embeddings.select(F.col('vec_id').alias('b'),
-                          F.col('embedding').alias('vb'))
-    return (a.join(b, F.col('a') < F.col('b'))
-            .select('a', 'b',
-                    cosine_x10000_np(F.col('va'), F.col('vb'))
-                    .alias('cos_x10000'))
-            .where(F.col('cos_x10000') >= threshold_x10000))
-
-
-def embedding_dup_pairs(embeddings: DataFrame,
-                        threshold_x10000: int = 9500,
-                        n_centroids: int = None,
-                        n_assign: int = 4,
-                        n_rows: int = None,
-                        persist_assignment: bool = False) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a < b) — IVF-blocked
-    DEFAULT: every vector is assigned to its ``n_assign`` nearest
-    k-means centroids (deterministic — similarity._centroids) and
-    pairs are compared only within shared clusters.  The comparison
-    join is keyed on centroid_id (equi-join, AQE-balanced); expected
-    cost is ~|corpus|^2 * n_assign^2 / n_centroids, so AT SCALE SIZE
-    ``n_centroids`` ~ sqrt(|corpus|) * n_assign (e.g. 16M docs ->
-    ~16k centroids) — the defaults here fit the test corpora.
-    Multi-assign recovers near-boundary pairs (recall 0.97 vs the
-    exact baseline at threshold 0.40 on the synthetic embeddings;
-    1.0 at real near-dup thresholds).  ``embedding_dup_pairs_exact``
-    is the quadratic full-recall baseline.
-
-    Codebook sizing (cheapest available source first — an eager
-    ``count()`` is a full pass over the table before any useful work,
-    a real cost at 100 TB):
-      * ``n_centroids`` explicit — pins the plan (oracle replays, and
-        the recommended form at scale);
-      * ``n_rows`` explicit — the caller already knows the corpus size
-        (manifest / catalog statistics); codebook = sqrt(n_rows) *
-        n_assign, no job triggered;
-      * neither — falls back to ``embeddings.count()`` (convenience
-        for ad-hoc exploration; pass one of the above in pipelines).
-
-    ``persist_assignment``: the candidate self-join consumes the
-    assignment twice (build and probe side), and Spark shares no DAG
-    work without materialization — so by default the map-only
-    assignment UDF runs two passes over the corpus.  At test scale
-    (K<=a few hundred) that is cheaper than caching; at the 100 TB
-    design point the N x K cosine pass dominates, so pass True to
-    persist the SKINNY (vec_id, centroid_id) frame (memory-and-disk).
-    The persisted frame is handed back as an ``ivf_assignment``
-    attribute on the returned DataFrame — call
-    ``result.ivf_assignment.unpersist()`` once the result has been
-    consumed (without the handle the cached blocks would be
-    unreachable and pinned until session end)."""
-    import math
-    from .similarity import cosine_x10000_np, ivf_assign
-    if n_centroids is None:
-        n = n_rows if n_rows is not None else embeddings.count()
-        n_centroids = max(16, int(math.isqrt(max(n, 1))) * n_assign)
-    assigned = ivf_assign(embeddings, n_centroids, n_assign)
-    if persist_assignment:
-        from pyspark import StorageLevel
-        assigned = (assigned.select('vec_id', 'centroid_id')
-                    .persist(StorageLevel.MEMORY_AND_DISK))
-    a = assigned.select(F.col('vec_id').alias('a'), 'centroid_id')
-    b = assigned.select(F.col('vec_id').alias('b'), 'centroid_id')
-    # dedup double-assigned pairs on SKINNY (a, b) ids — a distinct
-    # over full embedding arrays would multiply the exchange volume
-    # by the vector dim; vectors join back once per side after
-    pairs = (a.join(b, 'centroid_id')
-             .where(F.col('a') < F.col('b'))
-             .select('a', 'b').distinct())
-    va = embeddings.select(F.col('vec_id').alias('a'),
-                           F.col('embedding').alias('va'))
-    vb = embeddings.select(F.col('vec_id').alias('b'),
-                           F.col('embedding').alias('vb'))
-    out = (pairs.join(va, 'a').join(vb, 'b')
-           .select('a', 'b',
-                   cosine_x10000_np(F.col('va'), F.col('vb'))
-                   .alias('cos_x10000'))
-           .where(F.col('cos_x10000') >= threshold_x10000))
-    if persist_assignment:
-        # expose the lifecycle handle (see docstring)
-        out.ivf_assignment = assigned
-    return out
