@@ -229,6 +229,22 @@ def test_resumable_pipeline_empty_corpus(spark, tmp_path):
     assert set(done) == {0, 1}
 
 
+def test_read_or_empty_folds_to_empty_relation(spark, tmp_path):
+    """With nothing committed, ``_read_or_empty`` returns an empty
+    relation at plan time: its optimized plan holds no LogicalRDD, so
+    no action scans the Python-side rows of ``createDataFrame`` (a scan
+    that starts Python workers)."""
+    from yargy_spark.operators.extract import MENTION_SCHEMA
+    from yargy_spark.pipeline import _read_or_empty
+    from yargy_spark.sources import manifest as mf
+
+    df = _read_or_empty(spark, str(tmp_path / 'none'), MENTION_SCHEMA)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert 'LogicalRDD' not in plan, plan
+    assert df.columns == MENTION_SCHEMA.fieldNames() + [mf.BUCKET_COL]
+    assert df.count() == 0
+
+
 def test_per_turn_text_equality_invariant(spark, golden_mentions):
     """north_rule/input_hint invariant: each turn's text crosses the
     Spark boundary byte-identical under stable (conv_id, turn_idx)

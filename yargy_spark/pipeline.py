@@ -92,10 +92,11 @@ def _read_or_empty(spark: SparkSession, root: str, schema) -> DataFrame:
     with the bucket column when no commit wrote data (no turn matched
     a trigger; an increment bridged no prior entities).  The job then
     commits empty derived tables, so its rerun reaches the no-op gate
-    instead of failing forever."""
+    instead of failing forever.  The false filter folds the empty table
+    to an empty relation at plan time, as in ``empty_keys``."""
     if mf.committed_data_dirs(root):
         return mf.read_table(spark, root)
-    return (spark.createDataFrame([], schema)
+    return (spark.createDataFrame([], schema).where(F.lit(False))
             .withColumn(mf.BUCKET_COL, F.lit(0).cast('int')))
 
 
