@@ -5,6 +5,7 @@ building and comparing the frames is ``tools/verify_entry.py``'s job."""
 import ast
 import glob
 import importlib
+import importlib.util
 import os
 
 import __spark_entry__ as entry
@@ -18,22 +19,32 @@ def test_every_gate_query_has_an_oracle():
 
 def _library_imports(path):
     """(line, module, name) for every ``from yargy_spark... import
-    name`` in the file, module-level and function-local alike."""
+    name`` in the file, module-level and function-local alike.  A
+    relative import resolves against the file's own package."""
+    package = os.path.dirname(os.path.relpath(path, ROOT)).replace(
+        os.sep, '.')
     with open(path, encoding='utf-8') as f:
         tree = ast.parse(f.read(), path)
     for node in ast.walk(tree):
-        if (isinstance(node, ast.ImportFrom) and node.level == 0
-                and node.module.split('.')[0] == 'yargy_spark'):
+        if not isinstance(node, ast.ImportFrom):
+            continue
+        module = (importlib.util.resolve_name(
+            '.' * node.level + (node.module or ''), package)
+            if node.level else node.module)
+        if module.split('.')[0] == 'yargy_spark':
             for alias in node.names:
-                yield node.lineno, node.module, alias.name
+                yield node.lineno, module, alias.name
 
 
 def test_lazy_library_imports_resolve():
-    """Gate queries and spark-submit jobs import the library inside
-    their functions, so a module deleted or a name renamed under them
-    would otherwise surface only when the query or job runs."""
+    """Gate queries, spark-submit jobs and the library itself import
+    library names inside functions, so a module deleted or a name
+    renamed under them would otherwise surface only when the query,
+    job or operator runs."""
     paths = ([os.path.join(ROOT, '__spark_entry__.py')]
-             + sorted(glob.glob(os.path.join(ROOT, 'jobs', '*.py'))))
+             + sorted(glob.glob(os.path.join(ROOT, 'jobs', '*.py')))
+             + sorted(glob.glob(os.path.join(ROOT, 'yargy_spark', '**',
+                                             '*.py'), recursive=True)))
     checked, dangling = 0, []
     for path in paths:
         where = os.path.relpath(path, ROOT)
