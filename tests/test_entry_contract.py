@@ -14,7 +14,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_every_gate_query_has_an_oracle():
-    assert set(entry.queries()) == set(entry.oracle_sql())
+    """One oracle per gate query, and every module-level ``q_*``
+    function is registered: a deletion that drops a ``queries()``
+    entry but leaves its query function behind fails here."""
+    queries = entry.queries()
+    assert set(queries) == set(entry.oracle_sql())
+    defined = {fn for name, fn in vars(entry).items()
+               if name.startswith('q_') and callable(fn)}
+    assert defined == set(queries.values())
 
 
 def _library_imports(path):

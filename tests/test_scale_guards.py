@@ -269,8 +269,7 @@ def test_round4_plan_shapes(spark):
     """Plan-shape guards for the round-4 operators (the claims in
     SCALE.md/PLANS.md §12-13, asserted so refactors can't silently
     regress them): map-only banding after the one state agg; no
-    CartesianProduct anywhere in the dedup increment; paragraph dedup
-    has no window."""
+    CartesianProduct anywhere in the dedup increment."""
     import re
 
     def plan(df):
@@ -288,8 +287,7 @@ def test_round4_plan_shapes(spark):
     from yargy_spark.operators.dedup import (_exact_groups, _sig_bands,
                                              _state_rows,
                                              dedup_increment,
-                                             minhash_state,
-                                             paragraph_dedup)
+                                             minhash_state)
 
     reps, _ = _exact_groups(docs)
     p = plan(_sig_bands(_state_rows(reps)))
@@ -301,6 +299,3 @@ def test_round4_plan_shapes(spark):
                                        state)
     assert 'CartesianProduct' not in plan(pairs)
     assert 'CartesianProduct' not in plan(new_state)
-
-    p = plan(paragraph_dedup(docs))
-    assert 'Window' not in p and 'CartesianProduct' not in p

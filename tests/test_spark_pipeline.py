@@ -55,6 +55,20 @@ def test_metrics_and_passthrough(spark):
     assert metrics['budget_aborts'].value == 0
 
 
+def test_may_dates_carry_month(spark):
+    """Regression: 'N мая YYYY' must produce month=5 (the month map is
+    keyed by nominative lemma, not the genitive surface)."""
+    import json as _json
+    from yargy_spark.operators.extract import extract_mentions
+    df = spark.createDataFrame(
+        [('m1', 0, 'user', 'встреча 8 мая 2015 года', None)],
+        'conv_id string, turn_idx int, role string, text string, '
+        'tool string')
+    rows = extract_mentions(df, ['date']).collect()
+    assert _json.loads(rows[0]['fact_json']) == {
+        'day': 8, 'month': 5, 'year': 2015}
+
+
 def test_entity_linking(spark, golden_mentions):
     from yargy_spark.operators.linking import link_entities
     entities = link_entities(golden_mentions)

@@ -1,13 +1,12 @@
 """Deduplication operators over a document corpus.
 
-Four dedup families, all expressed with built-in Spark SQL functions
+Three dedup families, all expressed with built-in Spark SQL functions
 (JVM-side, whole-stage codegen — no Python in the data path):
 
   * exact           — hash-groupBy on normalized text
   * n-gram Jaccard  — word-shingle set-similarity join (exact baseline)
   * MinHash + LSH   — shingle -> K minhashes -> banded buckets ->
                       candidate pairs -> exact-Jaccard verify
-  * SimHash         — 60-bit sign-aggregated token hash + Hamming pairs
 
 Cross-engine determinism: every hash bottoms out in
 ``conv(substr(md5(x),1,15),16,10)`` (60-bit int), reproducible in any
@@ -93,14 +92,14 @@ def word_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     ``.distinct()`` here would shuffle the entire (doc_id, shingle)
     stream just to remove within-row repeats.  Dropping it removes
     one full-corpus Exchange from every shingle consumer (minhash,
-    n-gram Jaccard, fingerprints, decontaminate).
+    n-gram Jaccard).
 
     Contract: one row per ``doc_id`` (the standard row-identity
     contract).  A doc_id appearing in several input rows emits its
-    shingles once PER ROW, inflating consumers that count per-doc shingles
-    (``decontaminate`` hit counts, ``top_ngrams`` document
-    frequencies) — run ``exact_dedup``/key-dedup upstream on dirty
-    re-ingested corpora."""
+    shingles once PER ROW, inflating consumers that count per-doc
+    shingles (the n-gram Jaccard set sizes) — run
+    ``exact_dedup``/key-dedup upstream on dirty re-ingested
+    corpora."""
     arr = F.split(_norm_text(F.col('text')), ' ')
     # guard: sequence(1, 0) would generate a DESCENDING [1, 0] in Spark
     grams = F.expr(
@@ -149,7 +148,7 @@ def _pair_jaccard(shingles: DataFrame, candidates: DataFrame
     Hash collisions within one document pair are ~|shingles|²/2^61 —
     negligible vs the x10000 integer truncation.  Per-doc array state
     is bounded by document length; docs with pathological shingle
-    counts should be length-capped upstream (quality_scores.keep).
+    counts should be length-capped upstream.
     Skewed hub docs (in many pairs) are handled by AQE skew-join."""
     doc_sets = (shingles
                 .select('doc_id',
@@ -198,7 +197,7 @@ def _exact_groups(docs: DataFrame) -> tuple:
     the hash is 60-bit, and at the 10^9-doc design point a birthday
     collision merging two DISTINCT texts into one "exact" group is
     plausible (~50% at ~1.3e9 texts) — it would emit false
-    jaccard-10000/hamming-0 pairs and suppress the collided doc's
+    jaccard-10000 pairs and suppress the collided doc's
     real candidates.  Including the text makes the hash a pure
     shuffle-balancing prefix; equality is decided on the text
     itself."""
@@ -215,12 +214,9 @@ def _exact_groups(docs: DataFrame) -> tuple:
 
 
 def _expand_groups(rep_pairs: DataFrame, groups: DataFrame,
-                   reps: DataFrame, k: int,
-                   score_col: str,
-                   self_score: int = 10000) -> DataFrame:
-    """Rep-level (a, b, score) pairs -> member-level pairs, plus the
-    within-group pairs of exact copies (score ``self_score`` — the
-    metric's identical-document value: jaccard 10000, hamming 0 —
+                   reps: DataFrame, k: int) -> DataFrame:
+    """Rep-level (a, b, jaccard_x10000) pairs -> member-level pairs,
+    plus the within-group pairs of exact copies (jaccard 10000,
     guarded to docs that actually have >= k words so empty-shingle
     docs never pair, matching the verify stage's behavior).
 
@@ -233,8 +229,8 @@ def _expand_groups(rep_pairs: DataFrame, groups: DataFrame,
                                         ' ')) >= k)
                   .select(F.col('doc_id').alias('a'),
                           F.col('doc_id').alias('b'),
-                          F.lit(self_score).cast('long')
-                          .alias(score_col)))
+                          F.lit(10000).cast('long')
+                          .alias('jaccard_x10000')))
     all_pairs = rep_pairs.unionByName(self_pairs)
     ga = groups.select(F.col('rep_id').alias('a'),
                        F.col('doc_id').alias('ma'))
@@ -247,7 +243,7 @@ def _expand_groups(rep_pairs: DataFrame, groups: DataFrame,
             .where((F.col('a') != F.col('b'))
                    | (F.col('ma') < F.col('mb')))
             .select(F.least('ma', 'mb').alias('a'),
-                    F.greatest('ma', 'mb').alias('b'), score_col))
+                    F.greatest('ma', 'mb').alias('b'), 'jaccard_x10000'))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, k: int = 3,
@@ -312,8 +308,7 @@ def ngram_jaccard_pairs(docs: DataFrame, k: int = 3,
                  .select('a', 'b', 'jaccard_x10000'))
     if not expand_groups:
         return rep_pairs
-    return _expand_groups(rep_pairs, groups, reps, k,
-                          'jaccard_x10000')
+    return _expand_groups(rep_pairs, groups, reps, k)
 
 
 def _state_rows(reps: DataFrame, k: int = 3) -> DataFrame:
@@ -428,8 +423,7 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 3,
                                    threshold_x10000)
     if not expand_groups:
         return rep_pairs
-    return _expand_groups(rep_pairs, groups, reps, k,
-                          'jaccard_x10000')
+    return _expand_groups(rep_pairs, groups, reps, k)
 
 
 def _band_candidates(bands: DataFrame) -> DataFrame:
@@ -493,9 +487,8 @@ def _minhash_rep_pairs(rows: DataFrame,
                        threshold_x10000: int) -> DataFrame:
     """Banded-signature candidates + exact-Jaccard verify over the
     ``_state_rows`` of already exact-dedup'd representatives — shared
-    by ``minhash_lsh_pairs``, ``clean_corpus`` and
-    ``dedup_increment``'s within-batch pairs, so a composition never
-    recomputes the exact-group window.
+    by ``minhash_lsh_pairs`` and ``dedup_increment``'s within-batch
+    pairs, so neither recomputes the exact-group window.
 
     Everything hangs off that ONE aggregation: banding is
     map-only array slicing over its ``sig`` column (band key =
@@ -544,8 +537,8 @@ def dedup_increment(new_docs: DataFrame, state: DataFrame,
         ``minhash_lsh_pairs`` semantics on the batch alone.
       * ``new_state``: ``state`` plus the batch's representatives that
         were NOT flagged (pairwise min-id pruning within the batch,
-        any-match pruning vs state — ``clean_corpus``'s survivor
-        rule), ready to commit for the next increment.
+        any-match pruning vs state), ready to commit for the next
+        increment.
 
     Scale shape: batch-local banding and verification touch only the
     increment; the prior corpus enters ONLY through the state table's
@@ -564,8 +557,7 @@ def dedup_increment(new_docs: DataFrame, state: DataFrame,
     # within-batch pairs: the batch operator's exact semantics,
     # including its hot-bucket governor (_band_candidates)
     wb_rep_pairs = _minhash_rep_pairs(new_rows, threshold_x10000)
-    wb_pairs = _expand_groups(wb_rep_pairs, groups, reps, k,
-                              'jaccard_x10000')
+    wb_pairs = _expand_groups(wb_rep_pairs, groups, reps, k)
 
     # cross pairs: state bands vs batch bands, verified on the
     # state's stored arrays; expand only the NEW side (state is
@@ -623,342 +615,3 @@ def dedup_increment(new_docs: DataFrame, state: DataFrame,
     new_state = state.unionByName(
         new_rows.join(dropped, 'doc_id', 'left_anti'))
     return pairs, new_state
-
-
-def paragraph_dedup(docs: DataFrame) -> DataFrame:
-    """Corpus-wide paragraph-level exact dedup (the
-    RefinedWeb/CCNet-style boilerplate pass): every non-empty line
-    whose NORMALIZED form occurs anywhere else in the corpus keeps
-    exactly ONE occurrence — the lowest (doc_id, pos) — and is
-    dropped everywhere else (including within-document repeats).
-    Returns ``(doc_id, clean_text, n_kept, n_dropped)`` with the
-    surviving lines rejoined in original order; every input doc_id
-    keeps a row (empty ``clean_text`` when nothing survives).
-
-    Shape: posexplode -> one corpus-wide groupBy on the normalized
-    line's (60-bit hash, text) — the same birthday-collision guard
-    as ``exact_dedup`` — -> keeper join -> per-doc reassembly.  Three
-    balanced Exchanges (line hash, line hash, doc_id), no windows, no
-    UDFs.  The keeper slot packs (doc_id, pos) as
-    ``doc_id * 2^20 + pos`` so both engines elect it with a plain
-    integer min — documents are assumed < 2^20 lines (quality-gate
-    upstream; 10^6-line docs are not prose)."""
-    lines = docs.select(
-        'doc_id',
-        F.posexplode(F.split(F.col('text'), '\n'))
-        .alias('pos', 'line'))
-    occ = (lines
-           .where(F.length(F.trim(F.col('line'))) > 0)
-           .select('doc_id', 'pos', 'line',
-                   _norm_text(F.col('line')).alias('keynorm'),
-                   (F.col('doc_id') * F.lit(1048576) + F.col('pos'))
-                   .alias('slot'))
-           .withColumn('kh', md5_int(F.col('keynorm'))))
-    keep = (occ.groupBy('kh', 'keynorm')
-            .agg(F.min('slot').alias('keeper')))
-    flagged = (occ.join(keep, ['kh', 'keynorm'])
-               .select('doc_id', 'pos', 'line',
-                       (F.col('slot') == F.col('keeper'))
-                       .cast('int').alias('kept')))
-    per_doc = (flagged.groupBy('doc_id')
-               .agg(F.array_join(
-                       F.transform(
-                           F.sort_array(F.collect_list(
-                               F.when(F.col('kept') == 1,
-                                      F.struct('pos', 'line')))),
-                           lambda s: s['line']), '\n')
-                    .alias('clean_text'),
-                    F.sum('kept').cast('long').alias('n_kept'),
-                    (F.count('*') - F.sum('kept')).cast('long')
-                    .alias('n_dropped')))
-    return (docs.select('doc_id').join(per_doc, 'doc_id', 'left')
-            .select('doc_id',
-                    F.coalesce('clean_text', F.lit(''))
-                    .alias('clean_text'),
-                    F.coalesce('n_kept', F.lit(0).cast('long'))
-                    .alias('n_kept'),
-                    F.coalesce('n_dropped', F.lit(0).cast('long'))
-                    .alias('n_dropped')))
-
-
-def dup_span_scores(docs: DataFrame, k: int = 8) -> DataFrame:
-    """Span-level duplication scores — the distributed proxy for
-    exact-substring dedup (Lee et al., "Deduplicating Training Data
-    Makes Language Models Better": suffix-array substring dedup,
-    re-expressed as corpus-frequency of positional word ``k``-grams,
-    the shape that actually distributes).  A k-gram OCCURRENCE (not
-    per-doc distinct — positions matter) that appears more than once
-    anywhere in the corpus, including elsewhere in the same document,
-    is a duplicated span.
-
-    Returns ``(doc_id, n_grams, n_dup_grams, dup_gram_ratio_x10000)``
-    for every input doc (docs under ``k`` words score 0/0/0).
-
-    Shape: map-side gram explode -> one corpus-wide groupBy on the
-    gram (exact string key — no hash-collision false dups) -> join
-    back -> per-doc agg; three balanced Exchanges, no windows, no
-    UDFs, integers only.  Compose with ``repetition_scores`` (within-
-    doc) and ``minhash_lsh_pairs`` (whole-doc) for the full dedup
-    ladder."""
-    arr = F.split(_norm_text(F.col('text')), ' ')
-    grams = F.expr(
-        "CASE WHEN size(words) >= {k} THEN "
-        "transform(sequence(1, size(words) - {k} + 1), "
-        "i -> concat_ws(' ', slice(words, i, {k}))) "
-        "ELSE array() END".format(k=k))
-    occ = (docs
-           .select('doc_id', arr.alias('words'))
-           .select('doc_id', F.explode(grams).alias('gram')))
-    counts = occ.groupBy('gram').agg(F.count('*').alias('n'))
-    per_doc = (occ.join(counts, 'gram')
-               .groupBy('doc_id')
-               .agg(F.count('*').alias('n_grams'),
-                    F.sum((F.col('n') > 1).cast('long'))
-                    .alias('n_dup_grams')))
-    return (docs.select('doc_id').join(per_doc, 'doc_id', 'left')
-            .select('doc_id',
-                    F.coalesce('n_grams', F.lit(0).cast('long'))
-                    .alias('n_grams'),
-                    F.coalesce('n_dup_grams', F.lit(0).cast('long'))
-                    .alias('n_dup_grams'))
-            .withColumn('dup_gram_ratio_x10000',
-                        F.floor(F.lit(10000.0) * F.col('n_dup_grams')
-                                / F.greatest(F.col('n_grams'),
-                                             F.lit(1)))
-                        .cast('long')))
-
-
-def remove_dup_spans(docs: DataFrame, k: int = 8) -> DataFrame:
-    """The ACTION half of ``dup_span_scores`` (Lee et al.'s "remove
-    the duplicated substring"): rewrite each document's normalized
-    token stream with corpus-duplicated spans removed, keeping the
-    corpus-FIRST occurrence of every duplicated ``k``-gram.
-
-    Rule (deterministic, both engines): a token is removed iff some
-    duplicated k-gram occurrence covering it is NOT that gram's
-    keeper — the keeper being the occurrence with the lowest
-    ``doc_id * 2^20 + start`` slot (paragraph_dedup's election; the
-    same <2^20-words-per-doc assumption).  Output is
-    ``(doc_id, clean_text, n_tokens, n_removed)`` over the
-    NORMALIZED stream (lowercased, whitespace-collapsed — the same
-    stream the whole shingle family operates on); every input doc_id
-    keeps a row.
-
-    Shape: gram explode -> one corpus-wide (gram) groupBy carrying
-    count + keeper slot -> join back -> per-doc collect of flagged
-    span starts -> map-side token filter (`filter`/`exists` over the
-    starts array — per-token work is O(flagged spans in the doc),
-    bounded by doc length).  Three balanced Exchanges, no windows,
-    no UDFs."""
-    arr = F.split(_norm_text(F.col('text')), ' ')
-    words = F.when(F.length(F.trim(F.lower(F.col('text')))) == 0,
-                   F.array().cast('array<string>')).otherwise(arr)
-    base = docs.select('doc_id', words.alias('words'))
-    grams = F.expr(
-        "CASE WHEN size(words) >= {k} THEN "
-        "transform(sequence(1, size(words) - {k} + 1), "
-        "i -> struct(i AS i, concat_ws(' ', slice(words, i, {k})) "
-        "AS gram)) ELSE array() END".format(k=k))
-    occ = (base.select('doc_id', F.explode(grams).alias('g'))
-           .select('doc_id', 'g.i', 'g.gram',
-                   (F.col('doc_id') * F.lit(1048576) + F.col('g.i'))
-                   .alias('slot')))
-    cnt = occ.groupBy('gram').agg(F.count('*').alias('n'),
-                                  F.min('slot').alias('keeper'))
-    flagged = (occ.join(cnt, 'gram')
-               .where((F.col('n') > 1)
-                      & (F.col('slot') != F.col('keeper')))
-               .groupBy('doc_id')
-               .agg(F.collect_set('i').alias('starts')))
-    # guard: sequence(1, 0) DESCENDS in Spark (word_shingles' gotcha)
-    # — an empty doc must yield an empty index list, not [1, 0]
-    positions = F.when(F.size('words') == 0,
-                       F.array().cast('array<int>')) \
-        .otherwise(F.sequence(F.lit(1), F.size('words')))
-    kept_idx = F.filter(
-        positions,
-        lambda i: ~F.exists(
-            'starts', lambda s: (i >= s) & (i < s + F.lit(k))))
-    out = (base.join(flagged, 'doc_id', 'left')
-           .select('doc_id', 'words',
-                   F.coalesce('starts',
-                              F.array().cast('array<int>'))
-                   .alias('starts'))
-           .select('doc_id',
-                   F.size('words').alias('n_tokens'),
-                   F.transform(kept_idx,
-                               lambda i: F.element_at('words', i))
-                   .alias('_kept')))
-    return out.select(
-        'doc_id',
-        F.array_join('_kept', ' ').alias('clean_text'),
-        F.col('n_tokens').cast('long').alias('n_tokens'),
-        (F.col('n_tokens') - F.size('_kept')).cast('long')
-        .alias('n_removed'))
-
-
-def decontaminate(docs: DataFrame, eval_docs: DataFrame,
-                  k: int = 3, min_hits: int = 1) -> DataFrame:
-    """Eval-set decontamination: which training documents share
-    ``>= min_hits`` distinct word ``k``-grams with which benchmark
-    documents — the pretraining hygiene pass that keeps test-set
-    leakage out of the training corpus.  Returns ``(doc_id, eval_id,
-    n_hits)``; remove contamination with a broadcast anti-join of
-    ``docs`` against the distinct ``doc_id``s.
-
-    Scale shape: the eval side is benchmark-sized (10^4-10^6 docs)
-    against a 100 TB training corpus, so the eval shingles are hashed
-    to 60-bit ints (~8 B each) and BROADCAST — the contamination
-    check is a map-side hash join against the streaming (doc_id,
-    shingle-hash) scan, no corpus shuffle.  The only exchange is the
-    final (doc_id, eval_id) hit count, whose input is |matching
-    shingles| rows — tiny, because contamination is rare by
-    construction.  Joining on the hash admits ~|shingle-pairs|/2^61
-    false hits (same tolerance as ``_pair_jaccard``); raise
-    ``min_hits`` (real decontamination uses 8-13-gram windows with
-    multiple hits) to make false positives vanishing.
-
-    Both inputs need (doc_id, text) with one row per doc_id
-    (``word_shingles``'s row-identity contract — duplicate rows
-    would inflate ``n_hits`` once per copy); normalization and
-    shingling are ``word_shingles`` — identical to the near-dup
-    family, so one shingle definition serves the whole hygiene
-    pipeline.
-    """
-    if min_hits <= 0:
-        raise ValueError('min_hits must be positive, got %d'
-                         % min_hits)
-    train_sh = (word_shingles(docs, k)
-                .select('doc_id', md5_int(F.col('shingle'))
-                        .alias('hsh')))
-    eval_sh = (word_shingles(eval_docs, k)
-               .select(F.col('doc_id').alias('eval_id'),
-                       md5_int(F.col('shingle')).alias('hsh')))
-    return (train_sh
-            .join(F.broadcast(eval_sh), 'hsh')
-            .groupBy('doc_id', 'eval_id')
-            .agg(F.count('*').alias('n_hits'))
-            .where(F.col('n_hits') >= min_hits))
-
-
-def clean_corpus(docs: DataFrame,
-                 k: int = 3,
-                 threshold_x10000: int = LSH_DEFAULT_THRESHOLD,
-                 meta_cols: Sequence[str] = ()
-                 ) -> DataFrame:
-    """The pretraining-corpus cleanup composition — quality gate,
-    exact dedup, near-dup pruning — as ONE declarative plan:
-
-      1. quality gate: ``textstats.quality_scores`` keep=1 (map-only
-         codegen filter, pushes toward the scan);
-      2. exact dedup: min-doc_id representative per normalized text
-         (one hash-partitioned window);
-      3. near-dup pruning: MinHash/LSH banded candidates + exact
-         Jaccard on representatives; of every verified pair the
-         GREATER doc_id is dropped.  Deterministic min-id-survivor
-         rule, deliberately NOT a transitive closure: closure chains
-         unrelated documents through boilerplate bridges and needs an
-         iterative CC pass — pairwise pruning is one shuffle and what
-         production dedup (e.g. Gopher/RefinedWeb-style pipelines)
-         actually ships.
-
-    Returns retained ``doc_id`` rows plus any requested ``meta_cols``
-    carried back from ``docs`` (the operator itself only needs
-    doc_id/text — metadata is the CALLER's schema, so it is opt-in
-    rather than hard-coded; missing names raise the usual
-    AnalysisException).  Every stage is the scale-shaped operator it
-    reuses (dedup-first banding, no all-pairs) — this is the "a user
-    runs their whole pipeline here" composition, not a new algorithm.
-    """
-    from .textstats import quality_scores
-    kept = (quality_scores(docs)
-            .where(F.col('keep') == 1).select('doc_id'))
-    qdocs = docs.join(kept, 'doc_id').select('doc_id', 'text')
-    reps, _groups = _exact_groups(qdocs)
-    rep_pairs = _minhash_rep_pairs(_state_rows(reps, k),
-                                   threshold_x10000)
-    dropped = rep_pairs.select(F.col('b').alias('doc_id')).distinct()
-    retained = reps.join(dropped, 'doc_id', 'left_anti')
-    out_cols = ['doc_id'] + list(meta_cols)
-    if not meta_cols:
-        return retained.select('doc_id')
-    return (retained.select('doc_id')
-            .join(docs.select(*out_cols), 'doc_id')
-            .select(*out_cols))
-
-
-def simhash_docs(docs: DataFrame, bits: int = 60) -> DataFrame:
-    """60-bit SimHash per document over word tokens (the full width
-    of the portable 60-bit md5 token hash; round 4 widened from 32 —
-    with 4-band blocking the band key space grows 256 -> 32768, the
-    difference between quadratic bucket blowup and usable selectivity
-    at corpus scale).
-
-    All ``bits`` vote sums run in ONE wide aggregation with literal
-    shift amounts (map-side partial agg), so the shuffle carries
-    |docs| x bits values instead of |tokens| x bits exploded rows —
-    the same shape as ``minhash_signatures``."""
-    toks = (docs
-            .select('doc_id',
-                    F.explode(F.split(_norm_text(F.col('text')), ' '))
-                    .alias('w'))
-            .select('doc_id', md5_int(F.col('w')).alias('h')))
-    votes = [
-        F.sum(F.expr('CASE WHEN shiftrightunsigned(h, %d) %% 2 = 1 '
-                     'THEN 1 ELSE -1 END' % b)).alias('s%d' % b)
-        for b in range(bits)]
-    wide = toks.groupBy('doc_id').agg(*votes)
-    bitval = sum(
-        (F.when(F.col('s%d' % b) > 0,
-                F.lit(1 << b).cast('long')).otherwise(F.lit(0))
-         for b in range(bits)),
-        F.lit(0).cast('long'))
-    return wide.select('doc_id', bitval.alias('simhash'))
-
-
-def simhash_dup_pairs(docs: DataFrame, max_hamming: int = 3,
-                      bits: int = 60, n_bands: int = 4,
-                      expand_groups: bool = True) -> DataFrame:
-    """SimHash near-duplicate pairs (a < b, hamming <= max_hamming).
-
-    Banded blocking with a pigeonhole guarantee: the ``bits``-bit
-    simhash splits into ``n_bands`` equal bands; two hashes within
-    Hamming distance ``max_hamming`` < n_bands must agree on at least
-    one whole band, so the band equi-join has FULL recall (no
-    probabilistic miss, unlike MinHash banding).  Verification is one
-    ``bit_count(xor)`` per candidate in codegen.  Exact-duplicate
-    texts collapse to representatives first (identical docs share all
-    bands — see ``_exact_groups``); within-group pairs re-expand at
-    hamming 0."""
-    if max_hamming >= n_bands:
-        raise ValueError(
-            'pigeonhole recall needs max_hamming < n_bands')
-    reps, groups = _exact_groups(docs)
-    sig = simhash_docs(reps, bits)
-    width = bits // n_bands
-    mask = (1 << width) - 1
-    bands = sig.select(
-        'doc_id', 'simhash',
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(i).alias('band'),
-                F.shiftrightunsigned('simhash', i * width)
-                .bitwiseAND(F.lit(mask)).alias('key'))
-            for i in range(n_bands)])).alias('bk')
-    ).select('doc_id', 'simhash', 'bk.band', 'bk.key')
-    left = bands.select(F.col('doc_id').alias('a'),
-                        F.col('simhash').alias('ha'), 'band', 'key')
-    right = bands.select(F.col('doc_id').alias('b'),
-                         F.col('simhash').alias('hb'), 'band', 'key')
-    rep_pairs = (left.join(right, ['band', 'key'])
-                 .where(F.col('a') < F.col('b'))
-                 .select('a', 'b',
-                         F.bit_count(
-                             F.col('ha').bitwiseXOR(F.col('hb')))
-                         .cast('long').alias('hamming'))
-                 .distinct()
-                 .where(F.col('hamming') <= max_hamming))
-    if not expand_groups:
-        return rep_pairs
-    return _expand_groups(rep_pairs, groups, reps, 1, 'hamming',
-                          self_score=0)
