@@ -487,12 +487,14 @@ def test_run_incremental_job_budget(spark, kg_base, tmp_path):
     frames and the key state was re-derived from mentions and links;
     36 since it truncates one per-mention frame and the key state is
     read off it; 37 since the assignment aggregates the mentions per
-    key and joins them back before that truncation.  The budget stays
-    36 plus a margin of 1: adding back a truncation or a second
-    computation of the links fails here."""
+    key and joins them back before that truncation; 35 since
+    ``read_table`` reads with the schema its manifests record instead
+    of inferring it in a job.  The budget is 35 plus a margin of 1:
+    adding back a truncation, a second computation of the links or a
+    schema-inference read fails here."""
     from yargy_spark.pipeline import run_incremental
     from yargy_spark.sources.transcripts import synth_transcripts
-    JOB_BUDGET = 36 + 1
+    JOB_BUDGET = 35 + 1
     base_root, _, _ = kg_base
     inc = synth_transcripts(spark, n_turns=96, partitions=4,
                             start_turn=96)
@@ -516,10 +518,12 @@ def test_run_resumable_job_budget(spark, tmp_path):
     while the links were persisted and the key state was re-derived
     from mentions and links; 34 since both are read off the linker's
     one truncated per-mention frame and the empty prior key state
-    folds away at plan time.  The budget is that plus a margin of 1."""
+    folds away at plan time; 30 since ``read_table`` reads with the
+    schema its manifests record.  The budget is that plus a margin of
+    1."""
     from yargy_spark.pipeline import run_resumable
     from yargy_spark.sources.transcripts import synth_transcripts
-    JOB_BUDGET = 34 + 1
+    JOB_BUDGET = 30 + 1
     base = synth_transcripts(spark, n_turns=96, partitions=4)
     sc = spark.sparkContext
     group = 'run_resumable-job-budget'

@@ -204,6 +204,39 @@ def test_commit_stats_from_parquet_footers(spark, tmp_path):
     assert mf.read_table(spark, root).count() == 600
 
 
+def test_read_table_starts_no_job(spark, tmp_path):
+    """A commit records its frame's schema, and ``read_table`` reads
+    with it: no schema-inference job, and the same schema and rows as
+    the inferred read, which a manifest without the key still gets."""
+    import json
+    root = str(tmp_path / 'schema')
+    df = spark.createDataFrame(
+        [(i % 2, 'c%d' % i, [(i, 'x')]) for i in range(10)],
+        '%s int not null, conv_id string, '
+        'attrs array<struct<n:int,s:string>>' % mf.BUCKET_COL)
+    snap = mf.commit_append(df, root, note='t')
+    mf.commit_append(df.where(F.col(mf.BUCKET_COL) == 1), root, note='u')
+    sc = spark.sparkContext
+    group = 'read_table-no-job-%s' % snap['snapshot_id']
+    sc.setJobGroup(group, 'read_table starts no job')
+    try:
+        got = mf.read_table(spark, root)
+    finally:
+        sc.setLocalProperty('spark.jobGroup.id', None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    path = os.path.join(root, '_manifests', snap['snapshot_id'] + '.json')
+    with open(path, encoding='utf-8') as fh:
+        manifest = json.load(fh)
+    del manifest['schema']
+    mf.write_manifest(root, manifest)
+    inferred = mf.read_table(spark, root)
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, inferred.collect()))
+    assert got.count() == 15
+
+
 def test_prep_bucket_granular_resume(spark, tmp_path):
     """A bucketed table commits at bucket granularity: a table
     holding only some buckets resumes by recomputing EXACTLY the

@@ -13,7 +13,7 @@ Layout for a table at <root>:
 
 Manifest JSON:
     {snapshot_id, parent_id, created_utc, partitions:
-        {bucket: {rows: n}}, totals: {rows: n}, note}
+        {bucket: {rows: n}}, totals: {rows: n}, note, schema}
 
 Resume contract: ``pending_buckets`` diffs the desired bucket set
 against all committed manifests, so a restarted job processes only
@@ -158,6 +158,9 @@ def _commit(df: DataFrame, root: str, note: str,
         'totals': totals,
         'counters': counters,
         'note': note,
+        # the written frame's schema: ``read_table`` hands it to the
+        # reader, which then starts no schema-inference job
+        'schema': df.schema.jsonValue(),
     }
     if replace:
         manifest['replace'] = True
@@ -301,12 +304,22 @@ def read_table(spark: SparkSession, root: str) -> DataFrame:
     partitioned root — a multi-path read would trip Spark's common-
     base partition discovery — and bucket filters still prune into
     every scan.  Buckets superseded by compaction snapshots are
-    filtered out per-directory (partition-pruned, not row-scanned)."""
+    filtered out per-directory (partition-pruned, not row-scanned).
+    A directory whose manifest recorded its schema is read with it and
+    starts no Spark job; one without (compaction, expired bases,
+    older manifests) is read with the schema inferred from its
+    files."""
     from functools import reduce
+    from pyspark.sql.types import StructType
     excludes = excluded_buckets(root)
+    schemas = {s['snapshot_id']: s['schema'] for s in snapshots(root)
+               if 'schema' in s}
     parts = []
     for d in committed_data_dirs(root):
-        df = spark.read.parquet(os.path.join(root, 'data', d))
+        reader = spark.read
+        if d in schemas:
+            reader = reader.schema(StructType.fromJson(schemas[d]))
+        df = reader.parquet(os.path.join(root, 'data', d))
         skip = excludes.get(d)
         if skip:
             df = df.where(~F.col(BUCKET_COL).isin(skip))
