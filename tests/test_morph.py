@@ -175,43 +175,15 @@ def test_synth_lexemes_unique():
         synth_lexemes(n_syl ** 4 + 1)
 
 
-def test_vocab_filtered_parquet_load(tmp_path):
-    """Vocabulary-filtered dictionary load (the documented scale
-    fallback for OpenCorpora-sized builds): entries restrict to the
-    corpus vocabulary, paradigms restrict to kept lemmas so inflect()
-    still works, and readings are identical to a full load."""
-    import os
-    import sys
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    from tools.gen_lexicon import write_parquet
-    from yargy_spark.kernel.morphology import Morphology
-
-    d = str(tmp_path)
-    write_parquet(d)
-    ent = os.path.join(d, 'lexicon_entries.parquet')
-    par = os.path.join(d, 'lexicon_paradigms.parquet')
-    full = Morphology.from_parquet(ent, par)
-
-    # corpus vocabulary: two in-dictionary words (one capitalized the
-    # way a corpus token would be), one OOV that must NOT sneak in
-    vocab = ['Александру', 'московским', 'вгрхь']
-    filt = Morphology.from_parquet(ent, par, words=vocab)
-
-    assert set(filt.entries) == {'александру', 'московским'}
-    for w in filt.entries:
-        assert filt.entries[w] == full.entries[w], w
-    # paradigms survive for kept lemmas only -> inflection unchanged
-    assert filt('Александру')[0].inflect() == 'александр'
-    assert filt('московским')[0].inflect({'nomn', 'femn'}) \
-        == full('московским')[0].inflect({'nomn', 'femn'}) \
-        == 'московская'
-    kept_lemmas = {lemma for rs in filt.entries.values()
-                   for lemma, _ in rs}
-    assert set(filt.paradigms) <= kept_lemmas | set()
-    assert all(filt.paradigms[m] == full.paradigms[m]
-               for m in filt.paradigms)
-    # the filtered dictionary is materially smaller
-    import pickle
-    assert len(pickle.dumps(filt, protocol=5)) \
-        < len(pickle.dumps(full, protocol=5)) / 10
+def test_default_lexicon_shares_gram_sets():
+    """Readings are interned: across the default dictionary's entries
+    and paradigms there is one gram-set object per distinct gram set,
+    and one string object per distinct word and lemma."""
+    from yargy_spark.kernel.morphology import default_morphology
+    m = default_morphology()
+    readings = [r for table in (m.entries, m.paradigms)
+                for rows in table.values() for r in rows]
+    grams = [g for _, g in readings]
+    assert len({id(g) for g in grams}) == len(set(grams))
+    texts = [t for t, _ in readings] + list(m.entries) + list(m.paradigms)
+    assert len({id(t) for t in texts}) == len(set(texts))

@@ -690,10 +690,8 @@ def write_parquet(out_dir: str, n_synth: int = 0) -> dict:
         arrays = [pa.array(c) for c in cols]
         return pa.table(dict(zip(names, arrays)))
 
-    # sort by the filter key and cap row-group size: a vocabulary-
-    # filtered load (Morphology.from_parquet words=...) prunes row
-    # groups on word/lemma min-max statistics, which only bites when
-    # each group covers a narrow sorted key range
+    # sorted by word/lemma with capped row groups: a deterministic
+    # file, and min-max statistics a filtered reader could prune on
     ent = table(sorted(entry_rows, key=lambda r: (r[0], r[1])),
                 ['word', 'form_idx', 'lemma', 'grams'])
     par = table(sorted(paradigm_rows, key=lambda r: (r[0], r[1])),

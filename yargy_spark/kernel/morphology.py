@@ -19,6 +19,7 @@ few bitwise ops.
 
 from __future__ import annotations
 
+import sys
 from typing import Dict, FrozenSet, Iterable, List, Optional, Set, Tuple
 
 CASES = ('nomn', 'gent', 'datv', 'accs', 'ablt', 'loct', 'voct')
@@ -133,6 +134,22 @@ class Form:
         return hash((self.lemma, self.grams))
 
 
+def _interned(table, pool):
+    """``table`` with one shared object per distinct gram set (via
+    ``pool``) and per distinct string.  The generated dictionary
+    repeats ~140 gram sets over ~39k readings; pickle writes a shared
+    object once, so the broadcast bank and each worker's unpickled
+    copy scale with the distinct values, not with the readings."""
+    out = {}
+    for key, rows in table.items():
+        shared = []
+        for text, grams in rows:
+            grams = frozenset(grams)
+            shared.append((sys.intern(text), pool.setdefault(grams, grams)))
+        out[sys.intern(key)] = shared
+    return out
+
+
 class Morphology:
     """word -> readings lookup over an embedded/broadcast lexicon.
 
@@ -148,8 +165,9 @@ class Morphology:
                  entries: Dict[str, List[Tuple[str, FrozenSet[str]]]],
                  paradigms: Dict[str, List[Tuple[str, FrozenSet[str]]]],
                  predict_oov: bool = True):
-        self.entries = entries
-        self.paradigms = paradigms
+        pool: Dict[FrozenSet[str], FrozenSet[str]] = {}
+        self.entries = _interned(entries, pool)
+        self.paradigms = _interned(paradigms, pool)
         self.predict_oov = predict_oov
         self._predictor = None  # built lazily; derived from entries
         self._form_memo: Dict[str, List[Form]] = {}
@@ -262,67 +280,20 @@ class Morphology:
 
     @classmethod
     def from_parquet(cls, entries_path: str,
-                     paradigms_path: Optional[str] = None,
-                     words=None) -> 'Morphology':
+                     paradigms_path: Optional[str] = None
+                     ) -> 'Morphology':
         """Load a dictionary shipped as parquet (columns per
-        ``from_rows``); pyarrow only — no Spark needed on the worker.
-
-        ``words`` (optional): restrict the load to a corpus
-        vocabulary — the scale fallback for OpenCorpora-sized builds
-        (~5M forms / ~700 MB pickled): load only the forms the corpus
-        actually contains, so broadcast payload and load time track
-        |corpus vocabulary|, not |dictionary|.  The filter is pushed
-        to the parquet reader as a dataset expression (row groups
-        whose word min/max miss the vocabulary are never read —
-        ``tools/gen_lexicon.py`` writes word-sorted row groups for
-        exactly this).  Paradigms are kept for every lemma of a kept
-        entry, so ``inflect`` works unchanged on in-vocabulary words.
-
-        Tradeoff (documented, deliberate): the OOV suffix predictor
-        derives its statistics from loaded entries, so a filtered
-        dictionary predicts from corpus∩dictionary instead of the
-        full dictionary — slightly weaker OOV grammemes in exchange
-        for a broadcast that fits.  Case: lookups lowercase and the
-        vocabulary is lowercased here; the surface match itself is
-        exact so the predicate stays row-group-prunable (an
-        utf8_lower branch would OR away the min/max stats) — the
-        writer's contract is lowercase surfaces, which
-        ``tools/gen_lexicon.py`` already honors."""
+        ``from_rows``); pyarrow only — no Spark needed on the worker."""
         import pyarrow.parquet as pq
 
-        def rows(path, cols, filt=None):
-            if filt is not None and isinstance(path, str):
-                import pyarrow.dataset as ds
-                tbl = ds.dataset(path, format='parquet').to_table(
-                    columns=cols, filter=filt)
-            else:
-                tbl = pq.read_table(path, columns=cols)
-                if filt is not None:
-                    tbl = tbl.filter(filt)
+        def rows(path, cols):
+            tbl = pq.read_table(path, columns=cols)
             return zip(*(tbl.column(c).to_pylist() for c in cols))
 
-        def isin_filter(field, values):
-            if words is None:
-                return None
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            return pc.field(field).isin(
-                pa.array(sorted(values), type=pa.string()))
-
-        ent_filter = isin_filter(
-            'word', {w.lower() for w in words} if words else ())
-        entry_rows = list(rows(entries_path,
-                               ['word', 'form_idx', 'lemma', 'grams'],
-                               ent_filter))
-        # paradigms restrict to lemmas that survived the entry filter
-        # (derived AFTER the entries read, so inflect() keeps working
-        # for every in-vocabulary word)
-        par_filter = isin_filter('lemma', {r[2] for r in entry_rows})
-        paradigm_rows = (rows(paradigms_path,
-                              ['lemma', 'row_idx', 'word', 'grams'],
-                              par_filter)
-                         if paradigms_path else ())
-        return cls.from_rows(entry_rows, paradigm_rows)
+        return cls.from_rows(
+            rows(entries_path, ['word', 'form_idx', 'lemma', 'grams']),
+            rows(paradigms_path, ['lemma', 'row_idx', 'word', 'grams'])
+            if paradigms_path else ())
 
 
 _DEFAULT: Optional[Morphology] = None
