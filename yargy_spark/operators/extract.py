@@ -8,7 +8,8 @@ Scale design:
   - the compiled extractor bank (grammar IR + expanded gazetteers +
     interned lexicon, ~0.75 MB pickled) is compiled and broadcast ONCE
     per session and extractor set (``_session_bank``); each Python
-    worker unpickles it once per session, not once per call or chunk,
+    worker process unpickles it at most once, not once per call or
+    chunk,
   - a coarse trigger regex is applied as a JVM-side ``rlike`` filter
     BEFORE the UDF (Catalyst pushes it into the scan) so non-candidate
     turns never cross the JVM->Python boundary — the corpus analog of
@@ -271,7 +272,7 @@ def extract_mentions(transcripts: DataFrame,
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Broadcast.value resolves through the worker's broadcast
         # registry, so each worker process unpickles the session's
-        # bank once per session — an extra id()-keyed module cache
+        # bank at most once — an extra id()-keyed module cache
         # would leak banks across sessions and could alias a recycled
         # address onto a stale grammar
         return _run_bank(payload.value, batches, passthrough, metrics,
