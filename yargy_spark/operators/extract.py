@@ -83,13 +83,16 @@ _SESSION_BANKS: tuple = (None, {})
 _SESSION_LOCK = threading.Lock()
 
 
-def _session_bank(sc, extractor_names=None):
+def _session_bank(sc, extractor_names=None, bank=None):
     """-> (bank, Broadcast) for ``extractor_names`` (default: every
-    extractor), compiled and broadcast once per SparkContext.  The
+    extractor), compiled and broadcast once per SparkContext; an
+    explicitly passed ``bank`` gets a broadcast of its own.  The
     driver keeps its own ``CompiledBank`` beside the broadcast and
     never reads ``Broadcast.value``, which would unpickle a second
     copy on the driver."""
     global _SESSION_BANKS
+    if bank is not None:
+        return bank, sc.broadcast(bank)
     key = tuple(extractor_names or EXTRACTORS)
     with _SESSION_LOCK:
         owner, banks = _SESSION_BANKS
@@ -100,14 +103,6 @@ def _session_bank(sc, extractor_names=None):
             bank = CompiledBank(key)
             banks[key] = (bank, sc.broadcast(bank))
         return banks[key]
-
-
-def _bank_payload(sc, extractor_names, bank):
-    """-> (bank, Broadcast): the session's shared pair, or a per-call
-    broadcast of an explicitly passed ``bank``."""
-    if bank is None:
-        return _session_bank(sc, extractor_names)
-    return bank, sc.broadcast(bank)
 
 
 def make_extract_metrics(spark) -> dict:
@@ -199,7 +194,7 @@ def extract_audit(transcripts: DataFrame,
     mapInPandas shape as extraction, output is one skinny row per
     turn — at 100 TB you run this on a sampled or suspect slice, or
     aggregate it (see __spark_entry__.q_kg_extract_report)."""
-    bank, payload = _bank_payload(
+    bank, payload = _session_bank(
         transcripts.sparkSession.sparkContext, extractor_names, bank)
     trigger = bank.trigger_regex if use_trigger else None
     src = transcripts.select(
@@ -249,7 +244,7 @@ def extract_mentions(transcripts: DataFrame,
     parse, the debug/ambiguity mode), or 'match' (whole-turn parses
     only).
     """
-    bank, payload = _bank_payload(
+    bank, payload = _session_bank(
         transcripts.sparkSession.sparkContext, extractor_names, bank)
 
     passthrough = [c for c in passthrough
