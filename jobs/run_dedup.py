@@ -24,8 +24,9 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from yargy_spark.plans.session import build_session
 
 
 def main():
@@ -34,11 +35,7 @@ def main():
                  else '/root/testdata/sf0.001/documents.parquet')
     n_buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 8
 
-    spark = (SparkSession.builder
-             .appName('yargy-spark-dedup')
-             .config('spark.sql.adaptive.enabled', 'true')
-             .config('spark.sql.adaptive.skewJoin.enabled', 'true')
-             .getOrCreate())
+    spark = build_session(app='yargy-spark-dedup')
     spark.sparkContext.setLogLevel('WARN')
 
     from yargy_spark.operators.dedup import (content_stamp, exact_dedup,

@@ -26,8 +26,9 @@ from __future__ import annotations
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from yargy_spark.plans.session import build_session
 
 
 def main():
@@ -38,11 +39,7 @@ def main():
     n_buckets = int(sys.argv[4]) if len(sys.argv) > 4 else 8
     id_offset = int(sys.argv[5]) if len(sys.argv) > 5 else None
 
-    spark = (SparkSession.builder
-             .appName('yargy-spark-dedup-increment')
-             .config('spark.sql.adaptive.enabled', 'true')
-             .config('spark.sql.adaptive.skewJoin.enabled', 'true')
-             .getOrCreate())
+    spark = build_session(app='yargy-spark-dedup-increment')
     spark.sparkContext.setLogLevel('WARN')
 
     from yargy_spark.pipeline import run_dedup_increment

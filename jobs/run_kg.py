@@ -17,7 +17,7 @@ from __future__ import annotations
 import json
 import sys
 
-from pyspark.sql import SparkSession
+from yargy_spark.plans.session import build_session
 
 
 def main():
@@ -25,12 +25,7 @@ def main():
     n_turns = int(sys.argv[2]) if len(sys.argv) > 2 else None
     n_buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 16
 
-    spark = (SparkSession.builder
-             .appName('yargy-spark-kg')
-             .config('spark.sql.adaptive.enabled', 'true')
-             .config('spark.sql.adaptive.skewJoin.enabled', 'true')
-             .config('spark.sql.execution.arrow.pyspark.enabled', 'true')
-             .getOrCreate())
+    spark = build_session(app='yargy-spark-kg')
     spark.sparkContext.setLogLevel('WARN')
 
     from yargy_spark.pipeline import run_resumable

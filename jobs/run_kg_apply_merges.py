@@ -30,7 +30,7 @@ from __future__ import annotations
 import json
 import sys
 
-from pyspark.sql import SparkSession
+from yargy_spark.plans.session import build_session
 
 
 def main():
@@ -39,12 +39,7 @@ def main():
     n_buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 16
     triples_roots = sys.argv[4:] if len(sys.argv) > 4 else [inc_out]
 
-    spark = (SparkSession.builder
-             .appName('yargy-spark-kg-apply-merges')
-             .config('spark.sql.adaptive.enabled', 'true')
-             .config('spark.sql.adaptive.skewJoin.enabled', 'true')
-             .config('spark.sql.execution.arrow.pyspark.enabled', 'true')
-             .getOrCreate())
+    spark = build_session(app='yargy-spark-kg-apply-merges')
     spark.sparkContext.setLogLevel('WARN')
 
     from yargy_spark.pipeline import run_apply_merges

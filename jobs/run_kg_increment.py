@@ -26,7 +26,7 @@ from __future__ import annotations
 import json
 import sys
 
-from pyspark.sql import SparkSession
+from yargy_spark.plans.session import build_session
 
 
 def main():
@@ -35,12 +35,7 @@ def main():
     n_new = int(sys.argv[3]) if len(sys.argv) > 3 else 10_000
     n_buckets = int(sys.argv[4]) if len(sys.argv) > 4 else 16
 
-    spark = (SparkSession.builder
-             .appName('yargy-spark-kg-increment')
-             .config('spark.sql.adaptive.enabled', 'true')
-             .config('spark.sql.adaptive.skewJoin.enabled', 'true')
-             .config('spark.sql.execution.arrow.pyspark.enabled', 'true')
-             .getOrCreate())
+    spark = build_session(app='yargy-spark-kg-increment')
     spark.sparkContext.setLogLevel('WARN')
 
     from yargy_spark.pipeline import run_incremental

@@ -26,7 +26,7 @@ import json
 import os
 import sys
 
-from pyspark.sql import SparkSession
+from yargy_spark.plans.session import build_session
 
 
 def synth_stream(src_dir: str, docs_path: str, spark) -> None:
@@ -58,9 +58,8 @@ def main():
     out_root = sys.argv[3] if len(sys.argv) > 3 else '/tmp/bridge_out'
     n_buckets = int(sys.argv[4]) if len(sys.argv) > 4 else 8
 
-    spark = (SparkSession.builder.appName('stream-dedup-bridge')
-             .config('spark.sql.shuffle.partitions', '8')
-             .getOrCreate())
+    spark = build_session(app='stream-dedup-bridge',
+                          shuffle_partitions=8)
     spark.sparkContext.setLogLevel('WARN')
 
     from yargy_spark.pipeline import run_stream_dedup_bridge

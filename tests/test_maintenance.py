@@ -237,6 +237,42 @@ def test_read_table_starts_no_job(spark, tmp_path):
     assert got.count() == 15
 
 
+def test_maintained_root_reads_start_no_job(spark, tmp_path):
+    """Expiry carries each collapsed directory's recorded schema into
+    the base manifest, and a compaction records the schema it wrote:
+    after three appends, after expiry to one kept manifest and after
+    compacting one bucket, ``read_table`` starts no Spark job and
+    returns what a read that infers every schema returns."""
+    root = str(tmp_path / 'maintained')
+    for b in range(3):
+        _commit(spark, root, b % 2, rows=b + 2)
+    sc = spark.sparkContext
+    for step in ('appends', 'expire', 'compact'):
+        if step == 'expire':
+            assert mf.expire_snapshots(root, keep_last=1) == 1
+        elif step == 'compact':
+            assert mf.compact_bucket(spark, root, 0) == 2 + 4
+        group = 'maintained-read-%s-%s' % (step, tmp_path.name)
+        sc.setJobGroup(group, 'read_table after %s' % step)
+        try:
+            got = mf.read_table(spark, root)
+        finally:
+            sc.setLocalProperty('spark.jobGroup.id', None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], step
+
+        # the same root with every recorded schema stripped
+        copy = shutil.copytree(root, str(tmp_path / ('inferred-' + step)))
+        for snap in mf.snapshots(copy):
+            snap.pop('schema', None)
+            snap.pop('schemas', None)
+            mf.write_manifest(copy, snap)
+        inferred = mf.read_table(spark, copy)
+        assert got.schema == inferred.schema, step
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, inferred.collect())), step
+        assert got.count() == 2 + 3 + 4
+
+
 def test_prep_bucket_granular_resume(spark, tmp_path):
     """A bucketed table commits at bucket granularity: a table
     holding only some buckets resumes by recomputing EXACTLY the

@@ -14,6 +14,8 @@ Layout for a table at <root>:
 Manifest JSON:
     {snapshot_id, parent_id, created_utc, partitions:
         {bucket: {rows: n}}, totals: {rows: n}, note, schema}
+An expired base manifest records ``schemas`` ({data_dir: schema})
+for the directories it collapsed instead of one ``schema``.
 
 Resume contract: ``pending_buckets`` diffs the desired bucket set
 against all committed manifests, so a restarted job processes only
@@ -298,6 +300,31 @@ def excluded_buckets(root: str) -> Dict[str, List[int]]:
     return out
 
 
+def _dir_schemas(root: str) -> Dict[str, dict]:
+    """data dir -> the schema recorded for it: a commit's or a
+    compaction's ``schema`` for its own directory, and an expired
+    base's ``schemas`` map for the directories it collapsed."""
+    out: Dict[str, dict] = {}
+    for snap in snapshots(root):
+        out.update(snap.get('schemas', {}))
+        if 'schema' in snap:
+            out[snap['snapshot_id']] = snap['schema']
+    return out
+
+
+def _read_dir(spark: SparkSession, root: str, d: str,
+              schemas: Dict[str, dict]) -> DataFrame:
+    """One snapshot directory, read as its own partitioned root.  With
+    a recorded schema the read starts no Spark job; without one
+    (manifests written before schemas were recorded) Spark infers it
+    from the files."""
+    from pyspark.sql.types import StructType
+    reader = spark.read
+    if d in schemas:
+        reader = reader.schema(StructType.fromJson(schemas[d]))
+    return reader.parquet(os.path.join(root, 'data', d))
+
+
 def read_table(spark: SparkSession, root: str) -> DataFrame:
     """Union of all COMMITTED snapshot directories (orphans from
     crashed commits are invisible).  Each directory is read as its own
@@ -305,21 +332,13 @@ def read_table(spark: SparkSession, root: str) -> DataFrame:
     base partition discovery — and bucket filters still prune into
     every scan.  Buckets superseded by compaction snapshots are
     filtered out per-directory (partition-pruned, not row-scanned).
-    A directory whose manifest recorded its schema is read with it and
-    starts no Spark job; one without (compaction, expired bases,
-    older manifests) is read with the schema inferred from its
-    files."""
+    Every directory is read with its recorded schema (``_read_dir``)."""
     from functools import reduce
-    from pyspark.sql.types import StructType
     excludes = excluded_buckets(root)
-    schemas = {s['snapshot_id']: s['schema'] for s in snapshots(root)
-               if 'schema' in s}
+    schemas = _dir_schemas(root)
     parts = []
     for d in committed_data_dirs(root):
-        reader = spark.read
-        if d in schemas:
-            reader = reader.schema(StructType.fromJson(schemas[d]))
-        df = reader.parquet(os.path.join(root, 'data', d))
+        df = _read_dir(spark, root, d, schemas)
         skip = excludes.get(d)
         if skip:
             df = df.where(~F.col(BUCKET_COL).isin(skip))
@@ -374,6 +393,7 @@ def expire_snapshots(root: str, keep_last: int = 1) -> int:
     if len(names) <= keep_last + 1:
         return 0
     old, _kept = names[:-keep_last], names[-keep_last:]
+    schemas = _dir_schemas(root)
     merged_parts: Dict[str, dict] = {}
     merged_dirs: List[str] = []
     merged_excl: Dict[str, List[int]] = {}
@@ -416,6 +436,10 @@ def expire_snapshots(root: str, keep_last: int = 1) -> int:
         'data_dirs': merged_dirs,
         'partitions': merged_parts,
         'excludes': merged_excl,
+        # the collapsed manifests' recorded schemas, so ``read_table``
+        # on the expired root still starts no inference job
+        'schemas': {d: schemas[d] for d in merged_dirs
+                    if d in schemas},
         'totals': {'rows': total_rows,
                    'partitions': len(merged_parts)},
         'counters': {'expired_snapshots': len(old)},
@@ -446,12 +470,13 @@ def compact_bucket(spark: SparkSession, root: str, bucket: int,
     data.  Returns the bucket's total row count."""
     from functools import reduce
     excludes = excluded_buckets(root)
+    schemas = _dir_schemas(root)
     src_dirs = []
     parts = []
     for d in committed_data_dirs(root):
         if bucket in excludes.get(d, []):
             continue  # already superseded by an earlier compaction
-        df = (spark.read.parquet(os.path.join(root, 'data', d))
+        df = (_read_dir(spark, root, d, schemas)
               .where(F.col(BUCKET_COL) == bucket))
         src_dirs.append(d)
         parts.append(df)
@@ -482,6 +507,7 @@ def compact_bucket(spark: SparkSession, root: str, bucket: int,
         'totals': {'rows': 0, 'partitions': 0},
         'counters': {'compacted_bucket': bucket, 'compacted_rows': n},
         'note': 'compaction of bucket %d' % bucket,
+        'schema': merged.schema.jsonValue(),
     }
     write_manifest(root, manifest)
     _write_current(root, snapshot_id)
