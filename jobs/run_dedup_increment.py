@@ -6,12 +6,13 @@
             [docs_parquet] [n_buckets] [id_offset]
 
 Checks a NEW document batch against the ``minhash_state`` committed
-by jobs/run_dedup.py (or a prior increment — the state roots CHAIN:
-base -> day1 -> day2 ...) via ``pipeline.run_dedup_increment``, and
-commits ``<inc_out>/dup_pairs`` plus the rolled-forward
-``<inc_out>/minhash_state``.  Rerun with unchanged base state AND an
-unchanged batch is a no-op; pointing ``inc_out`` at ``base_out``
-raises (each batch is its own state root).
+by ``pipeline.run_dedup`` (jobs/run_dedup.py) or a prior increment —
+the state roots CHAIN: base -> day1 -> day2 ... — via
+``pipeline.run_dedup_increment``, and commits ``<inc_out>/dup_pairs``
+plus the rolled-forward ``<inc_out>/minhash_state``.  Rerun with
+unchanged base state AND an unchanged batch is a no-op; pointing
+``inc_out`` at ``base_out`` raises (each batch is its own state
+root).
 
 The default synthetic increment re-ids the odd-doc_id half of the
 base documents table by ``id_offset`` (disjoint ids, every doc an

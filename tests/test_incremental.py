@@ -838,13 +838,11 @@ def chain_jobs(spark, kg_base, tmp_path_factory):
     """job -> (run(out_root), reference root, chain roots in commit
     order, reference rows per chain root).  The references are
     uninterrupted runs: ``kg_base`` for the batch job, and one run
-    each of the increment, the merge apply (with a triples patch) and
-    the dedup increment."""
-    from yargy_spark.operators.dedup import minhash_state
-    from yargy_spark.pipeline import (run_apply_merges,
+    each of the increment, the merge apply (with a triples patch), the
+    base dedup and the dedup increment (off that base)."""
+    from yargy_spark.pipeline import (run_apply_merges, run_dedup,
                                       run_dedup_increment,
                                       run_incremental, run_resumable)
-    from yargy_spark.sources import manifest as mf
     from yargy_spark.sources.transcripts import synth_transcripts
 
     base_root, base, _ = kg_base
@@ -852,12 +850,9 @@ def chain_jobs(spark, kg_base, tmp_path_factory):
     inc = synth_transcripts(spark, n_turns=96, partitions=4,
                             start_turn=96)
     text = 'the quick brown fox jumps over the lazy dog near the bank'
-    dedup_base = str(tmp / 'dedup_base')
-    mf.commit_replace(
-        mf.with_bucket(minhash_state(spark.createDataFrame(
-            [(1, text)], 'doc_id long, text string')), 4, key='doc_id'),
-        dedup_base + '/minhash_state', note='minhash_state',
-        n_buckets=4)
+    docs = spark.createDataFrame([(1, text), (2, text)],
+                                 'doc_id long, text string')
+    dedup_ref = str(tmp / 'dedup_base')
     batch = spark.createDataFrame(
         [(10, text), (11, 'fresh prose on morphology grammars parsers '
                            'and knowledge graph triples')],
@@ -874,9 +869,14 @@ def chain_jobs(spark, kg_base, tmp_path_factory):
         return run_apply_merges(spark, inc_ref, out, n_buckets=4,
                                 triples_roots=[base_root])
 
+    # run_dedup commits its pairs at its out root itself: the chain
+    # roots sit one level down so each has a name under ``out``
+    def dedup_base(out):
+        return run_dedup(spark, docs, out + '/pairs', n_buckets=4)
+
     def dedup(out):
-        return run_dedup_increment(spark, batch, dedup_base, out,
-                                   n_buckets=4)
+        return run_dedup_increment(spark, batch, dedup_ref + '/pairs',
+                                   out, n_buckets=4)
 
     def with_mentions(src, job):
         # the crash points are all in the commit chain: start from the
@@ -897,10 +897,13 @@ def chain_jobs(spark, kg_base, tmp_path_factory):
                         ['entity_keys', 'merge_candidates', 'triples']),
         'apply': (apply, str(tmp / 'apply'),
                   ['entity_keys', 'triples_patch', 'entity_merges']),
+        'dedup_base': (dedup_base, dedup_ref,
+                       ['pairs', 'pairs/minhash_state']),
         'dedup': (dedup, str(tmp / 'dedup'),
                   ['dup_pairs', 'minhash_state']),
     }
     for ref, job in ((inc_ref, incremental), (runs['apply'][1], apply),
+                     (dedup_ref, dedup_base),
                      (runs['dedup'][1], dedup)):
         assert job(ref) is not None
     return {job: (run, ref, roots,
@@ -911,7 +914,8 @@ def chain_jobs(spark, kg_base, tmp_path_factory):
 CRASH_POINTS = [('resumable', 0), ('resumable', 1),
                 ('incremental', 0), ('incremental', 1),
                 ('incremental', 2), ('apply', 0), ('apply', 1),
-                ('apply', 2), ('dedup', 0), ('dedup', 1)]
+                ('apply', 2), ('dedup_base', 0), ('dedup_base', 1),
+                ('dedup', 0), ('dedup', 1)]
 
 
 @pytest.mark.parametrize('job,k', CRASH_POINTS)

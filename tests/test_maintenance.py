@@ -309,13 +309,15 @@ def test_prep_bucket_granular_resume(spark, tmp_path):
 
 
 def test_dedup_increment_job_chain(spark, tmp_path):
-    """pipeline.run_dedup_increment: commits pairs + rolled state,
-    noops on unchanged (base state, batch), re-derives on a CHANGED
-    batch, chains day-2 off day-1's root, and refuses base==out."""
+    """pipeline.run_dedup builds the base: pairs + state, noop on
+    unchanged docs, re-derive on CHANGED docs, n_buckets drift
+    refused.  pipeline.run_dedup_increment then commits pairs + rolled
+    state off that base, noops on unchanged (base state, batch),
+    re-derives on a CHANGED batch, chains day-2 off day-1's root, and
+    refuses base==out."""
     import pytest
     from pyspark.sql import functions as F
-    from yargy_spark.operators.dedup import minhash_state
-    from yargy_spark.pipeline import run_dedup_increment
+    from yargy_spark.pipeline import run_dedup, run_dedup_increment
     from yargy_spark.sources import manifest as mf
 
     base = str(tmp_path / 'base')
@@ -326,11 +328,40 @@ def test_dedup_increment_job_chain(spark, tmp_path):
         2: 'completely different words about spark clusters shuffling '
            'partitions everywhere constantly',
     }
-    docs0 = spark.createDataFrame(list(texts.items()),
+    # doc 3 is an exact copy of doc 1: one minhash pair, one exact
+    # group, and only the representatives in the state
+    docs0 = spark.createDataFrame(list(texts.items()) + [(3, texts[1])],
                                   'doc_id long, text string')
-    mf.commit_replace(
-        mf.with_bucket(minhash_state(docs0), 4, key='doc_id'),
-        base + '/minhash_state', note='minhash_state', n_buckets=4)
+
+    def base_rows():
+        return ({(r['kind'], r['a'], r['b'], r['score'])
+                 for r in mf.read_table(spark, base).collect()},
+                {r['doc_id'] for r in
+                 mf.read_table(spark, base + '/minhash_state').collect()})
+
+    snap0 = run_dedup(spark, docs0, base, n_buckets=4)
+    assert snap0 is not None
+    assert base_rows() == ({('minhash', 1, 3, 10000),
+                            ('exact', 1, None, 2)}, {1, 2})
+    for s in (mf.snapshots(base)[-1], snap0):
+        assert (s['counters']['docs_in'], s['counters']['pairs']) \
+            == (3, 2)
+    assert run_dedup(spark, docs0, base, n_buckets=4) is None
+    # changed docs at the same root re-derive both tables (doc 3 is
+    # no longer a copy), and changing them back re-derives again
+    docs0b = docs0.where(F.col('doc_id') != 3).unionByName(
+        spark.createDataFrame([(3, texts[2] + ' again')],
+                              'doc_id long, text string'))
+    assert run_dedup(spark, docs0b, base, n_buckets=4) is not None
+    pairs_b, state_b = base_rows()
+    assert {(k, a, b) for k, a, b, _ in pairs_b} == {('minhash', 2, 3)}
+    assert state_b == {1, 2, 3}
+    assert run_dedup(spark, docs0b, base, n_buckets=4) is None
+    assert run_dedup(spark, docs0, base, n_buckets=4) is not None
+    assert base_rows() == ({('minhash', 1, 3, 10000),
+                            ('exact', 1, None, 2)}, {1, 2})
+    with pytest.raises(ValueError):   # n_buckets drift guard
+        run_dedup(spark, docs0, base, n_buckets=8)
 
     batch1 = spark.createDataFrame(
         [(10, texts[1]), (11, 'fresh prose on morphology grammars '

@@ -329,11 +329,61 @@ def run_apply_merges(spark: SparkSession, inc_root: str,
         mapping.unpersist()
 
 
+def run_dedup(spark: SparkSession, docs: DataFrame, out_root: str,
+              n_buckets: int = 8) -> Optional[dict]:
+    """The base DEDUP job: exact + MinHash/LSH dedup over a whole
+    (doc_id, text) table, REPLACE-committed as one chain:
+
+    * ``<out_root>`` — the pairs ``(kind, a, b, score)``: the
+      ``minhash_lsh_pairs`` rows (kind 'minhash', score = Jaccard
+      x 10000) plus one ``exact_dedup`` row per group of two or more
+      identical texts (kind 'exact', a = representative, b NULL,
+      score = group size), bucketed on ``a``.
+    * ``<out_root>/minhash_state`` — ``minhash_state(docs)``, the
+      state ``run_dedup_increment`` checks the next batch against.
+
+    Both commits are stamped with the docs' ``content_stamp``: a
+    rerun over the same docs is a no-op (one stamp job), changed docs
+    re-derive both tables, and a crash between the two commits leaves
+    one root unstamped, so the rerun re-derives the chain."""
+    from .operators.dedup import (content_stamp, exact_dedup,
+                                  minhash_lsh_pairs, minhash_state)
+    s_root = f'{out_root}/minhash_state'
+    n_docs, stamp = content_stamp(docs)
+    if mf.chain_is_current([out_root, s_root], n_buckets, stamp):
+        return None  # docs unchanged since the last commit
+
+    t0 = time.time()
+    # docs feeds three subtrees (the LSH branch, the exact branch and
+    # the state): persist so the input is scanned once
+    docs = docs.persist()
+    try:
+        near = minhash_lsh_pairs(docs).select(
+            F.lit('minhash').alias('kind'), 'a', 'b',
+            F.col('jaccard_x10000').alias('score'))
+        exact = exact_dedup(docs).where(F.col('group_size') > 1).select(
+            F.lit('exact').alias('kind'), F.col('rep_id').alias('a'),
+            F.lit(None).cast('long').alias('b'),
+            F.col('group_size').alias('score'))
+        # the pair count is observed on the pairs write and carried
+        # by both manifests
+        pairs, counters = _observed(near.unionByName(exact),
+                                    pairs=F.count(F.lit(1)))
+        counters['docs_in'] = n_docs
+        return mf.commit_chain([
+            (out_root, 'dedup-pairs', pairs, 'a', counters),
+            (s_root, 'minhash_state', minhash_state(docs), 'doc_id',
+             counters),
+        ], n_buckets, stamp, t0)
+    finally:
+        docs.unpersist()
+
+
 def run_dedup_increment(spark: SparkSession, new_docs: DataFrame,
                         base_root: str, out_root: str,
                         n_buckets: int = 8) -> Optional[dict]:
     """The incremental DEDUP job: check a new document batch against
-    the ``minhash_state`` committed by jobs/run_dedup.py (or a prior
+    the ``minhash_state`` committed by ``run_dedup`` (or a prior
     increment) via ``dedup_increment`` — the dedup mirror of
     ``run_incremental``'s bounded-staleness contract.  Historical
     text never enters the plan; only the rep-bounded state table
@@ -347,7 +397,7 @@ def run_dedup_increment(spark: SparkSession, new_docs: DataFrame,
     * ``minhash_state`` — the prior state rolled forward with the
       batch's surviving representatives; the NEXT increment chains
       off ``out_root`` (daily cadence: base -> day1 -> day2 ...),
-      and a monthly full jobs/run_dedup.py run compacts the
+      and a monthly full ``run_dedup`` compacts the
       documented pruned-survivor drift.
 
     Both commits are stamped with the base state snapshot and the
@@ -365,7 +415,7 @@ def run_dedup_increment(spark: SparkSession, new_docs: DataFrame,
     if state_snap is None:
         raise ValueError(
             'no minhash_state at %s — build the base with '
-            'jobs/run_dedup.py first' % s_base)
+            'run_dedup (jobs/run_dedup.py) first' % s_base)
     p_root = f'{out_root}/dup_pairs'
     s_out = f'{out_root}/minhash_state'
     n_docs, batch_stamp = content_stamp(new_docs)
