@@ -3,21 +3,23 @@
     spark-submit --master <cluster> \
         --py-files dist/yargy_spark.zip \
         jobs/run_stream_dedup_bridge.py <src_dir> <base_out> \
-            <bridge_out> [n_buckets]
+            <bridge_out> [n_buckets] [docs_parquet]
 
 Drains the JSON docs stream at ``src_dir`` (schema: doc_id long,
 text string, ts timestamp) and rolls every CLOSED event-time window
 into the committed ``minhash_state``/``dup_pairs`` chain via
 ``pipeline.run_stream_dedup_bridge`` — window-close -> exact-verify
 -> state roll-forward.  ``base_out`` must hold the state committed
-by jobs/run_dedup.py (or a prior increment/bridge head).  Rerun with
-no new stream data is a no-op; new files close older windows and
-commit them chained off the current head.
+by ``pipeline.run_dedup`` (jobs/run_dedup.py) or a prior
+increment/bridge head.  Rerun with no new stream data is a no-op; new
+files close older windows and commit them chained off the current
+head.
 
 If ``src_dir`` does not exist, a deterministic demo stream is
-synthesized from the sf0.001 documents table: ids offset above the
-base corpus (the increment contract), 20 docs across two 5-minute
-windows plus a late sentinel that closes them.
+synthesized from the first 20 documents of ``docs_parquet`` (default:
+the sf0.001 documents table, as in jobs/run_dedup.py): ids offset
+above the base corpus (the increment contract), 20 docs across two
+5-minute windows plus a late sentinel that closes them.
 """
 
 from __future__ import annotations
@@ -57,6 +59,8 @@ def main():
     base_out = sys.argv[2] if len(sys.argv) > 2 else '/tmp/dedup_out'
     out_root = sys.argv[3] if len(sys.argv) > 3 else '/tmp/bridge_out'
     n_buckets = int(sys.argv[4]) if len(sys.argv) > 4 else 8
+    docs_path = (sys.argv[5] if len(sys.argv) > 5
+                 else '/root/testdata/sf0.001/documents.parquet')
 
     spark = build_session(app='stream-dedup-bridge',
                           shuffle_partitions=8)
@@ -65,8 +69,7 @@ def main():
     from yargy_spark.pipeline import run_stream_dedup_bridge
 
     if not os.path.isdir(src_dir):
-        synth_stream(src_dir,
-                     '/root/testdata/sf0.001/documents.parquet', spark)
+        synth_stream(src_dir, docs_path, spark)
 
     res = run_stream_dedup_bridge(spark, src_dir, base_out, out_root,
                                   n_buckets=n_buckets)
