@@ -95,14 +95,12 @@ def test_dedup_increment_chain(spark):
 
 def test_row_signatures_match_aggregated(spark, docs):
     """The map-only in-row minhash (row_signatures — the streaming
-    shape) is value-identical to the aggregated batch path
-    (minhash_signatures) on every doc that has >= k words."""
-    from yargy_spark.operators.dedup import (minhash_signatures,
-                                             row_signatures)
-    agg = {}
-    for r in minhash_signatures(docs).collect():
-        agg.setdefault(r['doc_id'], {})[r['hash_idx']] = r['minhash']
-    agg = {d: [m[i] for i in sorted(m)] for d, m in agg.items()}
+    shape) is value-identical to the ``sig`` column of the aggregated
+    kernel that batch LSH, minhash_state and dedup_increment run
+    (_state_rows) on every doc that has >= k words."""
+    from yargy_spark.operators.dedup import _state_rows, row_signatures
+    agg = {r['doc_id']: list(r['sig'])
+           for r in _state_rows(docs).collect()}
     row = {r['doc_id']: list(r['sig'])
            for r in row_signatures(docs).collect()
            if r['sig'][0] is not None}

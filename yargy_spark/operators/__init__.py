@@ -11,7 +11,6 @@ from .triples import materialize_triples         # noqa: F401
 from .tokens import (annotate_lemmas,            # noqa: F401
                      lexicon_table, token_table)
 from .dedup import (dedup_increment, exact_dedup,  # noqa: F401
-                    minhash_lsh_pairs, minhash_signatures,
-                    minhash_state,
+                    minhash_lsh_pairs, minhash_state,
                     ngram_jaccard_pairs, row_signatures,
                     word_shingles)

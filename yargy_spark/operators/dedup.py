@@ -365,8 +365,8 @@ def row_signatures(docs: DataFrame, k: int = 3,
     ``array_min`` over a ``transform`` of the hashed shingle array,
     no groupBy anywhere.  This is the streaming-friendly shape
     (stateless per row; Structured Streaming needs no shuffle before
-    its own stateful op) and is value-identical to
-    ``minhash_signatures`` (equivalence pinned in test_docops).
+    its own stateful op) and is value-identical to the ``sig``
+    column of ``_state_rows`` (equivalence pinned in test_docops).
     Docs with fewer than ``k`` words get a NULL-element sig and
     should be filtered by the caller (``sig[0] IS NOT NULL``) —
     exactly the docs the aggregated path never emits."""
@@ -385,26 +385,6 @@ def row_signatures(docs: DataFrame, k: int = 3,
     return (docs
             .select('doc_id', *extra_cols, arr.alias('words'))
             .select('doc_id', *extra_cols, sig.alias('sig')))
-
-
-def minhash_signatures(docs: DataFrame, k: int = 3) -> DataFrame:
-    """(doc_id, hash_idx, minhash) — K minhashes per document.
-
-    All K minhashes are computed in ONE wide aggregation (K ``min``
-    columns with map-side partial aggregation), so the shuffle carries
-    |docs| x K values instead of |shingles| x K exploded rows; the
-    per-hash rows are recovered by exploding the K-wide result (|docs|
-    rows, negligible)."""
-    sh = word_shingles(docs, k).select(
-        'doc_id', (md5_int(F.col('shingle')) % MERSENNE).alias('x'))
-    wide = sh.groupBy('doc_id').agg(*[
-        F.min((F.lit(a) * F.col('x') + F.lit(b)) % MERSENNE)
-        .alias('m%d' % i)
-        for i, (a, b) in enumerate(HASH_FAMILY)])
-    arr = F.array(*['m%d' % i for i in range(len(HASH_FAMILY))])
-    return wide.select(
-        'doc_id',
-        F.posexplode(arr).alias('hash_idx', 'minhash'))
 
 
 def minhash_lsh_pairs(docs: DataFrame, k: int = 3,
